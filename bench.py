@@ -151,35 +151,34 @@ def main() -> None:
     # BENCH_r{N}.json keeps only a truncated tail of the stdout line,
     # losing every key alphabetically before ~"text_i..." from
     # round-over-round comparison.  Persist the COMPLETE per-query
-    # median dict to the repo so every round's full sweep survives.
-    # Round number = max existing BENCH_r*.json + 1.  Contract: the
-    # driver writes BENCH_r{N} at round END, so any bench run during
-    # round N sees max = N-1 and files the sweep under N; a manual
-    # re-run in the same round overwrites the same file with fresher
-    # numbers from the same code (intended).  Override via
-    # SPARK_GRAFT_BENCH_ROUND for out-of-band runs.
+    # median dict to the repo so every sweep survives.  The file is
+    # named by CPU count and short commit (numbers are only comparable
+    # at the same width) and is never overwritten: a further run of
+    # the same commit at the same width gets a _2, _3, ... suffix.
     try:
-        import glob as _glob
-        import re as _re
+        import subprocess
 
         here = os.path.dirname(os.path.abspath(__file__))
-        rnd = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-        if not rnd:
-            prior = [int(m.group(1)) for f in
-                     _glob.glob(os.path.join(here, "BENCH_r*.json"))
-                     if (m := _re.search(r"BENCH_r(\d+)\.json$", f))]
-            rnd = str(max(prior, default=0) + 1)
-        sweep_path = os.path.join(here, f"BENCH_SWEEP_r{int(rnd):02d}.json")
-        with open(sweep_path, "w") as f:
+        try:
+            commit = subprocess.run(
+                ["git", "rev-parse", "--short", "HEAD"], cwd=here,
+                capture_output=True, text=True, check=True).stdout.strip()
+        except (OSError, subprocess.CalledProcessError):
+            commit = "nogit"
+        stem = os.path.join(here, f"BENCH_SWEEP_c{CPUS}_{commit}")
+        sweep_path, n = stem + ".json", 1
+        while os.path.exists(sweep_path):
+            n += 1
+            sweep_path = f"{stem}_{n}.json"
+        with open(sweep_path, "x") as f:
             json.dump({"sf": sf, "sweep_reps": REPS,
                        "n_queries": len(timings),
                        "total_sec": round(total, 3),
                        "queries": timings}, f, indent=0, sort_keys=True)
         print(f"bench: full sweep -> {sweep_path}", file=sys.stderr)
-    except (OSError, ValueError) as e:
-        # ValueError: a non-numeric SPARK_GRAFT_BENCH_ROUND must not
-        # kill the run after the whole sweep was paid for — the
-        # headline JSON line below is what the driver parses
+    except OSError as e:
+        # the headline JSON line below is the run's result — a failed
+        # artifact write must not kill the run
         print(f"bench: sweep artifact failed: {e}", file=sys.stderr)
 
     print(json.dumps({

@@ -45,6 +45,7 @@ from .operators import pq as pq_ops
 from .operators import retrieval as retrieval_ops
 from .operators import similarity as sim_ops
 from .operators import topk as topk_ops
+from .session import run_concurrently
 from .sources import bucketed, layout, readers, sinks, state
 from .streaming import stream as streaming_ops
 
@@ -8477,8 +8478,6 @@ def pipeline_retention_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them as concurrent job streams (guide §2.6); likewise, once the
     # victims are checkpointed, the store sweep and the index erase
     # proceed independently (disjoint artifacts)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _build_store() -> None:
         # ~40 directories at any sf (width scales with the corpus), so
         # the 25% retention cut expires ~10 of them WHOLE at every
@@ -8491,9 +8490,7 @@ def pipeline_retention_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_ops.assign_cells(emb, cent).write.mode("overwrite") \
             .partitionBy("cell").parquet(index)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_build_store), pool.submit(_build_index)]:
-            f.result()
+    run_concurrently(_build_store, _build_index)
 
     cutoff = origin + dt.timedelta(minutes=n // 4)
     # victims BEFORE the sweep: ts-pruned store read (live buckets
@@ -8514,11 +8511,7 @@ def pipeline_retention_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                                vcells.select("vec_id"), touched,
                                part_col="cell")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_sweep = pool.submit(_sweep_store)
-        f_erase = pool.submit(_erase_index)
-        info = f_sweep.result()
-        f_erase.result()
+    info, _ = run_concurrently(_sweep_store, _erase_index)
     assert len(info["dropped"]) >= 1, info  # the fast path engaged
     on_disk = spark.read.parquet(index)
     return ivf_ops.ivf_search(on_disk, cent,
@@ -8571,8 +8564,6 @@ def pipeline_retention_forget_text(spark: SparkSession,
     # victim ids are CHECKPOINTED (read before the sweep can touch the
     # store), the index tombstone append and the store sweep are too —
     # overlap both pairs as concurrent job streams (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _build_store() -> None:
         sinks.upsert_parquet(spark, stored.withColumn("_ord", F.lit(1)),
                              store, key="doc_id", order_col="_ord",
@@ -8581,21 +8572,15 @@ def pipeline_retention_forget_text(spark: SparkSession,
     def _build_index() -> None:
         retrieval_ops.build_inverted_index(docs, index)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_build_store), pool.submit(_build_index)]:
-            f.result()
+    run_concurrently(_build_store, _build_index)
 
     cutoff = origin + dt.timedelta(minutes=n // 4)
     victims = (sinks.read_store(spark, store)
                .filter(F.col("ts") < F.lit(cutoff))
                .select("doc_id").localCheckpoint())
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_del = pool.submit(retrieval_ops.delete_inverted_docs,
-                            victims, index)
-        f_sweep = pool.submit(sinks.retention_sweep, spark, store,
-                              cutoff)
-        f_del.result()
-        info = f_sweep.result()
+    _, info = run_concurrently(
+        lambda: retrieval_ops.delete_inverted_docs(victims, index),
+        lambda: sinks.retention_sweep(spark, store, cutoff))
     assert len(info["dropped"]) >= 1, info  # the fast path engaged
     scored = retrieval_ops.search_inverted_index(spark, index,
                                                  _BM25_TERMS)
@@ -8748,12 +8733,7 @@ def pipeline_ttl_hybrid_serve(spark: SparkSession,
             spark, apath,
             f"ts < timestamp'{vcut.strftime('%Y-%m-%d %H:%M:%S')}'")
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_t = pool.submit(_text_leg)
-        f_a = pool.submit(_ann_leg)
-        f_t.result()
-        f_a.result()
+    run_concurrently(_text_leg, _ann_leg)
 
     qids = sorted(_HYBRID_TERMS)
     qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
@@ -9545,14 +9525,8 @@ def pipeline_forget_and_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 10 == 3), path)
         return path
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_store = pool.submit(_store_leg)
-        f_ann = pool.submit(_ann_leg)
-        f_txt = pool.submit(_txt_leg)
-        f_store.result()
-        ann_path = f_ann.result()
-        txt_path = f_txt.result()
+    _, ann_path, txt_path = run_concurrently(_store_leg, _ann_leg,
+                                             _txt_leg)
 
     kw = (retrieval_ops.search_inverted_index(spark, txt_path,
                                               _BM25_TERMS)
@@ -10516,14 +10490,11 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       | (F.col("vec_id") % 30 == 23)))
     # the two stores compact independently — concurrent job streams
     # (guide §2.6), same overlap the upsert path's auto-sweep uses
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_v = pool.submit(sinks.compact_store, spark,
-                          os.path.join(path, "vectors"), part_col="cell")
-        f_c = pool.submit(sinks.compact_store, spark,
-                          os.path.join(path, "codes"), part_col="cell")
-        stats_v = f_v.result()
-        f_c.result()
+    stats_v, _ = run_concurrently(
+        lambda: sinks.compact_store(spark, os.path.join(path, "vectors"),
+                                    part_col="cell"),
+        lambda: sinks.compact_store(spark, os.path.join(path, "codes"),
+                                    part_col="cell"))
     assert stats_v["compacted"], "upserts must fragment some cell"
     assert stats_v["files_after"] < stats_v["files_before"]
     qrow = emb.filter(F.col("vec_id") == 3).select("embedding").head()
@@ -11242,8 +11213,8 @@ DRIVER_VERIFIED = frozenset({
     # covers the late-r14 crash-recovery hardening of the index verbs
     # (second review: upsert/rebuild/stats now roll a crashed
     # erasure's pending manifest forward before reading, read_meta
-    # heals a root stranded mid-swap, upsert staging moved to its own
-    # '._upstaged' suffix, build_index frees its assignment
+    # heals a root stranded mid-swap, upsert staging moved off the
+    # erasure's staging suffix, build_index frees its assignment
     # checkpoint): every added step is a no-op on a store WITHOUT
     # crash artifacts — the fixture-built stores every registry row
     # serves — so committed outputs are bit-identical; the crashed

@@ -42,13 +42,14 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..session import run_concurrently
+from ..sources import sinks
 from . import ivf, pq
 
 META_FILE = "_index_meta.json"
@@ -116,20 +117,14 @@ def build_index(spark: SparkSession, embeddings: DataFrame, path: str,
     codes = pq.pq_encode(assigned, books, id_col=id_col, vec_col=vec_col,
                          keep_cols=("cell", *meta_cols))
     # both store writes consume the same checkpointed assignment and
-    # land in disjoint directories — run them as concurrent jobs
-    # (guide §2.6) so one write's straggler tail back-fills with the
-    # other's tasks; rebuild_index (a timed maintenance verb) pays
-    # this pair on every scheduled rebuild
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fv = pool.submit(
-            lambda: assigned.write.mode("overwrite").partitionBy("cell")
-            .parquet(_subdir(path, "vectors")))
-        fc = pool.submit(
-            lambda: codes.write.mode("overwrite").partitionBy("cell")
-            .parquet(_subdir(path, "codes")))
-        fv.result()
-        fc.result()
+    # land in disjoint directories — concurrent jobs (guide §2.6);
+    # rebuild_index (a timed maintenance verb) pays this pair on every
+    # scheduled rebuild
+    run_concurrently(
+        lambda: assigned.write.mode("overwrite").partitionBy("cell")
+        .parquet(_subdir(path, "vectors")),
+        lambda: codes.write.mode("overwrite").partitionBy("cell")
+        .parquet(_subdir(path, "codes")))
     cent.coalesce(1).write.mode("overwrite") \
         .parquet(_subdir(path, "centroids"))
     _write_codebooks(books, _subdir(path, "codebooks"))
@@ -142,8 +137,7 @@ def build_index(spark: SparkSession, embeddings: DataFrame, path: str,
             "trained": bool(trained), "id_col": id_col,
             "vec_col": vec_col, "meta_cols": list(meta_cols),
             "n_rows": assigned.count()}
-    with open(os.path.join(path, META_FILE), "w") as f:
-        json.dump(meta, f)
+    sinks._atomic_write_json(os.path.join(path, META_FILE), meta)
     # every consumer (both store writes + the count) is done — release
     # the corpus-sized checkpoint instead of pinning one full copy of
     # the assignment per build for the session's lifetime (r14 review:
@@ -158,14 +152,23 @@ def write_small_parquet(table, path: str) -> None:
     """Driver-side single-file parquet write of a dimension-bounded
     pyarrow table: a Spark write job for a handful of rows is pure
     scheduler/committer overhead (~5-7 s local, measured) — sidecar
-    artifacts (codebooks, centroids, budgets) all go through here."""
-    import shutil
-
+    artifacts (codebooks, centroids, budgets) all go through here.
+    Staged and swapped (``sinks.stage_and_swap``), so a crash mid-write
+    leaves the previous file in place, never a half-written one."""
     import pyarrow.parquet as papq
 
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    papq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    def _write(tmp: str) -> None:
+        os.makedirs(tmp)
+        papq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+
+    sinks.stage_and_swap(path, _write)
+
+
+def _heal_index(path: str) -> None:
+    """``sinks.heal`` the index root (a crashed rebuild swap strands it
+    whole) and then both cell stores."""
+    for p in (path, _subdir(path, "vectors"), _subdir(path, "codes")):
+        sinks.heal(p)
 
 
 def _write_codebooks(books: np.ndarray, path: str) -> None:
@@ -198,8 +201,7 @@ def read_meta(path: str) -> dict:
     # universal entry backstop (r14 review): a crash inside
     # rebuild_index's root-level swap strands the WHOLE index as
     # '<path>._old' — restore it before any verb touches META_FILE
-    from ..sources.sinks import heal_root
-    heal_root(path)
+    sinks.heal(path)
     with open(os.path.join(path, META_FILE)) as f:
         return json.load(f)
 
@@ -293,8 +295,7 @@ def _read_cells(spark: SparkSession, store: str, cells: list) -> DataFrame:
     and the shortlist join are plan-identical; probed cells whose
     directory is gone (post-erasure) contribute no rows, exactly as
     the isin filter did."""
-    from ..sources.sinks import _read_buckets
-    return _read_buckets(spark, store, cells, part_col="cell")
+    return sinks._read_buckets(spark, store, cells, part_col="cell")
 
 
 def load_codebooks(spark: SparkSession, path: str) -> np.ndarray:
@@ -326,9 +327,6 @@ def search_index(spark: SparkSession, path: str, qvec: list[float],
     pruning before any ADC work, and the shortlist is drawn from
     eligible rows only — filtered ANN without the recall loss of
     post-filtering a top-k."""
-    from ..sources.sinks import (_finish_pending_delete,
-                                 heal_partial_swaps, heal_root)
-
     # serving self-heals too: a crash mid-swap in a maintenance verb
     # strands a cell as 'cell=N._old' (silently omitted by a raw read),
     # a crash in rebuild's root swap strands the whole index as
@@ -336,10 +334,7 @@ def search_index(spark: SparkSession, path: str, qvec: list[float],
     # plan half applied (erased rows still served from un-swapped
     # cells) — all rolled forward here at listdir cost, closing the
     # window between a crash and the next maintenance job
-    heal_root(path)
-    for store in (_subdir(path, "vectors"), _subdir(path, "codes")):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
+    _heal_index(path)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     books = load_codebooks(spark, path)
@@ -430,13 +425,7 @@ def search_index_many(spark: SparkSession, path: str,
       tools/scaling_check.py --batch (see README bench notes)."""
     from pyspark.sql import Window
 
-    from ..sources.sinks import (_finish_pending_delete,
-                                 heal_partial_swaps, heal_root)
-
-    heal_root(path)
-    for store in (_subdir(path, "vectors"), _subdir(path, "codes")):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
+    _heal_index(path)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     books = load_codebooks(spark, path)
@@ -554,21 +543,12 @@ def _upsert_cells(spark: SparkSession, batch: DataFrame, store: str,
     IVF cell as the bucket.  *touched* lets a caller that already
     knows the batch's cell set (the codes store mirrors the vectors
     store's) skip the distinct-collect job."""
-    from ..sources.sinks import (_finish_pending_delete, _swap_dir,
-                                 heal_partial_swaps)
-
     # Roll a crashed erasure FORWARD before reading (r14 review): a
     # pending _delete_pending.json means un-swapped cells still hold
     # victim rows — merging without committing it would bake the
-    # victims back in, and the old shared '._staged' suffix meant the
-    # upsert's own staging write clobbered the erasure's staged
-    # rewrite while its manifest survived (the manifest's 'emptied'
-    # replay could then rmtree LIVE cells).  Commit the erasure, sweep
-    # pre-manifest staging orphans, then heal partial swaps.
-    if not _finish_pending_delete(store):
-        import shutil
-        shutil.rmtree(store + "._staged", ignore_errors=True)
-    heal_partial_swaps(store)  # crashed prior swap: restore before read
+    # victims back in (and the manifest's 'emptied' replay could later
+    # rmtree cells this merge wrote)
+    sinks.heal(store)
     if touched is None:
         touched = sorted(r[0] for r in
                          batch.select("cell").distinct().collect())
@@ -593,19 +573,11 @@ def _upsert_cells(spark: SparkSession, batch: DataFrame, store: str,
     current = (_read_cells(spark, store, touched)
                .join(F.broadcast(inc.select(key)), key, "left_anti"))
     merged = current.unionByName(inc.select(*current.columns))
-    # distinct staging suffix from the erase path's '._staged' so an
-    # upsert can never collide with an in-flight erasure's artifacts
-    # even if the roll-forward contract above is violated
-    tmp = store + "._upstaged"
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)  # orphan of a crashed upsert
-    merged.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    for c in touched:
-        part = f"cell={c}"
-        src = os.path.join(tmp, part)
-        if os.path.exists(src):
-            _swap_dir(src, os.path.join(store, part))
-    shutil.rmtree(tmp, ignore_errors=True)
+    sinks.stage_and_swap(
+        store,
+        lambda tmp: merged.write.mode("overwrite").partitionBy("cell")
+        .parquet(tmp),
+        [f"cell={c}" for c in touched])
     return touched
 
 
@@ -636,15 +608,10 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
     and re-running with the same key list is the documented recovery
     path.  Cost: O(touched cells + key list), independent of index
     size.  Returns the touched cell ids."""
-    from ..sources.sinks import (_finish_pending_delete, erase_partitions,
-                                 heal_partial_swaps)
-
+    _heal_index(path)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     vstore, cstore = _subdir(path, "vectors"), _subdir(path, "codes")
-    for store in (vstore, cstore):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     keyed = (keys.select(id_col).filter(F.col(id_col).isNotNull())
              .distinct().localCheckpoint())
     if vectors is not None:
@@ -679,10 +646,10 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
     # a crash at any point re-converges, and a half-erased index can
     # never SERVE a victim either (serving = codes shortlist joined
     # back to vectors; erased codes keep victims out of the shortlist)
-    erase_partitions(spark, cstore, id_col, keyed, touched,
-                     part_col="cell")
-    erase_partitions(spark, vstore, id_col, keyed, touched,
-                     part_col="cell")
+    sinks.erase_partitions(spark, cstore, id_col, keyed, touched,
+                           part_col="cell")
+    sinks.erase_partitions(spark, vstore, id_col, keyed, touched,
+                           part_col="cell")
     # both erases committed — release the key list's pinned blocks
     # instead of leaving them in the block manager for the session
     _cc_free(keyed)
@@ -708,11 +675,9 @@ def delete_index_where(spark: SparkSession, path: str,
     O(victim cells + id/meta pages), independent of index size.
     Idempotent: a re-run finds no matching rows.  Returns the touched
     cell ids."""
-    from ..sources.sinks import (_finish_pending_delete, erase_partitions,
-                                 heal_partial_swaps)
-
     from .dedup import _cc_free
 
+    _heal_index(path)
     meta = read_meta(path)
     id_col = meta["id_col"]
     meta_cols = tuple(meta.get("meta_cols", ()))
@@ -722,9 +687,6 @@ def delete_index_where(spark: SparkSession, path: str,
             "needs the filter columns recorded at build time "
             "(build_index(..., meta_cols=...))")
     vstore, cstore = _subdir(path, "vectors"), _subdir(path, "codes")
-    for store in (vstore, cstore):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     victims = (spark.read.parquet(vstore)
                .filter(F.expr(predicate))
                .select(id_col, "cell").localCheckpoint())
@@ -737,10 +699,10 @@ def delete_index_where(spark: SparkSession, path: str,
     # codes FIRST, then vectors (see delete_index_keys): a half-erased
     # index can never SERVE a victim, and a crash re-converges because
     # the predicate still matches the surviving vectors rows
-    erase_partitions(spark, cstore, id_col, keyed, touched,
-                     part_col="cell")
-    erase_partitions(spark, vstore, id_col, keyed, touched,
-                     part_col="cell")
+    sinks.erase_partitions(spark, cstore, id_col, keyed, touched,
+                           part_col="cell")
+    sinks.erase_partitions(spark, vstore, id_col, keyed, touched,
+                           part_col="cell")
     _cc_free(victims)
     return touched
 
@@ -805,34 +767,30 @@ def rebuild_index(spark: SparkSession, path: str,
     seed <-> trained in place.  After a rebuild the index is
     bit-identical to a fresh :func:`build_index` over the same rows —
     upsert-then-rebuild converges to the fresh-build state."""
-    from ..sources.sinks import (_finish_pending_delete, _swap_dir,
-                                 heal_partial_swaps, heal_root)
-
-    heal_root(path)  # a crashed prior rebuild stranded the root
-    meta = read_meta(path)
-    if trained is None:
-        trained = meta["trained"]
     # roll a crashed erasure FORWARD before treating the vectors store
     # as the source of truth (r14 review): un-swapped cells still hold
     # victim rows, and a rebuild that reads them bakes the victims
     # into the fresh index AND discards the pending manifest with the
     # old directories — the erasure would silently never complete
-    for store in (_subdir(path, "vectors"), _subdir(path, "codes")):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
-    shutil.rmtree(path + "._rebuild", ignore_errors=True)  # stale stage
+    _heal_index(path)
+    meta = read_meta(path)
+    if trained is None:
+        trained = meta["trained"]
     vecs = (spark.read.parquet(_subdir(path, "vectors")).drop("cell")
             .localCheckpoint())  # detach from the dirs the swap replaces
-    tmp = path + "._rebuild"
-    new_meta = build_index(spark, vecs, tmp, nlist=meta["nlist"],
-                           m=meta["m"], ncodes=meta["ncodes"],
-                           trained=trained, id_col=meta["id_col"],
-                           vec_col=meta["vec_col"],
-                           meta_cols=tuple(meta.get("meta_cols", ())))
-    _swap_dir(tmp, path)
+    built = {}
+
+    def _build(tmp: str) -> None:
+        built.update(build_index(
+            spark, vecs, tmp, nlist=meta["nlist"], m=meta["m"],
+            ncodes=meta["ncodes"], trained=trained, id_col=meta["id_col"],
+            vec_col=meta["vec_col"],
+            meta_cols=tuple(meta.get("meta_cols", ()))))
+
+    sinks.stage_and_swap(path, _build)
     from .dedup import _cc_free
     _cc_free(vecs)  # the staged build is on disk; drop the pinned copy
-    return new_meta
+    return built
 
 
 def upsert_index(spark: SparkSession, path: str,
@@ -878,8 +836,6 @@ def upsert_index(spark: SparkSession, path: str,
     The erase runs AFTER both store merges commit, so a crash between
     merge and erase leaves exactly the documented ignore-state — re-
     running the same batch (idempotent last-wins) re-converges."""
-    from ..sources.sinks import compact_store
-
     if on_moved not in ("ignore", "erase", "error"):
         raise ValueError(f"on_moved must be ignore|erase|error, "
                          f"got {on_moved!r}")
@@ -904,27 +860,22 @@ def upsert_index(spark: SparkSession, path: str,
     # front — it is a pure function of the batch, identical for both.
     touched = sorted(r[0] for r in
                      assigned.select("cell").distinct().collect())
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fv = pool.submit(_upsert_cells, spark, assigned,
-                         _subdir(path, "vectors"), id_col, touched)
-        fc = pool.submit(_upsert_cells, spark, codes,
-                         _subdir(path, "codes"), id_col, touched)
-        fv.result()
-        fc.result()
+    run_concurrently(
+        lambda: _upsert_cells(spark, assigned, _subdir(path, "vectors"),
+                              id_col, touched),
+        lambda: _upsert_cells(spark, codes, _subdir(path, "codes"),
+                              id_col, touched))
     if on_moved != "ignore":
         _resolve_moved_keys(spark, path, assigned, touched,
                             id_col, on_moved)
     if auto_compact_files is not None:
         # the two stores' compaction sweeps are independent (disjoint
         # directories) — overlap them like the merges above
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(compact_store, spark,
-                                  _subdir(path, store),
-                                  max_files_per_bucket=auto_compact_files,
-                                  part_col="cell")
-                      for store in ("vectors", "codes")]:
-                f.result()
+        run_concurrently(*(
+            lambda store=store: sinks.compact_store(
+                spark, _subdir(path, store),
+                max_files_per_bucket=auto_compact_files, part_col="cell")
+            for store in ("vectors", "codes")))
     from .dedup import _cc_free
     _cc_free(assigned)  # both store merges committed; release the pin
     return touched
@@ -940,8 +891,6 @@ def _resolve_moved_keys(spark: SparkSession, path: str,
     the touched set — no vector bytes read; the erase reuses the
     staged-manifest commit (``erase_partitions``), so a crash rolls
     forward exactly like the GDPR verb's."""
-    from ..sources.sinks import erase_partitions
-
     vstore = _subdir(path, "vectors")
     keys = assigned.select(id_col).distinct()
     stale = (spark.read.parquet(vstore)
@@ -964,10 +913,10 @@ def _resolve_moved_keys(spark: SparkSession, path: str,
             f"on_moved='erase', apply_changefeed_index (O(batch) with "
             f"old payloads), or delete_index_keys first.")
     victim_keys = stale.select(id_col).distinct()
-    erase_partitions(spark, _subdir(path, "codes"), id_col, victim_keys,
-                     victim_cells, part_col="cell")
-    erase_partitions(spark, vstore, id_col, victim_keys,
-                     victim_cells, part_col="cell")
+    sinks.erase_partitions(spark, _subdir(path, "codes"), id_col,
+                           victim_keys, victim_cells, part_col="cell")
+    sinks.erase_partitions(spark, vstore, id_col, victim_keys,
+                           victim_cells, part_col="cell")
     from .dedup import _cc_free
     _cc_free(stale)
 
@@ -996,8 +945,6 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     policy evaluations; when a persist is attempted the returned dict
     carries ``backfill_persisted`` (False = the write-through failed,
     e.g. a read-only store — surfaced, not swallowed)."""
-    from ..sources.sinks import _finish_pending_delete, heal_partial_swaps
-
     meta = read_meta(path)
     # heal before counting (r14 review): a stale 'cell=N._old' leftover
     # would be discovered as its own partition value and double-count
@@ -1007,8 +954,7 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     # established self-heal contract (search_index does it on every
     # call), distinct from the meta write-through that stays opt-in.
     cstore = _subdir(path, "codes")
-    _finish_pending_delete(cstore)
-    heal_partial_swaps(cstore)
+    sinks.heal(cstore)
     counts = [r["n"] for r in
               (spark.read.parquet(cstore)
                .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
@@ -1028,9 +974,8 @@ def index_maintenance_stats(spark: SparkSession, path: str,
         if persist_backfill:
             # the shared write-then-rename idiom; a failed persist is
             # SURFACED via backfill_persisted=False, not swallowed
-            from ..sources.sinks import _atomic_write_json
             try:
-                _atomic_write_json(os.path.join(path, META_FILE), meta)
+                sinks._atomic_write_json(os.path.join(path, META_FILE), meta)
                 backfill_persisted = True
             except OSError:
                 backfill_persisted = False

@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 
 from ..functions import analysis
 from ..functions.hashing import term_bucket
+from ..session import run_concurrently
+from ..sources import sinks
 
 K1 = 1.2
 B = 0.75
@@ -243,12 +245,10 @@ def _read_text_meta(path: str, id_col: str = "doc_id",
 
 
 def _write_text_meta(path: str, meta: dict) -> None:
-    from ..sources.sinks import _atomic_write_json
-
     # bootstrap path: upsert on a never-built store bumps the meta
     # generation BEFORE the first parquet write creates the directory
     os.makedirs(path, exist_ok=True)
-    _atomic_write_json(os.path.join(path, TEXT_META), meta)
+    sinks._atomic_write_json(os.path.join(path, TEXT_META), meta)
 
 
 def _tombstone_frame(spark, path: str, id_col: str):
@@ -374,14 +374,21 @@ def build_inverted_index(docs: DataFrame, path: str,
             .write.mode("overwrite").partitionBy("tb") \
             .parquet(os.path.join(path, "postings"))
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_w_doclen), pool.submit(_w_postings)]:
-            f.result()
+    run_concurrently(_w_doclen, _w_postings)
     _cc_free(base)
     _write_text_meta(path, {"n_buckets": int(n_buckets), "gen": 0,
                             "id_col": id_col,
                             "meta_cols": list(meta_cols)})
+
+
+def _write_store(df: DataFrame, dest: str, part: str | None) -> None:
+    """Overwrite-write a whole text-index store; a partitioned one keeps
+    one file per partition dir, not tasks x dirs shards."""
+    if part:
+        (df.repartition(F.col(part)).write.mode("overwrite")
+         .partitionBy(part).parquet(dest))
+    else:
+        df.write.mode("overwrite").parquet(dest)
 
 
 def _first_data_file(store: str, depth: int = 1) -> str | None:
@@ -450,10 +457,6 @@ def _ensure_gen_layout(spark, path: str) -> None:
     tombstone filter keys on.  Cost when already migrated: one
     driver-side footer read per store (:func:`_store_has_gen` — never
     a per-batch Spark discovery of the whole postings layout)."""
-    import shutil
-
-    from ..sources.sinks import _swap_dir
-
     for sub, part in (("doclen", None), ("postings", "tb")):
         store = os.path.join(path, sub)
         has = _store_has_gen(spark, store)
@@ -465,15 +468,10 @@ def _ensure_gen_layout(spark, path: str) -> None:
         if has:
             continue
         cur = spark.read.parquet(store)
-        tmp = store + "._genmigrate"
-        shutil.rmtree(tmp, ignore_errors=True)
         migrated = cur.withColumn("gen", F.lit(0).cast("long"))
-        if part and part in cur.columns:
-            (migrated.repartition(F.col(part)).write.mode("overwrite")
-             .partitionBy(part).parquet(tmp))
-        else:
-            migrated.write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, store)
+        sinks.stage_and_swap(
+            store, lambda tmp: _write_store(
+                migrated, tmp, part if part in cur.columns else None))
 
 
 def upsert_inverted_index(docs: DataFrame, path: str,
@@ -543,11 +541,7 @@ def upsert_inverted_index(docs: DataFrame, path: str,
             .write.mode("append").partitionBy("tb") \
             .parquet(os.path.join(path, "postings"))
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for f in [pool.submit(w) for w in (_w_tomb, _w_doclen,
-                                           _w_postings)]:
-            f.result()
+    run_concurrently(_w_tomb, _w_doclen, _w_postings)
     # all three writes consumed the checkpoint — release its pinned
     # blocks now instead of at session death
     _cc_free(base)
@@ -628,9 +622,7 @@ def retention_sweep_inverted_index(spark, path: str, cutoff,
     index that never recorded age cannot self-expire, and raising
     beats silently sweeping nothing.  Returns ``{"tombstoned": n,
     "cutoff": str(cutoff)}``."""
-    from ..sources.sinks import heal_partial_swaps
-
-    heal_partial_swaps(path)  # same self-heal as the serving reads
+    sinks.heal(path)  # same self-heal as the serving reads
     meta = _read_text_meta(path)
     if ts_col not in tuple(meta.get("meta_cols", ())):
         raise ValueError(
@@ -740,15 +732,13 @@ def prune_inverted_index_stopwords(spark, path: str,
     stopword list is driver-bounded by construction (terms above half
     the corpus are a handful).  Returns ``{"pruned": [terms],
     "df_cut": n, "n_docs": N}``."""
-    from ..sources.sinks import (_finish_pending_delete,
-                                 erase_partitions, heal_partial_swaps)
-
-    heal_partial_swaps(path)
+    postings_dir = os.path.join(path, "postings")
     # roll forward a crashed prior prune before reading (each bucket
     # dir swaps atomically, so a half-committed prune serves each
     # term either fully pruned or fully present — benign — but the
     # next maintenance op must finish the recorded plan first)
-    _finish_pending_delete(os.path.join(path, "postings"))
+    for p in (path, postings_dir):
+        sinks.heal(p)
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
@@ -756,8 +746,7 @@ def prune_inverted_index_stopwords(spark, path: str,
                    tomb, id_col)
     n_docs = doclen.count()
     cut = int(max_df_ratio * n_docs)
-    postings = _live(spark.read.parquet(os.path.join(path, "postings")),
-                     tomb, id_col)
+    postings = _live(spark.read.parquet(postings_dir), tomb, id_col)
     stop = (postings.groupBy("term", "tb")
             .agg(F.count(F.lit(1)).alias("_df"))
             .filter(F.col("_df") > F.lit(cut))
@@ -766,8 +755,8 @@ def prune_inverted_index_stopwords(spark, path: str,
         return {"pruned": [], "df_cut": cut, "n_docs": int(n_docs)}
     terms = sorted({r["term"] for r in stop})
     tbs = sorted({int(r["tb"]) for r in stop})
-    erase_partitions(
-        spark, os.path.join(path, "postings"), "term",
+    sinks.erase_partitions(
+        spark, postings_dir, "term",
         spark.createDataFrame([(t,) for t in terms], ["term"]),
         tbs, part_col="tb")
     return {"pruned": terms, "df_cut": cut, "n_docs": int(n_docs)}
@@ -794,9 +783,7 @@ def compact_inverted_index(spark, path: str) -> dict:
     too)."""
     import shutil
 
-    from ..sources.sinks import _swap_dir, heal_partial_swaps
-
-    heal_partial_swaps(path)
+    sinks.heal(path)
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
@@ -809,25 +796,15 @@ def compact_inverted_index(spark, path: str) -> dict:
         cur = spark.read.parquet(store)
         res = {f"{sub}_before": cur.count()}
         live = _live(cur, tomb, id_col)
-        tmp = store + "._compacted"
-        shutil.rmtree(tmp, ignore_errors=True)
-        if part:
-            # keep one file per partition dir, not tasks x dirs shards
-            (live.repartition(F.col(part)).write.mode("overwrite")
-             .partitionBy(part).parquet(tmp))
-        else:
-            live.write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, store)
+        sinks.stage_and_swap(store,
+                             lambda tmp: _write_store(live, tmp, part))
         res[f"{sub}_after"] = spark.read.parquet(store).count()
         return res
 
-    from concurrent.futures import ThreadPoolExecutor
     out = {}
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_compact_one, sub, part)
-                  for sub, part in (("postings", "tb"),
-                                    ("doclen", None))]:
-            out.update(f.result())
+    for res in run_concurrently(lambda: _compact_one("postings", "tb"),
+                                lambda: _compact_one("doclen", None)):
+        out.update(res)
     shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
     return out
 
@@ -838,9 +815,7 @@ def inverted_index_stats(spark, path: str) -> DataFrame:
     terms, postings rows — plus the tombstone backlog that schedules
     compaction.  Aggregates ride partial aggregation (one row per
     executor); no text is read."""
-    from ..sources.sinks import heal_partial_swaps
-
-    heal_partial_swaps(path)
+    sinks.heal(path)
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
@@ -892,9 +867,7 @@ def search_inverted_index(spark, path: str, terms: list[str],
     the doclen join and every statistic (N, Σdl, per-term df) is
     recounted over eligible docs only — bit-identical to serving an
     index built on the slice."""
-    from ..sources.sinks import _read_buckets, heal_partial_swaps
-
-    heal_partial_swaps(path)
+    sinks.heal(path)
     meta = _read_text_meta(path, id_col=id_col, n_buckets=n_buckets)
     id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])
@@ -915,8 +888,8 @@ def search_inverted_index(spark, path: str, terms: list[str],
     # directories, not O(n_buckets) discovery — same rows as the old
     # tb.isin filter, missing buckets contribute none
     postings = _live(
-        _read_buckets(spark, os.path.join(path, "postings"), tbs,
-                      part_col="tb")
+        sinks._read_buckets(spark, os.path.join(path, "postings"), tbs,
+                            part_col="tb")
         .filter(F.col("term").isin(terms)),
         tomb, id_col)
     doclen = _live(spark.read.parquet(os.path.join(path, "doclen")),
@@ -1021,10 +994,9 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     pinned."""
     from pyspark.sql import Window
 
-    from ..sources.sinks import _read_buckets, heal_partial_swaps
     from .dedup import _cc_free
 
-    heal_partial_swaps(path)
+    sinks.heal(path)
     meta = _read_text_meta(path, n_buckets=n_buckets)
     id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])
@@ -1053,8 +1025,8 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     tbs = sorted({term_bucket(t, n_buckets) for t in union_terms})
     # explicit-dirs bucket read, as in the single-query path (r17)
     postings = _live(
-        _read_buckets(spark, os.path.join(path, "postings"), tbs,
-                      part_col="tb")
+        sinks._read_buckets(spark, os.path.join(path, "postings"), tbs,
+                            part_col="tb")
         .filter(F.col("term").isin(union_terms)),
         tomb, id_col)
     doclen = _live(spark.read.parquet(os.path.join(path, "doclen")),
@@ -1229,18 +1201,14 @@ def hybrid_serve_many(spark, text_path: str, ann_path: str,
     # checkpoints; the ANN centroid collect) that would otherwise
     # serialize — overlapping them trims the batch tail by about the
     # smaller leg's build time (measured r12: ~1 s at Q=250, sf0.1)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        kw_f = pool.submit(
-            search_inverted_index_many, spark, text_path, kw_q,
-            k=leg_k, where=where_text, literal_max=literal_max,
-            with_rank=True)
-        vec_f = pool.submit(
-            ann_index.search_index_many, spark, ann_path, vec_q,
-            k=leg_k, nprobe=nprobe, shortlist=shortlist,
-            where=where_ann, literal_max=literal_max, with_rank=True)
-        kw, vec = kw_f.result(), vec_f.result()
+    kw, vec = run_concurrently(
+        lambda: search_inverted_index_many(
+            spark, text_path, kw_q, k=leg_k, where=where_text,
+            literal_max=literal_max, with_rank=True),
+        lambda: ann_index.search_index_many(
+            spark, ann_path, vec_q, k=leg_k, nprobe=nprobe,
+            shortlist=shortlist, where=where_ann,
+            literal_max=literal_max, with_rank=True))
     id_col = kw.columns[1]  # the index's id column (qid is first)
     # each leg's rank is its OWN top-k window's row_number
     # (with_rank) — same (score desc, id asc) order the re-rank

@@ -15,6 +15,30 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Driver-side thread cap for :func:`run_concurrently`.
+MAX_THREADS = 32
+
+
+def run_concurrently(*legs):
+    """Run zero-argument callables as concurrent driver threads and
+    return their results in leg order.
+
+    Independent Spark jobs (two store writes over one checkpoint, the
+    two legs of a hybrid serve) overlap as concurrent job streams, so
+    the scheduler back-fills one job's straggler tail with the other's
+    tasks.  Every leg runs to completion before anything is raised;
+    the error that reaches the caller is the one of the first failed
+    leg in leg order — no leg is still writing when the caller
+    unwinds."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if not legs:
+        return []
+    with ThreadPoolExecutor(
+            max_workers=min(MAX_THREADS, len(legs))) as pool:
+        futures = [pool.submit(leg) for leg in legs]
+    # leaving the with-block joined every leg
+    return [f.result() for f in futures]
 
 
 def get_spark(app_name: str = "msg_vector_search_spark",

@@ -37,6 +37,34 @@ format-level MERGE with file-level pruning; the jars are not in this
 environment so the bucket-partitioned dedup-rewrite is the
 implementation and the MERGE path is documented.
 
+Commit protocols.  Every maintenance verb in the engine commits
+through this module, under one of two staging names:
+
+* *replace* (:func:`stage_and_swap`, stage ``<path>._replacing``): the
+  writer sweeps the stage left by a crashed earlier attempt, writes
+  into it, then swaps in either the whole directory or each listed
+  partition directory (:func:`_swap_dir`: rename the live dir to
+  ``._old``, rename the stage in, drop ``._old``), and removes the
+  stage.  Upserts, compactions, re-layouts, index rebuilds and the
+  small driver-side sidecar writes use it.
+* *erasure* (:func:`_commit_erasure`, stage ``<path>._staged``): the
+  surviving rows of the touched partitions are staged, the swap plan
+  is recorded in ``_delete_pending.json``, and only then does
+  :func:`_finish_pending_delete` swap (or drop) each partition.
+  Recovery finds the stage by its name, replays the plan, and deletes
+  the manifest last.
+
+Before a verb reads or writes a directory it runs :func:`heal`, which
+repairs crash leftovers in a fixed order: first a root stranded
+between the two renames of a whole-directory swap
+(:func:`heal_root`), then a recorded erasure, rolled forward
+(:func:`_finish_pending_delete`), then partition directories stranded
+mid-swap (:func:`heal_partial_swaps`).  The erasure goes before the
+swap heal, because healing around a half-applied erasure would
+resurrect rows its replay deletes again later.  :func:`heal` never
+sweeps a stage: a reader may run while a writer is staging, so only
+the writer about to stage sweeps its own.
+
 Deployment note: the maintenance WRITE verbs here (directory swaps,
 swap healing, file counting, manifest staging) use ``os``/``shutil``
 — a POSIX store directory, matching the sandbox-local design.  The
@@ -58,6 +86,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from . import fs as fs_probe
 
 #: Partition column of the upsert store layout.  Internal — readers go
@@ -79,6 +108,9 @@ LAYOUT_META = "_layout.json"
 #: Marker recording an in-flight erasure's swap plan (stage-then-commit;
 #: see :func:`delete_keys` / :func:`_finish_pending_delete`).
 DELETE_MANIFEST = "_delete_pending.json"
+#: Staging suffixes of the two commit protocols (module docstring).
+ERASE_STAGE = "._staged"
+REPLACE_STAGE = "._replacing"
 
 
 def bucket_of(key: Column | str, num_buckets: int) -> Column:
@@ -170,6 +202,13 @@ def _dedup_last_wins_bucketed(df: DataFrame, key: str,
               .drop("_first_row", "_prev_key"))
 
 
+def _write_checked(deduped: DataFrame, staged: str, key: str) -> None:
+    """Stage a whole-store rewrite, then run the null-bucket guard
+    before anything is swapped."""
+    deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staged)
+    _check_no_null_bucket(staged, key)
+
+
 def _check_no_null_bucket(staged: str, key: str) -> None:
     """Fail a first write whose keys didn't all map to a bucket (range
     layout over non-integer-castable keys) BEFORE it becomes the store.
@@ -242,6 +281,42 @@ def heal_partial_swaps(store: str) -> list:
     return restored
 
 
+def heal(path: str) -> None:
+    """Repair every crash leftover at *path* before a verb reads or
+    writes it, in the fixed order the module docstring gives: a
+    stranded root, then a recorded erasure (rolled forward), then
+    partitions stranded mid-swap.  A no-op at listdir cost on a
+    healthy or absent directory; never sweeps a stage."""
+    heal_root(path)
+    _finish_pending_delete(path)
+    heal_partial_swaps(path)
+
+
+def stage_and_swap(path: str, write, parts: list | None = None) -> list:
+    """The replace protocol: sweep the stage a crashed earlier attempt
+    left at ``<path>._replacing``, call ``write(stage)`` to fill it,
+    then swap the whole stage into *path* (``parts=None``) or each
+    listed partition directory the stage holds, and remove the stage.
+    A crash before the first swap leaves *path* untouched; a crash
+    inside a swap leaves a ``._old`` that :func:`heal` restores.
+    Returns the partition names that were swapped (``[]`` for a
+    whole-directory swap)."""
+    tmp = path + REPLACE_STAGE
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    if parts is None:
+        _swap_dir(tmp, path)
+        return []
+    swapped = []
+    for part in parts:
+        src = os.path.join(tmp, part)
+        if os.path.exists(src):
+            _swap_dir(src, os.path.join(path, part))
+            swapped.append(part)
+    shutil.rmtree(tmp, ignore_errors=True)
+    return swapped
+
+
 def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Read an upsert store, hiding the internal bucket layout column.
 
@@ -251,9 +326,7 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     applied — both are rolled forward here, not just in the merge
     verbs, so the window between a crash and the next maintenance
     job never serves a store with a dropped partition."""
-    heal_root(path)
-    _finish_pending_delete(path)
-    heal_partial_swaps(path)
+    heal(path)
     df = spark.read.parquet(path)
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
@@ -323,19 +396,13 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
     written before this guard — takes the one-time migration path
     below, which re-maps everything and records the layout.
     """
-    # restore a root stranded by a crashed migration/rebucket swap
-    # FIRST (r14 review): without it the exists check below reads
-    # False, the first-write branch replaces the store with just this
-    # batch, and the '._old' holding every prior row is later swept
-    # as a stale leftover — total data loss from one crash + upsert
-    heal_root(path)
+    # heal BEFORE the exists check (r14 review): a root stranded by a
+    # crashed migration/rebucket swap would read as absent, the
+    # first-write branch would replace the store with just this batch,
+    # and the '._old' holding every prior row would later be swept as
+    # a stale leftover — total data loss from one crash + upsert
+    heal(path)
     exists = os.path.exists(path)
-    if exists:
-        # roll any in-flight erasure FORWARD first: healing around its
-        # half-applied swaps would resurrect rows the manifest replay
-        # later deletes again — over data written in between
-        _finish_pending_delete(path)
-        heal_partial_swaps(path)
     meta = _read_layout(path) if exists else None
     incoming = incoming.filter(F.col(key).isNotNull())
     if meta is None:
@@ -362,10 +429,7 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
             else:
                 n_new = inc_keys.count()
         deduped = _dedup_last_wins_bucketed(merged, key, order_col)
-        tmp = path + "._staged"
-        deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        _check_no_null_bucket(tmp, key)
-        _swap_dir(tmp, path)
+        stage_and_swap(path, lambda tmp: _write_checked(deduped, tmp, key))
         _write_layout(path, fresh)
         return n_new
 
@@ -391,14 +455,11 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
                  .join(current.select(key), key, "left_anti").count())
     merged = current.unionByName(inc, allowMissingColumns=True)
     deduped = _dedup_last_wins_bucketed(merged, key, order_col)
-    tmp = path + "._staged"
-    deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-    for b in touched:
-        part = f"{BUCKET_COL}={b}"
-        src = os.path.join(tmp, part)
-        if os.path.exists(src):
-            _swap_dir(src, os.path.join(path, part))
-    shutil.rmtree(tmp)
+    stage_and_swap(
+        path,
+        lambda tmp: deduped.write.mode("overwrite")
+        .partitionBy(BUCKET_COL).parquet(tmp),
+        [f"{BUCKET_COL}={b}" for b in touched])
     return n_new
 
 
@@ -424,13 +485,13 @@ def _finish_pending_delete(path: str) -> bool:
         # are intact and only staging exists.  Discard both instead of
         # bricking every read path that now calls this first.
         os.remove(mpath)
-        shutil.rmtree(path + "._staged", ignore_errors=True)
+        shutil.rmtree(path + ERASE_STAGE, ignore_errors=True)
         return False
     # the manifest records its own partition column, so recovery needs
     # no caller knowledge of the store's layout (the ANN index erasure
     # records "cell"; stores predating the field read as BUCKET_COL)
     part_col = manifest.get("part_col", BUCKET_COL)
-    tmp = path + "._staged"
+    tmp = path + ERASE_STAGE
     emptied = set(manifest.get("emptied", []))
     for b in manifest["touched"]:
         part = f"{part_col}={b}"
@@ -468,26 +529,20 @@ def delete_keys(spark: SparkSession, path: str, key: str,
     listing the swap plan) is written, and only then are bucket
     directories swapped — by :func:`_finish_pending_delete`, whose
     steps are individually idempotent.  A crash before the manifest
-    write leaves the store untouched (orphan staging is swept on the
-    next call); a crash after it leaves a recorded in-flight erasure
-    that the NEXT ``delete_keys`` (or ``read_store``-side tooling
-    calling ``_finish_pending_delete``) rolls forward before doing
-    anything else.  Re-running with the same key list is therefore the
+    write leaves the store untouched (orphan staging is swept by the
+    next erasure that stages); a crash after it leaves a recorded
+    in-flight erasure that the next verb or read rolls forward in
+    :func:`heal` before doing anything else.  Re-running with the same key list is therefore the
     documented recovery path and is a no-op on completed buckets.
 
     Scale: cost is O(touched buckets + key list), independent of store
     size; the key list is dimension-sized (it arrives as a DataFrame
     and is used as a broadcast anti-join build side, never collected).
     """
-    heal_root(path)
+    heal(path)
     meta = _read_layout(path)
     if meta is None:
         raise ValueError(f"no layout metadata at {path}; not a store")
-    if not _finish_pending_delete(path):
-        # no pending erasure: sweep staging orphaned by a crash that
-        # predates its manifest (the store itself is untouched then)
-        shutil.rmtree(path + "._staged", ignore_errors=True)
-    heal_partial_swaps(path)  # strays from crashed upsert/compact swaps
     keyed = (keys.select(key).filter(F.col(key).isNotNull()).distinct()
              .withColumn(BUCKET_COL, _bucket_expr(key, meta)))
     buckets = [r[0] for r in
@@ -551,27 +606,42 @@ def erase_partitions(spark: SparkSession, path: str, key: str,
     """The staged anti-join erasure shared by :func:`delete_keys` and
     the materialized-index erase verbs (ANN cells, postings term
     buckets): read ONLY the *touched* partition directories, anti-join
-    the broadcast key set, stage the rewrite, record the swap plan in
-    the manifest (carrying *part_col* so recovery is layout-blind),
-    then commit via :func:`_finish_pending_delete` — every crash point
-    is recoverable by re-running, and a partition left empty has its
-    directory removed rather than silently resurrecting rows on the
-    next overwrite.  Callers must have healed/rolled-forward the store
-    first (the public verbs do)."""
+    the broadcast key set, and commit the survivors through
+    :func:`_commit_erasure` — every crash point is recoverable by
+    re-running, and a partition left empty has its directory removed
+    rather than silently resurrecting rows on the next overwrite.
+    Callers must have run :func:`heal` on the store first (the public
+    verbs do)."""
     if not touched:
         return []
     current = _read_buckets(spark, path, touched,
                             part_col=part_col)  # O(touched) listing
     kept = current.join(F.broadcast(keys.select(key)), key, "left_anti")
-    tmp = path + "._staged"
-    kept.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
+    _commit_erasure(path, part_col, touched, kept)
+    return touched
+
+
+def _commit_erasure(path: str, part_col: str, touched: list,
+                    kept: DataFrame | None) -> None:
+    """The erasure protocol: stage *kept* (the surviving rows of the
+    *touched* partitions, or None when every touched partition
+    empties) at ``<path>._staged``, record the swap plan — a touched
+    partition without a staged directory is ``emptied`` — in the
+    manifest (carrying *part_col* so recovery is layout-blind), then
+    commit via :func:`_finish_pending_delete`.  The store has been
+    healed, so no manifest is pending and any stage found here is an
+    orphan of a crash that predates its manifest: swept first, so its
+    partitions can never be mistaken for this plan's."""
+    tmp = path + ERASE_STAGE
+    shutil.rmtree(tmp, ignore_errors=True)
+    if kept is not None:
+        kept.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
     emptied = [b for b in touched
                if not os.path.exists(os.path.join(tmp, f"{part_col}={b}"))]
     manifest = {"touched": touched, "emptied": emptied,
                 "part_col": part_col}
     _atomic_write_json(os.path.join(path, DELETE_MANIFEST), manifest)
     _finish_pending_delete(path)  # the commit IS the recovery routine
-    return touched
 
 
 def retention_sweep(spark: SparkSession, path: str, cutoff,
@@ -611,12 +681,9 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
     """
     import datetime as _dt
 
-    heal_root(path)
+    heal(path)
     if _read_layout(path) is None:
         raise ValueError(f"no layout metadata at {path}; not a store")
-    if not _finish_pending_delete(path):
-        shutil.rmtree(path + "._staged", ignore_errors=True)
-    heal_partial_swaps(path)
 
     def _epoch_us(v) -> int | None:
         """Normalize a pyarrow footer stat / python datetime to epoch
@@ -698,10 +765,10 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
     # already holds these stats (README); this keeps the raw-parquet
     # path honest well past that handoff.
     if len(entries) > 4:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(
-                max_workers=min(32, len(entries))) as ex:
-            classified = list(ex.map(_classify, entries))
+        from functools import partial
+
+        classified = run_concurrently(
+            *(partial(_classify, e) for e in entries))
     else:
         classified = [_classify(e) for e in entries]
     drop = [b for b, act in classified if act == "drop"]
@@ -711,19 +778,13 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
         return {"dropped": [], "rewritten": [], "kept": kept_dirs,
                 "cutoff": str(cutoff)}
 
-    emptied = list(drop)
+    kept = None
     if rewrite:
         current = _read_buckets(spark, path, rewrite)  # O(touched) listing
         keep_pred = (F.col(ts_col) >= F.lit(cutoff)) | F.col(ts_col).isNull()
         kept = current.filter(keep_pred)
-        tmp = path + "._staged"
-        kept.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        emptied += [b for b in rewrite if not os.path.exists(
-            os.path.join(tmp, f"{BUCKET_COL}={b}"))]
-    manifest = {"touched": sorted(rewrite + drop), "emptied": emptied,
-                "part_col": BUCKET_COL}
-    _atomic_write_json(os.path.join(path, DELETE_MANIFEST), manifest)
-    _finish_pending_delete(path)
+    # drop buckets are never staged, so the plan records them emptied
+    _commit_erasure(path, BUCKET_COL, sorted(rewrite + drop), kept)
     return {"dropped": sorted(drop), "rewritten": sorted(rewrite),
             "kept": kept_dirs, "cutoff": str(cutoff)}
 
@@ -747,10 +808,7 @@ def rebucket_store(spark: SparkSession, path: str,
     staged = (current.filter(F.col(key).isNotNull())
               .withColumn(BUCKET_COL, _bucket_expr(key, meta)))
     deduped = _dedup_last_wins_bucketed(staged, key, order_col)
-    tmp = path + "._rebucket"
-    deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-    _check_no_null_bucket(tmp, key)
-    _swap_dir(tmp, path)
+    stage_and_swap(path, lambda tmp: _write_checked(deduped, tmp, key))
     _write_layout(path, meta)
     return meta
 
@@ -777,16 +835,9 @@ def compact_store(spark: SparkSession, path: str,
     Returns ``{"compacted": [bucket ids], "files_before": n,
     "files_after": m}``.
     """
-    heal_root(path)  # a crashed root swap strands the whole store
+    heal(path)
     if part_col == BUCKET_COL and _read_layout(path) is None:
         raise ValueError(f"no layout metadata at {path}; not a store")
-    if part_col == BUCKET_COL:
-        _finish_pending_delete(path)  # erasure first, then swap healing
-    heal_partial_swaps(path)
-    # a crash mid-compaction orphans the staging sibling; the store
-    # itself is intact (swaps happen only after the full staged write),
-    # so the leftover is dead bytes — sweep it before staging anew
-    shutil.rmtree(path + "._compact", ignore_errors=True)
 
     def _partfiles(d: str) -> list[str]:
         return [f for f in os.listdir(d)
@@ -813,20 +864,15 @@ def compact_store(spark: SparkSession, path: str,
     touched = sorted(frag)
     current = _read_buckets(spark, path, touched,
                             part_col=part_col)  # O(touched) listing
-    tmp = path + "._compact"
-    (current.repartition(len(touched), F.col(part_col))
-     .write.mode("overwrite").partitionBy(part_col).parquet(tmp))
-    after = 0
-    for b in touched:
-        part = f"{part_col}={b}"
-        src = os.path.join(tmp, part)
-        if os.path.exists(src):
-            _swap_dir(src, os.path.join(path, part))
-            after += len(_partfiles(os.path.join(path, part)))
-    shutil.rmtree(tmp, ignore_errors=True)
+    swapped = stage_and_swap(
+        path,
+        lambda tmp: current.repartition(len(touched), F.col(part_col))
+        .write.mode("overwrite").partitionBy(part_col).parquet(tmp),
+        [f"{part_col}={b}" for b in touched])
     return {"compacted": touched,
             "files_before": sum(frag.values()),
-            "files_after": after}
+            "files_after": sum(len(_partfiles(os.path.join(path, part)))
+                               for part in swapped)}
 
 
 def write_dimension(df: DataFrame, path: str, fmt: str = "parquet") -> None:

@@ -81,11 +81,12 @@ def write_watermark(spark: SparkSession, state_dir: str,
     """A8: overwrite the single-row state table after a successful batch
     (reference: processor.py:77-115 ``INSERT OR REPLACE``).
 
-    Local state writes go DRIVER-SIDE (pyarrow single file, staged then
-    swapped — the ``write_small_parquet`` economics): a Spark write of
-    a one-row Python-sourced frame measured a ~5-6 s stall per call in
-    the write task (the Python-runner teardown in the write path; a
-    JVM-native 1-row write is ~0.4 s) — a fixed cost the ingest path
+    Local state writes go DRIVER-SIDE through
+    ``ann_index.write_small_parquet`` (pyarrow single file, staged then
+    swapped): a Spark write of a one-row Python-sourced frame measured
+    a ~5-6 s stall per call in the write task (the Python-runner
+    teardown in the write path; a JVM-native 1-row write is ~0.4 s) —
+    a fixed cost the ingest path
     paid on EVERY batch (guide §5: no cluster jobs for driver-sized
     work; r18).  The physical form matches the old write (INT64 micros,
     UTC-adjusted), so readers are unchanged.  A crash between the two
@@ -101,24 +102,16 @@ def write_watermark(spark: SparkSession, state_dir: str,
                                    schema=schemas.WATERMARK_STATE)
         df.coalesce(1).write.mode("overwrite").parquet(path)
         return
-    import shutil
-
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
-    from .sinks import _swap_dir
+    from ..operators.ann_index import write_small_parquet
 
     # naive datetimes carry UTC semantics throughout the engine (the
     # session timezone is pinned); tz-aware values convert exactly
-    table = pa.table({
+    write_small_parquet(pa.table({
         "key": pa.array([WATERMARK_KEY], pa.string()),
         "ts": pa.array([ts], pa.timestamp("us", tz="UTC")),
-    })
-    tmp = path + "._staged"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    papq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    _swap_dir(tmp, path)
+    }), path)
 
 
 # -- maintenance verbs (reference: src/initialize.py:51-116) --------------

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from msg_vector_search_spark.operators import ivf
-from msg_vector_search_spark.sources import readers
+from msg_vector_search_spark.sources import readers, sinks
 
 SF = "/root/testdata/sf0.001"
 
@@ -849,7 +849,7 @@ def test_upsert_index_rolls_forward_pending_erasure(spark, tmp_path):
         assert not os.path.exists(
             os.path.join(store, "_delete_pending.json"))
         assert not os.path.exists(store + "._staged")
-        assert not os.path.exists(store + "._upstaged")
+        assert not os.path.exists(store + sinks.REPLACE_STAGE)
 
 
 def test_rebuild_index_rolls_forward_pending_erasure(spark, tmp_path):
@@ -880,6 +880,33 @@ def test_rebuild_index_rolls_forward_pending_erasure(spark, tmp_path):
     assert ids.isdisjoint(victim_ids)
     assert not os.path.exists(
         os.path.join(path, "vectors", "_delete_pending.json"))
+
+
+def test_compact_cells_rolls_forward_pending_erasure(spark, tmp_path):
+    """compact_store on a cell-partitioned ANN store must commit a
+    crashed erasure first, like every other verb: the manifest records
+    its own partition column, so the cell layout needs no special
+    case — no manifest and no victim may survive the compaction."""
+    import os
+
+    from msg_vector_search_spark.operators import ann_index
+
+    emb = readers.read_table(spark, SF, "embeddings")
+    path = str(tmp_path / "compact_pending")
+    ann_index.build_index(spark, emb, path, nlist=4, m=8, ncodes=16)
+    vstore = os.path.join(path, "vectors")
+
+    victims = (spark.read.parquet(vstore).select("vec_id")
+               .orderBy("vec_id").limit(5).localCheckpoint())
+    victim_ids = {r["vec_id"] for r in victims.collect()}
+    _stage_pending_erasure(spark, vstore, victims)
+
+    sinks.compact_store(spark, vstore, part_col="cell")
+    assert not os.path.exists(os.path.join(vstore, sinks.DELETE_MANIFEST))
+    ids = {r["vec_id"] for r in
+           spark.read.parquet(vstore).select("vec_id").collect()}
+    assert ids.isdisjoint(victim_ids)
+    assert len(ids) == emb.count() - len(victim_ids)
 
 
 def test_heal_root_restores_stranded_index(spark, tmp_path):

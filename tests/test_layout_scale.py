@@ -573,6 +573,7 @@ def test_upsert_rolls_forward_crashed_erasure_first(spark, tmp_path):
                         & (F.col("k") != "600")).count() == 0
     # no manifest or staging left behind
     assert not _os.path.exists(_os.path.join(store, sinks.DELETE_MANIFEST))
+    assert not _os.path.exists(store + sinks.REPLACE_STAGE)
 
 
 def test_heal_partial_swaps_three_cases(tmp_path):

@@ -32,35 +32,19 @@ def main() -> None:
     for f in glob.glob(os.path.join(EVDIR, "*")):
         shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
 
-    from pyspark.sql import SparkSession
-
+    # the engine's own session, plus the event-log confs through the
+    # session builder's extra-conf hook
+    os.environ["SPARK_GRAFT_EXTRA_CONF"] = ";".join(filter(None, [
+        os.environ.get("SPARK_GRAFT_EXTRA_CONF", ""),
+        "spark.eventLog.enabled=true",
+        f"spark.eventLog.dir={EVDIR}",
+        "spark.eventLog.compress=false",
+        "spark.eventLog.rolling.enabled=false"]))
     from msg_vector_search_spark import contract
+    from msg_vector_search_spark.session import DEFAULT_CPUS as cpus
+    from msg_vector_search_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (SparkSession.builder.master(f"local[{cpus}]")
-               .appName("profile")
-               .config("spark.eventLog.enabled", "true")
-               .config("spark.eventLog.dir", EVDIR)
-               .config("spark.eventLog.compress", "false")
-               .config("spark.eventLog.rolling.enabled", "false")
-               .config("spark.sql.shuffle.partitions", str(cpus))
-               .config("spark.sql.adaptive.enabled", "true")
-               .config("spark.sql.adaptive.coalescePartitions.enabled",
-                       "true")
-               .config("spark.sql.adaptive.skewJoin.enabled", "true")
-               .config("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
-               .config("spark.sql.session.timeZone", "UTC")
-               .config("spark.sql.parquet.inferTimestampNTZ.enabled",
-                       "false")
-               .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-               .config("spark.sql.parquet.outputTimestampType",
-                       "TIMESTAMP_MICROS")
-               .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-               .config("spark.ui.enabled", "false")
-               .config("spark.driver.memory", "16g"))
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("profile")
 
     # Python-worker + codegen warmup (mirrors bench.py)
     contract.REGISTRY["topk_by_similarity"](spark, SF).count()
