@@ -45,12 +45,14 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md section 2.
 
-    Ordered so queries without a driver CORRECTNESS row from round 1
-    come first (the driver's gate covers a prefix of this dict).
+    Ordered oldest green driver check first, ties in registry order
+    (``contract.verification_order``): never-checked rows lead, and
+    the driver's gate covers a prefix of this dict.
     """
     return contract.verification_order(contract.REGISTRY)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each oracle-expressible query."""
+    """DuckDB-runnable ANSI SQL twin for each oracle-expressible query,
+    in the same order as ``queries()``."""
     return contract.verification_order(contract.ORACLES)

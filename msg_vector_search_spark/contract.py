@@ -489,81 +489,214 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderstatus"))
 
 
-def _ivfpq_replay_oracle(art_dir: str, nprobe: int,
-                         shortlist: int) -> str:
-    """The full IVF x PQ composition replayed in DuckDB FROM persisted
-    trained artifacts (centroids + codebooks parquet under *art_dir*):
-    cosine cell assignment (9dp, ties to smallest centroid id), probe
-    of the query's top-nprobe cells, per-subspace encode (argmax dot,
-    9dp, ties to lowest code), the adc_score_col fold (j*ncodes+code
-    indexing, 6dp), shortlist, exact-cosine re-rank — identical math
-    to the seed oracle _IVFPQ_SEED_ORACLE, with the artifact CTEs
-    reading parquet instead of deriving seed picks.  Verifies every
-    stage downstream of training at full value fidelity.  The
-    centroid CTE carries the fingerprint guard (ADVICE r12): a
-    cross-scale artifact empties it and the row fails loudly."""
-    return f"""
-WITH cent AS (
-  SELECT centroid_id, centroid_vec AS cvec
-  FROM read_parquet('{art_dir}/centroids/*.parquet')
-  WHERE (SELECT f.witness
-         FROM read_parquet('{art_dir}/fingerprint/*.parquet') f)
-        = (SELECT sum(1000003 +
-             ({analysis.duck_token_hash(_WITNESS_KEY_SQL['embeddings'])}
-              % 1000003)) FROM embeddings)
-), cb AS (
-  SELECT j, cw, cv FROM read_parquet('{art_dir}/codebooks/*.parquet')
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
+# -------------------------------------------------------------------------
+# IVF x PQ oracle builder
+# -------------------------------------------------------------------------
+# The serving composition (assign -> probe -> encode -> ADC -> re-rank)
+# as DuckDB CTE segments, shared by every oracle that replays it.  Seed
+# centroids are the first 16 vectors by id; seed codebooks cut the same
+# 16 vectors into 8 subspaces of 8 dims.  Assignment, encoding and
+# table entries round to 9dp, ADC sums and re-rank cosines to 6dp, ties
+# to the lower id — the grid the Spark side rounds to.  Each function
+# returns CTE text (a segment may hold several CTEs); _with joins them.
+
+def _with(*ctes: str) -> str:
+    """The WITH clause over *ctes*, in order."""
+    out = "\nWITH " + ctes[0]
+    for cte in ctes[1:]:
+        out += (", " if out.endswith("\n)") else ",\n") + cte
+    return out
+
+
+def _seed_cent(src: str = "embeddings") -> str:
+    """``cent``: the first 16 vectors of *src* as centroids."""
+    return f"""cent AS (
+  SELECT vec_id AS centroid_id, embedding AS cvec
+  FROM {src} ORDER BY vec_id LIMIT 16
+)"""
+
+
+def _q(qid: int = 0) -> str:
+    """``q``: the query vector, row *qid*'s embedding."""
+    return ("q AS (SELECT embedding AS qv FROM embeddings "
+            f"WHERE vec_id = {qid})")
+
+
+def _qs(qids) -> str:
+    """``qs``: one (qid, qv) row per batched query."""
+    return f"""qs AS (
+  SELECT vec_id AS qid, embedding AS qv FROM embeddings
+  WHERE vec_id IN ({", ".join(str(q) for q in qids)})
+)"""
+
+
+def _assign(src: str = "embeddings", carry=("embedding",)) -> str:
+    """``cscored``/``celled``: each row of *src* in its nearest cell by
+    cosine, with the *carry* columns."""
+    sel = "".join(f"e.{c}, " for c in carry)
+    out = "".join(f"{c}, " for c in carry)
+    return f"""cscored AS (
+  SELECT e.vec_id, {sel}c.centroid_id,
          (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
+  FROM {src} e CROSS JOIN cent c
 ), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
+  SELECT vec_id, {out}centroid_id AS cell FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
                                  ORDER BY cdist DESC, centroid_id) AS rn
     FROM cscored) WHERE rn = 1
-), probe AS (
+)"""
+
+
+def _probe(nprobe: int = 4, where: str = "") -> str:
+    """``probe``/``cand``: the query's *nprobe* nearest cells and their
+    rows, pre-filtered by *where*."""
+    gate = f" AND {where}" if where else ""
+    return f"""probe AS (
   SELECT centroid_id AS cell
   FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id
-  LIMIT {nprobe}
+  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT {nprobe}
 ), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), js AS (SELECT DISTINCT j FROM cb),
-ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
+  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe){gate}
+)"""
+
+
+def _probe_many(nprobe: int = 4, where: str = "") -> str:
+    """Batched ``probe`` (qid, cell) and ``cand``, the rows of every
+    probed cell, pre-filtered by *where*."""
+    gate = f" AND {where}" if where else ""
+    return f"""probe AS (
+  SELECT q.qid, c.centroid_id AS cell
+  FROM qs q CROSS JOIN cent c
+  QUALIFY row_number() OVER (
+    PARTITION BY q.qid
+    ORDER BY {V.duck_cosine('c.cvec', 'q.qv')} DESC, c.centroid_id) <= {nprobe}
+), cand AS (
+  SELECT * FROM celled
+  WHERE cell IN (SELECT DISTINCT cell FROM probe){gate}
+)"""
+
+
+def _seed_codebooks(src: str = "embeddings") -> str:
+    """``seeds``/``js``/``cb``: the first 16 vectors of *src* as the
+    codewords of every subspace."""
+    return f"""seeds AS (
+  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
+  FROM (SELECT vec_id, embedding FROM {src} ORDER BY vec_id LIMIT 16)
+), js AS (SELECT unnest(range(8)) AS j),
+cb AS (
+  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
+  FROM seeds CROSS JOIN js
+)"""
+
+
+# trained codebooks carry their own subspace ids
+_TRAINED_JS = "js AS (SELECT DISTINCT j FROM cb)"
+
+
+def _encode(src: str = "cand c", out: str = "coded", carry=()) -> str:
+    """``ev``/*out*: each row of *src* (``relation alias``) encoded to
+    its nearest codeword per subspace, with the *carry* columns."""
+    a = src.split()[-1]
+    sel = "".join(f"{a}.{c}, " for c in carry)
+    evs = "".join(f"ev.{c}, " for c in carry)
+    cols = "".join(f"{c}, " for c in carry)
+    return f"""ev AS (
+  SELECT {a}.vec_id, {sel}js.j, {a}.embedding[(js.j*8+1):(js.j*8+8)] AS xv
+  FROM {src} CROSS JOIN js
+), {out} AS (
+  SELECT vec_id, {cols}j, cw FROM (
+    SELECT ev.vec_id, {evs}ev.j, cb.cw,
            row_number() OVER (
              PARTITION BY ev.vec_id, ev.j
              ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
                       cb.cw) AS rn
     FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
+)"""
+
+
+def _adc(coded: str = "coded") -> str:
+    """``qtab``/``adc``: the query's codeword table and the ADC score
+    of every row of *coded*."""
+    return f"""qtab AS (
   SELECT cb.j, cb.cw,
-         (round({V.duck_dot("(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]",
+         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
                             'cb.cv')}, 9) + 0) AS d
   FROM cb
 ), adc AS (
   SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
+  FROM {coded} a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
   GROUP BY a.vec_id
-), short AS (
-  SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT {shortlist}
-)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
+)"""
+
+
+def _adc_many(shortlist: int = 50, short: str = "short") -> str:
+    """Batched ``qtab``/``adc`` (a row scores only for the queries that
+    probed its cell) and *short*, the top *shortlist* ids per qid."""
+    return f"""qtab AS (
+  SELECT q.qid, cb.j, cb.cw,
+         (round({V.duck_dot('q.qv[(cb.j*8+1):(cb.j*8+8)]', 'cb.cv')}, 9)
+          + 0) AS d
+  FROM qs q CROSS JOIN cb
+), adc AS (
+  SELECT p.qid, a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
+  FROM coded a
+  JOIN probe p ON p.cell = a.cell
+  JOIN qtab t ON t.qid = p.qid AND t.j = a.j AND t.cw = a.cw
+  GROUP BY p.qid, a.vec_id
+), {short} AS (
+  SELECT qid, vec_id FROM adc
+  QUALIFY row_number() OVER (PARTITION BY qid
+                             ORDER BY adc_sim DESC, vec_id) <= {shortlist}
+)"""
+
+
+def _short(shortlist: int = 50) -> str:
+    """``short``: the top *shortlist* ids by ADC score."""
+    return ("short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, "
+            f"vec_id LIMIT {shortlist})")
+
+
+def _rerank(src: str = "cand c", cell: bool = True) -> str:
+    """The final select: the shortlisted rows of *src* (``relation
+    alias``) re-ranked by exact cosine, top 10."""
+    a = src.split()[-1]
+    cols = f"{a}.vec_id, {a}.cell," if cell else f"{a}.vec_id,"
+    cos = V.duck_cosine(f"{a}.embedding", "(SELECT qv FROM q)")
+    return f"""
+SELECT {cols}
+       (round({cos}, 6) + 0)
          AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
+FROM {src} JOIN short s ON s.vec_id = {a}.vec_id
+ORDER BY sim DESC, {a}.vec_id LIMIT 10
 """
 
 
-@register("ann_ivfpq_trained", oracle=_ivfpq_replay_oracle(
-    _trained_dir("ann_ivfpq_trained"), nprobe=8, shortlist=400))
+# The seed composition every seed-artifact IVFPQ oracle replays.
+_IVFPQ_SEED_CTES = (_seed_cent(), _q(), _assign(), _probe(),
+                    _seed_codebooks(), _encode(), _adc())
+
+_IVFPQ_TRAINED_DIR = _trained_dir("ann_ivfpq_trained")
+
+
+# The full IVF x PQ composition replayed from the trained artifacts the
+# row persists (centroids + codebooks parquet): identical math to the
+# seed oracle, with the artifact CTEs reading parquet instead of
+# deriving seed picks, so every stage downstream of training is
+# value-checked.  The centroid CTE carries the fingerprint guard: a
+# cross-scale artifact empties it and the row fails.
+@register("ann_ivfpq_trained", oracle=_with(
+    f"""cent AS (
+  SELECT centroid_id, centroid_vec AS cvec
+  FROM read_parquet('{_IVFPQ_TRAINED_DIR}/centroids/*.parquet')
+  WHERE {_fp_guard("ann_ivfpq_trained", "embeddings")}
+), cb AS (
+  SELECT j, cw, cv
+  FROM read_parquet('{_IVFPQ_TRAINED_DIR}/codebooks/*.parquet')
+)""",
+    _q(), _assign(), _probe(8), _TRAINED_JS, _encode(), _adc(),
+    """short AS (
+  SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 400
+)""") + _rerank())
 def ann_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained IVF x PQ BUILD-path check: MLlib k-means coarse
     centroids + Lloyd's-trained codebooks through the same
@@ -575,8 +708,8 @@ def ann_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL oracle since r12: the trained artifacts themselves aren't
     DuckDB-reproducible (k-means|| / Lloyd's), so the query PERSISTS
     them and the oracle replays the whole assign -> encode -> ADC ->
-    re-rank composition from the persisted parquet
-    (_ivfpq_replay_oracle) — the ann_trained_store_exhaustive
+    re-rank composition from the persisted parquet (the IVF x PQ
+    oracle builder) — the ann_trained_store_exhaustive
     technique applied to the ADC fold (VERDICT r11 item 1).  The
     nprobe=8 x shortlist=400 operating point (recall@10 0.77) is the
     measured knee from tools/scaling_check.py --knee (README table)."""
@@ -3812,39 +3945,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_ops.lsh_search(emb, planes, query_id=0, k=10)
 
 
-_PQ_ADC_CTE = f"""
-WITH seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT e.vec_id, js.j, e.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM embeddings e CROSS JOIN js
-), assigned AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM assigned a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-)"""
+# PQ alone: seed codebooks, the whole corpus encoded, ADC-scored.
+_PQ_ADC_CTES = (_seed_codebooks(), _encode("embeddings e", out="assigned"),
+                _q(), _adc("assigned"))
 
 
-@register("ann_pq_topk", oracle=_PQ_ADC_CTE + """
+@register("ann_pq_topk", oracle=_with(*_PQ_ADC_CTES) + """
 SELECT vec_id, adc_sim FROM adc
 ORDER BY adc_sim DESC, vec_id LIMIT 10
 """)
@@ -3863,14 +3969,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_ops.pq_search(codes, table, k=10)
 
 
-@register("ann_pq_rerank", oracle=_PQ_ADC_CTE + f""",
-short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT e.vec_id,
-       (round({V.duck_cosine('e.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM embeddings e JOIN short s ON s.vec_id = e.vec_id
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""")
+@register("ann_pq_rerank", oracle=_with(*_PQ_ADC_CTES, _short(50))
+          + _rerank("embeddings e", cell=False))
 def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage PQ: ADC shortlist (top-50 on the compressed scan) then
     exact cosine re-rank of the survivors — the standard recovery for
@@ -3888,40 +3988,14 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQRR_TRAINED_DIR = _trained_dir("ann_pq_rerank_trained")
 
 
-@register("ann_pq_rerank_trained", oracle=f"""
-WITH cb AS (
+@register("ann_pq_rerank_trained", oracle=_with(
+    f"""cb AS (
   SELECT j, cw, cv
   FROM read_parquet('{_PQRR_TRAINED_DIR}/codebooks/*.parquet')
   WHERE {_fp_guard("ann_pq_rerank_trained", "embeddings")}
-), js AS (SELECT DISTINCT j FROM cb),
-ev AS (
-  SELECT e.vec_id, js.j, e.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM embeddings e CROSS JOIN js
-), assigned AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot("(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]",
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM assigned a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 200)
-SELECT e.vec_id,
-       (round({V.duck_cosine('e.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM embeddings e JOIN short s ON s.vec_id = e.vec_id
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""")
+)""",
+    _TRAINED_JS, _encode("embeddings e", out="assigned"), _q(),
+    _adc("assigned"), _short(200)) + _rerank("embeddings e", cell=False))
 def ann_pq_rerank_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION PQ path: k-means-trained codebooks (bounded
     deterministic sample, operators/pq.py:kmeans_codebooks) + the
@@ -3952,60 +4026,7 @@ def ann_pq_rerank_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the inline row (ann_ivfpq_topk) and the materialized-index row
 # (ann_ivfpq_materialized): same artifacts, same parameters, so the
 # persisted layout must reproduce the inline computation exactly.
-_IVFPQ_SEED_ORACLE = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
-"""
+_IVFPQ_SEED_ORACLE = _with(*_IVFPQ_SEED_CTES, _short()) + _rerank()
 
 
 @register("ann_ivfpq_topk", oracle=_IVFPQ_SEED_ORACLE)
@@ -4075,8 +4096,7 @@ def ann_ivfpq_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQRT()) equals Python's isqrt at every fixture N (500 -> 22,
 # 2000 -> 44); codebook seeds stay ncodes=16 — auto-sizing moves only
 # the coarse quantizer.
-_IVFPQ_AUTOSIZED_ORACLE = f"""
-WITH nl AS (
+_IVFPQ_AUTOSIZED_ORACLE = _with("""nl AS (
   SELECT GREATEST(16, CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT)) AS nlist
   FROM embeddings
 ), cent AS (
@@ -4085,56 +4105,7 @@ WITH nl AS (
            row_number() OVER (ORDER BY vec_id) AS rn
     FROM embeddings)
   WHERE rn <= (SELECT nlist FROM nl)
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
-"""
+)""", *_IVFPQ_SEED_CTES[1:], _short()) + _rerank()
 
 
 @register("ann_ivfpq_autosized", oracle=_IVFPQ_AUTOSIZED_ORACLE)
@@ -4192,16 +4163,20 @@ _TRAINED_LINK_GUARD = (
     f" FROM embeddings)")
 
 
-@register("ann_ivfpq_materialized_trained", oracle=f"""
-WITH cent AS (
+# The trained store's centroid sidecar, behind the link guard.
+_TRAINED_LINK_CENT = f"""cent AS (
   SELECT centroid_id, centroid_vec AS cvec
   FROM read_parquet('{_TRAINED_STORE_LINK}/centroids/*.parquet')
   WHERE {_TRAINED_LINK_GUARD}
-), cb AS (
+)"""
+
+# The SERVE path replayed from the linked store's own parquet: probe
+# from the centroid sidecar, hive-partition-filtered code scan, the
+# adc_score_col fold over the STORED codes, shortlist-400.
+_TRAINED_STORE_SERVE = (_TRAINED_LINK_CENT, f"""cb AS (
   SELECT j, cw, cv
   FROM read_parquet('{_TRAINED_STORE_LINK}/codebooks/*.parquet')
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-probe AS (
+)""", _q(), f"""probe AS (
   SELECT centroid_id AS cell
   FROM cent, q
   ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 8
@@ -4210,13 +4185,12 @@ probe AS (
   FROM read_parquet('{_TRAINED_STORE_LINK}/codes/*/*.parquet',
                     hive_partitioning = true)
   WHERE CAST(cell AS BIGINT) IN (SELECT cell FROM probe)
-), js AS (SELECT DISTINCT j FROM cb),
-expl AS (
+)""", _TRAINED_JS, f"""expl AS (
   SELECT c.vec_id, js.j, c.codes[js.j + 1] AS cw
   FROM codes c CROSS JOIN js
 ), qtab AS (
   SELECT cb.j, cb.cw,
-         (round({V.duck_dot("(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]",
+         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
                             'cb.cv')}, 9) + 0) AS d
   FROM cb
 ), adc AS (
@@ -4225,12 +4199,22 @@ expl AS (
   GROUP BY e.vec_id
 ), short AS (
   SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 400
-), vecs AS (
-  SELECT vec_id, embedding, CAST(cell AS BIGINT) AS cell
+)""")
+
+
+def _trained_vecs(*cols: str) -> str:
+    """``vecs``: the linked store's vectors in the probed cells."""
+    return f"""vecs AS (
+  SELECT {", ".join(("vec_id", "embedding") + cols)}
   FROM read_parquet('{_TRAINED_STORE_LINK}/vectors/*/*.parquet',
                     hive_partitioning = true)
   WHERE CAST(cell AS BIGINT) IN (SELECT cell FROM probe)
-)
+)"""
+
+
+@register("ann_ivfpq_materialized_trained", oracle=_with(
+    *_TRAINED_STORE_SERVE, _trained_vecs("CAST(cell AS BIGINT) AS cell"))
+    + f"""
 SELECT v.vec_id, v.cell,
        (round({V.duck_cosine('v.embedding', '(SELECT qv FROM q)')}, 6) + 0)
          AS sim
@@ -4311,61 +4295,10 @@ def _labeled_index(spark: SparkSession, sf_dir: str) -> str:
     return _LABELED_INDEX_CACHE[sf_dir]
 
 
-@register("ann_ivfpq_filtered_materialized", oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT e.vec_id, e.embedding, e.label, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, label, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled
-  WHERE cell IN (SELECT cell FROM probe) AND label % 2 = 0
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
-""")
+@register("ann_ivfpq_filtered_materialized", oracle=_with(
+    _seed_cent(), _q(), _assign(carry=("embedding", "label")),
+    _probe(where="label % 2 = 0"), _seed_codebooks(), _encode(), _adc(),
+    _short()) + _rerank())
 def ann_ivfpq_filtered_materialized(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     """Filtered ANN from the PERSISTED index — the production hybrid-
@@ -4389,65 +4322,9 @@ _MANY_QIDS_LARGE = [0, 3, 7, 13, 21, 34, 55, 89]
 
 
 def _ivfpq_many_oracle(qids: list) -> str:
-    return f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), qs AS (
-  SELECT vec_id AS qid, embedding AS qv FROM embeddings
-  WHERE vec_id IN ({", ".join(str(q) for q in qids)})
-), cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT q.qid, c.centroid_id AS cell
-  FROM qs q CROSS JOIN cent c
-  QUALIFY row_number() OVER (
-    PARTITION BY q.qid
-    ORDER BY {V.duck_cosine('c.cvec', 'q.qv')} DESC, c.centroid_id) <= 4
-), cand AS (
-  SELECT * FROM celled
-  WHERE cell IN (SELECT DISTINCT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, c.cell, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, cell, j, cw FROM (
-    SELECT ev.vec_id, ev.cell, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT q.qid, cb.j, cb.cw,
-         (round({V.duck_dot('q.qv[(cb.j*8+1):(cb.j*8+8)]', 'cb.cv')}, 9)
-          + 0) AS d
-  FROM qs q CROSS JOIN cb
-), adc AS (
-  SELECT p.qid, a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a
-  JOIN probe p ON p.cell = a.cell
-  JOIN qtab t ON t.qid = p.qid AND t.j = a.j AND t.cw = a.cw
-  GROUP BY p.qid, a.vec_id
-), short AS (
-  SELECT qid, vec_id FROM adc
-  QUALIFY row_number() OVER (PARTITION BY qid
-                             ORDER BY adc_sim DESC, vec_id) <= 50
-)
+    return _with(
+        _seed_cent(), _qs(qids), _assign(), _probe_many(),
+        _seed_codebooks(), _encode(carry=("cell",)), _adc_many()) + f"""
 SELECT s.qid, c.vec_id, c.cell,
        (round({V.duck_cosine('c.embedding', 'q.qv')}, 6) + 0) AS sim
 FROM short s
@@ -4538,9 +4415,8 @@ def _hybrid_many_oracle(doc_from: str = "documents",
     *termsets* overrides the qid -> terms map (the large-Q row)."""
     termsets = termsets or _HYBRID_TERMS
     qids = sorted(termsets)
-    lbl_sel = "e.label, " if vec_pred else ""
-    lbl_out = "label, " if vec_pred else ""
-    cand_pred = f" AND ({vec_pred})" if vec_pred else ""
+    carry = ("embedding", "label") if vec_pred else ("embedding",)
+    where = f"({vec_pred})" if vec_pred else ""
     kw_blocks = []
     for qid in qids:
         kw_blocks.append(f"""
@@ -4552,65 +4428,10 @@ FROM ({retrieval_ops.duck_bm25(termsets[qid], _DUCK_TOKENS,
 QUALIFY row_number() OVER (
   ORDER BY (round(bm25, 6) + 0) DESC, doc_id) <= 50""")
     kwrank = "\nUNION ALL\n".join(kw_blocks)
-    return f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), qs AS (
-  SELECT vec_id AS qid, embedding AS qv FROM embeddings
-  WHERE vec_id IN ({", ".join(str(q) for q in qids)})
-), cscored AS (
-  SELECT e.vec_id, e.embedding, {lbl_sel}c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, {lbl_out}centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT q.qid, c.centroid_id AS cell
-  FROM qs q CROSS JOIN cent c
-  QUALIFY row_number() OVER (
-    PARTITION BY q.qid
-    ORDER BY {V.duck_cosine('c.cvec', 'q.qv')} DESC, c.centroid_id) <= 4
-), cand AS (
-  SELECT * FROM celled
-  WHERE cell IN (SELECT DISTINCT cell FROM probe){cand_pred}
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, c.cell, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, cell, j, cw FROM (
-    SELECT ev.vec_id, ev.cell, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT q.qid, cb.j, cb.cw,
-         (round({V.duck_dot('q.qv[(cb.j*8+1):(cb.j*8+8)]', 'cb.cv')}, 9)
-          + 0) AS d
-  FROM qs q CROSS JOIN cb
-), adc AS (
-  SELECT p.qid, a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a
-  JOIN probe p ON p.cell = a.cell
-  JOIN qtab t ON t.qid = p.qid AND t.j = a.j AND t.cw = a.cw
-  GROUP BY p.qid, a.vec_id
-), vshort AS (
-  SELECT qid, vec_id FROM adc
-  QUALIFY row_number() OVER (PARTITION BY qid
-                             ORDER BY adc_sim DESC, vec_id) <= 50
-), vrank AS (
+    return _with(
+        _seed_cent(), _qs(qids), _assign(carry=carry),
+        _probe_many(where=where), _seed_codebooks(), _encode(carry=("cell",)),
+        _adc_many(short="vshort"), f"""vrank AS (
   SELECT s.qid, c.vec_id AS doc_id,
          CAST(row_number() OVER (
            PARTITION BY s.qid
@@ -4620,7 +4441,7 @@ cb AS (
   JOIN cand c ON c.vec_id = s.vec_id
   JOIN qs q ON q.qid = s.qid
 ), kwrank AS ({kwrank}
-)
+)""") + """
 SELECT COALESCE(k.qid, v.qid) AS qid,
        COALESCE(k.doc_id, v.doc_id) AS doc_id,
        k.rank_kw, v.rank_vec,
@@ -4706,61 +4527,10 @@ def hybrid_serve_many_large(spark: SparkSession,
 # artifacts, replayed as one full-corpus assignment + encoding against
 # the BASE-derived centroids/codebooks.  Batch-split invariance is the
 # point: one upsert call or N micro-batches must land on the same rows.
-_INDEX_UPSERT_ORACLE = f"""
-WITH base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 3),
-cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM base ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 3),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM base ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
-"""
+_INDEX_UPSERT_ORACLE = _with(
+    "base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 3)",
+    _seed_cent("base"), _q(3), _assign(), _probe(), _seed_codebooks("base"),
+    _encode(), _adc(), _short()) + _rerank()
 
 
 @register("ann_index_upsert", oracle=_INDEX_UPSERT_ORACLE)
@@ -4895,61 +4665,11 @@ def _full_index_copy(spark: SparkSession, sf_dir: str) -> str:
 # layout.  The query vector is itself a victim's (vec_id=3): a green
 # row proves an erased vector can no longer be returned even when the
 # query is exactly that vector.
-_INDEX_ERASE_ORACLE = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 3),
-surv AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 3),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM surv e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
-"""
+_INDEX_ERASE_ORACLE = _with(
+    _seed_cent(), _q(3),
+    "surv AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 3)",
+    _assign("surv"), _probe(), _seed_codebooks(), _encode(), _adc(),
+    _short()) + _rerank()
 
 
 @register("ann_index_erase", oracle=_INDEX_ERASE_ORACLE)
@@ -5013,24 +4733,16 @@ def streaming_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   k=10, nprobe=4, shortlist=50)
 
 
-@register("ann_index_stats_trained", oracle=f"""
-WITH cent AS (
-  SELECT centroid_id, centroid_vec AS cvec
-  FROM read_parquet('{_TRAINED_STORE_LINK}/centroids/*.parquet')
-  WHERE {_TRAINED_LINK_GUARD}
-), cscored AS (
-  SELECT e.vec_id, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-)
+# Per-cell row counts of the replayed assignment: both stores must
+# hold exactly these.
+_CELL_COUNTS = """
 SELECT cell, count(*) AS n_vectors, count(*) AS n_codes
 FROM celled GROUP BY cell ORDER BY cell
-""")
+"""
+
+
+@register("ann_index_stats_trained",
+          oracle=_with(_TRAINED_LINK_CENT, _assign(carry=())) + _CELL_COUNTS)
 def ann_index_stats_trained(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """ann_index_stats over the TRAINED store, full-oracle via the r12
@@ -5052,23 +4764,8 @@ def ann_index_stats_trained(spark: SparkSession,
             .orderBy("cell"))
 
 
-@register("ann_index_stats", oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), cscored AS (
-  SELECT e.vec_id, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-)
-SELECT cell, count(*) AS n_vectors, count(*) AS n_codes
-FROM celled GROUP BY cell ORDER BY cell
-""")
+@register("ann_index_stats",
+          oracle=_with(_seed_cent(), _assign(carry=())) + _CELL_COUNTS)
 def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index observability: per-cell occupancy of BOTH persisted stores
     (raw vectors and PQ codes) read straight off the cell-partitioned
@@ -8637,11 +8334,10 @@ def text_index_ttl_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20))
 
 
-_ANN_TTL_ORACLE = _IVFPQ_SEED_ORACLE.replace(
-    "SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)",
-    "SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)\n"
-    "    AND vec_id >= (SELECT count(*) // 4 FROM embeddings)")
-assert _ANN_TTL_ORACLE != _IVFPQ_SEED_ORACLE  # the splice anchor held
+_ANN_TTL_ORACLE = _with(
+    _seed_cent(), _q(), _assign(),
+    _probe(where="vec_id >= (SELECT count(*) // 4 FROM embeddings)"),
+    _seed_codebooks(), _encode(), _adc(), _short()) + _rerank()
 
 
 @register("ann_index_ttl_erase", oracle=_ANN_TTL_ORACLE)
@@ -9375,57 +9071,11 @@ def changefeed_apply_text_index(spark: SparkSession,
     return _invidx_top20(spark, path)
 
 
-@register("pipeline_forget_and_serve", oracle=f"""
-WITH base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 3),
-surv AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7),
-cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM base ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM surv e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM base ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50),
-v_top AS (
+@register("pipeline_forget_and_serve", oracle=_with(
+    "base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 3)",
+    "surv AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7)",
+    _seed_cent("base"), _q(), _assign("surv"), _probe(),
+    _seed_codebooks("base"), _encode(), _adc(), _short(), f"""v_top AS (
   SELECT c.vec_id AS doc_id,
          (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6)
           + 0) AS s
@@ -9445,7 +9095,7 @@ kw_top AS (
   SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
            AS rank_kw
   FROM kw_top
-)
+)""") + """
 SELECT COALESCE(k.doc_id, v.doc_id) AS doc_id, k.rank_kw, v.rank_vec,
        (round(COALESCE(1.0::DOUBLE / (60 + k.rank_kw), 0.0)
             + COALESCE(1.0::DOUBLE / (60 + v.rank_vec), 0.0), 6) + 0) AS rrf
@@ -9569,8 +9219,8 @@ def _cfeed_old_copy(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-@register("changefeed_apply_index", oracle=f"""
-WITH oldc AS (
+@register("changefeed_apply_index", oracle=_with(
+    """oldc AS (
   SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0
 ), newc AS (
   SELECT vec_id,
@@ -9580,59 +9230,9 @@ WITH oldc AS (
               ELSE list_transform(embedding, x -> CAST(x AS DOUBLE))
          END AS embedding
   FROM embeddings WHERE vec_id % 7 <> 0
-), cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM oldc ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM newc e CROSS JOIN cent c
-), celled AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-), cand AS (
-  SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe)
-), seeds AS (
-  SELECT embedding AS sv, row_number() OVER (ORDER BY vec_id) - 1 AS cw
-  FROM (SELECT vec_id, embedding FROM oldc ORDER BY vec_id LIMIT 16)
-), js AS (SELECT unnest(range(8)) AS j),
-cb AS (
-  SELECT js.j, seeds.cw, seeds.sv[(js.j*8+1):(js.j*8+8)] AS cv
-  FROM seeds CROSS JOIN js
-), ev AS (
-  SELECT c.vec_id, js.j, c.embedding[(js.j*8+1):(js.j*8+8)] AS xv
-  FROM cand c CROSS JOIN js
-), coded AS (
-  SELECT vec_id, j, cw FROM (
-    SELECT ev.vec_id, ev.j, cb.cw,
-           row_number() OVER (
-             PARTITION BY ev.vec_id, ev.j
-             ORDER BY (round({V.duck_dot('ev.xv', 'cb.cv')}, 9) + 0) DESC,
-                      cb.cw) AS rn
-    FROM ev JOIN cb ON cb.j = ev.j) WHERE rn = 1
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot('(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]',
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT a.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM coded a JOIN qtab t ON t.j = a.j AND t.cw = a.cw
-  GROUP BY a.vec_id
-), short AS (SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50)
-SELECT c.vec_id, c.cell,
-       (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6) + 0)
-         AS sim
-FROM cand c JOIN short s ON s.vec_id = c.vec_id
-ORDER BY sim DESC, c.vec_id LIMIT 10
-""")
+)""",
+    _seed_cent("oldc"), _q(), _assign("newc"), _probe(),
+    _seed_codebooks("oldc"), _encode(), _adc(), _short()) + _rerank())
 def changefeed_apply_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Changefeed-driven index maintenance — the wiring that makes the
     index a DERIVED artifact of the store: two snapshots are diffed
@@ -10562,95 +10162,51 @@ WITH short AS MATERIALIZED (
     return prefix + _mmr_pair_cte() + _mmr_steps(k, lam)
 
 
-_ANN_MMR_ORACLE = (
-    _IVFPQ_SEED_ORACLE.rsplit("), short AS", 1)[0]
-    + f"""), adcshort AS (
+_ADCSHORT = """adcshort AS (
   SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50
-), short AS MATERIALIZED (
+)"""
+
+_ANN_MMR_ORACLE = _with(
+    *_IVFPQ_SEED_CTES, _ADCSHORT, f"""short AS MATERIALIZED (
   SELECT c.vec_id, c.embedding,
          (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6)
           + 0) AS simq
   FROM cand c JOIN adcshort s ON s.vec_id = c.vec_id
   ORDER BY simq DESC, c.vec_id LIMIT 30
+)""") + _mmr_pair_cte() + _mmr_steps(10, 0.7)
+
+
+# recall@10 of ``served`` against brute-force ``truth``.
+_RECALL_TRUTH = f"""truth AS (
+  SELECT e.vec_id,
+         (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS sim
+  FROM embeddings e, q
+  ORDER BY sim DESC, e.vec_id LIMIT 10
 )"""
-    + _mmr_pair_cte() + _mmr_steps(10, 0.7))
+_RECALL_SELECT = """
+SELECT CAST(10 AS BIGINT) AS k, count(*) AS n_hits,
+       (round(count(*) / 10.0, 6) + 0) AS recall
+FROM served s JOIN truth t ON t.vec_id = s.vec_id
+"""
 
-
-_ANN_RECALL_ORACLE = (
-    _IVFPQ_SEED_ORACLE.rsplit("), short AS", 1)[0]
-    + f"""), adcshort AS (
-  SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 50
-), served AS (
+_ANN_RECALL_ORACLE = _with(
+    *_IVFPQ_SEED_CTES, _ADCSHORT, f"""served AS (
   SELECT c.vec_id,
          (round({V.duck_cosine('c.embedding', '(SELECT qv FROM q)')}, 6)
           + 0) AS sim
   FROM cand c JOIN adcshort s ON s.vec_id = c.vec_id
   ORDER BY sim DESC, c.vec_id LIMIT 10
-), truth AS (
-  SELECT e.vec_id,
-         (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS sim
-  FROM embeddings e, q
-  ORDER BY sim DESC, e.vec_id LIMIT 10
-)
-SELECT CAST(10 AS BIGINT) AS k, count(*) AS n_hits,
-       (round(count(*) / 10.0, 6) + 0) AS recall
-FROM served s JOIN truth t ON t.vec_id = s.vec_id""")
+)""", _RECALL_TRUTH) + _RECALL_SELECT
 
 
-@register("ann_recall_audit_trained", oracle=f"""
-WITH cent AS (
-  SELECT centroid_id, centroid_vec AS cvec
-  FROM read_parquet('{_TRAINED_STORE_LINK}/centroids/*.parquet')
-  WHERE {_TRAINED_LINK_GUARD}
-), cb AS (
-  SELECT j, cw, cv
-  FROM read_parquet('{_TRAINED_STORE_LINK}/codebooks/*.parquet')
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 8
-), codes AS (
-  SELECT vec_id, codes, CAST(cell AS BIGINT) AS cell
-  FROM read_parquet('{_TRAINED_STORE_LINK}/codes/*/*.parquet',
-                    hive_partitioning = true)
-  WHERE CAST(cell AS BIGINT) IN (SELECT cell FROM probe)
-), js AS (SELECT DISTINCT j FROM cb),
-expl AS (
-  SELECT c.vec_id, js.j, c.codes[js.j + 1] AS cw
-  FROM codes c CROSS JOIN js
-), qtab AS (
-  SELECT cb.j, cb.cw,
-         (round({V.duck_dot("(SELECT qv FROM q)[(cb.j*8+1):(cb.j*8+8)]",
-                            'cb.cv')}, 9) + 0) AS d
-  FROM cb
-), adc AS (
-  SELECT e.vec_id, (round(sum(t.d), 6) + 0) AS adc_sim
-  FROM expl e JOIN qtab t ON t.j = e.j AND t.cw = e.cw
-  GROUP BY e.vec_id
-), short AS (
-  SELECT vec_id FROM adc ORDER BY adc_sim DESC, vec_id LIMIT 400
-), vecs AS (
-  SELECT vec_id, embedding
-  FROM read_parquet('{_TRAINED_STORE_LINK}/vectors/*/*.parquet',
-                    hive_partitioning = true)
-  WHERE CAST(cell AS BIGINT) IN (SELECT cell FROM probe)
-), served AS (
+@register("ann_recall_audit_trained", oracle=_with(
+    *_TRAINED_STORE_SERVE, _trained_vecs(), f"""served AS (
   SELECT v.vec_id,
          (round({V.duck_cosine('v.embedding', '(SELECT qv FROM q)')}, 6)
           + 0) AS sim
   FROM vecs v JOIN short s ON s.vec_id = v.vec_id
   ORDER BY sim DESC, v.vec_id LIMIT 10
-), truth AS (
-  SELECT e.vec_id,
-         (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS sim
-  FROM embeddings e, q
-  ORDER BY sim DESC, e.vec_id LIMIT 10
-)
-SELECT CAST(10 AS BIGINT) AS k, count(*) AS n_hits,
-       (round(count(*) / 10.0, 6) + 0) AS recall
-FROM served s JOIN truth t ON t.vec_id = s.vec_id
-""")
+)""", _RECALL_TRUTH) + _RECALL_SELECT)
 def ann_recall_audit_trained(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """recall@10 of the PRODUCTION index — the trained materialized
@@ -11043,475 +10599,11 @@ def topk_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 # Driver-verification ordering
 # =========================================================================
-# The driver's correctness gate covers roughly the first 50 registry
-# entries, in order. Rounds 1-5 (CORRECTNESS_r01..r05.json) together
-# verified every name below — the full registry is green (r05's
-# 50-query window passed 48 oracle + 2 rows-only-by-design with zero
-# errs). Rotate: queries without a driver-verified row yet go first so
-# every operator accrues one across rounds. Purely a presentation
-# order — REGISTRY itself keeps source order.
-DRIVER_VERIFIED = frozenset({
-    # round 18 rotation discipline (optimization round 2): ABSENT
-    # (pending-first in the r18 window) = rows whose EXECUTED path
-    # changed in the r18 diff —
-    # * NEW row: ann_ivfpq_autosized (the auto-sized layout policy
-    #   pinned end-to-end, VERDICT r17 item 4) leads never-checked;
-    # * every text-index verb/serve re-routes through the r18
-    #   _read_text_meta scheme dispatch + fs-probed _tombstone_frame,
-    #   and the upsert/build/compact verbs gained concurrent writes +
-    #   the footer-probe gen check: text_index_upsert/erase/compact/
-    #   stats/filtered_search/and_topk/ttl_sweep/stopword_prune,
-    #   text_inverted_index_topk, text_search_many(+_large),
-    #   text_filtered_many_large, changefeed_apply_text_index,
-    #   streaming_text_index_upsert/erase, pipeline_retention_forget_
-    #   text (also leg-overlapped);
-    # * the ANN sidecar reads (read_meta/_read_small_parquet_rows
-    #   scheme dispatch) + build_index seed-pick checkpoint +
-    #   overlapped store writes rotate ann_index_stats(+_trained),
-    #   ann_ivfpq_trained, pipeline_crawl_admit_index (and keep the
-    #   r17-absent ANN lifecycle/serving rows absent — touched again);
-    # * pipeline_retention_forget (store/index legs overlapped);
-    # * bpe_merge_rounds + bpe_encode_corpus (widened training loop).
-    # All rotated rows full-oracle green at sf0.001 and/or sf0.01 at
-    # commit time this round (round-end full sweep: 270 ok / 2
-    # rows-only / 0 failed).  write_watermark's driver-side rewrite is
-    # facade/bench-only (no contract row writes the state store) —
-    # covered by tests/test_engine_facade.py + test_freshness_gate.
-    # CORRECTNESS_r17's 50 sampled greens were ALL touched again by
-    # the r18 diff (they are the streaming/ANN/text maintenance tier
-    # this round optimized), so none re-list; they rotate with the
-    # rest.
-    # r16-window greens re-listed in r17 (CORRECTNESS_r16: 49
-    # full-oracle green + udf_embed_query rows-only-by-contract;
-    # their serving code is untouched by the r17 diff):
-    "sink_upsert_embeddings", "sink_delete_keys", "sink_retention_sweep",
-    "json_extract_text",
-    "udf_embed_query", "streaming_upsert_store",
-    "streaming_retention_sweep", # round 17 rotation discipline: ABSENT (pending-first in the r17
-    # window) = rows whose EXECUTED path changed in the r17 diff —
-    # BOTH halves of VERDICT r16 item 2 landed, so every ANN
-    # cell-store read now goes through sinks._read_buckets
-    # (explicit-dirs + basePath, O(touched/probed) listing instead of
-    # O(nlist) partition discovery):
-    # * the maintenance merge (_upsert_cells) rotates the rows that
-    #   merge into the cell stores: ann_index_upsert,
-    #   streaming_index_upsert, ann_index_rebuild (pre-rebuild
-    #   upsert), ann_index_compact, changefeed_apply_index,
-    #   pipeline_forget_and_serve;
-    # * the serving reads (_read_cells in search_index /
-    #   search_index_many) rotate every row that SERVES from the
-    #   index: ann_ivfpq_materialized(+_trained, _filtered),
-    #   ann_trained_store_exhaustive, search_index_many(+_large),
-    #   hybrid_serve_many(+_large), hybrid_filtered_serve,
-    #   hybrid_filtered_many_large, ann_recall_audit_trained,
-    #   ann_mmr_materialized, ann_index_erase, streaming_index_erase,
-    #   ann_index_ttl_erase, pipeline_ttl_hybrid_serve;
-    # * plus the NEW maintenance-interplay capstone
-    #   text_index_stopword_recycle (VERDICT r16 item 6).
-    # All 23 verified full-oracle at sf0.001 AND sf0.01 at commit
-    # time (0 failed).  Engine.apply_retention's
-    # text_index_tombstoned recount (ADVICE r16) is facade-only (no
-    # contract row constructs an Engine) — covered by
-    # tests/test_engine_facade.py; the _read_buckets docstring note
-    # and tools/gen_coverage SECTIONS entry change no executed path.
-    # The 25-row overdue tail (<= r8) follows pending via
-    # verification_order's max-age bump and still drains this window:
-    # 20 pending in quota + 25 overdue + 3 pending overflow = 48 of
-    # the ~50 slots (VERDICT r16 item 1).
-    # r15-window greens re-listed in r16 (CORRECTNESS_r15: all 48
-    # full-oracle green + 2 rows-only-by-contract; their serving code
-    # is untouched by the r16 diff):
-    "streaming_incremental_dedup",
-    "ann_lsh_topk",
-    "streaming_budget_admit", "udf_embed_batch",
-    "streaming_tumbling_availablenow", "streaming_append_finalized",
-    "streaming_sliding_window", "streaming_sessionize_stateful",
-    "streaming_dedup_within_watermark",
-    "text_bm25_and_topk", "streaming_enrich_dim", "streaming_interval_join",
-    "incremental_distinct_sketch", "incremental_topk_sketch",
-    "theta_sketch_setops", "incremental_quantile_sketch",
-    "streaming_centroid_drift",
-    # round 16 rotation discipline: ABSENT (pending-first in the r16
-    # window, never-checked leading) = rows whose EXECUTED serving
-    # path changed in the r16 diff —
-    # * NEW rows: pipeline_retention_forget_text (text-index retention
-    #   capstone, VERDICT r15 item 1), text_index_ttl_sweep +
-    #   ann_index_ttl_erase (index-side TTL verbs);
-    # * json_extract_text (array fixture now carries a text-less
-    #   middle item; oracle array branch rewritten to skip semantics,
-    #   ADVICE r16 low);
-    # * sink_retention_sweep + pipeline_retention_forget
-    #   (retention_sweep footer probe thread-pooled, VERDICT r15 item
-    #   6, + the pruned-listing rewrite read);
-    # * udf_embed_query (embed_query_vector dim default -> None,
-    #   ADVICE r16 medium);
-    # * the sinks._read_buckets pruned-listing read changed the
-    #   touched-bucket read of EVERY incremental store/erase verb —
-    #   rotate the rows that execute it: sink_upsert_embeddings,
-    #   streaming_upsert_store, sink_delete_keys, ann_index_erase,
-    #   ann_index_compact, changefeed_apply_index,
-    #   streaming_index_erase, pipeline_forget_and_serve.
-    # Engine.apply_retention/ensure_text_index/search_text/
-    # search_hybrid changes are facade-only (no contract row
-    # constructs an Engine) — covered by tests/test_engine_facade.py.
-    # full-oracle or rows-only-by-contract green; their serving
-    # code is untouched by the r15 diff):
-    "knn_join_pandas", "context_prev_next", "kth_ts_offset", "sessionize", "dedup_edit_distance", "dedup_repeated_chunks", "dedup_unaligned_substring", "text_novelty_score", "curate_by_novelty", "multimodal_features", "udtf_explode_users", "group_centroids_pandas", "asof_join_events", "range_join_ship_window", "maxsim_join_pandas",
-    "search_rocchio_feedback", "ann_signbit_rerank",
-    # round 15 rotation discipline: ABSENT (pending-first in the r15
-    # window) = every row whose EXECUTED serving path changed in the
-    # r15 diff — the 13 streaming rows (shared `_run_to_memory` /
-    # `_drive` harness + availableNow on the two stragglers, VERDICT
-    # r14 item 2), udf_embed_batch / udf_embed_query (dual-branch dim
-    # guard + dim=None bulk path in embed._load_model, ADVICE r15),
-    # sink_upsert_embeddings (upsert_parquet count_new threading,
-    # VERDICT r14 item 1), json_extract_text (valid-object-without-
-    # $.text now raw passthrough + list items lacking "text" skipped,
-    # ADVICE r15 medium), incremental_distinct_sketch (two-regime
-    # merge-consistency check, ADVICE r15), ann_lsh_topk (deterministic
-    # duplicate-id query tiebreak, ADVICE r15) — plus the carried-over
-    # late-r14 rotations below.  VERDICT r14 item 5's stale tail
-    # (r8-era agg_*/topk §2 rows) follows pending rows oldest-first
-    # via verification_order's age sort.
-    # round 14 rotation discipline (VERDICT r13 item 1 — CONSOLIDATION:
-    # pending ended at 17 — 8 from the consolidation diff + 9 honest
-    # rotations from the five late-r14 review passes
-    # (streaming_sessionize_stateful, dedup_edit_distance,
-    # json_extract_text, ann_lsh_topk, kth_ts_offset,
-    # context_prev_next, plus tail rows asof_join_events,
-    # multimodal_features, and udtf_explode_users whose rotation is
-    # slot-NEUTRAL: they were already inside the window).  The
-    # 50-slot window = 17 pending + 33 tail slots, so every remaining
-    # r2 and r3 row is still covered plus the oldest 15 of 29
-    # remaining r4 rows; the r4 rows that miss the window are covered
-    # by this round's full local sweeps — README "Full-registry gate
-    # artifact", 0 failed — and rotate first in r15.  A correctness
-    # fix always outranks the slot budget: rotating a changed row is
-    # not optional.)  Deliberately
-    # ABSENT (pending-first in the r14 window): curate_by_novelty
-    # (new), plus every row whose serving path changed in the
-    # r14 diff: dedup_repeated_chunks, dedup_unaligned_substring,
-    # text_novelty_score (corpus counts rewritten groupBy+join-back ->
-    # count(*) over (partition by hash), VERDICT item 2);
-    # maxsim_join_pandas, search_rocchio_feedback (half-away-from-zero
-    # _np_round6 grid + sequential centroid fold, ADVICE r13);
-    # ann_signbit_rerank (signbit_sketch_py + try_element_at
-    # short-vector 0-bit parity + NaN-dim 1-bit engine parity,
-    # ADVICE r13 + r14 second review); streaming_index_upsert
-    # (maintain_index -> index_maintenance_stats persist_backfill
-    # opt-in, ADVICE r13); streaming_sessionize_stateful (late-event
-    # cross-batch semantics fix, r14 second review — see the inline
-    # note at its old listing position below).
-    # DOCUMENTED EXCEPTION to the path-based rule: the r14 hardening of
-    # the shared _cc_free cleanup helper (VERDICT item 8) touches ~20
-    # transitive callers (index lifecycle, retrieval checkpoints, CC
-    # rounds), but it executes strictly AFTER each operator's output is
-    # committed and cannot affect any result — rotating all its callers
-    # out would defeat item 1's consolidation budget, so they stay
-    # listed and the helper carries its own direct both-path unit tests
-    # (tests/test_dedup_units.py::test_cc_free_*).  The same reasoning
-    # covers the late-r14 crash-recovery hardening of the index verbs
-    # (second review: upsert/rebuild/stats now roll a crashed
-    # erasure's pending manifest forward before reading, read_meta
-    # heals a root stranded mid-swap, upsert staging moved off the
-    # erasure's staging suffix, build_index frees its assignment
-    # checkpoint): every added step is a no-op on a store WITHOUT
-    # crash artifacts — the fixture-built stores every registry row
-    # serves — so committed outputs are bit-identical; the crashed
-    # states themselves are pinned by direct unit tests
-    # (tests/test_ivf_index.py::test_*_rolls_forward_*, *heal_root*,
-    # *stats_heals*, *empty_queries*).  Likewise the late-r14
-    # retrieval/engine edge-path fixes (empty-term-list guards,
-    # bootstrap id_col recording, changefeed meta_cols validation,
-    # hybrid's dynamic ANN id column, audit_recall's |truth| divisor,
-    # whole-call search_time_ms): each is unreachable or
-    # result-identical for every registry row's fixture inputs
-    # (fixture indexes use the default id column, non-empty term
-    # lists, and feeds carrying their recorded columns), pinned by
-    # tests/test_retrieval.py::test_empty_terms_*,
-    # *bootstrap_upsert*, *carries_meta_cols*, *non_default_ann*, and
-    # tests/test_engine_facade.py::test_audit_recall_small_store*.
-    # Same treatment for the fifth-review fingerprint_md5 NULL-text
-    # pin (NULL -> NULL fp matching the DuckDB twin): it touches every
-    # fingerprint-based row, but NO fixture carries a null text at any
-    # SF (asserted by tests/test_oracle_model_boundaries.py::
-    # test_fixture_corpus_inside_model), so outputs are bit-identical;
-    # pinned by test_edge_semantics.py::test_fingerprint_md5_null*.
-    # And for the sixth-review half-away rounding completion in the
-    # PQ encode/ADC kernels and the cell sim-join kernel: np.round's
-    # half-to-even differs from the rows' half-away DuckDB round()
-    # oracles ONLY on exact grid-half values — a fixture value in that
-    # class would already have hash-FAILED those green rows, so the
-    # change is provably bit-identical on every fixture (the two
-    # affected TAIL rows, knn_join_pandas and group_centroids_pandas,
-    # rotate anyway at zero slot cost; the reference-model property
-    # tests pin the grid).  The seventh-review _media_with_truncated_
-    # dups extraction is PLAN-identical (the two multimodal dedup rows
-    # now share the construction expression verbatim via a helper), so
-    # those rows stay listed with the boundary documented in the
-    # helper's docstring.  The eighth-review scale alignments —
-    # max_block=32 on the remaining unsalted LSH rows (pair set
-    # IDENTICAL by construction, hypothesis-pinned by
-    # test_grid_salted_lsh_equals_unsalted_on_random_corpora),
-    # planner-free anti joins on the corpus-proportional drop/eval
-    # lists (AQE still broadcasts them at fixture scale), and the
-    # NULLS LAST tiebreak alignment in skew_report_events (fixtures
-    # carry no NULL user_id) — are likewise output-identical at the
-    # gate's scale and stay listed, each re-verified full-oracle at
-    # commit time.
-    # The r13 window's other green rows are re-listed below.
-    # (r17: the index-SERVING rows formerly re-listed here —
-    # ann_ivfpq_materialized(+_trained, _filtered),
-    # ann_trained_store_exhaustive, search_index_many(+_large),
-    # hybrid_serve_many(+_large), hybrid_filtered_serve,
-    # hybrid_filtered_many_large, ann_recall_audit_trained,
-    # ann_mmr_materialized — rotated out: their probed-cell reads now
-    # go through _read_cells; see the r17 note at the top.)
-    "approx_distinct_users", "dedup_ngram_jaccard",
-    "dedup_containment", "ann_pq_rerank_trained",
-    "mix_temperature_budget", "text_bigram_perplexity",
-    # (r16: ann_index_erase, ann_index_compact, changefeed_apply_index,
-    # pipeline_forget_and_serve rotated out — their erase path now
-    # reads touched cells via sinks._read_buckets)
-    "maxsim_topk", "maxsim_serve_many", "maxsim_hybrid_rrf",
-    # round 13 rotation discipline: of CORRECTNESS_r12's 50 green
-    # rows, re-listed below are only those UNCHANGED by the r13 diff.
-    # Deliberately ABSENT (pending-first in the r13 window):
-    # (a) new rows — dedup_unaligned_substring, maxsim_topk,
-    # maxsim_serve_many; (b) rows whose serving code changed —
-    # dedup_ngram_jaccard + dedup_containment (shared
-    # _blocked_shingle_intersections refactor; ngram_jaccard also
-    # REMOVED from its round-2 block below), text_bigram_perplexity
-    # (pre-aggregated scoring join), approx_distinct_users (band
-    # oracle + published estimate; removed from the round-1 block),
-    # streaming_index_upsert (rewired through
-    # streaming.stream_index_upsert); (c) every published-artifact row
-    # whose oracle gained the fingerprint/content-witness guard —
-    # ann_ivfpq_trained, ann_pq_rerank_trained,
-    # ann_ivfpq_materialized_trained, ann_index_stats_trained,
-    # ann_recall_audit_trained, mix_temperature_budget; (d) every row
-    # serving through ivf.probe_cells_local (the new dimension-
-    # mismatch guard is result-neutral, but the discipline is
-    # path-based): ann_ivfpq_materialized,
-    # ann_ivfpq_filtered_materialized, ann_trained_store_exhaustive,
-    # ann_index_upsert/rebuild/erase/compact, streaming_index_erase,
-    # pipeline_forget_and_serve, changefeed_apply_index,
-    # ann_mmr_materialized, search_index_many(_large),
-    # hybrid_serve_many(_large), hybrid_filtered_serve,
-    # hybrid_filtered_many_large.
-    "dsir_hashed_bigram", "mix_token_budget",
-    "span_corruption", "pipeline_serving_capstone",
-    # round 12 rotation discipline: (a) the three trained-ANN rows are
-    # deliberately ABSENT (removed from their r5/r6 blocks) — r12 gave
-    # each a real DuckDB oracle over its own persisted artifacts
-    # (VERDICT r11 item 1), so they verify pending-first and the
-    # window's only remaining rows-only entries are the two embed-UDF
-    # rows; (b) udf_embed_batch / udf_embed_query are ABSENT too
-    # (VERDICT item 3: r11 touched the embed path — Arrow batch_size
-    # threading + preload_model — so they re-verify rows-only with
-    # fresh spark_rows > 0); (c) every row served through
-    # search_index_many / search_inverted_index_many /
-    # hybrid_serve_many is ABSENT (removed from the r11 block below)
-    # because r12 changed those paths (driver-side probe, with_rank,
-    # rank-reusing threaded fusion — VERDICT item 4):
-    # search_index_many(_large), text_search_many(_large),
-    # text_filtered_many_large, hybrid_serve_many(_large),
-    # hybrid_filtered_serve, hybrid_filtered_many_large,
-    # pipeline_serving_capstone; (d) likewise every row serving
-    # through the SINGLE-query search_index (its probe moved
-    # driver-side too), incl. ann_trained_store_exhaustive
-    # (result-neutral there — it probes every cell — but the
-    # discipline is path-based): ann_ivfpq_materialized,
-    # ann_ivfpq_filtered_materialized, ann_index_upsert/rebuild/
-    # erase/compact, streaming_index_upsert/erase,
-    # pipeline_forget_and_serve, changefeed_apply_index,
-    # ann_mmr_materialized.
-    # round 11 rotation discipline: (a) never-verified rows are
-    # pending by construction (bpe_encode_corpus — red in r10, now
-    # re-registered with a hashable token_ids projection;
-    # search_index_many_large / text_search_many_large /
-    # ann_trained_store_exhaustive — new this round); (b) rows whose
-    # serving code CHANGED in the r11 diff are deliberately absent so
-    # they verify pending-first: search_index_many, text_search_many,
-    # hybrid_serve_many, hybrid_filtered_serve (the batched strategy
-    # switch + joined default), and per VERDICT r10 item 2 the
-    # r10-refactored single-query serve rows text_inverted_index_topk,
-    # text_index_stats, text_bm25_topk, hybrid_search_rrf (removed
-    # from their earlier blocks), plus pipeline_serving_capstone
-    # (VERDICT item 5 asks for a re-run after the facade change).
-    # round 11 (CORRECTNESS_r11.json — 49 full-oracle green + 1
-    # rows-only-by-design): the r11 window's fresh names.  NOTE
-    # ann_ivfpq_trained is NOT here despite its r11 row — its serving
-    # fn changed in r12 (artifact publication + new oracle), so it
-    # stays pending-first along with its two trained siblings.
-    "dsir_importance_sample",
-    "text_bm25_topk", "hybrid_search_rrf", "tokenizer_fertility_by_source",
-    # round 10 (CORRECTNESS_r10.json — 48 full-oracle green; the
-    # re-verified lifecycle and serve rows):
-    "dedup_minhash_estimate", "ann_pq_topk", "ann_pq_rerank",
-    "ann_ivfpq_topk", "pipeline_tokenize_and_pack",
-    "ann_recall_audit", # round 10: the text-index path names are deliberately ABSENT from
-    # this set (removed from their round-6/7 blocks below) — round 9
-    # changed operators/retrieval.py materially (_ensure_gen_layout
-    # migration, _live's gen-default semantics, coalesce(1) tombstone
-    # writes, auto_compact_tombstones) without a fresh oracle row.
-    # Dropping them puts them pending-first in the r10 window, exactly
-    # as r9 did for the IVF path: text_index_upsert, text_index_erase,
-    # text_index_compact, text_index_stats, text_inverted_index_topk,
-    # hybrid_search_rrf, pipeline_forget_and_serve,
-    # streaming_index_upsert, streaming_index_erase.
-    # (r9 re-verified the IVF-path names full-oracle — CORRECTNESS_r09:
-    # ann_ivf_topk, ann_ivf_filtered, sim_join_ivf(_p2)(_pandas),
-    # ann_index_upsert/erase/rebuild/compact, changefeed_apply_index,
-    # ann_ivfpq_topk, ann_ivfpq_materialized all green.)
-    # ALSO absent by the same r10 discipline (this round's own diff):
-    # pq.py's scoring expression was factored into adc_score_col, so
-    # every PQ-scored row re-verifies — ann_pq_topk, ann_pq_rerank,
-    # ann_ivfpq_topk, ann_ivfpq_materialized — and dedup.py's
-    # minhash_estimate_pairs switched from persist to released
-    # checkpoints, so dedup_minhash_estimate re-verifies too.
-    # r10 late addendum: build_index/search_index/upsert_index/
-    # rebuild_index gained meta_cols + where (filtered serving), so
-    # every materialized-lifecycle row re-verifies in the r10 window:
-    # ann_index_upsert/erase/rebuild/compact, changefeed_apply_index,
-    # ann_recall_audit, ann_mmr_materialized dropped below.
-    "ann_ivf_topk", "ann_ivf_filtered", "sim_join_ivf",
-    "sim_join_ivf_p2", "sim_join_ivf_pandas",
-    # round 7 (CORRECTNESS_r07.json — 49 full-oracle + 1 rows-only by
-    # design, zero errs; re-verified names already listed under earlier
-    # rounds are not repeated)
-    "bloom_filter_join_agg", "aqe_skew_join_agg",
-    # round 6 (CORRECTNESS_r06.json — 49 full-oracle + 1 rows-only by
-    # design, zero errs; re-verified names already listed under earlier
-    # rounds are not repeated)
-    "ts_quantile_cut", "text_gopher_rules", "corpus_report",
-    "skew_report_events", "vocab_coverage", "doc_length_histogram",
-    "integrity_orphans",
-    "partitioned_time_scan", "store_bucket_stats",
-    "multimodal_dedup_near", "multimodal_frame_dedup",
-    "rerank_cross_encoder", "dedup_semdedup",
-    "ann_truncated_rerank", "quality_classifier_score",
-    # incremental_distinct_sketch: rotated OUT late-r14 — the
-    # merge-consistency flag moved from exact estimate equality to
-    # the 2% estimator-path tolerance (seventh review), so the row
-    # re-verifies pending-first
-    "incremental_agg_merge",
-    "store_changefeed",
-    "corpus_overlap_matrix", "sample_fixed_k_per_group",
-    "grouping_sets_report", "bpe_pair_frequencies",
-    "embedding_centroid_drift", "dedup_cluster_histogram",
-    "dpp_dim_filtered_scan", "dedup_components_incremental",
-    "topk_mmr_diverse",
-    # round 5 (CORRECTNESS_r05.json — re-verified names already listed
-    # under earlier rounds are not repeated)
-    "bucketed_colocated_join", "zorder_clustered_scan", "keyset_pagination",
-    # (r16: sink_delete_keys rotated out — pruned-listing erase read)
-    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "tpch_q10_returned_items", "tpch_q11_important_stock",
-    "tpch_q12_shipping_priority_class", "tpch_q13_customer_distribution",
-    "tpch_q20_part_promotion", "dedup_incremental_new_docs",
-    "pack_sequences_budget", "pack_fill_stats",
-    "pipeline_training_batches", "pack_sequences_greedy",
-    "multimodal_dedup_bytes", "corpus_weighted_sample",
-    "zscore_by_group", "window_rank_family", "percent_rank_scan",
-    # round 4 (CORRECTNESS_r04.json — 50/50 green; re-verified names
-    # already listed under earlier rounds are not repeated)
-    "tpch_q18_large_orders", "tpch_q21_waiting_suppliers",
-    "tpch_q22_dormant_accounts", "tpch_q16_supplier_part_counts",
-    "tpch_q2_min_cost_supplier", "tpch_q4_order_priority",
-    "tpch_q15_top_supplier", "tpch_q17_small_quantity_revenue",
-    # dedup_edit_distance: rotated OUT late-r14 — its inline salted
-    # self-join was refactored onto the shared _grid_salted_self_pairs
-    # helper (payload_cols generalization, r14 second review), so the
-    # row re-verifies pending-first
-    "distinct_users_twophase", "join_salted_skew",
-    "text_unigram_logprob", "pivot_event_type_daily",
-    "cube_order_priority", "event_value_histogram",
-    "scd2_customer_status", "tpch_q19_disjunctive",
-    "ntile_customer_quartiles", "spend_quartile_scan",
-    "percent_rank_cume_dist", "corr_stats_events", "text_bigram_top20",
-    "topk_with_ties", "unpivot_daily_counts", "user_event_type_sets",
-    "funnel_signup_click_purchase", "cohort_weekly_retention",
-    "rolling_1h_range_agg", # streaming_sessionize_stateful: rotated OUT late-r14 — the
-    # stateful sessionizer's late-event handling changed (events
-    # preceding the open session now extend it backwards / close as
-    # their own earlier sessions instead of silently folding in;
-    # r14 second-review finding), so the row re-verifies pending-first
-    # round 3 (CORRECTNESS_r03.json)
-    # group_centroids_pandas + knn_join_pandas: rotated OUT late-r14
-    # (both tail rows already inside the window — slot-neutral): their
-    # pandas kernels moved to the half-away rounding grid (and the
-    # centroid to a sequential fold), the sixth-review remnants of the
-    # ADVICE r13 _np_round6 fix
-    # round 2 (CORRECTNESS_r02.json)
-    "tpch_top_customers", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "tpch_q14_promo_revenue",
-    "first_order_per_customer", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_lsh_star", "dedup_simhash", "dedup_simhash_hamming",
-    "dedup_embedding_lsh",
-    "dedup_embedding_cosine", "text_lang_id",
-    "text_quality_score", "text_token_counts", "text_fingerprint",
-    # ann_lsh_topk: rotated OUT late-r14 — lsh_search's query row
-    # gained limit(1) (duplicate-id corpora no longer duplicate the
-    # top-k; r14 fourth review), so the row re-verifies pending-first
-    "topk_quantized_int8", "dedup_components", "dedup_keep_canonical",
-    "pipeline_clean_corpus", "stratified_sample",
-    # (dedup_repeated_chunks REMOVED r14 — count-over-window rewrite)
-    "text_tfidf_topterms", "decontaminate_ngram", "shard_assignment",
-    # multimodal_features + asof_join_events: rotated OUT late-r14
-    # (fourth review; both were r2-tail rows already inside the
-    # window, so the rotation is slot-neutral) — extract_features now
-    # prunes to its three consumed columns before the Arrow transfer,
-    # and asof_join takes the latest right ROW atomically via one
-    # last(struct) (the per-column ignorenulls form skipped NULL
-    # values back to stale rows and could mix fields across rows)
-    "text_pii_scrub",
-    "multimodal_resize", "multimodal_frame_sample",
-    # udtf_explode_users: rotated OUT late-r14 (r2-tail, slot-neutral)
-    # — users_from_group_info picks min(name) per uid instead of a
-    # nondeterministic dropDuplicates survivor (fifth review)
-    "search_topk_enriched", "train_test_split",
-    "text_chunking", "text_repetition", "topk_prenormalized",
-    "event_value_percentiles",
-    # range_join_ship_window: rotated OUT late-r14 (r2 tail,
-    # slot-neutral) — date_add's silent TIMESTAMP->DATE cast
-    # replaced with the oracle's exact INTERVAL arithmetic
-    "rollup_order_status",
-    "rollup_two_level_time",
-    # round 1 (CORRECTNESS_r01.json)
-    "cosine_similarity", "round_sim", "filter_sim_threshold",
-    "topk_by_similarity", "knn_broadcast_join", "scan_messages",
-    "scan_latest_file", "watermark_read",
-    "filter_since_ts", "filter_like_json_probe", "filter_in_list",
-    "filter_not_null_distinct", "filter_nonempty_text",
-    # json_extract_text: rotated OUT late-r14 — extract_text's
-    # malformed-object branch changed to raw passthrough (reference
-    # parity, r14 third review; oracle updated with the matching
-    # json_valid CASE), so the row re-verifies pending-first
-    "filter_dynamic_conj", "clean_text",
-    "fmt_human_time", "conv_type_from_sid", "truncate_ellipsis",
-    "regex_name_from_email", "is_file_name", "derived_pct",
-    "group_name_probe", "join_user_dim", "join_conv_name",
-    # context_prev_next: rotated OUT late-r14 — the lag/lead window
-    # (and its oracle) gained the unique event_id tiebreak making the
-    # order TOTAL (fifth review), so the row re-verifies pending-first
-    "anti_join_unnamed", "semi_join_deep_search",
-    "dedup_last_wins", "agg_count_total", "agg_count_embedded",
-    "agg_min_max_ts", "agg_count_distinct_users",
-    "agg_new_msg_gap", "agg_group_first",
-    "agg_running_max_watermark", "group_agg_events",
-    # kth_ts_offset: rotated OUT late-r14 — the kth probe's aggregate
-    # gained the kept-row-count guard (NULL under k rows; fourth
-    # review), so the row re-verifies pending-first
-    "sort_ts_pagination", "neighbor_limit1",
-    "limit_candidates", "topk_per_group", "rolling_window_agg",
-    # sessionize: rotated OUT late-r14 (r3 tail, slot-neutral) —
-    # the gap compare moved from whole-second cast('long') to the
-    # oracle's exact microsecond interval (seventh review)
-    "tumbling_window_agg", "set_ops_nations",
-    "join_outer_totals", "tpch_q1_pricing_summary",
-})
+# The driver's correctness gate covers roughly the first 50 entries of
+# queries(), in order.  Rows are presented oldest green driver check
+# first, so the window cycles through the whole registry across rounds
+# and a row whose check fails stays at the front.  Purely a
+# presentation order — REGISTRY itself keeps source order.
 
 
 _LAST_CHECKED_CACHE: dict | None = None
@@ -11566,64 +10658,12 @@ def _last_checked_rounds() -> dict:
     return last
 
 
-# The rotation's hard staleness bound (VERDICT r15 item 3, replacing
-# the hand-curated one-window ROTATION_PRIORITY tuple): a listed row
-# whose last green driver check is more than this many rounds behind
-# the newest CORRECTNESS artifact is OVERDUE.  Overdue rows outrank
-# everything except a small reserved quota of pending (new/changed)
-# rows — when a large overdue backlog and a large pending set compete
-# for the ~50-row window, the age bound wins beyond that quota (the
-# excess pending rows are covered by the round's local full sweep and
-# land in the NEXT window; an overdue row has had no hard driver
-# signal for 8+ rounds).  Within each block the sort is
-# oldest-check-first, so the backlog drains at nearly the full window
-# rate and the mechanism self-disarms: a freshly checked row ages out
-# of the overdue set by definition.  Unlike its ROTATION_PRIORITY
-# predecessor this needs no per-round curation — ANY row that falls
-# behind the bound is bumped automatically, forever.
-MAX_CHECK_AGE_ROUNDS = 8
-
-#: window slots guaranteed to this round's new/changed rows even when
-#: the overdue backlog alone would fill the window — a changed row's
-#: driver check is the correctness gate's primary signal and must not
-#: be starved by the staleness drain (nor vice versa).  Sized as a
-#: CEILING, not a target: a normal round's pending set (5-17 rows)
-#: fits entirely, so every changed row gets its driver check the same
-#: round; only a pathological 20+-row pending set spills, and even
-#: then the overdue drain keeps >= 30 window slots.
-PENDING_WINDOW_QUOTA = 20
-
-
 def verification_order(mapping: dict) -> dict:
     """Reorder ``mapping`` (REGISTRY or ORACLES) for the driver's
-    ~50-row window: first up to PENDING_WINDOW_QUOTA names without a
-    driver CORRECTNESS row or whose serving code changed this round
-    (curated out of DRIVER_VERIFIED), never-checked first then oldest
-    signal first; then every OVERDUE row (older than
-    MAX_CHECK_AGE_ROUNDS vs the newest artifact — the enforced
-    staleness bound) oldest first; then any pending overflow; then
-    everything else OLDEST driver check first
-    (VERDICT r11 item 2: the age-based rotation that cycles stale rows
-    back through the window at ~25-45/round)."""
+    ~50-row window: REGISTRY sorted by (last green driver round,
+    registry position), restricted to ``mapping``.  Never-checked rows
+    have round 0, so they lead."""
     last = _last_checked_rounds()
-    cur = max(last.values(), default=0)
-    cut = cur - MAX_CHECK_AGE_ROUNDS
-    reg_pos = {k: i for i, k in enumerate(REGISTRY)}
-    age = (lambda k: (last.get(k, 0), reg_pos[k]))
-    overdue = sorted((k for k in REGISTRY
-                      if k in DRIVER_VERIFIED and last.get(k, 0) <= cut),
-                     key=age)
-    # pending sorted oldest-signal-first: a NEVER-checked row (a brand
-    # new query) outranks a changed row that was green last round, so
-    # when the quota bites, the rows with no driver signal at all
-    # keep their slot
-    pending = sorted((k for k in REGISTRY if k not in DRIVER_VERIFIED),
-                     key=age)
-    head = set(pending) | set(overdue)
-    done = sorted((k for k in REGISTRY
-                   if k in DRIVER_VERIFIED and k not in head),
-                  key=age)
-    q = PENDING_WINDOW_QUOTA
-    return {k: mapping[k]
-            for k in (*pending[:q], *overdue, *pending[q:], *done)
-            if k in mapping}
+    pos = {k: i for i, k in enumerate(REGISTRY)}
+    order = sorted(REGISTRY, key=lambda k: (last.get(k, 0), pos[k]))
+    return {k: mapping[k] for k in order if k in mapping}

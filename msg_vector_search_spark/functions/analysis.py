@@ -137,10 +137,6 @@ def token_hash32(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
 
 
-def duck_token_hash32(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
-
-
 def fingerprint_rolling(text: Column | str) -> Column:
     """Positional rolling hash: sum over tokens of (position+1) *
     hash32(token).  Order-sensitive (unlike a bag-of-words hash) yet

@@ -67,17 +67,6 @@ def l2_normalize(a: Column | str) -> Column:
             F.transform(a, lambda x: x.cast("double") / n)))
 
 
-def euclidean(a: Column | str, b: Column | str) -> Column:
-    """L2 distance (used by the IVF centroid assignment)."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.sqrt(F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ))
-
-
 def dequantize_int8(a: Column | str) -> Column:
     """Symmetric per-vector int8 quantize-then-dequantize: scale =
     max|x|/127, q = floor(x/scale + 0.5) (round-half-up, identical in

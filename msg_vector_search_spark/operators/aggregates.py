@@ -24,15 +24,6 @@ def min_max_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df.agg(F.min(ts_col).alias("min_ts"), F.max(ts_col).alias("max_ts"))
 
 
-def count_distinct_users(df: DataFrame, col: str = "user_id") -> DataFrame:
-    """E4 ``agg_count_distinct_users`` (reference: user_mapper.py:57,
-    :180) — exact plus the approx variant that replaces it at 100 TB
-    (HLL sketch, one pass, no giant shuffle)."""
-    return df.agg(
-        F.countDistinct(col).alias("n_users"),
-        F.approx_count_distinct(col).alias("n_users_approx"))
-
-
 def new_message_gap(total_df: DataFrame, embedded_df: DataFrame) -> DataFrame:
     """E5 ``agg_new_msg_gap``: total - embedded, the freshness trigger
     input (reference: engine.py:160-175).  Computed as a cross join of
@@ -47,14 +38,3 @@ def running_max_watermark(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """E7 ``agg_running_max_watermark``: batch max(ts) -> next watermark
     (reference: processor.py:466-468, :488-491)."""
     return df.agg(F.max(ts_col).alias("watermark"))
-
-
-def group_counts(df: DataFrame, *keys: str, value_col: str | None = None) -> DataFrame:
-    """GroupBy aggregation surface (the reference has none with keys —
-    SURVEY 2.E note): counts plus sum/avg when a value column is given.
-    Map-side partial aggregation + AQE-coalesced shuffle."""
-    aggs = [F.count("*").alias("n")]
-    if value_col is not None:
-        aggs += [F.round(F.sum(value_col), 6).alias("sum_value"),
-                 F.round(F.avg(value_col), 6).alias("avg_value")]
-    return df.groupBy(*keys).agg(*aggs)

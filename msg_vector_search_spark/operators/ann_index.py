@@ -194,10 +194,7 @@ def read_meta(path: str) -> dict:
         # no Spark job, no local-FS assumption (r18; the write-side
         # heal verbs stay POSIX by design and no-op here: a remote
         # store is read-only for this engine)
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        return json.loads(fs.read_bytes(
-            spark, f"{path.rstrip('/')}/{META_FILE}"))
+        return json.loads(fs.read_bytes(f"{path.rstrip('/')}/{META_FILE}"))
     # universal entry backstop (r14 review): a crash inside
     # rebuild_index's root-level swap strands the WHOLE index as
     # '<path>._old' — restore it before any verb touches META_FILE
@@ -252,7 +249,7 @@ def _read_small_parquet_rows(spark: SparkSession, path: str) -> list:
     # files a Spark read ignores (ADVICE r17)
     import pyarrow.parquet as papq
     if not fs.is_remote(path):
-        files = fs.list_files(spark, path, suffix=".parquet")
+        files = fs.list_files(path, suffix=".parquet")
         if files:
             import pyarrow as pa
             return pa.concat_tables(
@@ -265,13 +262,13 @@ def _read_small_parquet_rows(spark: SparkSession, path: str) -> list:
     # Any gateway-level surprise falls back to the Spark read, so the
     # serve never breaks on an exotic filesystem.
     try:
-        files = fs.list_files(spark, path, suffix=".parquet")
+        files = fs.list_files(path, suffix=".parquet")
         if files:
             import io
 
             import pyarrow as pa
             return pa.concat_tables(
-                [papq.read_table(io.BytesIO(fs.read_bytes(spark, f)))
+                [papq.read_table(io.BytesIO(fs.read_bytes(f)))
                  for f in files]).to_pylist()
     except Exception:
         pass

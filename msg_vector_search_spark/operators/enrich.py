@@ -28,30 +28,6 @@ def join_user_dim(facts: DataFrame, user_dim: DataFrame,
                    F.concat(F.lit("User "), F.col(key).cast("string"))))
 
 
-def join_conv_dim(facts: DataFrame, conv_dim: DataFrame, user_dim: DataFrame,
-                  sid_col: str = "session_id") -> DataFrame:
-    """D2 consumer: resolve conversation names with the priority
-    coalesce chain group-name -> peer-user name (private chats) -> the
-    sid itself (reference: processor.py:192-264 fallback ladder)."""
-    peer = textops.buddy_user_id(F.col(sid_col)).cast("long")
-    out = (
-        facts.withColumn("_peer_id", peer)
-        .join(F.broadcast(conv_dim), sid_col, "left")
-        .join(F.broadcast(user_dim.select(F.col("user_id").alias("_peer_id"),
-                                          F.col("user_name").alias("_peer_name"))),
-              "_peer_id", "left")
-    )
-    return (
-        out.withColumn(
-            "conversation_name",
-            F.coalesce(F.col("conversation_name"),
-                       F.when(textops.conv_type_from_sid(F.col(sid_col)) == "private",
-                              F.col("_peer_name")),
-                       F.col(sid_col)))
-        .drop("_peer_id", "_peer_name")
-    )
-
-
 def context_prev_next(df: DataFrame, part_col: str, ts_col: str,
                       text_col: str, truncate: int = 100,
                       tiebreak_col: str | None = None) -> DataFrame:

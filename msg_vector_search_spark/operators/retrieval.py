@@ -187,15 +187,13 @@ def _read_text_meta(path: str, id_col: str = "doc_id",
         # remote serving reads the sidecar through the Hadoop FS API —
         # no Spark job, no local-FS assumption (r18).  The legacy
         # guard below mirrors the local branch via one listing RPC.
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
         try:
             return json.loads(fs.read_bytes(
-                spark, f"{path.rstrip('/')}/{TEXT_META}"))
+                f"{path.rstrip('/')}/{TEXT_META}"))
         except FileNotFoundError:
             pdir = f"{path.rstrip('/')}/postings"
             tbs = [int(d.rsplit("=", 1)[1])
-                   for d in fs.list_child_dirs(spark, pdir, "tb=")
+                   for d in fs.list_child_dirs(pdir, "tb=")
                    if d.rsplit("=", 1)[1].isdigit()]
             if tbs and max(tbs) >= n_buckets:
                 raise ValueError(
@@ -263,7 +261,7 @@ def _tombstone_frame(spark, path: str, id_col: str):
 
     tdir = f"{path.rstrip('/')}/tombstones" if fs_probe.is_remote(path) \
         else os.path.join(path, "tombstones")
-    if not fs_probe.list_files(spark, tdir, suffix=".parquet"):
+    if not fs_probe.list_files(tdir, suffix=".parquet"):
         return None
     return (spark.read.parquet(tdir)
             .groupBy(id_col).agg(F.max("upto_gen").alias("_upto")))

@@ -573,33 +573,6 @@ def rocchio_expand_query(corpus: DataFrame, query_vec: list[float],
             for q, c in zip(query_vec, cent)]
 
 
-def pairwise_similarity(left: DataFrame, right: DataFrame, on: str,
-                        threshold: float,
-                        vec_col: str = "embedding") -> DataFrame:
-    """Corpus x corpus similarity join bounded by a blocking key.
-
-    The all-pairs join is quadratic; a blocking key (label, LSH bucket,
-    IVF cell) keeps each block's pair count tractable — the same idea at
-    100 TB with finer blocks.  Returns pairs (id_a < id_b) with sim >=
-    threshold.
-    """
-    a = left.select(F.col("vec_id").alias("id_a"),
-                    F.col(vec_col).alias("vec_a"), F.col(on).alias("k_a"),
-                    V.norm(vec_col).alias("_na"))
-    b = right.select(F.col("vec_id").alias("id_b"),
-                     F.col(vec_col).alias("vec_b"), F.col(on).alias("k_b"),
-                     V.norm(vec_col).alias("_nb"))
-    nprod = F.col("_na") * F.col("_nb")
-    cos = F.when(nprod == 0.0, F.lit(0.0)).otherwise(
-        V.dot("vec_a", "vec_b") / nprod)
-    return (
-        a.join(b, (F.col("k_a") == F.col("k_b")) & (F.col("id_a") < F.col("id_b")))
-        .withColumn("sim", (F.round(cos, 6) + F.lit(0.0)))
-        .filter(F.col("sim") >= F.lit(threshold))
-        .select("id_a", "id_b", F.col("k_a").alias("block"), "sim")
-    )
-
-
 def similarity_join_topk(assigned: DataFrame, block_col: str, k: int,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",

@@ -14,7 +14,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Local-mode cores: $SPARK_GRAFT_CPUS, else the CPUs this process may
+#: run on.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
 #: Driver-side thread cap for :func:`run_concurrently`.
 MAX_THREADS = 32
 

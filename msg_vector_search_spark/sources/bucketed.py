@@ -44,9 +44,6 @@ def write_bucketed(df: DataFrame, table: str, key: str,
     survives on disk while its catalog entry does not, and saveAsTable
     refuses to reuse an unregistered location (LOCATION_ALREADY_EXISTS).
 
-    THE canonical implementation (r14 review: ``sinks.write_bucketed``
-    used to be a near-duplicate with swapped argument order and
-    without the stale-location guard — it now delegates here).
     *path* writes an external table at an explicit location;
     *sort_cols* overrides the default bucket-key sort."""
     spark = df.sparkSession

@@ -11,8 +11,9 @@ This module keeps both worlds honest with one dispatch rule:
 - a plain path (no URI scheme, or ``file:``) probes with ``os`` —
   zero JVM round-trips on the hot local path;
 - a remote URI (``s3a://``, ``hdfs://``, ``gs://``, ``abfss://``, …)
-  probes through the Hadoop ``FileSystem`` API via the Spark JVM
-  gateway, using the session's ``hadoopConfiguration`` — one
+  probes through the Hadoop ``FileSystem`` API via the JVM gateway
+  of the process-wide ``SparkContext``, using its
+  ``hadoopConfiguration`` — one
   ``getFileStatus`` RPC per touched dir, still O(touched), which is
   the property the pruned read exists for.
 
@@ -73,15 +74,27 @@ def _strip_file_scheme(path: str) -> str:
     return path
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path class) for *path* under the session's conf."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsc.hadoopConfiguration()
-    return jpath.getFileSystem(conf), jvm.org.apache.hadoop.fs.Path
+def _spark_context():
+    """The process-wide ``SparkContext``, the one place this module
+    reaches the JVM.  Not ``SparkSession.getActiveSession()``: that is
+    thread-local and None inside a ``run_concurrently`` leg."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("remote filesystem access needs a running "
+                           "SparkContext")
+    return sc
 
 
-def probe_dirs(spark, dirs: list, force_hadoop: bool = False) -> list:
+def _hadoop_fs(path: str):
+    """(FileSystem, Path class) for *path* under the Hadoop conf."""
+    sc = _spark_context()
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    return Path(path).getFileSystem(sc._jsc.hadoopConfiguration()), Path
+
+
+def probe_dirs(dirs: list, force_hadoop: bool = False) -> list:
     """Subset of *dirs* that exist as directories, order preserved.
 
     O(len(dirs)) probes on either branch — never a parent listing, so
@@ -100,7 +113,7 @@ def probe_dirs(spark, dirs: list, force_hadoop: bool = False) -> list:
     if force_hadoop or head_remote:
         from py4j.protocol import Py4JJavaError
 
-        fs, Path = _hadoop_fs(spark, dirs[0])
+        fs, Path = _hadoop_fs(dirs[0])
         out = []
         for d in dirs:
             # ONE getFileStatus RPC per dir; FileNotFound = absent,
@@ -116,7 +129,7 @@ def probe_dirs(spark, dirs: list, force_hadoop: bool = False) -> list:
     return [d for d in dirs if os.path.isdir(_strip_file_scheme(d))]
 
 
-def list_child_dirs(spark, path: str, prefix: str,
+def list_child_dirs(path: str, prefix: str,
                     force_hadoop: bool = False) -> list:
     """Sorted full paths of *path*'s child DIRECTORIES whose basename
     starts with *prefix* (the ``part=`` partition-dir pattern).
@@ -126,7 +139,7 @@ def list_child_dirs(spark, path: str, prefix: str,
     locally.
     """
     if force_hadoop or is_remote(path):
-        fs, Path = _hadoop_fs(spark, path)
+        fs, Path = _hadoop_fs(path)
         out = []
         for st in fs.listStatus(Path(path)):
             name = st.getPath().getName()
@@ -143,7 +156,7 @@ def list_child_dirs(spark, path: str, prefix: str,
         and os.path.isdir(os.path.join(local, entry)))
 
 
-def read_bytes(spark, path: str, force_hadoop: bool = False) -> bytes:
+def read_bytes(path: str, force_hadoop: bool = False) -> bytes:
     """Full contents of ONE file — the single-file sidecar reads (json
     meta, manifests) the serve path depends on.  Local paths keep the
     free ``open``; a remote URI reads through the Hadoop
@@ -157,7 +170,7 @@ def read_bytes(spark, path: str, force_hadoop: bool = False) -> bytes:
             return f.read()
     from py4j.protocol import Py4JJavaError
 
-    fs, Path = _hadoop_fs(spark, path)
+    fs, Path = _hadoop_fs(path)
     try:
         stream = fs.open(Path(path))
     except Py4JJavaError as e:
@@ -165,13 +178,13 @@ def read_bytes(spark, path: str, force_hadoop: bool = False) -> bytes:
             raise FileNotFoundError(path) from None
         raise
     try:
-        return bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        return bytes(_spark_context()._jvm.org.apache.commons.io
+                     .IOUtils.toByteArray(stream))
     finally:
         stream.close()
 
 
-def list_files(spark, path: str, suffix: str = "",
+def list_files(path: str, suffix: str = "",
                force_hadoop: bool = False) -> list:
     """Sorted full paths of the plain DATA files directly under *path*
     (suffix-filtered; ``_``/``.``-prefixed marker files skipped — the
@@ -184,7 +197,7 @@ def list_files(spark, path: str, suffix: str = "",
     if force_hadoop or is_remote(path):
         from py4j.protocol import Py4JJavaError
 
-        fs, Path = _hadoop_fs(spark, path)
+        fs, Path = _hadoop_fs(path)
         try:
             statuses = fs.listStatus(Path(path))
         except Py4JJavaError as e:

@@ -78,10 +78,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in FIXTURE_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for the SQL API."""
     for name in FIXTURE_TABLES:
@@ -99,26 +95,6 @@ def scan_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars")
-
-
-def find_latest_file(directory: str, suffix: str = ".parquet") -> str | None:
-    """A2 source discovery: newest (mtime desc) then largest (size desc).
-
-    Reference: src/core/database/connection.py:56-76 globs
-    ``main_*.sqlite`` and sorts by (mtime, size) descending.  On a real
-    deployment this generalizes to "latest partition" discovery; here it
-    is a driver-side file pick, which is exactly what the reference does.
-    """
-    candidates = [
-        os.path.join(directory, f)
-        for f in os.listdir(directory)
-        if f.endswith(suffix)
-    ]
-    if not candidates:
-        return None
-    candidates.sort(key=lambda p: (os.path.getmtime(p), os.path.getsize(p)),
-                    reverse=True)
-    return candidates[0]
 
 
 def scan_latest_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,13 +123,3 @@ def snapshot(df: DataFrame) -> DataFrame:
     snapshot-reuse fast path.
     """
     return df.cache()
-
-
-def connect_smoke(spark: SparkSession, sf_dir: str) -> bool:
-    """A4 connection smoke test.
-
-    Reference: src/core/database/connection.py:128-158 runs
-    ``SELECT COUNT(*)`` after keying the encrypted DB.  Plaintext Parquet
-    needs no key; the smoke is a count action.
-    """
-    return read_table(spark, sf_dir, "documents").count() >= 0

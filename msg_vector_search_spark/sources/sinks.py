@@ -589,10 +589,10 @@ def _read_buckets(spark: SparkSession, path: str, buckets: list,
     pinned byte-equal to the ``os`` branch in
     tests/test_layout_scale.py by forcing ``file:`` URIs through it."""
     dirs = [f"{path.rstrip('/')}/{part_col}={b}" for b in buckets]
-    exist = fs_probe.probe_dirs(spark, dirs)
+    exist = fs_probe.probe_dirs(dirs)
     if exist:
         return spark.read.option("basePath", path).parquet(*exist)
-    for d in fs_probe.list_child_dirs(spark, path, f"{part_col}="):
+    for d in fs_probe.list_child_dirs(path, f"{part_col}="):
         return (spark.read.option("basePath", path).parquet(d)
                 .filter(F.lit(False)))
     # store has no partition dirs at all: fall back to the plain read
@@ -873,38 +873,3 @@ def compact_store(spark: SparkSession, path: str,
             "files_before": sum(frag.values()),
             "files_after": sum(len(_partfiles(os.path.join(path, part)))
                                for part in swapped)}
-
-
-def write_dimension(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """A6: persist a small dimension (the reference caches its user dim
-    as a JSON file with a 24 h TTL, user_mapper.py:222-233).  Parquet by
-    default; JSON kept for byte-level parity with the reference's cache
-    format."""
-    writer = df.coalesce(1).write.mode("overwrite")
-    if fmt == "json":
-        writer.json(path)
-    else:
-        writer.parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, n_buckets: int, key: str,
-                   path: str | None = None,
-                   sort_cols: list[str] | None = None) -> None:
-    """Bucketed table write — the co-located-join layout (SURVEY 4b).
-
-    Both sides of a recurring equi-join written with the same bucket
-    count and key join WITHOUT a shuffle: each bucket pairs off by file.
-    This is the batch analog of the reference's B-tree index on
-    session_id (src/core/embeddings/processor.py:153-156) — except the
-    'index' is the physical layout, so at 100 TB the join skips the
-    exchange of the entire corpus, the single biggest cost in any
-    enrich-at-scale plan.
-
-    Thin legacy-signature delegate to
-    :func:`msg_vector_search_spark.sources.bucketed.write_bucketed`
-    (r14 review: the two copies had swapped argument order and only
-    one carried the stale-location guard)."""
-    from .bucketed import write_bucketed as _canonical
-
-    _canonical(df, table, key, n_buckets, path=path,
-               sort_cols=sort_cols)

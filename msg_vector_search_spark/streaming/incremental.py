@@ -12,8 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 # H4 backfill caps (reference: setup.sh:275-299, engine.py:57)
@@ -47,12 +46,6 @@ def seven_day_reset(watermark: dt.datetime, oldest: dt.datetime,
     if watermark < oldest:
         return max(newest - dt.timedelta(days=7), oldest)
     return watermark
-
-
-def new_rows(df: DataFrame, watermark: dt.datetime,
-             ts_col: str = "ts") -> DataFrame:
-    """The incremental slice: strictly newer than the watermark (B1)."""
-    return df.filter(F.col(ts_col) > F.lit(watermark))
 
 
 def gap(total_df: DataFrame, embedded_df: DataFrame) -> int:

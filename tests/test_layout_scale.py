@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from msg_vector_search_spark.operators import enrich
-from msg_vector_search_spark.sources import readers, sinks
+from msg_vector_search_spark.sources import bucketed, readers, sinks
 
 SF = "/root/testdata/sf0.001"
 
@@ -17,10 +17,10 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     left = emb.select("vec_id", "label")
     right = emb.select(F.col("vec_id").alias("vec_id"),
                        F.col("embedding"))
-    sinks.write_bucketed(left, "b_left", 4, "vec_id",
-                         path=str(tmp_path / "b_left"))
-    sinks.write_bucketed(right, "b_right", 4, "vec_id",
-                         path=str(tmp_path / "b_right"))
+    bucketed.write_bucketed(left, "b_left", "vec_id", 4,
+                            path=str(tmp_path / "b_left"))
+    bucketed.write_bucketed(right, "b_right", "vec_id", 4,
+                            path=str(tmp_path / "b_right"))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -945,21 +945,19 @@ def test_fs_probe_hadoop_branch_matches_os_branch(spark, tmp_path):
     df.write.partitionBy("_bkt").parquet(store)
 
     dirs = [f"{store}/_bkt={b}" for b in (0, 2, 7, 3)]
-    local = fs.probe_dirs(spark, dirs)
-    hadoop = fs.probe_dirs(
-        spark, [f"file:{d}" for d in dirs], force_hadoop=True)
+    local = fs.probe_dirs(dirs)
+    hadoop = fs.probe_dirs([f"file:{d}" for d in dirs], force_hadoop=True)
     assert local == [f"{store}/_bkt={b}" for b in (0, 2, 3)]
     assert [d.removeprefix("file:") for d in hadoop] == local
     # a FILE (not dir) never probes true on either branch
     (tmp_path / "probe_file").write_text("x")
-    assert fs.probe_dirs(spark, [str(tmp_path / "probe_file")]) == []
-    assert fs.probe_dirs(
-        spark, [f"file:{tmp_path / 'probe_file'}"],
-        force_hadoop=True) == []
+    assert fs.probe_dirs([str(tmp_path / "probe_file")]) == []
+    assert fs.probe_dirs([f"file:{tmp_path / 'probe_file'}"],
+                         force_hadoop=True) == []
 
-    kids_local = fs.list_child_dirs(spark, store, "_bkt=")
-    kids_hadoop = fs.list_child_dirs(
-        spark, f"file:{store}", "_bkt=", force_hadoop=True)
+    kids_local = fs.list_child_dirs(store, "_bkt=")
+    kids_hadoop = fs.list_child_dirs(f"file:{store}", "_bkt=",
+                                     force_hadoop=True)
     assert [k.removeprefix("file:") for k in kids_hadoop] == kids_local
     assert kids_local == [f"{store}/_bkt={b}" for b in range(4)]
 
@@ -981,6 +979,6 @@ def test_fs_probe_rejects_mixed_filesystem_lists(spark, tmp_path):
     from msg_vector_search_spark.sources import fs
 
     with _pytest.raises(ValueError, match="single-filesystem"):
-        fs.probe_dirs(spark, [str(tmp_path), "s3a://bucket/x"])
+        fs.probe_dirs([str(tmp_path), "s3a://bucket/x"])
     with _pytest.raises(ValueError, match="single-filesystem"):
-        fs.probe_dirs(spark, ["s3a://bucket/x", str(tmp_path)])
+        fs.probe_dirs(["s3a://bucket/x", str(tmp_path)])

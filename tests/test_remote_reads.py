@@ -46,23 +46,23 @@ def test_fs_read_bytes_and_list_files_branches_match(spark, tmp_path):
     (d / ".hidden.parquet").write_text("x")
     (d / "notes.txt").write_text("x")
 
-    local = fs.list_files(spark, str(d), suffix=".parquet")
-    hadoop = fs.list_files(spark, f"file:{d}", suffix=".parquet",
+    local = fs.list_files(str(d), suffix=".parquet")
+    hadoop = fs.list_files(f"file:{d}", suffix=".parquet",
                            force_hadoop=True)
     assert local == [str(d / "a.parquet"), str(d / "b.parquet")]
     assert [p.removeprefix("file:") for p in hadoop] == local
     # absent dir: [] on both branches, no raise
-    assert fs.list_files(spark, str(d / "nope")) == []
-    assert fs.list_files(spark, f"file:{d}/nope", force_hadoop=True) == []
+    assert fs.list_files(str(d / "nope")) == []
+    assert fs.list_files(f"file:{d}/nope", force_hadoop=True) == []
 
-    assert fs.read_bytes(spark, str(d / "a.parquet")) == b"alpha"
-    assert fs.read_bytes(spark, f"file:{d}/a.parquet",
+    assert fs.read_bytes(str(d / "a.parquet")) == b"alpha"
+    assert fs.read_bytes(f"file:{d}/a.parquet",
                          force_hadoop=True) == b"alpha"
     import pytest
     with pytest.raises(FileNotFoundError):
-        fs.read_bytes(spark, str(d / "gone"))
+        fs.read_bytes(str(d / "gone"))
     with pytest.raises(FileNotFoundError):
-        fs.read_bytes(spark, f"file:{d}/gone", force_hadoop=True)
+        fs.read_bytes(f"file:{d}/gone", force_hadoop=True)
 
 
 def test_ann_sidecar_reads_remote_parity_zero_jobs(
@@ -133,3 +133,33 @@ def test_text_index_serves_remote_parity_with_tombstones(
         retrieval.search_inverted_index(spark, rpath, terms).collect())
     assert served == plain
     assert len(served) > 0
+
+
+def test_hybrid_serve_many_remote_matches_local(
+        spark, tmp_path, monkeypatch):
+    """Batched hybrid serving over remote paths returns the local rows.
+    Its two legs are built in ``run_concurrently`` worker threads,
+    where the thread-local ``SparkSession.getActiveSession()`` is None,
+    so the legs' sidecar reads must reach the JVM without it."""
+    emb = readers.read_table(spark, SF, "embeddings")
+    docs = readers.read_table(spark, SF, "documents")
+    apath = str(tmp_path / "annidx")
+    tpath = str(tmp_path / "txtidx")
+    ann_index.build_index(spark, emb, apath, nlist=8, m=8, ncodes=16)
+    retrieval.build_inverted_index(docs.select("doc_id", "text"), tpath)
+    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
+          for r in emb.filter(F.col("vec_id").isin(0, 7))
+          .select("vec_id", "embedding").collect()}
+    queries = {0: {"terms": ["spark", "query"], "qvec": qv[0]},
+               7: {"terms": ["data", "join"], "qvec": qv[7]}}
+
+    def serve(tp, ap):
+        return [tuple(r) for r in retrieval.hybrid_serve_many(
+            spark, tp, ap, queries, leg_k=20, k=5, nprobe=2,
+            shortlist=50).collect()]
+
+    plain = serve(tpath, apath)
+    monkeypatch.setattr(fs, "_LOCAL_SCHEMES", ())
+    assert fs.is_remote(f"file:{apath}")
+    assert serve(f"file:{tpath}", f"file:{apath}") == plain
+    assert len(plain) == 10

@@ -1,74 +1,37 @@
-"""Pure-Python pins for the DRIVER_VERIFIED rotation machinery —
-the ordering contract the driver's 50-row CORRECTNESS window rides on
-(no SparkSession needed)."""
+"""Pure-Python pins for the driver-verification order — the age-only
+rotation the driver's 50-row CORRECTNESS window rides on (no
+SparkSession needed)."""
 
 from __future__ import annotations
 
 from msg_vector_search_spark import contract
 
 
-def _blocks():
-    """Recompute the (pending_head, overdue, pending_tail, done) blocks
-    exactly as verification_order defines them."""
+def _order():
+    return list(contract.verification_order(
+        {k: None for k in contract.REGISTRY}))
+
+
+def test_every_registry_name_appears_once():
+    order = _order()
+    assert len(order) == len(set(order)) == len(contract.REGISTRY)
+    assert set(order) == set(contract.REGISTRY)
+
+
+def test_order_is_last_green_round_then_registry_position():
+    """Oldest green driver check first (never-checked rows have round 0
+    and lead); ties keep registry source order."""
     last = contract._last_checked_rounds()
-    cur = max(last.values(), default=0)
-    cut = cur - contract.MAX_CHECK_AGE_ROUNDS
-    reg_pos = {k: i for i, k in enumerate(contract.REGISTRY)}
-    overdue = sorted((k for k in contract.REGISTRY
-                      if k in contract.DRIVER_VERIFIED
-                      and last.get(k, 0) <= cut),
-                     key=lambda k: (last.get(k, 0), reg_pos[k]))
-    pending = sorted((k for k in contract.REGISTRY
-                      if k not in contract.DRIVER_VERIFIED),
-                     key=lambda k: (last.get(k, 0), reg_pos[k]))
-    q = contract.PENDING_WINDOW_QUOTA
-    return pending[:q], overdue, pending[q:], last
+    pos = {k: i for i, k in enumerate(contract.REGISTRY)}
+    keys = [(last.get(k, 0), pos[k]) for k in _order()]
+    assert keys == sorted(keys)
 
 
-def test_pending_quota_comes_first_never_checked_leading():
-    order = list(contract.verification_order(
-        {k: None for k in contract.REGISTRY}))
-    head, _, _, last = _blocks()
-    assert order[:len(head)] == head
-    # never-checked rows outrank changed-but-recently-green ones
-    ages = [last.get(k, 0) for k in head]
-    assert ages == sorted(ages)
-    # and every registry row appears exactly once
-    assert sorted(order) == sorted(contract.REGISTRY)
-
-
-def test_overdue_rows_outrank_the_tail_oldest_first():
-    """The max-age bound (VERDICT r15 item 3): every row older than
-    MAX_CHECK_AGE_ROUNDS vs the newest artifact sits directly after
-    the reserved pending quota, oldest first — so the staleness
-    backlog drains at nearly the full window rate no matter how many
-    new rows a round adds."""
-    head, overdue, ptail, last = _blocks()
-    order = list(contract.verification_order(
-        {k: None for k in contract.REGISTRY}))
-    assert order[len(head):len(head) + len(overdue)] == overdue
-    rounds = [last.get(k, 0) for k in overdue]
-    assert rounds == sorted(rounds)
-    done = order[len(head) + len(overdue) + len(ptail):]
-    drounds = [last.get(k, 0) for k in done]
-    assert drounds == sorted(drounds), \
-        "DRIVER_VERIFIED rows must rotate oldest-check-first"
-
-
-def test_overdue_bump_self_disarms_when_fresh():
-    """A row WITHIN the age bound must never appear in the overdue
-    block — the bump exists only while the bound is exceeded, so it
-    cannot permanently distort the age rotation."""
-    _, overdue, _, last = _blocks()
-    cur = max(last.values(), default=0)
-    for k in overdue:
-        assert last.get(k, 0) <= cur - contract.MAX_CHECK_AGE_ROUNDS
-
-
-def test_driver_verified_names_all_registered():
-    stray = [k for k in contract.DRIVER_VERIFIED
-             if k not in contract.REGISTRY]
-    assert not stray, f"DRIVER_VERIFIED names not in REGISTRY: {stray}"
+def test_oracles_follow_registry_order():
+    """ORACLES is ordered exactly as REGISTRY, restricted to the names
+    that have an oracle."""
+    oracles = list(contract.verification_order(contract.ORACLES))
+    assert oracles == [k for k in _order() if k in contract.ORACLES]
 
 
 def test_last_checked_counts_only_green_rows():

@@ -29,8 +29,7 @@ def main() -> None:
     from msg_vector_search_spark import contract
     from msg_vector_search_spark.session import get_spark
 
-    spark = get_spark("explain", cpus=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("explain")
     if names == ["--all"]:
         names = sorted(contract.REGISTRY)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -6,7 +6,8 @@ paying the full 271-row sweep per measurement.
 
 Usage:
     python tools/rebench.py [-r REPS] name [name ...]
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: the
+CPUs this process may run on).
 Prints one JSON line {"reps": N, "queries": {name: median_sec}, "raw": {...}}.
 """
 
@@ -33,9 +34,9 @@ def main() -> None:
     names = args
 
     from msg_vector_search_spark import contract
+    from msg_vector_search_spark.session import DEFAULT_CPUS as cpus
     from msg_vector_search_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("rebench", cpus=cpus)
     # bench.py's warmup, verbatim
     for _ in range(3):
