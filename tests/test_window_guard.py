@@ -20,15 +20,28 @@ exemptions, each justified by evidence in the same plan:
 
 Any new registry query that plans an unlisted unpartitioned window
 fails here with the offending plan line.
+
+Most registry rows are bound by per-job fixed cost at sf0.001, so the
+rows are planned on a small thread pool, each thread on its own
+``newSession()`` (one SparkContext, isolated runtime confs and temp
+views): a row that pins a conf for its own run cannot leak it into a
+neighbour's plan.  A row that errors there (e.g. two rows racing on
+one shared artifact) is planned again alone on the test session, so
+only a row that fails on its own fails the guard.
 """
 
 from __future__ import annotations
 
 import re
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from msg_vector_search_spark import contract
 
 SF = "/root/testdata/sf0.001"
+
+#: Registry rows planned at once.
+WORKERS = 4
 
 # Declared parity forms: unpartitioned by spec, no further evidence.
 PARITY_SPECS = {"ntile_customer_quartiles", "percent_rank_cume_dist"}
@@ -93,12 +106,35 @@ def _unpartitioned_window_lines(plan: str) -> list[str]:
     return bad
 
 
+def _plan(spark, fn) -> str:
+    return fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+
+
+def _registry_plans(spark) -> dict[str, str]:
+    """Physical plan of every registry row, in registry order."""
+    local = threading.local()
+
+    def plan_in_own_session(fn):
+        if not hasattr(local, "spark"):
+            local.spark = spark.newSession()
+        return _plan(local.spark, fn)
+
+    with ThreadPoolExecutor(max_workers=WORKERS) as pool:
+        futures = {name: pool.submit(plan_in_own_session, fn)
+                   for name, fn in contract.REGISTRY.items()}
+    plans = {}
+    for name, fut in futures.items():
+        try:
+            plans[name] = fut.result()
+        except Exception:
+            plans[name] = _plan(spark, contract.REGISTRY[name])
+    return plans
+
+
 def test_only_declared_queries_plan_unpartitioned_windows(spark):
     offenders: dict[str, list[str]] = {}
     plans: dict[str, str] = {}
-    for name, fn in contract.REGISTRY.items():
-        df = fn(spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, plan in _registry_plans(spark).items():
         lines = _unpartitioned_window_lines(plan)
         if lines:
             offenders[name] = lines
