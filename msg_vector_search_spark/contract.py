@@ -4074,10 +4074,11 @@ def _materialized_index(spark: SparkSession, sf_dir: str,
 @register("ann_ivfpq_materialized", oracle=_IVFPQ_SEED_ORACLE)
 def ann_ivfpq_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF x PQ served from the PERSISTED index (operators/ann_index):
-    vectors and PQ codes stored partitionBy(cell) with centroid +
-    codebook sidecars; the query probes the sidecar, prunes both
-    stores to the probed cells (literal partition pruning — pinned in
-    tests/test_ivf_index.py), ADC-scores the pruned codes and
+    one partitionBy(cell) store holding each vector's PQ codes beside
+    it, with centroid + codebook sidecars; the query probes the
+    sidecar, prunes the store to the probed cells (literal partition
+    pruning — pinned in tests/test_ivf_index.py), ADC-scores the
+    pruned codes (a scan that reads no vector column) and
     exact-re-ranks the shortlist.  NO training and NO assignment at
     query time — the build job ran once (cached per fixture).  Seed
     artifacts, so the oracle is ann_ivfpq_topk's verbatim: the
@@ -4171,8 +4172,9 @@ _TRAINED_LINK_CENT = f"""cent AS (
 )"""
 
 # The SERVE path replayed from the linked store's own parquet: probe
-# from the centroid sidecar, hive-partition-filtered code scan, the
-# adc_score_col fold over the STORED codes, shortlist-400.
+# from the centroid sidecar, hive-partition-filtered code scan of the
+# cell store, the adc_score_col fold over the STORED codes,
+# shortlist-400.
 _TRAINED_STORE_SERVE = (_TRAINED_LINK_CENT, f"""cb AS (
   SELECT j, cw, cv
   FROM read_parquet('{_TRAINED_STORE_LINK}/codebooks/*.parquet')
@@ -4182,7 +4184,7 @@ _TRAINED_STORE_SERVE = (_TRAINED_LINK_CENT, f"""cb AS (
   ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 8
 ), codes AS (
   SELECT vec_id, codes, CAST(cell AS BIGINT) AS cell
-  FROM read_parquet('{_TRAINED_STORE_LINK}/codes/*/*.parquet',
+  FROM read_parquet('{_TRAINED_STORE_LINK}/vectors/*/*.parquet',
                     hive_partitioning = true)
   WHERE CAST(cell AS BIGINT) IN (SELECT cell FROM probe)
 )""", _TRAINED_JS, f"""expl AS (
@@ -4283,8 +4285,8 @@ _LABELED_INDEX_CACHE: dict[str, str] = {}
 
 def _labeled_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once cache for the metadata-carrying materialized index
-    (meta_cols=("label",)): both stores carry the label column, so a
-    where-predicate at serve time is a PRE-filter on the code scan."""
+    (meta_cols=("label",)): every stored row carries the label column,
+    so a where-predicate at serve time is a PRE-filter on the code scan."""
     if sf_dir not in _LABELED_INDEX_CACHE:
         path = os.path.join(tempfile.mkdtemp(prefix="annidxlab_"),
                             "index")
@@ -4303,7 +4305,7 @@ def ann_ivfpq_filtered_materialized(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     """Filtered ANN from the PERSISTED index — the production hybrid-
     filter shape ann_ivf_filtered inlines, now index-served: the build
-    stored the label column in BOTH stores (meta_cols), so the
+    stored the label column in every row (meta_cols), so the
     ``label % 2 = 0`` predicate PRE-filters the code scan (stacking
     with the cell partition filter — ADC scores eligible rows only,
     and the shortlist is drawn from eligible rows, no post-filter
@@ -4733,8 +4735,8 @@ def streaming_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   k=10, nprobe=4, shortlist=50)
 
 
-# Per-cell row counts of the replayed assignment: both stores must
-# hold exactly these.
+# Per-cell row counts of the replayed assignment: the cell store must
+# hold exactly these rows, each with its codes.
 _CELL_COUNTS = """
 SELECT cell, count(*) AS n_vectors, count(*) AS n_codes
 FROM celled GROUP BY cell ORDER BY cell
@@ -4750,15 +4752,20 @@ def ann_index_stats_trained(spark: SparkSession,
     PERSISTED trained centroids and the counts must equal what the
     physical cell directories hold — the layout-equals-assignment
     invariant for the index the deployment actually serves (the seed
-    twin pins the same invariant for the spec artifacts).  Cost: two
-    count-per-partition scans, no vector bytes."""
+    twin pins the same invariant for the spec artifacts).  Cost: one
+    count-per-partition scan of the cell store, no vector bytes."""
     path = _materialized_index(spark, sf_dir, trained=True)
     _publish_store_link("trained_index", path)
-    v = (spark.read.parquet(os.path.join(path, "vectors"))
-         .groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors")))
-    c = (spark.read.parquet(os.path.join(path, "codes"))
-         .groupBy("cell").agg(F.count(F.lit(1)).alias("n_codes")))
-    return (v.join(c, "cell", "full")
+    return _index_cell_counts(spark, path)
+
+
+def _index_cell_counts(spark: SparkSession, path: str) -> DataFrame:
+    """Per-cell rows and rows carrying PQ codes of an index's cell
+    store, from one scan that reads the codes column and no vectors."""
+    return (spark.read.parquet(os.path.join(path, "vectors"))
+            .groupBy("cell")
+            .agg(F.count(F.lit(1)).alias("n_vectors"),
+                 F.count("codes").alias("n_codes"))
             .select(F.col("cell").cast("long").alias("cell"),
                     "n_vectors", "n_codes")
             .orderBy("cell"))
@@ -4767,25 +4774,17 @@ def ann_index_stats_trained(spark: SparkSession,
 @register("ann_index_stats",
           oracle=_with(_seed_cent(), _assign(carry=())) + _CELL_COUNTS)
 def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index observability: per-cell occupancy of BOTH persisted stores
-    (raw vectors and PQ codes) read straight off the cell-partitioned
-    layout — the cell-balance signal that schedules a centroid retrain
-    (upsert_index deliberately never moves centroids; decay shows up
-    here first) and the stores-agree invariant (n_vectors == n_codes
-    per cell, or an upsert half-applied).  The oracle replays the seed
-    assignment, so a green row also proves the physical directory
-    layout holds exactly the rows the layout function assigns.  Cost:
-    two metadata-light scans of count(*) per partition — no vector
-    bytes read."""
-    path = _materialized_index(spark, sf_dir, trained=False)
-    v = (spark.read.parquet(os.path.join(path, "vectors"))
-         .groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors")))
-    c = (spark.read.parquet(os.path.join(path, "codes"))
-         .groupBy("cell").agg(F.count(F.lit(1)).alias("n_codes")))
-    return (v.join(c, "cell", "full")
-            .select(F.col("cell").cast("long").alias("cell"),
-                    "n_vectors", "n_codes")
-            .orderBy("cell"))
+    """Index observability: per-cell occupancy of the persisted cell
+    store read straight off its cell-partitioned layout — the
+    cell-balance signal that schedules a centroid retrain (upsert_index
+    deliberately never moves centroids; decay shows up here first) —
+    and the every-row-has-codes invariant (n_vectors == n_codes per
+    cell).  The oracle replays the seed assignment, so a green row also
+    proves the physical directory layout holds exactly the rows the
+    layout function assigns.  Cost: one scan of count per partition
+    that reads the codes column — no vector bytes read."""
+    return _index_cell_counts(
+        spark, _materialized_index(spark, sf_dir, trained=False))
 
 
 _RANGE_STORE_CACHE: dict[str, str] = {}
@@ -8348,7 +8347,7 @@ def ann_index_ttl_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter), so ``delete_index_where`` finds victims AND their
     cells in one column-pruned scan of the vectors sidecar (id + ts +
     cell pages, no vector bytes, no store access) and rewrites only
-    the victim cells through the staged codes-first commit.  Serving
+    the victim cells through the staged-manifest commit.  Serving
     after the erase probes the UNfiltered index; the oracle replays
     the full seed-IVFPQ composition with the candidate set cut to the
     survivors — an expired vector surfacing anywhere in the top-k, or
@@ -10076,8 +10075,8 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide exchange for exactly this accretion), so after the
     batch arrives as TWO sub-batches every touched cell is
     fragmented.  ``compact_store`` collapses the fragmented cell
-    directories of both the vectors and codes stores to one file each
-    — a rewrite of O(fragmented bytes), untouched cells never read —
+    directories of the index's one cell store to one file each — a
+    rewrite of O(fragmented bytes), untouched cells never read —
     and the post-compaction search must return exactly what the
     one-shot-upsert oracle computes: compaction moves bytes, never
     rows."""
@@ -10088,15 +10087,10 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_index.upsert_index(spark, path,
                            emb.filter((F.col("vec_id") % 30 == 13)
                                       | (F.col("vec_id") % 30 == 23)))
-    # the two stores compact independently — concurrent job streams
-    # (guide §2.6), same overlap the upsert path's auto-sweep uses
-    stats_v, _ = run_concurrently(
-        lambda: sinks.compact_store(spark, os.path.join(path, "vectors"),
-                                    part_col="cell"),
-        lambda: sinks.compact_store(spark, os.path.join(path, "codes"),
-                                    part_col="cell"))
-    assert stats_v["compacted"], "upserts must fragment some cell"
-    assert stats_v["files_after"] < stats_v["files_before"]
+    stats = sinks.compact_store(spark, os.path.join(path, "vectors"),
+                                part_col="cell")
+    assert stats["compacted"], "upserts must fragment some cell"
+    assert stats["files_after"] < stats["files_before"]
     qrow = emb.filter(F.col("vec_id") == 3).select("embedding").head()
     return ann_index.search_index(spark, path,
                                   [float(x) for x in qrow[0]],

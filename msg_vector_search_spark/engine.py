@@ -662,8 +662,7 @@ class Engine:
         # the store) and the indexes would serve expired rows forever;
         # with this order a crash at any point re-converges on re-run
         # (victims still in the store -> re-derived -> idempotent
-        # erase/tombstone).  Same discipline as delete_index_keys'
-        # codes-first.
+        # erase/tombstone).
         if n_victims and self.index_dir and self._index_ready():
             from .operators import ann_index
             touched_cells = ann_index.delete_index_keys(

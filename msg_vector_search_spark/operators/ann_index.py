@@ -11,20 +11,23 @@ artifact:
 ::
 
     <path>/
-      vectors/      raw vectors clustered by cell  (partitionBy(cell))
-      codes/        PQ codes per vector            (partitionBy(cell))
-      centroids/    nlist coarse centroids         (one small parquet)
-      codebooks/    m x ncodes PQ codewords        (one small parquet)
-      _index_meta.json   {m, ncodes, nlist, dim, trained}
+      vectors/      one row per vector: id, PQ codes, raw vector,
+                    meta_cols               (partitionBy(cell))
+      centroids/    nlist coarse centroids  (one small parquet)
+      codebooks/    m x ncodes PQ codewords (one small parquet)
+      _index_meta.json   {m, ncodes, nlist, dim, trained, ...}
 
 Query time does NO training and NO assignment: probe the centroid
-sidecar (driver-sized), filter both stores on the probed cells — a
+sidecar (driver-sized), read only the probed cells of the store — a
 literal ``cell IN (...)`` over a partition column, i.e. directory-level
 pruning; Parquet files outside the probed cells are never opened
 (pinned in tests/test_ivf_index.py) — ADC-score the pruned codes, and
-exact-re-rank a shortlist against the pruned raw vectors.  Bytes read
-per query: (nprobe/nlist) x (1/64) of the corpus for the code scan
-plus `shortlist` raw rows.
+exact-re-rank a shortlist against the pruned raw vectors.  The two
+passes read different columns of the same files, and Parquet column
+pruning keeps the vector column out of the code pass: bytes read per
+query are (nprobe/nlist) x (1/64) of the corpus for the code scan plus
+`shortlist` raw rows.  Every maintenance verb therefore rewrites and
+commits ONE cell store.
 
 Incremental maintenance (:func:`upsert_index`) is the ANN side of the
 recurring-crawl story (contract.py dedup_incremental_new_docs): a new
@@ -48,8 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from ..session import run_concurrently
-from ..sources import sinks
+from ..sources import fs, sinks
 from . import ivf, pq
 
 META_FILE = "_index_meta.json"
@@ -72,8 +74,8 @@ def build_index(spark: SparkSession, embeddings: DataFrame, path: str,
     centroids + Lloyd's codebooks (same artifact contract, better
     recall — measured in tools/scaling_check.py).
 
-    ``meta_cols`` stores metadata columns next to the vectors AND the
-    codes, which is what makes FILTERED serving a PRE-filter: a
+    ``meta_cols`` stores metadata columns in every vector's row,
+    which is what makes FILTERED serving a PRE-filter: a
     ``where`` predicate at query time reaches the code scan itself
     (stacking with the cell partition filter), so ADC only scores
     eligible rows — the production hybrid-filter shape, not a
@@ -107,24 +109,18 @@ def build_index(spark: SparkSession, embeddings: DataFrame, path: str,
                                   vec_col=vec_col).localCheckpoint()
         books = pq.seed_codebooks(embeddings, m=m, ncodes=ncodes,
                                   id_col=id_col, vec_col=vec_col)
-    # materialize the assignment once (both stores consume it), already
-    # clustered by cell so each partitionBy(cell) write emits one file
-    # per cell instead of tasks x cells shards
+    # materialize the assignment once (the store write and the n_rows
+    # count consume it), already clustered by cell so the
+    # partitionBy(cell) write emits one file per cell instead of
+    # tasks x cells shards
     assigned = (ivf.assign_cells(embeddings, cent, id_col=id_col,
                                  vec_col=vec_col,
                                  keep_cols=tuple(meta_cols))
                 .repartition("cell").localCheckpoint())
-    codes = pq.pq_encode(assigned, books, id_col=id_col, vec_col=vec_col,
-                         keep_cols=("cell", *meta_cols))
-    # both store writes consume the same checkpointed assignment and
-    # land in disjoint directories — concurrent jobs (guide §2.6);
-    # rebuild_index (a timed maintenance verb) pays this pair on every
-    # scheduled rebuild
-    run_concurrently(
-        lambda: assigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(_subdir(path, "vectors")),
-        lambda: codes.write.mode("overwrite").partitionBy("cell")
-        .parquet(_subdir(path, "codes")))
+    pq.pq_encode(assigned, books, id_col=id_col, vec_col=vec_col,
+                 keep_cols=("cell", vec_col, *meta_cols)) \
+        .write.mode("overwrite").partitionBy("cell") \
+        .parquet(_subdir(path, "vectors"))
     cent.coalesce(1).write.mode("overwrite") \
         .parquet(_subdir(path, "centroids"))
     _write_codebooks(books, _subdir(path, "codebooks"))
@@ -138,7 +134,7 @@ def build_index(spark: SparkSession, embeddings: DataFrame, path: str,
             "vec_col": vec_col, "meta_cols": list(meta_cols),
             "n_rows": assigned.count()}
     sinks._atomic_write_json(os.path.join(path, META_FILE), meta)
-    # every consumer (both store writes + the count) is done — release
+    # every consumer (the store write + the count) is done — release
     # the corpus-sized checkpoint instead of pinning one full copy of
     # the assignment per build for the session's lifetime (r14 review:
     # the in-stream maintenance loop can trip many rebuilds per run)
@@ -166,8 +162,8 @@ def write_small_parquet(table, path: str) -> None:
 
 def _heal_index(path: str) -> None:
     """``sinks.heal`` the index root (a crashed rebuild swap strands it
-    whole) and then both cell stores."""
-    for p in (path, _subdir(path, "vectors"), _subdir(path, "codes")):
+    whole) and then the cell store."""
+    for p in (path, _subdir(path, "vectors")):
         sinks.heal(p)
 
 
@@ -187,20 +183,31 @@ def _write_codebooks(books: np.ndarray, path: str) -> None:
     }), path)
 
 
+def _load_meta(path: str) -> dict:
+    """The meta sidecar, read through ``fs.read_bytes`` (the Hadoop FS
+    API on a remote URI: no Spark job, no local-FS assumption)."""
+    if not fs.is_remote(path):
+        # universal entry backstop (r14 review): a crash inside
+        # rebuild_index's root-level swap strands the WHOLE index as
+        # '<path>._old' — restore it before any verb touches META_FILE.
+        # The heal verbs are POSIX by design: a remote index is
+        # read-only for this engine
+        sinks.heal(path)
+    return json.loads(fs.read_bytes(f"{path.rstrip('/')}/{META_FILE}"))
+
+
 def read_meta(path: str) -> dict:
-    from ..sources import fs
-    if fs.is_remote(path):
-        # remote serving reads the sidecar through the Hadoop FS API —
-        # no Spark job, no local-FS assumption (r18; the write-side
-        # heal verbs stay POSIX by design and no-op here: a remote
-        # store is read-only for this engine)
-        return json.loads(fs.read_bytes(f"{path.rstrip('/')}/{META_FILE}"))
-    # universal entry backstop (r14 review): a crash inside
-    # rebuild_index's root-level swap strands the WHOLE index as
-    # '<path>._old' — restore it before any verb touches META_FILE
-    sinks.heal(path)
-    with open(os.path.join(path, META_FILE)) as f:
-        return json.load(f)
+    """The index's meta sidecar; every verb but :func:`rebuild_index`
+    reads it here, so every verb refuses an index in the older
+    two-store layout (PQ codes in a separate ``codes/`` store): an
+    upsert would write rows whose schema differs from its files'."""
+    meta = _load_meta(path)
+    if fs.probe_dirs([_subdir(path, "codes")]):
+        raise ValueError(
+            f"index at {path} keeps its PQ codes in a separate codes/ "
+            "store (the older layout); run rebuild_index on it once "
+            "to convert it")
+    return meta
 
 
 def load_centroids(spark: SparkSession, path: str) -> DataFrame:
@@ -220,8 +227,6 @@ def load_centroids_broadcastable(spark: SparkSession, path: str) -> DataFrame:
     expression — are identical to the plain read; parquet float32
     values round-trip exactly through Python floats.  Remote URIs
     keep the plain read."""
-    from ..sources import fs
-
     sub = _subdir(path, "centroids")
     if fs.is_remote(sub):
         return spark.read.parquet(sub)
@@ -241,8 +246,6 @@ def _read_small_parquet_rows(spark: SparkSession, path: str) -> list:
     for every consumer here (probe_cells_local, the codebook loop).
     Parity: both paths decode the same parquet doubles, so float
     values are bit-identical."""
-    from ..sources import fs
-
     # os.listdir / FileSystem.listStatus, not glob: a store path
     # containing glob metacharacters ([, ?, *) would silently match
     # nothing, and glob would also pick up underscore-prefixed marker
@@ -317,7 +320,8 @@ def search_index(spark: SparkSession, path: str, qvec: list[float],
     driver-side (nlist-bounded) and both the code scan and the
     re-rank's raw-vector scan read ONLY those cell directories
     (:func:`_read_cells` — explicit-dirs listing, so the serve never
-    pays O(nlist) partition discovery).
+    pays O(nlist) partition discovery); the code scan reads no vector
+    column.
 
     *where* (a SQL predicate over the index's recorded ``meta_cols``)
     PRE-filters both scans: metadata selectivity stacks with cell
@@ -343,19 +347,19 @@ def search_index(spark: SparkSession, path: str, qvec: list[float],
     cells = ivf.probe_cells_local(load_centroid_rows(spark, path),
                                   qvec, nprobe)
 
-    codes = _read_cells(spark, _subdir(path, "codes"), cells)
+    # one frame feeds both passes: column pruning narrows the ADC scan
+    # to (id, codes) and the re-rank scan to (id, vector), and the
+    # store's schema is inferred once (one job per frame)
+    rows = _read_cells(spark, _subdir(path, "vectors"), cells)
     if where is not None:
-        codes = codes.filter(F.expr(where))
+        rows = rows.filter(F.expr(where))
     table = pq.adc_table(qvec, books)
-    short = pq.pq_search(codes, table, k=shortlist, id_col=id_col)
+    short = pq.pq_search(rows, table, k=shortlist, id_col=id_col)
 
-    vectors = _read_cells(spark, _subdir(path, "vectors"), cells)
-    if where is not None:
-        vectors = vectors.filter(F.expr(where))
     q = F.array(*[F.lit(float(v)) for v in qvec])
     exact = V.cosine(F.col(vec_col), q)
     extra = (vec_col,) if keep_vec else ()
-    return (vectors.join(F.broadcast(short.select(id_col)), id_col)
+    return (rows.join(F.broadcast(short.select(id_col)), id_col)
             .withColumn("sim", F.round(exact, 6) + F.lit(0.0))
             .select(id_col, F.col("cell").cast("long").alias("cell"),
                     "sim", *extra)
@@ -391,8 +395,9 @@ def search_index_many(spark: SparkSession, path: str,
     queries through :func:`search_index`.
 
     Plan shape at 100 TB: one probe job (Q x nlist rows, driver-
-    bounded), one pruned scan of codes and one of vectors (bytes =
-    union-of-probes fraction, at most Q x nprobe/nlist of the stores),
+    bounded), two pruned scans of the cell store — the codes pass and
+    the re-rank pass (bytes = union-of-probes fraction, at most
+    Q x nprobe/nlist of the store),
     per-query shortlists via a qid-partitioned window over the
     ADC-scored candidates — Spark plans the row_number+filter as a
     WindowGroupLimit, whose PARTIAL mode keeps only the top
@@ -455,11 +460,11 @@ def search_index_many(spark: SparkSession, path: str,
                   for qid, qv in qitems}
     union_cells = sorted({c for cs in cells_by_q.values() for c in cs})
 
-    codes = _read_cells(spark, _subdir(path, "codes"), union_cells)
+    rows = _read_cells(spark, _subdir(path, "vectors"), union_cells)
     if where is not None:
         # shared PRE-filter (recorded meta_cols): stacks with the
         # union-cell partition filter before any per-query ADC work
-        codes = codes.filter(F.expr(where))
+        rows = rows.filter(F.expr(where))
     if len(qitems) <= literal_max:
         entries = []
         for qid, qv in qitems:
@@ -469,7 +474,7 @@ def search_index_many(spark: SparkSession, path: str,
                 F.lit(int(qid)).cast("long").alias("qid"),
                 F.when(F.col("cell").isin(cells_by_q[int(qid)]), sc)
                 .alias("adc_sim")))
-        scored = (codes
+        scored = (rows
                   .select(id_col, "cell",
                           F.explode(F.array(*entries)).alias("_e"))
                   .select(id_col, "cell",
@@ -495,7 +500,7 @@ def search_index_many(spark: SparkSession, path: str,
                 F.col("_tbl"),
                 (j * ncodes + F.element_at("codes", j + 1) + 1)
                 .cast("int")))
-        scored = (codes
+        scored = (rows
                   .join(F.broadcast(pairs), "cell")
                   .join(F.broadcast(qtbl), "qid")
                   .withColumn("adc_sim", F.round(sc, 6) + F.lit(0.0))
@@ -506,9 +511,6 @@ def search_index_many(spark: SparkSession, path: str,
              .filter(F.col("_rn") <= shortlist)
              .select("qid", id_col))
 
-    vectors = _read_cells(spark, _subdir(path, "vectors"), union_cells)
-    if where is not None:
-        vectors = vectors.filter(F.expr(where))
     qdim = spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in qitems],
         "qid long, _qv array<double>")
@@ -520,7 +522,7 @@ def search_index_many(spark: SparkSession, path: str,
     # re-windowing the k-bounded output (hybrid_serve_many)
     extra = ((F.col("_rn").cast("int").alias("rank"),)
              if with_rank else ())
-    return (vectors.join(F.broadcast(short), id_col)
+    return (rows.join(F.broadcast(short), id_col)
             .join(F.broadcast(qdim), "qid")
             .withColumn("sim", F.round(exact, 6) + F.lit(0.0))
             .withColumn("_rn", F.row_number().over(w_k))
@@ -532,23 +534,20 @@ def search_index_many(spark: SparkSession, path: str,
 
 
 def _upsert_cells(spark: SparkSession, batch: DataFrame, store: str,
-                  key: str, touched: list | None = None) -> list:
+                  key: str) -> list:
     """Merge *batch* (carrying a ``cell`` column) into a
     partitionBy(cell) store: read ONLY the touched cell partitions,
     last-writer-wins per *key* (incoming shadows existing), rewrite
     only those directories.  The sinks.py upsert economics with the
-    IVF cell as the bucket.  *touched* lets a caller that already
-    knows the batch's cell set (the codes store mirrors the vectors
-    store's) skip the distinct-collect job."""
+    IVF cell as the bucket."""
     # Roll a crashed erasure FORWARD before reading (r14 review): a
     # pending _delete_pending.json means un-swapped cells still hold
     # victim rows — merging without committing it would bake the
     # victims back in (and the manifest's 'emptied' replay could later
     # rmtree cells this merge wrote)
     sinks.heal(store)
-    if touched is None:
-        touched = sorted(r[0] for r in
-                         batch.select("cell").distinct().collect())
+    touched = sorted(r[0] for r in
+                     batch.select("cell").distinct().collect())
     if not touched:
         return []
     # Last-writer-wins WITHOUT a corpus-wide window: dedupe the (small)
@@ -582,8 +581,8 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
                       vectors: DataFrame | None = None) -> list:
     """Erasure propagation into the materialized index — the index
     twin of the store's GDPR verb (``sinks.delete_keys``): remove
-    every vector whose id appears in *keys* from BOTH cell-partitioned
-    stores, touching only the cells that hold victims.  Centroids and
+    every vector whose id appears in *keys* from the cell-partitioned
+    store, touching only the cells that hold victims.  Centroids and
     codebooks deliberately do NOT move (same contract as
     :func:`upsert_index`: artifact movement is :func:`rebuild_index`'s
     job), so post-erasure search serves the surviving rows under the
@@ -596,10 +595,10 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
     cell is a pure function of (vector, persisted centroids) and that
     is exactly how every row got its cell at build/upsert time.
     Without *vectors* the fallback is a column-pruned scan of the
-    vectors store's id column semi-joined with the broadcast key set —
-    reads only id pages plus directory names, never vector bytes.
+    store's id column semi-joined with the broadcast key set — reads
+    only id pages plus directory names, never vector bytes.
 
-    Crash safety: both store rewrites go through the staged-manifest
+    Crash safety: the store rewrite goes through the staged-manifest
     commit (``sinks.erase_partitions``) — a crash at any point is
     rolled forward by the next maintenance verb or self-healing read,
     and re-running with the same key list is the documented recovery
@@ -608,7 +607,7 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
     _heal_index(path)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    vstore, cstore = _subdir(path, "vectors"), _subdir(path, "codes")
+    vstore = _subdir(path, "vectors")
     keyed = (keys.select(id_col).filter(F.col(id_col).isNotNull())
              .distinct().localCheckpoint())
     if vectors is not None:
@@ -637,17 +636,9 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
     if not touched:
         _cc_free(keyed)
         return []
-    # codes FIRST, then vectors: the re-run recovery derives victim
-    # cells from the vectors store, so victims must stay discoverable
-    # there until the codes-side erase has committed — with this order
-    # a crash at any point re-converges, and a half-erased index can
-    # never SERVE a victim either (serving = codes shortlist joined
-    # back to vectors; erased codes keep victims out of the shortlist)
-    sinks.erase_partitions(spark, cstore, id_col, keyed, touched,
-                           part_col="cell")
     sinks.erase_partitions(spark, vstore, id_col, keyed, touched,
                            part_col="cell")
-    # both erases committed — release the key list's pinned blocks
+    # the erase committed — release the key list's pinned blocks
     # instead of leaving them in the block manager for the session
     _cc_free(keyed)
     return touched
@@ -663,12 +654,11 @@ def delete_index_where(spark: SparkSession, path: str,
     consulting the primary store.
 
     The victims and their cells come from ONE column-pruned scan of
-    the vectors sidecar (id + meta + cell pages — vector bytes are
-    never read; the same recorded metadata that serves as the search
-    pre-filter makes erase-by-predicate index-local), then both
-    cell-partitioned stores rewrite only the touched cells through the
-    staged-manifest commit of :func:`delete_index_keys` (codes first,
-    vectors second — the same crash-ordering argument).  Cost:
+    the cell store (id + meta + cell pages — vector bytes are never
+    read; the same recorded metadata that serves as the search
+    pre-filter makes erase-by-predicate index-local), then the store
+    rewrites only the touched cells through the staged-manifest
+    commit of :func:`delete_index_keys`.  Cost:
     O(victim cells + id/meta pages), independent of index size.
     Idempotent: a re-run finds no matching rows.  Returns the touched
     cell ids."""
@@ -683,7 +673,7 @@ def delete_index_where(spark: SparkSession, path: str,
             f"index at {path} records no meta_cols; erase-by-predicate "
             "needs the filter columns recorded at build time "
             "(build_index(..., meta_cols=...))")
-    vstore, cstore = _subdir(path, "vectors"), _subdir(path, "codes")
+    vstore = _subdir(path, "vectors")
     victims = (spark.read.parquet(vstore)
                .filter(F.expr(predicate))
                .select(id_col, "cell").localCheckpoint())
@@ -692,13 +682,8 @@ def delete_index_where(spark: SparkSession, path: str,
     if not touched:
         _cc_free(victims)
         return []
-    keyed = victims.select(id_col).distinct()
-    # codes FIRST, then vectors (see delete_index_keys): a half-erased
-    # index can never SERVE a victim, and a crash re-converges because
-    # the predicate still matches the surviving vectors rows
-    sinks.erase_partitions(spark, cstore, id_col, keyed, touched,
-                           part_col="cell")
-    sinks.erase_partitions(spark, vstore, id_col, keyed, touched,
+    sinks.erase_partitions(spark, vstore, id_col,
+                           victims.select(id_col).distinct(), touched,
                            part_col="cell")
     _cc_free(victims)
     return touched
@@ -756,24 +741,28 @@ def rebuild_index(spark: SparkSession, path: str,
     the ACTION on the cell-balance decay that ``ann_index_stats``
     surfaces (upserts never move centroids, so occupancy drifts as
     the corpus distribution does).  Re-derives all four artifacts
-    from the CURRENT vectors store (raw vectors are the source of
-    truth; cells and codes are derived data), staged next to the live
+    from the CURRENT cell store's raw vectors (the source of truth;
+    cells and codes are derived data), staged next to the live
     index and swapped in whole — a query that started before the
     swap finishes against the old directories.  ``trained=None``
     keeps the index's recorded flavor; passing a value migrates
     seed <-> trained in place.  After a rebuild the index is
     bit-identical to a fresh :func:`build_index` over the same rows —
-    upsert-then-rebuild converges to the fresh-build state."""
+    upsert-then-rebuild converges to the fresh-build state.  The one
+    verb that accepts the older two-store layout (a separate
+    ``codes/`` store): it reads only ``vectors/`` and swaps the whole
+    directory, so the rebuild converts such an index."""
     # roll a crashed erasure FORWARD before treating the vectors store
     # as the source of truth (r14 review): un-swapped cells still hold
     # victim rows, and a rebuild that reads them bakes the victims
     # into the fresh index AND discards the pending manifest with the
     # old directories — the erasure would silently never complete
     _heal_index(path)
-    meta = read_meta(path)
+    meta = _load_meta(path)
     if trained is None:
         trained = meta["trained"]
-    vecs = (spark.read.parquet(_subdir(path, "vectors")).drop("cell")
+    vecs = (spark.read.parquet(_subdir(path, "vectors"))
+            .drop("cell", "codes")
             .localCheckpoint())  # detach from the dirs the swap replaces
     built = {}
 
@@ -830,7 +819,7 @@ def upsert_index(spark: SparkSession, path: str,
       ValueError (use when keys are CONTRACTUALLY append-unique and a
       moved key means an upstream bug).
 
-    The erase runs AFTER both store merges commit, so a crash between
+    The erase runs AFTER the merge commits, so a crash between
     merge and erase leaves exactly the documented ignore-state — re-
     running the same batch (idempotent last-wins) re-converges."""
     if on_moved not in ("ignore", "erase", "error"):
@@ -841,40 +830,25 @@ def upsert_index(spark: SparkSession, path: str,
     meta_cols = tuple(meta.get("meta_cols", ()))
     cent = load_centroids_broadcastable(spark, path)
     books = load_codebooks(spark, path)
-    assigned = ivf.assign_cells(new_vectors, cent, id_col=id_col,
-                                vec_col=vec_col, keep_cols=meta_cols)
-    # stage the batch once: both stores consume the same tiny frame
-    assigned = assigned.localCheckpoint()
-    codes = pq.pq_encode(assigned, books, id_col=id_col,
-                         vec_col=vec_col,
-                         keep_cols=("cell", *meta_cols))
-    # both cell merges consume the same checkpointed batch and touch
-    # DISJOINT store directories, so they run as concurrent jobs
-    # (guide §2.6 — the scheduler back-fills one merge's straggler
-    # tail with the other's tasks; a streaming ingest loop pays this
-    # pair once per micro-batch, so the serial form was the largest
-    # per-batch wall term).  The touched set is computed once up
-    # front — it is a pure function of the batch, identical for both.
-    touched = sorted(r[0] for r in
-                     assigned.select("cell").distinct().collect())
-    run_concurrently(
-        lambda: _upsert_cells(spark, assigned, _subdir(path, "vectors"),
-                              id_col, touched),
-        lambda: _upsert_cells(spark, codes, _subdir(path, "codes"),
-                              id_col, touched))
+    # stage the encoded batch once: the merge reads it twice (the
+    # touched-cell collect and the write) and the moved-key guard a
+    # third time
+    batch = pq.pq_encode(
+        ivf.assign_cells(new_vectors, cent, id_col=id_col,
+                         vec_col=vec_col, keep_cols=meta_cols),
+        books, id_col=id_col, vec_col=vec_col,
+        keep_cols=("cell", vec_col, *meta_cols)).localCheckpoint()
+    vstore = _subdir(path, "vectors")
+    touched = _upsert_cells(spark, batch, vstore, id_col)
     if on_moved != "ignore":
-        _resolve_moved_keys(spark, path, assigned, touched,
+        _resolve_moved_keys(spark, path, batch, touched,
                             id_col, on_moved)
     if auto_compact_files is not None:
-        # the two stores' compaction sweeps are independent (disjoint
-        # directories) — overlap them like the merges above
-        run_concurrently(*(
-            lambda store=store: sinks.compact_store(
-                spark, _subdir(path, store),
-                max_files_per_bucket=auto_compact_files, part_col="cell")
-            for store in ("vectors", "codes")))
+        sinks.compact_store(spark, vstore,
+                            max_files_per_bucket=auto_compact_files,
+                            part_col="cell")
     from .dedup import _cc_free
-    _cc_free(assigned)  # both store merges committed; release the pin
+    _cc_free(batch)  # the merge committed; release the pin
     return touched
 
 
@@ -909,10 +883,8 @@ def _resolve_moved_keys(spark: SparkSession, path: str,
             f"the batch moves previously indexed vectors.  Use "
             f"on_moved='erase', apply_changefeed_index (O(batch) with "
             f"old payloads), or delete_index_keys first.")
-    victim_keys = stale.select(id_col).distinct()
-    sinks.erase_partitions(spark, _subdir(path, "codes"), id_col,
-                           victim_keys, victim_cells, part_col="cell")
-    sinks.erase_partitions(spark, vstore, id_col, victim_keys,
+    sinks.erase_partitions(spark, vstore, id_col,
+                           stale.select(id_col).distinct(),
                            victim_cells, part_col="cell")
     from .dedup import _cc_free
     _cc_free(stale)
@@ -921,7 +893,7 @@ def _resolve_moved_keys(spark: SparkSession, path: str,
 def index_maintenance_stats(spark: SparkSession, path: str,
                             persist_backfill: bool = False) -> dict:
     """The rebuild-decay signals, metadata-light: per-cell occupancy
-    of the codes store (count-per-partition — no vector bytes read)
+    of the cell store (count-per-partition — no vector bytes read)
     folded to growth-since-build and cell skew.  :func:`upsert_index`
     deliberately never moves centroids or codebooks (the FAISS
     operating practice), so these two numbers are exactly what
@@ -950,10 +922,10 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     # reads do; committing a crashed erasure from an observer is the
     # established self-heal contract (search_index does it on every
     # call), distinct from the meta write-through that stays opt-in.
-    cstore = _subdir(path, "codes")
-    sinks.heal(cstore)
+    vstore = _subdir(path, "vectors")
+    sinks.heal(vstore)
     counts = [r["n"] for r in
-              (spark.read.parquet(cstore)
+              (spark.read.parquet(vstore)
                .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
                .collect())]
     total = sum(counts)

@@ -147,7 +147,8 @@ def pq_encode(embeddings: DataFrame, codebooks: np.ndarray,
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    src = embeddings.select(id_col, vec_col, *keep)
+    src = embeddings.select(id_col, vec_col,
+                            *[c for c in keep if c != vec_col])
     fields = {f.name: f for f in src.schema.fields}
     out_schema = T.StructType(
         [fields[id_col],

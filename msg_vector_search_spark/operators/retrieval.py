@@ -183,35 +183,8 @@ def _read_text_meta(path: str, id_col: str = "doc_id",
 
     from ..sources import fs
 
-    if fs.is_remote(path):
-        # remote serving reads the sidecar through the Hadoop FS API —
-        # no Spark job, no local-FS assumption (r18).  The legacy
-        # guard below mirrors the local branch via one listing RPC.
-        try:
-            return json.loads(fs.read_bytes(
-                f"{path.rstrip('/')}/{TEXT_META}"))
-        except FileNotFoundError:
-            pdir = f"{path.rstrip('/')}/postings"
-            tbs = [int(d.rsplit("=", 1)[1])
-                   for d in fs.list_child_dirs(pdir, "tb=")
-                   if d.rsplit("=", 1)[1].isdigit()]
-            if tbs and max(tbs) >= n_buckets:
-                raise ValueError(
-                    f"index at {path} has no meta sidecar but a "
-                    f"tb={max(tbs)} partition — the layout cannot be "
-                    f"the assumed {n_buckets}-bucket default (lost "
-                    f"{TEXT_META}?); restore the sidecar or rebuild")
-            return {"n_buckets": n_buckets, "gen": 0, "id_col": id_col}
-        except ValueError as e:
-            raise ValueError(
-                f"corrupt text-index meta at {path}: {e}; refusing to "
-                "default the generation counter (it would silently "
-                "disarm tombstones) — restore or rebuild the index"
-            ) from e
-
     try:
-        with open(os.path.join(path, TEXT_META)) as f:
-            return json.load(f)
+        return json.loads(fs.read_bytes(f"{path.rstrip('/')}/{TEXT_META}"))
     except (FileNotFoundError, NotADirectoryError):
         # The missing-file fallback serves two safe cases: bootstrap
         # (no store yet) and a pre-sidecar legacy index (always built
@@ -223,11 +196,13 @@ def _read_text_meta(path: str, id_col: str = "doc_id",
         # default, and failing loudly beats silently missing terms.
         # (A wider layout whose dirs all happen to fall below the
         # default can still slip through — best-effort guard, exact
-        # only via the sidecar itself.)
-        pdir = os.path.join(path, "postings")
-        if os.path.isdir(pdir):
-            tbs = [int(e.split("=", 1)[1]) for e in os.listdir(pdir)
-                   if e.startswith("tb=") and e.split("=", 1)[1].isdigit()]
+        # only via the sidecar itself.)  One probe and one listing,
+        # local or remote alike.
+        pdir = f"{path.rstrip('/')}/postings"
+        if fs.probe_dirs([pdir]):
+            tbs = [int(d.rsplit("=", 1)[1])
+                   for d in fs.list_child_dirs(pdir, "tb=")
+                   if d.rsplit("=", 1)[1].isdigit()]
             if tbs and max(tbs) >= n_buckets:
                 raise ValueError(
                     f"index at {path} has no meta sidecar but a "

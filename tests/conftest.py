@@ -22,3 +22,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture
+def crash_after_erasure_manifest(monkeypatch):
+    """A callable that arms one crash inside the next erasure commit:
+    after its manifest is written, before its first swap.
+    ``sinks._finish_pending_delete`` raises the first time it finds a
+    manifest (the heals a verb runs before it stages find none) and is
+    restored as it raises.  The callable returns the raised type."""
+    from msg_vector_search_spark.sources import sinks
+
+    class ErasureCrash(RuntimeError):
+        pass
+
+    real = sinks._finish_pending_delete
+
+    def crash(path):
+        if os.path.exists(os.path.join(path, sinks.DELETE_MANIFEST)):
+            monkeypatch.setattr(sinks, "_finish_pending_delete", real)
+            raise ErasureCrash("injected crash before the erasure swaps")
+        return real(path)
+
+    def arm():
+        monkeypatch.setattr(sinks, "_finish_pending_delete", crash)
+        return ErasureCrash
+
+    return arm

@@ -4,6 +4,7 @@ returns the same rows as the in-memory search."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from msg_vector_search_spark.operators import ivf
@@ -41,9 +42,10 @@ def test_ivf_index_prunes_partitions_and_matches(spark, tmp_path):
 
 
 def test_materialized_index_serves_pruned_no_training(spark, tmp_path):
-    """The full index lifecycle: build_index persists vectors + codes
-    partitionBy(cell) with centroid/codebook sidecars; search_index
-    serves with BOTH stores read only at the probed cells (r17: the
+    """The full index lifecycle: build_index persists each vector and
+    its codes in one partitionBy(cell) store with centroid/codebook
+    sidecars; search_index serves with both passes (codes, re-rank)
+    reading only the probed cells (r17: the
     pruning moved from a PartitionFilters literal to the explicit-dirs
     _read_cells listing — stronger: the plan never even LISTS the
     unprobed cell directories) and returns exactly the inline IVFPQ
@@ -67,8 +69,8 @@ def test_materialized_index_serves_pruned_no_training(spark, tmp_path):
     assert [tuple(r) for r in served.collect()] == \
            [tuple(r) for r in inline.collect()]
 
-    # pruning: every file the served plan reads from the two cell
-    # stores lives under a probed cell=N directory (nprobe=2), i.e.
+    # pruning: every file the served plan reads from the cell store
+    # lives under a probed cell=N directory (nprobe=2), i.e.
     # the unprobed cells were never listed, let alone read.  The
     # centroid/codebook sidecars are nlist/m*ncodes-row artifacts and
     # exempt.
@@ -77,9 +79,8 @@ def test_materialized_index_serves_pruned_no_training(spark, tmp_path):
                               qv, 2).collect()}
     assert len(probed) == 2
     import os
-    store_files = [f for f in served.inputFiles()
-                   if "/vectors/" in f or "/codes/" in f]
-    assert store_files  # the serve really reads both cell stores
+    store_files = [f for f in served.inputFiles() if "/vectors/" in f]
+    assert store_files  # the serve really reads the cell store
     assert {os.path.basename(os.path.dirname(f))
             for f in store_files} <= probed
 
@@ -87,7 +88,7 @@ def test_materialized_index_serves_pruned_no_training(spark, tmp_path):
 def test_upsert_index_touches_only_mapped_cells(spark, tmp_path):
     """Incremental maintenance locality: upserting a small batch must
     rewrite ONLY the cell partitions the batch maps into — untouched
-    cell directories stay byte-identical in both stores — and
+    cell directories stay byte-identical — and
     post-upsert search finds the new vectors."""
     import os
 
@@ -107,18 +108,16 @@ def test_upsert_index_touches_only_mapped_cells(spark, tmp_path):
     batch = emb.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "upsidx")
     ann_index.build_index(spark, base, path, nlist=8, m=8, ncodes=16)
-    before_v = _state(os.path.join(path, "vectors"))
-    before_c = _state(os.path.join(path, "codes"))
+    before = _state(os.path.join(path, "vectors"))
 
     touched = ann_index.upsert_index(spark, path, batch)
     assert 0 < len(touched) < 8  # a small batch maps to FEW cells
 
-    for store, before in (("vectors", before_v), ("codes", before_c)):
-        after = _state(os.path.join(path, store))
-        changed = {rel.split("=")[1].split("/")[0]
-                   for rel, sig in before.items()
-                   if after.get(rel) != sig}
-        assert changed <= {str(t) for t in touched}
+    after = _state(os.path.join(path, "vectors"))
+    changed = {rel.split("=")[1].split("/")[0]
+               for rel, sig in before.items()
+               if after.get(rel) != sig}
+    assert changed <= {str(t) for t in touched}
 
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 3)
           .select("embedding").collect()[0][0]]
@@ -245,14 +244,13 @@ def test_upsert_auto_compact_bounds_file_count(spark, tmp_path):
         ann_index.upsert_index(spark, manual, batch,
                                auto_compact_files=None)
 
-    for store in ("vectors", "codes"):
-        root = os.path.join(auto, store)
-        for entry in os.listdir(root):
-            if not entry.startswith("cell="):
-                continue
-            n = len([f for f in os.listdir(os.path.join(root, entry))
-                     if f.endswith(".parquet")])
-            assert n <= 2, f"{store}/{entry} has {n} files"
+    root = os.path.join(auto, "vectors")
+    for entry in os.listdir(root):
+        if not entry.startswith("cell="):
+            continue
+        n = len([f for f in os.listdir(os.path.join(root, entry))
+                 if f.endswith(".parquet")])
+        assert n <= 2, f"{entry} has {n} files"
 
     got_a = {tuple(r) for r in ann_index.search_index(
         spark, auto, qv, k=5, nprobe=2, shortlist=50).collect()}
@@ -354,8 +352,9 @@ def test_upsert_index_heals_crash_inside_swap(spark, tmp_path):
 
 def test_delete_index_keys_erases_both_stores_cell_locally(spark, tmp_path):
     """Erasure touches ONLY the victims' cells: pick victims from a
-    single cell, erase, and check (a) both stores dropped exactly
-    those rows, (b) untouched cell directories are byte-identical
+    single cell, erase, and check (a) the cell store dropped exactly
+    those rows and each survivor kept its codes, (b) untouched cell
+    directories are byte-identical
     after the erase — the O(touched cells) cost claim made literal."""
     import os
 
@@ -380,19 +379,17 @@ def test_delete_index_keys_erases_both_stores_cell_locally(spark, tmp_path):
 
     other_cells = [r["cell"] for r in stored.select("cell").distinct()
                    .collect() if r["cell"] != victim_cell]
-    before = {(s, c): _bytes(os.path.join(path, s), c)
-              for s in ("vectors", "codes") for c in other_cells}
+    before = {c: _bytes(vec_dir, c) for c in other_cells}
 
     touched = ann_index.delete_index_keys(spark, path, victims)
     assert touched == [victim_cell]
 
-    for s in ("vectors", "codes"):
-        store = spark.read.parquet(os.path.join(path, s))
-        got = {r["vec_id"] for r in store.select("vec_id").collect()}
-        assert got.isdisjoint(victim_ids)
-        assert len(got) == emb.count() - len(victim_ids)
-    after = {(s, c): _bytes(os.path.join(path, s), c)
-             for s in ("vectors", "codes") for c in other_cells}
+    store = spark.read.parquet(vec_dir)
+    got = {r["vec_id"] for r in store.select("vec_id").collect()}
+    assert got.isdisjoint(victim_ids)
+    assert len(got) == emb.count() - len(victim_ids)
+    assert store.filter(F.size("codes") != 8).count() == 0
+    after = {c: _bytes(vec_dir, c) for c in other_cells}
     assert after == before  # untouched cells never rewritten
 
 
@@ -417,12 +414,10 @@ def test_delete_index_keys_fast_path_matches_scan_path(spark, tmp_path):
                                          victims.select("vec_id"),
                                          vectors=victims)
     assert t_scan == t_fast
-    for s in ("vectors", "codes"):
-        a = {tuple(r) for r in spark.read.parquet(
-            os.path.join(scan_idx, s)).select("vec_id", "cell").collect()}
-        b = {tuple(r) for r in spark.read.parquet(
-            os.path.join(fast_idx, s)).select("vec_id", "cell").collect()}
-        assert a == b
+    a, b = ({(r["vec_id"], r["cell"], tuple(r["codes"])) for r in
+             spark.read.parquet(os.path.join(p, "vectors")).collect()}
+            for p in (scan_idx, fast_idx))
+    assert a == b
 
 
 def test_delete_index_keys_crash_mid_commit_heals_on_search(
@@ -538,69 +533,49 @@ def test_apply_changefeed_converges_to_rebuild(spark, tmp_path):
     assert a == b
 
 
-def test_delete_index_keys_crash_between_stores_rerun_converges(
-        spark, tmp_path, monkeypatch):
-    """The nastiest erase crash point: the codes-store erase COMMITTED
-    (manifest gone) but the vectors-store erase never ran.  Because
-    the re-run recovery derives victim cells from the VECTORS store,
-    codes must erase first — this test pins that order by crashing
-    between the two commits and asserting (a) the half-erased index
-    cannot serve a victim even before recovery, and (b) re-running the
-    same delete (the documented recovery path) lands both stores in
-    the crash-free state."""
+def test_delete_index_keys_crash_before_swaps_rerun_converges(
+        spark, tmp_path, crash_after_erasure_manifest):
+    """A crash inside the erasure's commit, after the manifest is
+    written and before any cell is swapped: the store files still hold
+    the victims, but the recorded plan is the commit.  Re-running the
+    same delete (the documented recovery path) rolls the plan forward
+    and finds nothing left to erase; the store then holds exactly the
+    survivors, and serving never returns a victim."""
     import os
 
     from msg_vector_search_spark.operators import ann_index
-    from msg_vector_search_spark.sources import sinks as sinks_mod
 
     emb = readers.read_table(spark, SF, "embeddings")
     path = str(tmp_path / "crash2_idx")
+    vstore = os.path.join(path, "vectors")
     ann_index.build_index(spark, emb, path, nlist=4, m=8, ncodes=16)
     victims = emb.filter(F.col("vec_id") % 9 == 0).select("vec_id") \
         .localCheckpoint()
     victim_ids = {r["vec_id"] for r in victims.collect()}
 
-    real = sinks_mod.erase_partitions
-    calls = {"n": 0}
+    with pytest.raises(crash_after_erasure_manifest()):
+        ann_index.delete_index_keys(spark, path, victims)
 
-    def crash_on_second(spark_, store, key, keys, touched, part_col):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("simulated crash between store erasures")
-        return real(spark_, store, key, keys, touched, part_col=part_col)
+    # crashed before the swaps: plan and stage on disk, files untouched
+    assert os.path.exists(os.path.join(vstore, sinks.DELETE_MANIFEST))
+    assert os.path.isdir(vstore + sinks.ERASE_STAGE)
+    assert spark.read.parquet(vstore).count() == emb.count()
 
-    monkeypatch.setattr(sinks_mod, "erase_partitions", crash_on_second)
-    import msg_vector_search_spark.operators.ann_index as ai
-    # ann_index imports erase_partitions inside the function body from
-    # sinks, so patching the sinks module attribute is sufficient
-    try:
-        ai.delete_index_keys(spark, path, victims)
-        raise AssertionError("crash did not fire")
-    except RuntimeError:
-        pass
-    monkeypatch.undo()
+    # recovery: the same delete again; its heal commits the plan
+    assert ann_index.delete_index_keys(spark, path, victims) == []
+    ids = {r["vec_id"] for r in
+           spark.read.parquet(vstore).select("vec_id").collect()}
+    assert ids.isdisjoint(victim_ids)
+    assert len(ids) == emb.count() - len(victim_ids)
+    assert not os.path.exists(os.path.join(vstore, sinks.DELETE_MANIFEST))
+    assert not os.path.exists(vstore + sinks.ERASE_STAGE)
 
-    # half-erased: codes gone, vectors still hold victims — but serving
-    # cannot return a victim (shortlist comes from the erased codes)
-    codes_ids = {r["vec_id"] for r in spark.read.parquet(
-        f"{path}/codes").select("vec_id").collect()}
-    assert codes_ids.isdisjoint(victim_ids)
     qrow = emb.filter(F.col("vec_id") == sorted(victim_ids)[0]) \
         .select("embedding").head()
     served = {r["vec_id"] for r in ann_index.search_index(
         spark, path, [float(x) for x in qrow[0]], k=10, nprobe=4,
         shortlist=100).collect()}
     assert served.isdisjoint(victim_ids)
-
-    # recovery: the same delete again — victims still discoverable in
-    # the vectors store, so the re-run re-derives the full cell set
-    touched = ann_index.delete_index_keys(spark, path, victims)
-    assert touched
-    for s in ("vectors", "codes"):
-        ids = {r["vec_id"] for r in spark.read.parquet(
-            f"{path}/{s}").select("vec_id").collect()}
-        assert ids.isdisjoint(victim_ids)
-        assert len(ids) == emb.count() - len(victim_ids)
 
 
 def test_assign_cells_duplicate_ids_store_consistent_pair(spark):
@@ -651,8 +626,8 @@ def test_search_index_many_matches_per_query_serving(spark, tmp_path):
     """The batched multi-query serve must be bit-identical, per query,
     to Q separate search_index calls with the same parameters — same
     ids, same cells, same rounded sims, same order — while reading the
-    stores once (the union-of-probes literal filter must reach the
-    code scan as PartitionFilters)."""
+    store once per pass (the union-of-probes literal filter must reach
+    the code scan as PartitionFilters)."""
     from msg_vector_search_spark.operators import ann_index
 
     emb = readers.read_table(spark, SF, "embeddings").select(
@@ -681,8 +656,9 @@ def test_search_index_many_matches_per_query_serving(spark, tmp_path):
     cent = ann_index.load_centroids(spark, path)
     for qv in qrows.values():
         cells |= {r["cell"] for r in ivf.probe_cells(cent, qv, 3).collect()}
-    pruned = (spark.read.parquet(path + "/codes")
-              .filter(F.col("cell").isin(sorted(cells))))
+    pruned = (spark.read.parquet(path + "/vectors")
+              .filter(F.col("cell").isin(sorted(cells)))
+              .select("vec_id", "codes", "cell"))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     assert "cell" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -693,8 +669,8 @@ def test_filtered_materialized_serve_prefilters_both_stores(spark, tmp_path):
     full probe + corpus-sized shortlist the result equals brute-force
     cosine top-k over ONLY the eligible rows; the predicate reaches
     the code scan as a pushed filter next to the cell partition
-    filter; and an upsert carries the label so maintenance keeps the
-    filter servable."""
+    filter; and an upsert carries the label (beside the codes) so
+    maintenance keeps the filter servable."""
     from msg_vector_search_spark.operators import ann_index
     from msg_vector_search_spark.operators import similarity as sim_ops
 
@@ -708,8 +684,11 @@ def test_filtered_materialized_serve_prefilters_both_stores(spark, tmp_path):
     ann_index.build_index(spark, base, path, nlist=4, m=8, ncodes=16,
                           meta_cols=("label",))
     ann_index.upsert_index(spark, path, batch)
-    assert "label" in spark.read.parquet(path + "/codes").columns
-    assert "label" in spark.read.parquet(path + "/vectors").columns
+    stored = spark.read.parquet(path + "/vectors")
+    assert {"label", "codes"} <= set(stored.columns)
+    assert stored.filter(F.col("vec_id") >= 150) \
+        .filter(F.col("codes").isNull() | F.col("label").isNull()) \
+        .count() == 0
 
     qv = [float(x) for x in
           emb.filter(F.col("vec_id") == 0).head()["embedding"]]
@@ -723,9 +702,10 @@ def test_filtered_materialized_serve_prefilters_both_stores(spark, tmp_path):
     assert got == want
 
     # the predicate must be pushed into the code scan
-    codes = (spark.read.parquet(path + "/codes")
+    codes = (spark.read.parquet(path + "/vectors")
              .filter(F.col("cell").isin([0, 1]))
-             .filter(F.expr("label % 2 = 0")))
+             .filter(F.expr("label % 2 = 0"))
+             .select("vec_id", "codes"))
     plan = codes._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     assert "label" in plan  # data filter on the label column present
@@ -828,12 +808,10 @@ def test_upsert_index_rolls_forward_pending_erasure(spark, tmp_path):
     path = str(tmp_path / "upsert_pending")
     ann_index.build_index(spark, emb, path, nlist=4, m=8, ncodes=16)
     vstore = os.path.join(path, "vectors")
-    cstore = os.path.join(path, "codes")
 
     victims = (spark.read.parquet(vstore).select("vec_id")
                .orderBy("vec_id").limit(5).localCheckpoint())
     victim_ids = {r["vec_id"] for r in victims.collect()}
-    _stage_pending_erasure(spark, cstore, victims)
     _stage_pending_erasure(spark, vstore, victims)
 
     batch = (emb.orderBy("vec_id").limit(3)
@@ -841,15 +819,13 @@ def test_upsert_index_rolls_forward_pending_erasure(spark, tmp_path):
                      "embedding"))
     ann_index.upsert_index(spark, path, batch)
 
-    for store in (vstore, cstore):
-        ids = {r["vec_id"] for r in
-               spark.read.parquet(store).select("vec_id").collect()}
-        assert ids.isdisjoint(victim_ids), store
-        assert {900000, 900001, 900002} <= ids, store
-        assert not os.path.exists(
-            os.path.join(store, "_delete_pending.json"))
-        assert not os.path.exists(store + "._staged")
-        assert not os.path.exists(store + sinks.REPLACE_STAGE)
+    ids = {r["vec_id"] for r in
+           spark.read.parquet(vstore).select("vec_id").collect()}
+    assert ids.isdisjoint(victim_ids)
+    assert {900000, 900001, 900002} <= ids
+    assert not os.path.exists(os.path.join(vstore, "_delete_pending.json"))
+    assert not os.path.exists(vstore + "._staged")
+    assert not os.path.exists(vstore + sinks.REPLACE_STAGE)
 
 
 def test_rebuild_index_rolls_forward_pending_erasure(spark, tmp_path):
@@ -869,7 +845,6 @@ def test_rebuild_index_rolls_forward_pending_erasure(spark, tmp_path):
     victims = (spark.read.parquet(vstore).select("vec_id")
                .orderBy("vec_id").limit(5).localCheckpoint())
     victim_ids = {r["vec_id"] for r in victims.collect()}
-    _stage_pending_erasure(spark, os.path.join(path, "codes"), victims)
     _stage_pending_erasure(spark, vstore, victims)
 
     meta = ann_index.rebuild_index(spark, path)
@@ -950,8 +925,8 @@ def test_maintenance_stats_heals_stale_old_dir(spark, tmp_path):
     emb = readers.read_table(spark, SF, "embeddings")
     path = str(tmp_path / "stats_stale")
     ann_index.build_index(spark, emb, path, nlist=4, m=8, ncodes=16)
-    cstore = os.path.join(path, "codes")
-    cell_dir = next(os.path.join(cstore, d) for d in os.listdir(cstore)
+    vstore = os.path.join(path, "vectors")
+    cell_dir = next(os.path.join(vstore, d) for d in os.listdir(vstore)
                     if d.startswith("cell="))
     shutil.copytree(cell_dir, cell_dir + "._old")
 
@@ -994,10 +969,8 @@ def _vec_rows(spark, path):
 def test_upsert_index_cell_moving_update_guard(spark, tmp_path):
     """r14 judge item 7: a cell-MOVING update through plain upsert.
     Default 'ignore' leaves the documented stale copy; 'erase' hunts
-    it in the non-touched cells and removes it from BOTH stores (plain
+    it in the non-touched cells and removes it with its codes (plain
     upsert safe for updates); 'error' refuses loudly."""
-    import pytest
-
     from msg_vector_search_spark.operators import ann_index
 
     emb = readers.read_table(spark, SF, "embeddings")
@@ -1026,16 +999,11 @@ def test_upsert_index_cell_moving_update_guard(spark, tmp_path):
     assert sorted(r["cell"] for r in got) == sorted(
         {cells[mover], cells[donor]})
 
-    # 'erase': exactly one copy remains, in the NEW cell, in both stores
+    # 'erase': exactly one copy remains, in the NEW cell
     p_er = build("er")
     ann_index.upsert_index(spark, p_er, batch, on_moved="erase")
     got = _vec_rows(spark, p_er).filter(F.col("vec_id") == mover).collect()
     assert [r["cell"] for r in got] == [cells[donor]]
-    import os
-
-    codes = (spark.read.parquet(os.path.join(p_er, "codes"))
-             .filter(F.col("vec_id") == mover).collect())
-    assert [r["cell"] for r in codes] == [cells[donor]]
     # the erased index still serves (exhaustive probe finds the mover
     # at its new position with sim 1.0 against the donor vector)
     served = ann_index.search_index(spark, p_er, new_vec, k=3, nprobe=8,
@@ -1062,8 +1030,6 @@ def test_delete_index_where_ttl_and_guards(spark, tmp_path):
     without meta_cols refuses; a re-run matches nothing."""
     import datetime as dt
 
-    import pytest
-
     from msg_vector_search_spark.operators import ann_index, pq
 
     emb = readers.read_table(spark, SF, "embeddings")
@@ -1089,8 +1055,6 @@ def test_delete_index_where_ttl_and_guards(spark, tmp_path):
     vecs = spark.read.parquet(os.path.join(path, "vectors"))
     assert vecs.filter(F.col("vec_id") < n // 4).count() == 0
     assert vecs.count() == n - n // 4
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    assert codes.filter(F.col("vec_id") < n // 4).count() == 0
 
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0)
           .select("embedding").collect()[0][0]]
@@ -1109,7 +1073,7 @@ def test_delete_index_where_ttl_and_guards(spark, tmp_path):
 
 def test_search_survives_fully_emptied_probed_cell(spark, tmp_path):
     """r17 explicit-dirs serving edge: when an erasure empties EVERY
-    row of a probed cell, its directory is removed from both stores —
+    row of a probed cell, its directory is removed from the store —
     _read_cells must serve the remaining probed cells (a missing dir
     contributes no rows, exactly as the old isin filter did) and the
     top-k must equal a search over the surviving corpus."""
@@ -1134,10 +1098,8 @@ def test_search_survives_fully_emptied_probed_cell(spark, tmp_path):
     assert n_victims > 0
     touched = ann_index.delete_index_keys(spark, path, victims)
     assert touched == [victim_cell]
-    # the emptied cell's dir is GONE from both stores (erase contract)
-    for sub in ("vectors", "codes"):
-        assert not os.path.exists(
-            os.path.join(path, sub, f"cell={victim_cell}"))
+    # the emptied cell's dir is GONE from the store (erase contract)
+    assert not os.path.exists(os.path.join(vstore, f"cell={victim_cell}"))
 
     got = ann_index.search_index(spark, path, qv, k=5, nprobe=2)
     rows = got.collect()
@@ -1187,3 +1149,88 @@ def test_build_index_auto_sizes_nlist(spark, tmp_path):
     top = ann_index.search_index(spark, path, qv, k=1, nprobe=50,
                                  shortlist=2500).head()
     assert top["vec_id"] == 7
+
+
+def _two_store_copy(spark, path: str) -> None:
+    """Rewrite a built index into the older two-store layout: PQ codes
+    in their own ``codes/`` store, the vectors store without them."""
+    import os
+    import shutil
+
+    vstore = os.path.join(path, "vectors")
+    rows = spark.read.parquet(vstore).localCheckpoint()
+    rows.select("vec_id", "codes", "cell").write.partitionBy("cell") \
+        .parquet(os.path.join(path, "codes"))
+    shutil.rmtree(vstore)
+    rows.drop("codes").write.partitionBy("cell").parquet(vstore)
+
+
+def test_two_store_index_refused_until_rebuilt(spark, tmp_path):
+    """An index in the older two-store layout is refused by every verb
+    with a message naming rebuild_index, before anything is written;
+    rebuild_index reads only its vectors and converts it to the one
+    store a fresh build writes."""
+    import os
+
+    from msg_vector_search_spark.operators import ann_index
+
+    emb = readers.read_table(spark, SF, "embeddings").select(
+        "vec_id", "embedding")
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0)
+          .select("embedding").head()[0]]
+    fresh = str(tmp_path / "fresh")
+    old = str(tmp_path / "old")
+    for p in (fresh, old):
+        ann_index.build_index(spark, emb, p, nlist=4, m=8, ncodes=16)
+    _two_store_copy(spark, old)
+
+    victims = emb.filter(F.col("vec_id") < 3)
+    for verb in (
+            lambda: ann_index.search_index(spark, old, qv),
+            lambda: ann_index.search_index_many(spark, old, {1: qv}),
+            lambda: ann_index.upsert_index(spark, old, victims),
+            lambda: ann_index.delete_index_keys(
+                spark, old, victims.select("vec_id"), vectors=victims),
+            lambda: ann_index.delete_index_where(spark, old, "true"),
+            lambda: ann_index.index_maintenance_stats(spark, old)):
+        with pytest.raises(ValueError, match="rebuild_index"):
+            verb()
+    assert spark.read.parquet(os.path.join(old, "vectors")).count() == \
+        emb.count()
+
+    ann_index.rebuild_index(spark, old)
+    assert not os.path.exists(os.path.join(old, "codes"))
+    stored = spark.read.parquet(os.path.join(old, "vectors"))
+    want = spark.read.parquet(os.path.join(fresh, "vectors"))
+    assert stored.columns == want.columns
+    assert sorted(map(tuple, stored.select("vec_id", "cell", "codes")
+                      .collect())) == \
+        sorted(map(tuple, want.select("vec_id", "cell", "codes").collect()))
+    assert ann_index.search_index(spark, old, qv).collect() == \
+        ann_index.search_index(spark, fresh, qv).collect()
+
+
+def test_ann_write_path_job_counts(spark, tmp_path):
+    """Spark jobs launched by one upsert_index and one
+    delete_index_keys(..., vectors=...) on a small index, pinned: each
+    verb writes and commits one cell store, so a second store write or
+    an extra pass over the batch shows up here as more jobs."""
+    from msg_vector_search_spark.operators import ann_index
+
+    emb = readers.read_table(spark, SF, "embeddings").select(
+        "vec_id", "embedding")
+    path = str(tmp_path / "jobs")
+    ann_index.build_index(spark, emb.filter(F.col("vec_id") % 10 != 3),
+                          path, nlist=4, m=8, ncodes=16)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(verb) -> int:
+        before = sched.numTotalJobs()
+        verb()
+        return sched.numTotalJobs() - before
+
+    batch = emb.filter(F.col("vec_id") % 10 == 3)
+    victims = emb.filter(F.col("vec_id") % 10 == 5)
+    assert jobs(lambda: ann_index.upsert_index(spark, path, batch)) == 11
+    assert jobs(lambda: ann_index.delete_index_keys(
+        spark, path, victims.select("vec_id"), vectors=victims)) == 15

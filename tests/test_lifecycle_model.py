@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -181,21 +182,16 @@ def test_ann_index_lifecycle_matches_model(spark, tmp_path):
             f"diverged after step {step} ({op})"
 
 
-def test_ann_erase_crash_between_codes_and_vectors_converges(
-        spark, tmp_path, monkeypatch):
-    """Enumerate the codes-before-vectors erase invariant
-    (ann_index.delete_index_keys): a crash injected BETWEEN the codes
-    erase and the vectors erase must leave an index that (a) never
-    serves a victim — serving joins the codes shortlist back to
-    vectors, and erased codes keep victims out of the shortlist — and
-    (b) re-converges when the same delete re-runs (the documented
-    recovery path: victims stay discoverable in the vectors store
-    until the codes side committed, so the re-run re-derives their
-    cells).  Driven through a >=3-op interleaving (upsert, crashed
-    erase, re-run erase, upsert, clean erase) with the model compared
-    after every completed op."""
-    from msg_vector_search_spark.sources import sinks as sinks_mod
-
+def test_ann_erase_crash_before_swaps_converges(
+        spark, tmp_path, crash_after_erasure_manifest):
+    """A crash inside the index erasure's commit
+    (ann_index.delete_index_keys), after the manifest is written and
+    before any cell is swapped, must leave an index that (a) never
+    serves a victim — every serve rolls the recorded plan forward
+    before it reads — and (b) converges when the same delete re-runs
+    (the documented recovery path).  Driven through a >=3-op
+    interleaving (upsert, crashed erase, re-run erase, upsert, clean
+    erase) with the model compared after every completed op."""
     emb = readers.read_table(spark, SF, "embeddings")
     base_rows = emb.limit(120).select(
         "vec_id",
@@ -217,33 +213,14 @@ def test_ann_erase_crash_between_codes_and_vectors_converges(
     assert _served_topk(spark, path, len(model), qv) == \
         _model_topk(spark, model, qv)
 
-    # op 2: erase that CRASHES after the codes store committed, before
-    # the vectors store is touched
+    # op 2: erase that CRASHES after its manifest, before any swap
     victims = sorted(model)[:8]
-    real_erase = sinks_mod.erase_partitions
-
-    class _Boom(RuntimeError):
-        pass
-
-    calls = {"n": 0}
-
-    def crashing_erase(spark_, store, id_col, keys, touched, **kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # first call = codes, second = vectors
-            raise _Boom("injected crash between codes and vectors")
-        return real_erase(spark_, store, id_col, keys, touched, **kw)
-
-    monkeypatch.setattr(sinks_mod, "erase_partitions", crashing_erase)
-    try:
+    with pytest.raises(crash_after_erasure_manifest()):
         ann_index.delete_index_keys(
             spark, path,
             spark.createDataFrame([Row(vec_id=v) for v in victims]))
-        raise AssertionError("injected crash did not fire")
-    except _Boom:
-        pass
-    monkeypatch.setattr(sinks_mod, "erase_partitions", real_erase)
 
-    # invariant (a): the half-erased index serves NO victim
+    # invariant (a): the crashed index serves NO victim
     served_ids = {vid for vid, _ in
                   _served_topk(spark, path, len(model), qv, k=len(model))}
     assert not served_ids & set(victims), \
@@ -547,14 +524,13 @@ def test_ann_index_ttl_lifecycle_matches_model(spark, tmp_path):
             f"diverged after step {step} ({op}, cutoff={cutoff_min})"
 
 
-def test_ann_ttl_erase_crash_between_codes_and_vectors_converges(
-        spark, tmp_path, monkeypatch):
-    """The codes-before-vectors invariant for the r16 predicate-erase
-    verb (delete_index_where): a crash injected between the codes
-    erase and the vectors erase must leave an index that never serves
-    a victim, and the SAME predicate re-run re-converges — victims
-    still match in the vectors store until the codes side committed,
-    so the retry re-derives them without any external key list."""
+def test_ann_ttl_erase_crash_before_swaps_converges(
+        spark, tmp_path, crash_after_erasure_manifest):
+    """The same crash point for the r16 predicate-erase verb
+    (delete_index_where): a crash after the erasure's manifest is
+    written and before any cell is swapped must leave an index that
+    never serves a victim, and the SAME predicate re-run converges
+    without any external key list."""
     import datetime as dt
 
     from msg_vector_search_spark.sources import sinks as sinks_mod
@@ -585,40 +561,23 @@ def test_ann_ttl_erase_crash_between_codes_and_vectors_converges(
     pred = f"ts < timestamp'{cut.strftime('%Y-%m-%d %H:%M:%S')}'"
     survivors = {k: v for k, v in model.items() if k >= cut_min}
 
-    real_erase = sinks_mod.erase_partitions
-
-    class _Boom(RuntimeError):
-        pass
-
-    calls = {"n": 0}
-
-    def crashing_erase(spark_, store, id_col, keys, touched, **kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # first call = codes, second = vectors
-            raise _Boom("injected crash between codes and vectors")
-        return real_erase(spark_, store, id_col, keys, touched, **kw)
-
-    monkeypatch.setattr(sinks_mod, "erase_partitions", crashing_erase)
-    try:
+    with pytest.raises(crash_after_erasure_manifest()):
         ann_index.delete_index_where(spark, path, pred)
-        raise AssertionError("injected crash did not fire")
-    except _Boom:
-        pass
-    monkeypatch.setattr(sinks_mod, "erase_partitions", real_erase)
 
-    # half-erased index (codes committed, vectors not): serving must
-    # already exclude every victim — erased codes keep them out of
-    # the ADC shortlist
+    # crashed before the swaps: the victims' rows are still on disk
+    import os
+    vdir = os.path.join(path, "vectors")
+    assert os.path.exists(os.path.join(vdir, sinks_mod.DELETE_MANIFEST))
+    assert spark.read.parquet(vdir).filter(
+        F.col("vec_id") < cut_min).count() > 0
+    # serving must already exclude every victim: it rolls the recorded
+    # plan forward before it reads
     assert _served_topk(spark, path, len(survivors), qv) == \
         _model_topk(spark, survivors, qv)
-    # documented recovery: the same predicate re-runs and converges
-    # (victims still matched in the vectors store)
-    touched = ann_index.delete_index_where(spark, path, pred)
-    assert touched
-    import os
-    vstore = spark.read.parquet(os.path.join(path, "vectors"))
+    # documented recovery: the same predicate re-runs and converges;
+    # the plan is committed, so nothing matches any more
+    assert ann_index.delete_index_where(spark, path, pred) == []
+    vstore = spark.read.parquet(vdir)
     assert vstore.filter(F.col("vec_id") < cut_min).count() == 0
     assert _served_topk(spark, path, len(survivors), qv) == \
         _model_topk(spark, survivors, qv)
-    # idempotent once converged
-    assert ann_index.delete_index_where(spark, path, pred) == []

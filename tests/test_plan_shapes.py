@@ -417,25 +417,30 @@ def test_cross_encoder_candidates_stay_broadcast(spark):
 
 
 def test_batched_ann_serve_reads_each_store_once(spark):
-    """search_index_many's whole point is I/O sharing: exactly ONE
-    codes FileScan and ONE vectors FileScan, each reading ONLY the
-    union of the queries' probed cell directories (r17: the pruning
-    moved from a PartitionFilters literal to the explicit-dirs
-    _read_cells listing — the unprobed cells are never listed), no
-    unpartitioned window anywhere."""
+    """search_index_many's whole point is I/O sharing: exactly TWO
+    FileScans of the index's one cell store — the ADC code pass, whose
+    ReadSchema holds no vector column, and the re-rank pass — each
+    reading ONLY the union of the queries' probed cell directories
+    (r17: the pruning moved from a PartitionFilters literal to the
+    explicit-dirs _read_cells listing — the unprobed cells are never
+    listed), no unpartitioned window anywhere."""
     import os
-    import re
 
     df = contract.REGISTRY["search_index_many"](spark, SF)
     plan = plan_of(df)
-    assert len(re.findall(r"FileScan parquet.*?/codes", plan)) == 1
-    assert len(re.findall(r"FileScan parquet.*?/vectors", plan)) == 1
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan parquet" in ln and "/vectors/" in ln]
+    assert len(scans) == 2
+    adc = [ln for ln in scans if "codes#" in ln]
+    rerank = [ln for ln in scans if "embedding#" in ln]
+    assert len(adc) == 1 and len(rerank) == 1
+    assert "ReadSchema: struct<" in adc[0]
+    assert "embedding" not in adc[0]  # the code pass reads no vectors
     # every store file read sits under a cell=N dir, and the union of
     # cells read is bounded by Q * nprobe (5 queries x nprobe=4), far
     # under the store's nlist — the batched serve shares one pruned
     # read instead of listing the whole tree per query
-    store_files = [f for f in df.inputFiles()
-                   if "/codes/" in f or "/vectors/" in f]
+    store_files = [f for f in df.inputFiles() if "/vectors/" in f]
     assert store_files
     cells = {os.path.basename(os.path.dirname(f)) for f in store_files}
     assert all(c.startswith("cell=") for c in cells)

@@ -163,3 +163,42 @@ def test_hybrid_serve_many_remote_matches_local(
     assert fs.is_remote(f"file:{apath}")
     assert serve(f"file:{tpath}", f"file:{apath}") == plain
     assert len(plain) == 10
+
+
+def test_lost_meta_sidecar_fails_loudly_on_wide_layout_remote(
+        tmp_path, monkeypatch, spark):
+    """The text index's lost-sidecar guard on both read branches: with
+    no meta sidecar, a ``tb=`` postings dir at or above the default
+    bucket count refuses to default the layout, a narrower one falls
+    back to the default, and an unparseable sidecar is reported as
+    corrupt — identically for a local path and a forced-remote one."""
+    import os
+
+    import pytest
+
+    def index(name: str, tb: int) -> str:
+        path = tmp_path / name
+        os.makedirs(path / "postings" / f"tb={tb}")
+        return str(path)
+
+    wide = index("wide", retrieval.INDEX_BUCKETS)
+    legacy = index("legacy", 3)
+    corrupt = index("corrupt", 3)
+    with open(os.path.join(corrupt, retrieval.TEXT_META), "w") as f:
+        f.write("{not json")
+
+    for remote in (False, True):
+        if remote:
+            monkeypatch.setattr(fs, "_LOCAL_SCHEMES", ())
+
+        def at(p: str) -> str:
+            return f"file:{p}" if remote else p
+
+        assert fs.is_remote(at(wide)) == remote
+        with pytest.raises(ValueError, match="cannot be the assumed"):
+            retrieval._read_text_meta(at(wide))
+        assert retrieval._read_text_meta(at(legacy)) == {
+            "n_buckets": retrieval.INDEX_BUCKETS, "gen": 0,
+            "id_col": "doc_id"}
+        with pytest.raises(ValueError, match="corrupt text-index meta"):
+            retrieval._read_text_meta(at(corrupt))

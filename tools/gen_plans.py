@@ -284,7 +284,7 @@ SHOW = [
      "corpus-sized stage to serving."),
     ("search_index_many",
      "Batched multi-query IVFPQ serving: the union of all probes "
-     "selects the cell directories both stores read (explicit-dirs "
+     "selects the cell directories both passes read (explicit-dirs "
      "listing, r17), each "
      "query's ADC column rides the single pruned code scan, and the "
      "only exchange is the qid-partitioned shortlist window over "
