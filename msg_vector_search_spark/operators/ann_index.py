@@ -211,7 +211,7 @@ def read_meta(path: str) -> dict:
 
 
 def load_centroids(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(_subdir(path, "centroids"))
+    return sinks.read_parquet(spark, _subdir(path, "centroids"))
 
 
 def load_centroids_broadcastable(spark: SparkSession, path: str) -> DataFrame:
@@ -222,16 +222,17 @@ def load_centroids_broadcastable(spark: SparkSession, path: str) -> DataFrame:
     a local relation is driver-side, so a maintenance batch no longer
     pays a cluster job just to re-read KB-sized, driver-destined
     metadata (guide §5; each streaming micro-batch paid one).  The
-    schema comes from the sidecar's own footer (a driver-side read,
-    no job), so column types — and therefore every downstream
-    expression — are identical to the plain read; parquet float32
+    schema is the one :func:`load_centroids` reads with — recorded in
+    the sidecar's footer by its Spark writer, so typing the frame
+    costs no job — and column types, and therefore every downstream
+    expression, are identical to the plain read; parquet float32
     values round-trip exactly through Python floats.  Remote URIs
     keep the plain read."""
     sub = _subdir(path, "centroids")
     if fs.is_remote(sub):
-        return spark.read.parquet(sub)
+        return load_centroids(spark, path)
     rows = _read_small_parquet_rows(spark, sub)
-    schema = spark.read.parquet(sub).schema
+    schema = load_centroids(spark, path).schema
     return spark.createDataFrame(
         [tuple(r[f.name] for f in schema.fields) for r in rows], schema)
 
@@ -348,8 +349,8 @@ def search_index(spark: SparkSession, path: str, qvec: list[float],
                                   qvec, nprobe)
 
     # one frame feeds both passes: column pruning narrows the ADC scan
-    # to (id, codes) and the re-rank scan to (id, vector), and the
-    # store's schema is inferred once (one job per frame)
+    # to (id, codes) and the re-rank scan to (id, vector); the frame is
+    # typed from the store's footer, so building it launches no job
     rows = _read_cells(spark, _subdir(path, "vectors"), cells)
     if where is not None:
         rows = rows.filter(F.expr(where))
@@ -623,11 +624,11 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
         missing = keyed.join(present.select(id_col), id_col, "left_anti")
         if missing.limit(1).count():
             cells = cells.unionByName(
-                spark.read.parquet(vstore)
+                sinks.read_parquet(spark, vstore)
                 .join(F.broadcast(missing), id_col, "semi")
                 .select("cell"))
     else:
-        cells = (spark.read.parquet(vstore)
+        cells = (sinks.read_parquet(spark, vstore)
                  .join(F.broadcast(keyed), id_col, "semi")
                  .select("cell"))
     from .dedup import _cc_free
@@ -674,7 +675,7 @@ def delete_index_where(spark: SparkSession, path: str,
             "needs the filter columns recorded at build time "
             "(build_index(..., meta_cols=...))")
     vstore = _subdir(path, "vectors")
-    victims = (spark.read.parquet(vstore)
+    victims = (sinks.read_parquet(spark, vstore)
                .filter(F.expr(predicate))
                .select(id_col, "cell").localCheckpoint())
     touched = sorted(r[0] for r in
@@ -761,7 +762,7 @@ def rebuild_index(spark: SparkSession, path: str,
     meta = _load_meta(path)
     if trained is None:
         trained = meta["trained"]
-    vecs = (spark.read.parquet(_subdir(path, "vectors"))
+    vecs = (sinks.read_parquet(spark, _subdir(path, "vectors"))
             .drop("cell", "codes")
             .localCheckpoint())  # detach from the dirs the swap replaces
     built = {}
@@ -864,7 +865,7 @@ def _resolve_moved_keys(spark: SparkSession, path: str,
     forward exactly like the GDPR verb's."""
     vstore = _subdir(path, "vectors")
     keys = assigned.select(id_col).distinct()
-    stale = (spark.read.parquet(vstore)
+    stale = (sinks.read_parquet(spark, vstore)
              .filter(~F.col("cell").isin(touched))
              .join(F.broadcast(keys), id_col, "semi")
              .select(id_col, "cell"))
@@ -925,7 +926,7 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     vstore = _subdir(path, "vectors")
     sinks.heal(vstore)
     counts = [r["n"] for r in
-              (spark.read.parquet(vstore)
+              (sinks.read_parquet(spark, vstore)
                .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
                .collect())]
     total = sum(counts)

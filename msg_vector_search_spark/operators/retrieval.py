@@ -35,6 +35,7 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -238,8 +239,13 @@ def _tombstone_frame(spark, path: str, id_col: str):
         else os.path.join(path, "tombstones")
     if not fs_probe.list_files(tdir, suffix=".parquet"):
         return None
-    return (spark.read.parquet(tdir)
+    return (sinks.read_parquet(spark, tdir)
             .groupBy(id_col).agg(F.max("upto_gen").alias("_upto")))
+
+
+def _doclen(spark, path: str) -> DataFrame:
+    """The whole ``(id, dl, gen, meta...)`` doc-length sidecar."""
+    return sinks.read_parquet(spark, os.path.join(path, "doclen"))
 
 
 def _live(df: DataFrame, tomb, id_col: str) -> DataFrame:
@@ -364,61 +370,27 @@ def _write_store(df: DataFrame, dest: str, part: str | None) -> None:
         df.write.mode("overwrite").parquet(dest)
 
 
-def _first_data_file(store: str, depth: int = 1) -> str | None:
-    """Driver-side path of ONE parquet data file in *store* (descending
-    into partition dirs up to *depth* levels), or None.  Skips marker
-    files and swap strays (``._old`` etc.) the same way a Spark read
-    would."""
-    try:
-        entries = sorted(os.listdir(store))
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-    for e in entries:
-        if e.endswith(".parquet") and not e.startswith(("_", ".")):
-            p = os.path.join(store, e)
-            if os.path.isfile(p):
-                return p
-    if depth:
-        for e in entries:
-            if ("=" not in e or e.startswith(("_", "."))
-                    or "._" in e):
-                continue
-            p = os.path.join(store, e)
-            if os.path.isdir(p):
-                f = _first_data_file(p, depth - 1)
-                if f:
-                    return f
-    return None
-
-
 def _store_has_gen(spark, store: str) -> bool | None:
     """Whether the store's parquet schema carries the ``gen`` column
-    (None = store absent).  Local stores answer with ONE driver-side
-    footer read (pyarrow) instead of a Spark read whose partition
-    DISCOVERY lists every bucket directory — this check runs once per
-    upsert batch, and on an auto-sized postings layout (hundreds to
-    thousands of ``tb=`` dirs) the old read's listing alone cost a
-    cluster job per micro-batch (guide §5/§6; r18).  Parity: Spark's
-    own schema resolution reads one data-file footer when mergeSchema
-    is off, so the single-footer probe answers exactly the question
-    the old read did (the migration below stamps each store whole, so
-    files within a store never disagree on ``gen``).  Remote URIs
-    keep the Spark read."""
-    from ..sources import fs
-
-    if fs.is_remote(store):
-        try:
-            return "gen" in spark.read.parquet(store).columns
-        except Exception:
-            return None
-    local = fs._strip_file_scheme(store)
-    if not os.path.isdir(local):
+    (None = store absent or empty).  Local stores answer from the
+    schema the writer recorded in one data file's footer
+    (``sinks.recorded_schema``, a driver-side read) instead of a Spark
+    read whose partition DISCOVERY lists every bucket directory — this
+    check runs once per upsert batch, and on an auto-sized postings
+    layout (hundreds to thousands of ``tb=`` dirs) that listing alone
+    cost a cluster job per micro-batch (guide §5/§6; r18).  Parity:
+    Spark's own schema resolution reads the same footer key of one
+    data file when mergeSchema is off (the migration below stamps each
+    store whole, so files within a store never disagree on ``gen``).
+    Remote URIs, files without the recorded schema and absent stores
+    take the Spark read, which raises on an absent or empty store."""
+    schema = sinks.recorded_schema(store)
+    if schema is not None:
+        return "gen" in schema.names
+    try:
+        return "gen" in spark.read.parquet(store).columns
+    except AnalysisException:  # PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA
         return None
-    f = _first_data_file(local)
-    if f is None:
-        return None
-    import pyarrow.parquet as papq
-    return "gen" in papq.ParquetFile(f).schema_arrow.names
 
 
 def _ensure_gen_layout(spark, path: str) -> None:
@@ -440,7 +412,7 @@ def _ensure_gen_layout(spark, path: str) -> None:
             continue
         if has:
             continue
-        cur = spark.read.parquet(store)
+        cur = sinks.read_parquet(spark, store)
         migrated = cur.withColumn("gen", F.lit(0).cast("long"))
         sinks.stage_and_swap(
             store, lambda tmp: _write_store(
@@ -605,8 +577,7 @@ def retention_sweep_inverted_index(spark, path: str, cutoff,
             f"(..., meta_cols=({ts_col!r},)))")
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
-    victims = (_live(spark.read.parquet(os.path.join(path, "doclen")),
-                     tomb, id_col)
+    victims = (_live(_doclen(spark, path), tomb, id_col)
                .filter(F.col(ts_col) < F.lit(cutoff))
                .select(id_col).distinct().localCheckpoint())
     n = victims.count()
@@ -715,11 +686,11 @@ def prune_inverted_index_stopwords(spark, path: str,
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
-    doclen = _live(spark.read.parquet(os.path.join(path, "doclen")),
-                   tomb, id_col)
+    doclen = _live(_doclen(spark, path), tomb, id_col)
     n_docs = doclen.count()
     cut = int(max_df_ratio * n_docs)
-    postings = _live(spark.read.parquet(postings_dir), tomb, id_col)
+    postings = _live(sinks.read_parquet(spark, postings_dir), tomb,
+                     id_col)
     stop = (postings.groupBy("term", "tb")
             .agg(F.count(F.lit(1)).alias("_df"))
             .filter(F.col("_df") > F.lit(cut))
@@ -766,12 +737,12 @@ def compact_inverted_index(spark, path: str) -> dict:
     # job streams (guide §2.6)
     def _compact_one(sub: str, part: str | None) -> dict:
         store = os.path.join(path, sub)
-        cur = spark.read.parquet(store)
+        cur = sinks.read_parquet(spark, store)
         res = {f"{sub}_before": cur.count()}
         live = _live(cur, tomb, id_col)
         sinks.stage_and_swap(store,
                              lambda tmp: _write_store(live, tmp, part))
-        res[f"{sub}_after"] = spark.read.parquet(store).count()
+        res[f"{sub}_after"] = sinks.read_parquet(spark, store).count()
         return res
 
     out = {}
@@ -792,9 +763,9 @@ def inverted_index_stats(spark, path: str) -> DataFrame:
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
-    doclen = _live(spark.read.parquet(os.path.join(path, "doclen")),
-                   tomb, id_col)
-    postings = _live(spark.read.parquet(os.path.join(path, "postings")),
+    doclen = _live(_doclen(spark, path), tomb, id_col)
+    postings = _live(sinks.read_parquet(spark,
+                                        os.path.join(path, "postings")),
                      tomb, id_col)
     d = doclen.agg(F.count(F.lit(1)).alias("n_docs"),
                    F.sum("dl").cast("long").alias("sum_dl"))
@@ -847,8 +818,7 @@ def search_inverted_index(spark, path: str, terms: list[str],
     if not terms:
         # zero terms match zero docs (r14 review): contract schema
         # from the doclen sidecar, no postings work
-        return (spark.read.parquet(os.path.join(path, "doclen"))
-                .select(id_col, "dl")
+        return (_doclen(spark, path).select(id_col, "dl")
                 .withColumn("bm25", F.lit(0.0)).limit(0))
     tomb = _tombstone_frame(spark, path, id_col)
     # the bucket of each query term, via the driver-side twin of the
@@ -865,8 +835,7 @@ def search_inverted_index(spark, path: str, terms: list[str],
                             part_col="tb")
         .filter(F.col("term").isin(terms)),
         tomb, id_col)
-    doclen = _live(spark.read.parquet(os.path.join(path, "doclen")),
-                   tomb, id_col)
+    doclen = _live(_doclen(spark, path), tomb, id_col)
     if where is not None:
         doclen = doclen.filter(F.expr(where))
         # df must count ELIGIBLE docs only — gate the postings through
@@ -981,8 +950,7 @@ def search_inverted_index_many(spark, path: str, queries: dict,
         # fix): qid keeps the caller's key type, the id column keeps
         # the STORE's type, and with_rank carries the rank column
         # (hybrid_serve_many selects it unconditionally)
-        id_t = (spark.read.parquet(os.path.join(path, "doclen"))
-                .schema[id_col].dataType.simpleString())
+        id_t = _doclen(spark, path).schema[id_col].dataType.simpleString()
         # an EMPTY queries dict has no key to infer from: default to
         # 'string' — the prior contract and what string-keyed callers
         # union against (r15 review; an 'int' default made the
@@ -1002,8 +970,7 @@ def search_inverted_index_many(spark, path: str, queries: dict,
                             part_col="tb")
         .filter(F.col("term").isin(union_terms)),
         tomb, id_col)
-    doclen = _live(spark.read.parquet(os.path.join(path, "doclen")),
-                   tomb, id_col)
+    doclen = _live(_doclen(spark, path), tomb, id_col)
     if where is not None:
         # shared slice gate (recorded meta_cols): stats AND candidates
         # recount over eligible docs only, exactly as the single path

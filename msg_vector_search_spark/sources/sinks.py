@@ -65,6 +65,15 @@ resurrect rows its replay deletes again later.  :func:`heal` never
 sweeps a stage: a reader may run while a writer is staging, so only
 the writer about to stage sweeps its own.
 
+Reads.  Every read of a store the engine wrote goes through
+:func:`read_parquet`, which types the read with the schema Spark's
+writer recorded in a data file's footer (key
+:data:`SPARK_SCHEMA_KEY`), read on the driver.  That is the footer
+Spark's own schema inference reads, but inference reads it inside a
+one-task Spark job; passing the schema makes the read launch none,
+and the frame's schema is the same.  Remote paths, stores without a
+data file and files without the key keep the plain inferring read.
+
 Deployment note: the maintenance WRITE verbs here (directory swaps,
 swap healing, file counting, manifest staging) use ``os``/``shutil``
 — a POSIX store directory, matching the sandbox-local design.  The
@@ -85,6 +94,7 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import run_concurrently
 from . import fs as fs_probe
@@ -111,6 +121,9 @@ DELETE_MANIFEST = "_delete_pending.json"
 #: Staging suffixes of the two commit protocols (module docstring).
 ERASE_STAGE = "._staged"
 REPLACE_STAGE = "._replacing"
+#: Footer key under which Spark's Parquet writer records each file's
+#: Spark schema (the one its schema inference reads back).
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def bucket_of(key: Column | str, num_buckets: int) -> Column:
@@ -317,6 +330,71 @@ def stage_and_swap(path: str, write, parts: list | None = None) -> list:
     return swapped
 
 
+def _first_data_file(store: str, depth: int = 1) -> str | None:
+    """Driver-side path of ONE parquet data file in *store* (descending
+    into ``col=val`` partition dirs up to *depth* levels), or None.
+    Skips what a Spark read skips — ``_``/``.``-prefixed files such as
+    ``_SUCCESS`` and the erasure manifest — and swap strays
+    (``cell=3._old``); a ``_bkt=0`` dir is a partition dir, as it is to
+    Spark."""
+    try:
+        entries = sorted(os.listdir(store))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+    for e in entries:
+        if e.endswith(".parquet") and not e.startswith(("_", ".")):
+            p = os.path.join(store, e)
+            if os.path.isfile(p):
+                return p
+    if depth:
+        for e in entries:
+            if "=" not in e or e.startswith(".") or "._" in e:
+                continue
+            p = os.path.join(store, e)
+            if os.path.isdir(p):
+                f = _first_data_file(p, depth - 1)
+                if f:
+                    return f
+    return None
+
+
+def recorded_schema(*dirs: str) -> StructType | None:
+    """The Spark schema recorded in the footer of the first data file
+    under *dirs* (a driver-side footer read, no Spark job), or None
+    for a remote path, no data file, or a file written without the
+    key.  Spark's inference with ``mergeSchema`` off reads the same
+    key from one file; an engine store is written whole or appended
+    with one schema, so any of its files answers alike."""
+    if fs_probe.is_remote(dirs[0]):
+        return None
+    for d in dirs:
+        f = _first_data_file(fs_probe._strip_file_scheme(d))
+        if f is not None:
+            break
+    else:
+        return None
+    import pyarrow.parquet as papq
+    raw = (papq.read_schema(f).metadata or {}).get(SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def read_parquet(spark: SparkSession, *dirs: str,
+                 base: str | None = None) -> DataFrame:
+    """``spark.read.parquet(*dirs)`` (with ``basePath`` *base*) typed by
+    :func:`recorded_schema`, so the read launches no schema-inference
+    job; the plain read when no recorded schema is found.  Spark makes
+    a given data schema nullable as it does an inferred one and still
+    appends the partition columns it discovers, so the frame's schema
+    equals the plain read's."""
+    reader = spark.read
+    if base is not None:
+        reader = reader.option("basePath", base)
+    schema = recorded_schema(*dirs)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*dirs)
+
+
 def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Read an upsert store, hiding the internal bucket layout column.
 
@@ -327,7 +405,7 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     verbs, so the window between a crash and the next maintenance
     job never serves a store with a dropped partition."""
     heal(path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
@@ -412,7 +490,7 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
         # first write, or one-time migration of a legacy flat /
         # metadata-less store
         if exists:
-            current = spark.read.parquet(path)
+            current = read_parquet(spark, path)
             if BUCKET_COL in current.columns:
                 current = current.drop(BUCKET_COL)
             current = (current.filter(F.col(key).isNotNull())
@@ -575,9 +653,10 @@ def _read_buckets(spark: SparkSession, path: str, buckets: list,
 
     Buckets with no directory yet contribute no rows (a batch mapping
     into brand-new buckets is the common append case); when NONE of
-    the touched dirs exist, the store's schema is read from one
-    existing partition file so callers still get a well-typed empty
-    frame.
+    the touched dirs exist, the frame is typed from one existing
+    partition dir so callers still get a well-typed empty frame.
+    Every branch reads through :func:`read_parquet`, so on a local
+    store building the frame launches no schema-inference job.
 
     Existence probes dispatch on the path's scheme (ADVICE r16 →
     closed in r17 by ``sources/fs.py``): plain local paths keep the
@@ -591,13 +670,12 @@ def _read_buckets(spark: SparkSession, path: str, buckets: list,
     dirs = [f"{path.rstrip('/')}/{part_col}={b}" for b in buckets]
     exist = fs_probe.probe_dirs(dirs)
     if exist:
-        return spark.read.option("basePath", path).parquet(*exist)
+        return read_parquet(spark, *exist, base=path)
     for d in fs_probe.list_child_dirs(path, f"{part_col}="):
-        return (spark.read.option("basePath", path).parquet(d)
-                .filter(F.lit(False)))
-    # store has no partition dirs at all: fall back to the plain read
-    # (cheap by construction — there is nothing to list)
-    return spark.read.parquet(path).filter(F.lit(False))
+        return read_parquet(spark, d, base=path).filter(F.lit(False))
+    # store has no partition dirs at all: read the root (cheap by
+    # construction — there is nothing to list)
+    return read_parquet(spark, path).filter(F.lit(False))
 
 
 def erase_partitions(spark: SparkSession, path: str, key: str,

@@ -704,3 +704,38 @@ def test_engine_autosized_index_passthrough(spark, tmp_path):
     a = brute.search("test message", limit=5, threshold=-1.0)
     b = auto.search("test message", limit=5, threshold=-1.0)
     assert strip(a) == strip(b)
+
+
+def test_warm_serve_job_counts(spark, tmp_path):
+    """Spark jobs launched by one warm call of each serving verb on a
+    small engine (ANN + text index, one tombstoned doc), pinned: every
+    store the serve reads is typed from its writer's footer schema, so
+    a read that goes back to Spark's schema inference shows up here as
+    one more job.  The fixed clock keeps the freshness gap cached, so
+    a warm call runs no gate job."""
+    from msg_vector_search_spark.operators import retrieval
+
+    eng = Engine(spark, SF, str(tmp_path / "store"), clock=lambda: 0.0,
+                 index_dir=str(tmp_path / "ann"), nlist=4,
+                 text_index_dir=str(tmp_path / "text"))
+    eng.update_embeddings()
+    assert eng.ensure_index() and eng.ensure_text_index()
+    retrieval.delete_inverted_docs(
+        eng._store().orderBy("message_id").select("message_id").limit(1),
+        eng.text_index_dir, id_col="message_id")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def warm_jobs(verb) -> int:
+        verb()
+        before = sched.numTotalJobs()
+        verb()
+        return sched.numTotalJobs() - before
+
+    assert warm_jobs(lambda: eng.search("k 43", limit=5,
+                                        threshold=-1.0)) == 6
+    assert warm_jobs(lambda: eng.search_text(["k", "43"], limit=5)) == 9
+    assert warm_jobs(lambda: eng.search_hybrid("k 43", limit=5)) == 23
+    assert warm_jobs(lambda: eng.search_many(
+        {0: "k 43", 1: "k 87"}, limit=5, threshold=-1.0)) == 6
+    # the pins count matching serves, not empty ones
+    assert eng.search_text(["k", "43"], limit=5)

@@ -1231,6 +1231,6 @@ def test_ann_write_path_job_counts(spark, tmp_path):
 
     batch = emb.filter(F.col("vec_id") % 10 == 3)
     victims = emb.filter(F.col("vec_id") % 10 == 5)
-    assert jobs(lambda: ann_index.upsert_index(spark, path, batch)) == 11
+    assert jobs(lambda: ann_index.upsert_index(spark, path, batch)) == 9
     assert jobs(lambda: ann_index.delete_index_keys(
-        spark, path, victims.select("vec_id"), vectors=victims)) == 15
+        spark, path, victims.select("vec_id"), vectors=victims)) == 13
