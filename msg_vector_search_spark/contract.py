@@ -159,7 +159,7 @@ def _publish_frame(name: str, df: DataFrame, sub: str) -> None:
 
     rows = df.collect()
     table = pa.table({c: [r[c] for r in rows] for c in df.columns})
-    ann_index.write_small_parquet(
+    sinks.write_small_parquet(
         table, os.path.join(_trained_dir(name), sub))
 
 
@@ -236,7 +236,7 @@ def _publish_fingerprint(spark: SparkSession, sf_dir: str, name: str,
     scales)."""
     import pyarrow as pa
 
-    ann_index.write_small_parquet(
+    sinks.write_small_parquet(
         pa.table({"witness": [_scale_witness(spark, sf_dir, table)]}),
         os.path.join(_trained_dir(name), "fingerprint"))
 
@@ -1441,7 +1441,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     est = int(ev.agg(F.approx_count_distinct("user_id", _ADU_RSD)
                      .alias("e")).head()[0])
-    ann_index.write_small_parquet(
+    sinks.write_small_parquet(
         pa.table({"n_users_approx": [est]}),
         os.path.join(_ADU_DIR, "estimate"))
     _publish_fingerprint(spark, sf_dir, "approx_distinct_users", "events")

@@ -37,7 +37,8 @@ class Engine:
     watermark state (the message_embeddings/vector_metadata analog).
     """
 
-    #: seconds a computed freshness gap stays valid when no ingest ran
+    #: seconds a cached freshness gap stays valid (a count's, or the 0 a
+    #: draining ingest records)
     GAP_TTL_S = 60.0
 
     #: metadata columns recorded into the ANN index so the MCP tool's
@@ -132,6 +133,7 @@ class Engine:
         if batch_size is not None:
             self.spark.conf.set(arrow_key, str(int(batch_size)))
         run_info: dict = {}
+        before = self._clock()
         try:
             merged = ingest_plan.run_incremental(
                 self.spark, self.sf_dir, self.store_dir,
@@ -142,7 +144,7 @@ class Engine:
                     self.spark.conf.unset(arrow_key)
                 else:
                     self.spark.conf.set(arrow_key, old_batch)
-        self._gap_cache = None  # the store changed; cached gap is stale
+        self._record_drained_gap(run_info, before)
         new_messages = run_info.get("new_messages", 0)
         maint = None
         if self.index_dir and self._index_ready() and new_messages > 0:
@@ -438,10 +440,12 @@ class Engine:
 
         The gap is passed LAZILY: the gate's cooldown pre-check runs
         first and the watermark-pruned count only executes when it
-        passes — and even then a recent result (<= GAP_TTL_S old,
-        invalidated by any ingest) is reused, so N back-to-back
-        searches pay for at most one count job instead of N (at 100 TB
-        even the pruned scan is the dominant cost of the gate)."""
+        passes — and even then a recent result (<= GAP_TTL_S old) is
+        reused, so N back-to-back searches pay for at most one count
+        instead of N (at 100 TB even the pruned scan is the dominant
+        cost of the gate).  An ingest that drained the source records
+        gap 0 itself, so the first search after it runs no count
+        either (see :meth:`_record_drained_gap`)."""
         t0 = time.time()  # the envelope times the WHOLE call, any
         # bootstrap ingest included (reference: engine.py start_time
         # captured before update_embeddings)
@@ -693,7 +697,8 @@ class Engine:
                                      cutoff, ts_col="ts")
         from .operators.dedup import _cc_free
         _cc_free(victims)
-        self._gap_cache = None  # the store changed; cached gap is stale
+        # the cached gap stands: it depends only on the source and the
+        # watermark, and retention changes neither
         return {"status": "success", "expired": int(n_victims),
                 "store": info, "index_cells": touched_cells,
                 "text_index_tombstoned": text_tombstoned}
@@ -738,7 +743,13 @@ class Engine:
         advances over them, the store doesn't), which left the gate
         re-triggering a no-op ingest at every cooldown forever; the
         watermark form also rides a pushed-down predicate instead of a
-        full-table count."""
+        full-table count.
+
+        A value stays cached for GAP_TTL_S.  Retention leaves it
+        standing (it changes neither the source nor the watermark); an
+        ingest replaces it (:meth:`_record_drained_gap`).  Uncached,
+        the check's only Spark jobs are the count's: the watermark and
+        the source's schema are read on the driver."""
         now = self._clock()
         if self._gap_cache is not None and now - self._gap_cache[0] <= self.GAP_TTL_S:
             return self._gap_cache[1]
@@ -750,3 +761,19 @@ class Engine:
         gap = filters.since_ts(events, wm).count()
         self._gap_cache = (now, gap)
         return gap
+
+    def _record_drained_gap(self, run_info: dict, before: float) -> None:
+        """After an ingest: cache gap 0 when the run drained the source
+        and the watermark it wrote reads back unclamped — no source row
+        is newer than that watermark as of the scan, so the count would
+        read 0.  The entry is stamped with *before*, the clock read
+        before the scan, so rows that arrive during the ingest are
+        counted once GAP_TTL_S has passed from then, as for any cached
+        gap.  Any other run clears the cache (a capped run leaves rows
+        behind).  The read-back runs on the driver: no Spark job."""
+        from .sources import state
+
+        drained = (run_info.get("drained")
+                   and state.read_watermark(self.spark, self.store_dir)
+                   == run_info.get("watermark"))
+        self._gap_cache = (before, 0) if drained else None

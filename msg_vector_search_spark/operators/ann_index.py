@@ -144,22 +144,6 @@ def build_index(spark: SparkSession, embeddings: DataFrame, path: str,
     return meta
 
 
-def write_small_parquet(table, path: str) -> None:
-    """Driver-side single-file parquet write of a dimension-bounded
-    pyarrow table: a Spark write job for a handful of rows is pure
-    scheduler/committer overhead (~5-7 s local, measured) — sidecar
-    artifacts (codebooks, centroids, budgets) all go through here.
-    Staged and swapped (``sinks.stage_and_swap``), so a crash mid-write
-    leaves the previous file in place, never a half-written one."""
-    import pyarrow.parquet as papq
-
-    def _write(tmp: str) -> None:
-        os.makedirs(tmp)
-        papq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-
-    sinks.stage_and_swap(path, _write)
-
-
 def _heal_index(path: str) -> None:
     """``sinks.heal`` the index root (a crashed rebuild swap strands it
     whole) and then the cell store."""
@@ -172,7 +156,7 @@ def _write_codebooks(books: np.ndarray, path: str) -> None:
     import pyarrow as pa
 
     m, ncodes, _ = books.shape
-    write_small_parquet(pa.table({
+    sinks.write_small_parquet(pa.table({
         "j": pa.array([j for j in range(m) for _ in range(ncodes)],
                       pa.int32()),
         "cw": pa.array([c for _ in range(m) for c in range(ncodes)],
@@ -231,58 +215,16 @@ def load_centroids_broadcastable(spark: SparkSession, path: str) -> DataFrame:
     sub = _subdir(path, "centroids")
     if fs.is_remote(sub):
         return load_centroids(spark, path)
-    rows = _read_small_parquet_rows(spark, sub)
+    rows = sinks.read_small_parquet_rows(spark, sub)
     schema = load_centroids(spark, path).schema
     return spark.createDataFrame(
         [tuple(r[f.name] for f in schema.fields) for r in rows], schema)
 
 
-def _read_small_parquet_rows(spark: SparkSession, path: str) -> list:
-    """Rows of a sidecar parquet (nlist / m*ncodes bounded — KB-sized
-    metadata, like the json sidecars) WITHOUT a Spark job: a cluster
-    round trip to collect a handful of driver-destined rows is pure
-    scheduler latency (r17; each serve paid 2 such jobs).  Driver-local
-    paths read via pyarrow; remote URIs keep the Spark read — the
-    sidecar is one file either way.  Dict rows index like Row objects
-    for every consumer here (probe_cells_local, the codebook loop).
-    Parity: both paths decode the same parquet doubles, so float
-    values are bit-identical."""
-    # os.listdir / FileSystem.listStatus, not glob: a store path
-    # containing glob metacharacters ([, ?, *) would silently match
-    # nothing, and glob would also pick up underscore-prefixed marker
-    # files a Spark read ignores (ADVICE r17)
-    import pyarrow.parquet as papq
-    if not fs.is_remote(path):
-        files = fs.list_files(path, suffix=".parquet")
-        if files:
-            import pyarrow as pa
-            return pa.concat_tables(
-                [papq.read_table(fs._strip_file_scheme(f))
-                 for f in files]).to_pylist()
-        return [r.asDict() for r in spark.read.parquet(path).collect()]
-    # remote URI: stream the KB-sized sidecar files through the Hadoop
-    # FS API and decode driver-side — zero Spark jobs, same parquet
-    # doubles (r18; was a collect() job per serve — the r17 deferral).
-    # Any gateway-level surprise falls back to the Spark read, so the
-    # serve never breaks on an exotic filesystem.
-    try:
-        files = fs.list_files(path, suffix=".parquet")
-        if files:
-            import io
-
-            import pyarrow as pa
-            return pa.concat_tables(
-                [papq.read_table(io.BytesIO(fs.read_bytes(f)))
-                 for f in files]).to_pylist()
-    except Exception:
-        pass
-    return [r.asDict() for r in spark.read.parquet(path).collect()]
-
-
 def load_centroid_rows(spark: SparkSession, path: str) -> list:
     """Driver-side rows of the nlist-bounded centroid sidecar (the
-    probe input); see :func:`_read_small_parquet_rows`."""
-    return _read_small_parquet_rows(spark, _subdir(path, "centroids"))
+    probe input); see :func:`sinks.read_small_parquet_rows`."""
+    return sinks.read_small_parquet_rows(spark, _subdir(path, "centroids"))
 
 
 def _read_cells(spark: SparkSession, store: str, cells: list) -> DataFrame:
@@ -302,7 +244,7 @@ def _read_cells(spark: SparkSession, store: str, cells: list) -> DataFrame:
 def load_codebooks(spark: SparkSession, path: str) -> np.ndarray:
     """Driver-side load of the (m, ncodes, dsub) codebook tensor —
     m*ncodes rows, a few KB (no Spark job on local paths, r17)."""
-    rows = _read_small_parquet_rows(spark, _subdir(path, "codebooks"))
+    rows = sinks.read_small_parquet_rows(spark, _subdir(path, "codebooks"))
     meta = read_meta(path)
     m, ncodes = meta["m"], meta["ncodes"]
     dsub = meta["dim"] // m

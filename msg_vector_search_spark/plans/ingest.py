@@ -200,13 +200,17 @@ def ingest_batch(spark: SparkSession, sf_dir: str, store_dir: str,
     last-writer-wins idempotent on message_id.
 
     Pass ``info={}`` to receive this run's envelope facts —
-    ``{"gen", "new_messages", "watermark"}`` — computed from what the
-    plan already touches (the new-key count rides the upsert's own
-    touched-bucket read, sinks.upsert_parquet ``count_new``), so the
-    engine facade's ``{status, new_messages, update_time_ms}``
-    (reference: engine.py:57-103) costs O(batch), never a store-wide
-    job (r14 judge item 1: the before/after store counts + max(_gen)
-    this replaces were O(store) per incremental run).
+    ``{"gen", "new_messages", "watermark", "drained"}`` — computed
+    from what the plan already touches (the new-key count rides the
+    upsert's own touched-bucket read, sinks.upsert_parquet
+    ``count_new``; the scanned-row count rides the watermark
+    aggregate), so the engine facade's ``{status, new_messages,
+    update_time_ms}`` (reference: engine.py:57-103) costs O(batch),
+    never a store-wide job (r14 judge item 1: the before/after store
+    counts + max(_gen) this replaces were O(store) per incremental
+    run).  ``drained`` says the batch took every source row at or
+    past the old watermark: it was uncapped, or scanned fewer rows
+    than *max_messages*.
     """
     events = readers.read_table(spark, sf_dir, "events")
     if watermark is not None:
@@ -226,8 +230,11 @@ def ingest_batch(spark: SparkSession, sf_dir: str, store_dir: str,
     # (never rescanned) but not stored, matching the reference's skip
     # inside the batch loop (processor.py:449-451 with batch watermark
     # from the raw rows at :466-468).  Computed from the persisted batch:
-    # no second pass over the source.
-    new_wm = scanned.agg(F.max("ts")).collect()[0][0]
+    # no second pass over the source.  The row count rides the same
+    # aggregate: fewer rows than the cap means the batch drained the
+    # source past the old watermark.
+    new_wm, n_scanned = scanned.agg(F.max("ts"),
+                                    F.count(F.lit(1))).collect()[0]
 
     msgs = scanned.filter(F.length(F.trim(F.col("message_text"))) > 0)
     msgs = enrich.context_prev_next(
@@ -277,7 +284,9 @@ def ingest_batch(spark: SparkSession, sf_dir: str, store_dir: str,
         state.write_watermark(spark, store_dir, new_wm)
     if info is not None:
         info.update({"gen": gen, "new_messages": int(n_new or 0),
-                     "watermark": new_wm})
+                     "watermark": new_wm,
+                     "drained": (max_messages is None
+                                 or n_scanned < max_messages)})
     scanned.unpersist()
     return stored
 

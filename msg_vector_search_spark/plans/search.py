@@ -46,10 +46,10 @@ class FreshnessGate:
         """*gap* may be an int or a ZERO-ARG CALLABLE returning the int.
 
         The cooldown check runs FIRST and a callable gap is only invoked
-        after it passes — so the two corpus-count jobs that compute the
-        gap are skipped entirely while the cooldown holds (the reference
-        orders its checks the same way, engine.py:139-151; at 100 TB the
-        counts are the dominant cost of the gate).
+        after it passes — so the watermark-pruned source count that
+        computes the gap is skipped entirely while the cooldown holds
+        (the reference orders its checks the same way, engine.py:139-151;
+        at 100 TB the count is the dominant cost of the gate).
         """
         self.search_count += 1
         now = self._clock()

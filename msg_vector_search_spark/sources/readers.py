@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from .. import schemas
 from ..session import widen  # noqa: F401  (re-export; historical home)
+from . import fs
 
 FIXTURE_TABLES = tuple(schemas.TABLES)
 
@@ -28,12 +29,61 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's inference gives the parquet table at *path*
+    (one file, or a directory of files), computed on the driver from
+    ONE data file's footer; None when no data file is found directly
+    under the directory (or its footer cannot be read).
+
+    This is the per-file step of Spark's own inference
+    (``ParquetFileFormat.readSchemaFromFooter`` with a converter built
+    from the live session conf, so ``nanosAsLong`` and
+    ``inferTimestampNTZ`` apply exactly as they do there), called
+    through py4j over the Hadoop FS.  Inference runs it inside a
+    one-task Spark job; with ``mergeSchema`` off it reads one file too.
+    """
+    from py4j.protocol import Py4JJavaError
+
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    files = fs.list_files(path) if fs.probe_dirs([path]) else [path]
+    if not files:
+        return None
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    fpath = jvm.org.apache.hadoop.fs.Path(files[0])
+    try:
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            state.newHadoopConf(), fpath,
+            jvm.org.apache.parquet.format.converter
+            .ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    except Py4JJavaError:
+        return None
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(fpath, footer),
+        parquet.ParquetToSparkSchemaConverter(state.conf()))
+    return _parse_datatype_json_string(schema.json())
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` typed by :func:`_footer_schema`, so
+    building the frame launches no schema-inference job; the plain
+    read when no footer schema is found.  Spark makes a given data
+    schema nullable as it does an inferred one, so the frame's schema
+    equals the plain read's."""
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table.
 
-    No explicit schema is passed: the Parquet footer is authoritative and
-    matches ``schemas.TABLES`` (asserted in tests).  Keeping the footer
-    schema preserves vectorized reading and min/max row-group skipping.
+    The schema is the Parquet footer's, as Spark would infer it, read
+    on the driver (:func:`_read_parquet`) so the scan costs no
+    inference job; it matches ``schemas.TABLES`` (asserted in tests).
+    Keeping the footer schema preserves vectorized reading and min/max
+    row-group skipping.
 
     ``events.ts`` has shipped in two physical forms across fixture
     generations: TIMESTAMP(MICROS) (reads natively) and
@@ -62,7 +112,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # predicate eligible for Parquet pushdown
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled",
                        "false")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         if not isinstance(df.schema["ts"].dataType, T.LongType):
             # micros fixture: native timestamp scan, predicates push —
             # no raw-domain twin needed
@@ -75,7 +125,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # incremental scan cheap at 100 TB
         return (df.withColumn("_ts_nanos", F.col("ts"))
                   .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))))
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

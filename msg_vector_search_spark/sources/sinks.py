@@ -330,6 +330,65 @@ def stage_and_swap(path: str, write, parts: list | None = None) -> list:
     return swapped
 
 
+def write_small_parquet(table, path: str) -> None:
+    """Driver-side single-file parquet write of a dimension-bounded
+    pyarrow table: a Spark write job for a handful of rows is pure
+    scheduler/committer overhead (~5-7 s local, measured) — sidecar
+    artifacts (codebooks, centroids, budgets) all go through here.
+    Staged and swapped (:func:`stage_and_swap`), so a crash mid-write
+    leaves the previous file in place, never a half-written one."""
+    import pyarrow.parquet as papq
+
+    def _write(tmp: str) -> None:
+        os.makedirs(tmp)
+        papq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+
+    stage_and_swap(path, _write)
+
+
+def read_small_parquet_rows(spark: SparkSession, path: str) -> list:
+    """Rows of a small parquet table (an index sidecar, nlist / m*ncodes
+    bounded, or the one-row watermark state) WITHOUT a Spark job: a
+    cluster round trip to collect a handful of driver-destined rows is
+    pure scheduler latency (r17; each serve paid 2 such jobs).
+    Driver-local paths read via pyarrow; remote URIs stream the files
+    through the Hadoop FS API and decode them with pyarrow too.  The
+    Spark read is the fallback when no data file is found.  Dict rows
+    index like Row objects for every consumer (probe_cells_local, the
+    codebook loop, the watermark read).  Parity: every path decodes the
+    same parquet values, so floats are bit-identical."""
+    # os.listdir / FileSystem.listStatus, not glob: a store path
+    # containing glob metacharacters ([, ?, *) would silently match
+    # nothing, and glob would also pick up underscore-prefixed marker
+    # files a Spark read ignores (ADVICE r17)
+    import pyarrow.parquet as papq
+    if not fs_probe.is_remote(path):
+        files = fs_probe.list_files(path, suffix=".parquet")
+        if files:
+            import pyarrow as pa
+            return pa.concat_tables(
+                [papq.read_table(fs_probe._strip_file_scheme(f))
+                 for f in files]).to_pylist()
+        return [r.asDict() for r in spark.read.parquet(path).collect()]
+    # remote URI: stream the KB-sized sidecar files through the Hadoop
+    # FS API and decode driver-side — zero Spark jobs, same parquet
+    # doubles (r18; was a collect() job per serve — the r17 deferral).
+    # Any gateway-level surprise falls back to the Spark read, so the
+    # serve never breaks on an exotic filesystem.
+    try:
+        files = fs_probe.list_files(path, suffix=".parquet")
+        if files:
+            import io
+
+            import pyarrow as pa
+            return pa.concat_tables(
+                [papq.read_table(io.BytesIO(fs_probe.read_bytes(f)))
+                 for f in files]).to_pylist()
+    except Exception:
+        pass
+    return [r.asDict() for r in spark.read.parquet(path).collect()]
+
+
 def _first_data_file(store: str, depth: int = 1) -> str | None:
     """Driver-side path of ONE parquet data file in *store* (descending
     into ``col=val`` partition dirs up to *depth* levels), or None.

@@ -4,7 +4,11 @@ The reference keeps a scalar ``last_processed_timestamp`` in a SQLite
 KV table with corruption guards (reference: src/core/database/
 processor.py:32-115 — future timestamp resets to 0 at :62-64, a
 >10-year-old value clamps to now-30d at :66-69).  Here the state is a
-single-row Parquet table written atomically per batch; Structured
+single-row Parquet table written atomically per batch and read back on
+the driver: both directions are driver-sized work, so neither launches
+a Spark job.  The guards exist twice, with one rule set: as the column
+expression :func:`clamp_watermark` (registry rows, streaming) and as
+the driver-side clamp inside :func:`read_watermark`.  Structured
 Streaming replaces all of it with checkpointed offsets (see
 streaming/stream.py).
 """
@@ -14,13 +18,20 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
+from . import fs, sinks
 
 EPOCH = dt.datetime(1970, 1, 1)
 WATERMARK_KEY = "last_processed_timestamp"
+#: the guards' intervals in microseconds; a day-time interval is an
+#: exact duration in Spark too (no calendar or DST adjustment)
+_TEN_YEARS_US = 3650 * 86_400_000_000
+_THIRTY_DAYS_US = 30 * 86_400_000_000
 
 
 def clamp_watermark(ts: Column, as_of: Column) -> Column:
@@ -54,26 +65,42 @@ def duck_clamp_watermark(ts: str, as_of: str) -> str:
 def read_watermark(spark: SparkSession, state_dir: str,
                    as_of: dt.datetime | None = None) -> dt.datetime:
     """A7 ``watermark_read``: load + clamp the scalar watermark; missing
-    state means epoch (full scan), mirroring the reference's default 0."""
+    state (no file, no row, or state stranded as ``._old`` by a crashed
+    swap) means epoch (full scan), mirroring the reference's default 0.
+
+    The one-row file is read on the driver
+    (:func:`sinks.read_small_parquet_rows`: pyarrow locally, the Hadoop
+    FS API remotely), so the read launches no Spark job; a Spark read
+    paid a schema-inference job and a collect job on every ingest and
+    every uncached freshness check.  The guards are
+    :func:`clamp_watermark`'s rules applied to epoch microseconds, and
+    both instants convert the way PySpark converts them (an aware
+    datetime is its exact instant, a naive one is driver-OS local
+    time), so the result equals that expression's ``collect()``: a
+    naive datetime rendered in the driver OS timezone."""
     path = os.path.join(state_dir, "watermark.parquet")
-    # tz-AWARE now (r14 review): a naive utcnow() literal is
-    # re-interpreted by Spark in the SESSION timezone, so on any
-    # non-UTC driver the clamp guards would fire on an instant offset
-    # by the zone (fresh watermarks read as "future" -> clamped to
-    # EPOCH -> silent full rescans).  An aware datetime converts to
-    # the exact intended instant under every session timezone —
-    # the same hazard filters.py documents for date literals.
+    # tz-AWARE now (r14 review): a naive utcnow() would be read as
+    # driver-OS local time, so on any non-UTC driver the guards would
+    # fire on an instant offset by the zone (fresh watermarks read as
+    # "future" -> clamped to EPOCH -> silent full rescans).  An aware
+    # datetime is the exact intended instant under every zone.
     as_of = as_of or dt.datetime.now(dt.timezone.utc)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    if not fs.probe_dirs([path]):
         return EPOCH
-    row = (
-        df.filter(F.col("key") == WATERMARK_KEY)
-        .select(clamp_watermark(F.col("ts"), F.lit(as_of)).alias("ts"))
-        .collect()
-    )
-    return row[0]["ts"] if row else EPOCH
+    try:
+        rows = sinks.read_small_parquet_rows(spark, path)
+    except AnalysisException:  # a directory with no data file
+        return EPOCH
+    ts = next((r["ts"] for r in rows if r["key"] == WATERMARK_KEY), None)
+    if ts is None:
+        return EPOCH
+    conv = T.TimestampType()
+    wm, now = conv.toInternal(ts), conv.toInternal(as_of)
+    if wm > now:
+        return EPOCH
+    if wm < now - _TEN_YEARS_US:
+        return conv.fromInternal(now - _THIRTY_DAYS_US)
+    return conv.fromInternal(wm)
 
 
 def write_watermark(spark: SparkSession, state_dir: str,
@@ -82,7 +109,7 @@ def write_watermark(spark: SparkSession, state_dir: str,
     (reference: processor.py:77-115 ``INSERT OR REPLACE``).
 
     Local state writes go DRIVER-SIDE through
-    ``ann_index.write_small_parquet`` (pyarrow single file, staged then
+    :func:`sinks.write_small_parquet` (pyarrow single file, staged then
     swapped): a Spark write of a one-row Python-sourced frame measured
     a ~5-6 s stall per call in the write task (the Python-runner
     teardown in the write path; a JVM-native 1-row write is ~0.4 s) —
@@ -94,23 +121,22 @@ def write_watermark(spark: SparkSession, state_dir: str,
     reports EPOCH (full rescan), which the last-writer-wins sink makes
     safe — the same recovery the Spark overwrite's failure modes had.
     Remote state dirs keep the Spark write."""
-    from . import fs as fs_probe
-
     path = os.path.join(state_dir, "watermark.parquet")
-    if fs_probe.is_remote(state_dir):
+    if fs.is_remote(state_dir):
         df = spark.createDataFrame([(WATERMARK_KEY, ts)],
                                    schema=schemas.WATERMARK_STATE)
         df.coalesce(1).write.mode("overwrite").parquet(path)
         return
     import pyarrow as pa
 
-    from ..operators.ann_index import write_small_parquet
-
-    # naive datetimes carry UTC semantics throughout the engine (the
-    # session timezone is pinned); tz-aware values convert exactly
-    write_small_parquet(pa.table({
+    # a naive datetime is driver-OS local time, as PySpark converts it
+    # (the remote branch's createDataFrame does the same) and as
+    # collect() and read_watermark render it, so the state round-trips
+    # on any driver zone; pyarrow would take it as UTC wall time
+    sinks.write_small_parquet(pa.table({
         "key": pa.array([WATERMARK_KEY], pa.string()),
-        "ts": pa.array([ts], pa.timestamp("us", tz="UTC")),
+        "ts": pa.array([T.TimestampType().toInternal(ts)],
+                       pa.timestamp("us", tz="UTC")),
     }), path)
 
 

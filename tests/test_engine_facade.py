@@ -81,7 +81,10 @@ def test_freshness_gap_converges_with_unstorable_rows(spark, tmp_path):
     permanently positive and re-trigger a no-op ingest forever."""
     eng = Engine(spark, SF, str(tmp_path / "store"))
     eng.update_embeddings()
-    assert eng._freshness_gap() == 0
+    # a second engine over the same store has no cached gap, so the
+    # watermark-pruned count itself is what reads zero here (the
+    # ingesting engine records gap 0 after a draining run)
+    assert Engine(spark, SF, eng.store_dir)._freshness_gap() == 0
 
 
 def test_empty_source_search_returns_empty_envelope(spark, tmp_path):
@@ -712,7 +715,15 @@ def test_warm_serve_job_counts(spark, tmp_path):
     store the serve reads is typed from its writer's footer schema, so
     a read that goes back to Spark's schema inference shows up here as
     one more job.  The fixed clock keeps the freshness gap cached, so
-    a warm call runs no gate job."""
+    a warm call runs no gate job.
+
+    Writes keep it cached too: an ingest that drains the source
+    records gap 0 and retention leaves the gap standing, so the first
+    search after either costs what a warm one does.  Uncached, the
+    gate's only jobs are the watermark-pruned count's: the watermark
+    and the source schema are read on the driver."""
+    import datetime as dt
+
     from msg_vector_search_spark.operators import retrieval
 
     eng = Engine(spark, SF, str(tmp_path / "store"), clock=lambda: 0.0,
@@ -725,11 +736,14 @@ def test_warm_serve_job_counts(spark, tmp_path):
         eng.text_index_dir, id_col="message_id")
     sched = spark.sparkContext._jsc.sc().dagScheduler()
 
-    def warm_jobs(verb) -> int:
-        verb()
+    def jobs(verb) -> int:
         before = sched.numTotalJobs()
         verb()
         return sched.numTotalJobs() - before
+
+    def warm_jobs(verb) -> int:
+        verb()
+        return jobs(verb)
 
     assert warm_jobs(lambda: eng.search("k 43", limit=5,
                                         threshold=-1.0)) == 6
@@ -739,3 +753,43 @@ def test_warm_serve_job_counts(spark, tmp_path):
         {0: "k 43", 1: "k 87"}, limit=5, threshold=-1.0)) == 6
     # the pins count matching serves, not empty ones
     assert eng.search_text(["k", "43"], limit=5)
+
+    def search():
+        return eng.search("k 43", limit=5, threshold=-1.0)
+
+    eng.update_embeddings()
+    assert jobs(search) == 6
+    eng.apply_retention(dt.datetime(1999, 1, 1))
+    assert jobs(search) == 6
+    eng._gap_cache = None
+    assert jobs(eng._freshness_gap) == 2
+
+
+def test_capped_ingest_leaves_gap_and_incremental_job_count(
+        spark, tmp_path):
+    """A capped ingest that leaves source rows behind records no gap:
+    the next gap check counts the rows it left.  One incremental
+    ingest of new rows is pinned at its job count: its watermark and
+    source-schema reads run on the driver, and the drained check rides
+    the watermark aggregate it already runs."""
+    eng = Engine(spark, SF, str(tmp_path / "store"), clock=lambda: 0.0)
+    n_events = spark.read.parquet(SF + "/events.parquet").count()
+    # ts is unique in the fixture, so a cap of 200 consumes exactly
+    # the 200 earliest rows
+    assert (spark.read.parquet(SF + "/events.parquet")
+            .select("ts").distinct().count() == n_events)
+    eng.update_embeddings(max_messages=200)
+    assert eng._gap_cache is None
+    assert eng._freshness_gap() == n_events - 200
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    up = eng.update_embeddings(max_messages=200)
+    assert sched.numTotalJobs() - before == 33
+    # the inclusive watermark predicate re-reads the boundary row, so
+    # the second batch of 200 takes 199 new rows
+    assert up["new_messages"] == 199
+    assert eng._freshness_gap() == n_events - 399
+    eng.update_embeddings(max_messages=None)
+    assert eng._gap_cache == (0.0, 0)
+    assert (Engine(spark, SF, eng.store_dir)._freshness_gap()
+            == eng._freshness_gap() == 0)

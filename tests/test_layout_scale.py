@@ -645,7 +645,8 @@ def test_delete_keys_non_castable_key_raises(spark, tmp_path):
         sinks.delete_keys(spark, path, "k", bad)
 
 
-def test_read_watermark_default_as_of_is_instant_correct(spark, tmp_path):
+def test_read_watermark_default_as_of_is_instant_correct(
+        spark, tmp_path, monkeypatch):
     """r14 review: the default as_of must be a tz-AWARE now.  PySpark
     converts a NAIVE datetime literal via the driver OS timezone
     (verified empirically; the session timeZone is not consulted), so
@@ -655,10 +656,18 @@ def test_read_watermark_default_as_of_is_instant_correct(spark, tmp_path):
     the other way.  An aware datetime is the exact instant under ANY
     OS/session zone; this test pins instant-correctness under a
     non-UTC session tz (the OS tz is fixed UTC in CI, so the naive
-    regression itself is not reproducible in-process)."""
-    import datetime as dt
+    regression itself is not reproducible in-process).
 
-    from msg_vector_search_spark.sources import state
+    The driver-side read also equals the Spark read plus
+    ``clamp_watermark`` for a recent, a future, a 20-year-old and a
+    missing watermark, on local paths and on ``file:`` URIs forced
+    down the remote branch, and launches no Spark job; and a naive
+    watermark round-trips under a driver OS zone east of UTC."""
+    import datetime as dt
+    import os
+    import time
+
+    from msg_vector_search_spark.sources import fs, state
 
     sd = str(tmp_path / "state")
     old_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -673,7 +682,57 @@ def test_read_watermark_default_as_of_is_instant_correct(spark, tmp_path):
         # DRIVER OS timezone (UTC in CI) — compare instants there
         assert abs((got - wm.replace(tzinfo=None))
                    .total_seconds()) < 5
+
+        now = dt.datetime.now(dt.timezone.utc)
+
+        def spark_read(d: str) -> dt.datetime:
+            try:
+                df = spark.read.parquet(os.path.join(d, "watermark.parquet"))
+            except Exception:
+                return state.EPOCH
+            rows = (df.filter(F.col("key") == state.WATERMARK_KEY)
+                    .select(state.clamp_watermark(F.col("ts"), F.lit(now))
+                            .alias("ts")).collect())
+            return rows[0]["ts"] if rows else state.EPOCH
+
+        dirs = {"missing": str(tmp_path / "none")}
+        for name, delta in (("recent", dt.timedelta(hours=-1)),
+                            ("future", dt.timedelta(days=1)),
+                            ("old", dt.timedelta(days=-20 * 365))):
+            dirs[name] = str(tmp_path / name)
+            state.write_watermark(spark, dirs[name], now + delta)
+        want = {name: spark_read(d) for name, d in dirs.items()}
+        assert want["missing"] == want["future"] == state.EPOCH
+        # rendered in the driver OS timezone, as collect() renders it
+        assert want["old"] == (now - dt.timedelta(days=30)).astimezone(
+        ).replace(tzinfo=None)
+        sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+        def driver_reads(prefix: str) -> dict:
+            before = sched.numTotalJobs()
+            out = {name: state.read_watermark(spark, prefix + d, as_of=now)
+                   for name, d in dirs.items()}
+            assert sched.numTotalJobs() == before
+            return out
+
+        assert driver_reads("") == want
+        monkeypatch.setattr(fs, "_LOCAL_SCHEMES", ())
+        assert fs.is_remote(f"file:{sd}")
+        assert driver_reads("file:") == want
+        monkeypatch.undo()
+
+        # a driver OS zone east of UTC: the naive watermark an ingest
+        # collects is local time and must round-trip, not land hours
+        # in the future and clamp to EPOCH (a full rescan per run)
+        monkeypatch.setenv("TZ", "Asia/Tokyo")
+        time.tzset()
+        local = (now - dt.timedelta(hours=1)).astimezone().replace(
+            tzinfo=None)
+        state.write_watermark(spark, sd, local)
+        assert state.read_watermark(spark, sd) == local
     finally:
+        monkeypatch.undo()
+        time.tzset()
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 

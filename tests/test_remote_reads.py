@@ -202,3 +202,48 @@ def test_lost_meta_sidecar_fails_loudly_on_wide_layout_remote(
             "id_col": "doc_id"}
         with pytest.raises(ValueError, match="corrupt text-index meta"):
             retrieval._read_text_meta(at(corrupt))
+
+
+def test_read_table_footer_schema_matches_plain_read(
+        spark, tmp_path, monkeypatch):
+    """read_table types each fixture table from one data file's footer,
+    read on the driver: for every sf0.001 table, and for a TIMESTAMP
+    (NANOS) events table written by pyarrow as a directory of two
+    files, the frame's schema and rows equal the plain inferring
+    read's, and building the frame launches no Spark job — on local
+    paths and on ``file:`` URIs forced down the remote branch."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    events = papq.read_table(f"{SF}/events.parquet")
+    events = events.set_column(events.schema.get_field_index("ts"), "ts",
+                               events["ts"].cast(pa.timestamp("ns")))
+    nanos = tmp_path / "nanos"
+    (nanos / "events.parquet").mkdir(parents=True)
+    papq.write_table(events.slice(0, 400),
+                     str(nanos / "events.parquet" / "part-0.parquet"))
+    papq.write_table(events.slice(400),
+                     str(nanos / "events.parquet" / "part-1.parquet"))
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def check(sf: str, name: str) -> None:
+        before = sched.numTotalJobs()
+        df = readers.read_table(spark, sf, name)
+        assert sched.numTotalJobs() == before, f"{name}: a Spark job ran"
+        with monkeypatch.context() as m:
+            m.setattr(readers, "_footer_schema", lambda *a: None)
+            plain = readers.read_table(spark, sf, name)
+        assert df.schema == plain.schema, name
+        assert (sorted(map(str, df.collect()))
+                == sorted(map(str, plain.collect()))), name
+
+    for name in readers.FIXTURE_TABLES:
+        check(SF, name)
+    check(str(nanos), "events")
+    assert "_ts_nanos" in readers.read_table(spark, str(nanos),
+                                             "events").columns
+
+    monkeypatch.setattr(fs, "_LOCAL_SCHEMES", ())
+    assert fs.is_remote(f"file:{SF}")
+    check(f"file:{SF}", "events")
+    check(f"file:{nanos}", "events")
