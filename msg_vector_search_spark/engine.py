@@ -321,21 +321,12 @@ class Engine:
 
     def index_maintenance_stats(self) -> dict:
         """The decay signals (ann_index.index_maintenance_stats):
-        per-cell occupancy folded to growth-since-build and cell skew,
-        with the pre-``n_rows`` baseline backfilled write-through and
-        surfaced as ``baseline_unknown`` (ADVICE r12 — growth on a
-        legacy store accrues from first observation instead of
-        pinning a growth-armed policy inert at 0.0).  The facade
-        passes ``persist_backfill=True`` because the Engine IS its
-        store's single writer (it built/ingests/upserts index_dir), so
-        persisting the observed baseline is a writer-side act here —
-        unlike the bare operator, whose default stays a pure read for
-        external observers (ADVICE r13)."""
+        per-cell occupancy folded to growth-since-build and cell
+        skew."""
         from .operators import ann_index
 
         return ann_index.index_maintenance_stats(self.spark,
-                                                 self.index_dir,
-                                                 persist_backfill=True)
+                                                 self.index_dir)
 
     def audit_recall(self, k: int = 10) -> float:
         """Recall@k of indexed serving (this engine's nprobe/shortlist

@@ -182,15 +182,16 @@ def _load_meta(path: str) -> dict:
 
 def read_meta(path: str) -> dict:
     """The index's meta sidecar; every verb but :func:`rebuild_index`
-    reads it here, so every verb refuses an index in the older
-    two-store layout (PQ codes in a separate ``codes/`` store): an
-    upsert would write rows whose schema differs from its files'."""
+    reads it here, so every verb refuses an index in an older layout:
+    PQ codes in a separate ``codes/`` store (an upsert would write rows
+    whose schema differs from its files'), or a meta without the
+    ``n_rows`` growth baseline the maintenance policy reads."""
     meta = _load_meta(path)
-    if fs.probe_dirs([_subdir(path, "codes")]):
+    if "n_rows" not in meta or fs.probe_dirs([_subdir(path, "codes")]):
         raise ValueError(
-            f"index at {path} keeps its PQ codes in a separate codes/ "
-            "store (the older layout); run rebuild_index on it once "
-            "to convert it")
+            f"index at {path} is in an older layout (PQ codes in a "
+            "separate codes/ store, or a meta without n_rows); run "
+            "rebuild_index on it once to convert it")
     return meta
 
 
@@ -692,9 +693,9 @@ def rebuild_index(spark: SparkSession, path: str,
     seed <-> trained in place.  After a rebuild the index is
     bit-identical to a fresh :func:`build_index` over the same rows —
     upsert-then-rebuild converges to the fresh-build state.  The one
-    verb that accepts the older two-store layout (a separate
-    ``codes/`` store): it reads only ``vectors/`` and swaps the whole
-    directory, so the rebuild converts such an index."""
+    verb that accepts an index :func:`read_meta` refuses: it reads
+    only ``vectors/`` and the build parameters, writes a fresh meta
+    and swaps the whole directory, so the rebuild converts it."""
     # roll a crashed erasure FORWARD before treating the vectors store
     # as the source of truth (r14 review): un-swapped cells still hold
     # victim rows, and a rebuild that reads them bakes the victims
@@ -833,8 +834,7 @@ def _resolve_moved_keys(spark: SparkSession, path: str,
     _cc_free(stale)
 
 
-def index_maintenance_stats(spark: SparkSession, path: str,
-                            persist_backfill: bool = False) -> dict:
+def index_maintenance_stats(spark: SparkSession, path: str) -> dict:
     """The rebuild-decay signals, metadata-light: per-cell occupancy
     of the cell store (count-per-partition — no vector bytes read)
     folded to growth-since-build and cell skew.  :func:`upsert_index`
@@ -842,21 +842,8 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     operating practice), so these two numbers are exactly what
     drifts.  Shared by the Engine facade and the streaming ingest
     loop (:func:`msg_vector_search_spark.streaming.stream
-    .stream_index_upsert`).
-
-    Indexes written before ``n_rows`` existed report
-    ``baseline_unknown=True`` and use the CURRENT total as the
-    baseline (ADVICE r12): growth then accrues from the first
-    observation instead of staying pinned at 0.0 forever, and callers
-    that want a conservative initial rebuild can key off the flag.
-    The backfill is IN-MEMORY only unless *persist_backfill* — a
-    stats read is an observer and must not mutate the store (the
-    documented single-writer assumption covers writers, not readers;
-    ADVICE r13).  :func:`maintain_index` — a write-path caller —
-    passes ``persist_backfill=True`` so the baseline sticks across
-    policy evaluations; when a persist is attempted the returned dict
-    carries ``backfill_persisted`` (False = the write-through failed,
-    e.g. a read-only store — surfaced, not swallowed)."""
+    .stream_index_upsert`).  A pure read: growth is measured against
+    the ``n_rows`` the build recorded in the meta."""
     meta = read_meta(path)
     # heal before counting (r14 review): a stale 'cell=N._old' leftover
     # would be discovered as its own partition value and double-count
@@ -864,7 +851,7 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     # rebuild decision (maintain_index).  Same roll-forward the serving
     # reads do; committing a crashed erasure from an observer is the
     # established self-heal contract (search_index does it on every
-    # call), distinct from the meta write-through that stays opt-in.
+    # call).
     vstore = _subdir(path, "vectors")
     sinks.heal(vstore)
     counts = [r["n"] for r in
@@ -879,27 +866,11 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     nlist = int(meta.get("nlist") or len(counts) or 1)
     mean = total / nlist if nlist else 0.0
     skew = (max(counts) / mean) if counts and mean else 1.0
-    baseline_unknown = meta.get("n_rows") is None
-    backfill_persisted = None
-    if baseline_unknown:
-        meta["n_rows"] = total
-        if persist_backfill:
-            # the shared write-then-rename idiom; a failed persist is
-            # SURFACED via backfill_persisted=False, not swallowed
-            try:
-                sinks._atomic_write_json(os.path.join(path, META_FILE), meta)
-                backfill_persisted = True
-            except OSError:
-                backfill_persisted = False
     at_build = int(meta["n_rows"])
     growth = ((total - at_build) / at_build) if at_build else 0.0
-    out = {"total_rows": total, "rows_at_build": at_build,
-           "occupied_cells": len(counts),
-           "skew": round(skew, 4), "growth": round(growth, 4),
-           "baseline_unknown": baseline_unknown}
-    if backfill_persisted is not None:
-        out["backfill_persisted"] = backfill_persisted
-    return out
+    return {"total_rows": total, "rows_at_build": at_build,
+            "occupied_cells": len(counts),
+            "skew": round(skew, 4), "growth": round(growth, 4)}
 
 
 def maintain_index(spark: SparkSession, path: str,
@@ -914,7 +885,7 @@ def maintain_index(spark: SparkSession, path: str,
     signals plus what was decided; ``force=True`` skips the signals.
     The Engine facade layers its opt-in recall floor on top of this
     (recall needs the vectors store, not just the index)."""
-    sig = index_maintenance_stats(spark, path, persist_backfill=True)
+    sig = index_maintenance_stats(spark, path)
     reason = None
     if force:
         reason = "forced"

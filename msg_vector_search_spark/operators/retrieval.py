@@ -35,7 +35,6 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -170,47 +169,36 @@ TARGET_TERMS_PER_BUCKET = 512
 TEXT_META = "_text_index_meta.json"
 
 
-def _read_text_meta(path: str, id_col: str = "doc_id",
-                    n_buckets: int = INDEX_BUCKETS) -> dict:
-    """Meta sidecar.  A MISSING file means an index written before the
-    sidecar existed (gen 0, caller-supplied layout) — tolerated.  An
-    UNPARSEABLE file is raised, never defaulted: the atomic write below
-    makes corruption impossible from this code, and silently resetting
-    the generation to 0 would make every existing tombstone a no-op
-    and every new delete ineffective (rows at gen>0 would all pass the
-    gen > upto_gen filter) — a data-integrity failure worth stopping
-    on, not guessing through."""
+def _read_text_meta(path: str, id_col: str = "doc_id") -> dict:
+    """Meta sidecar.  A MISSING file is the never-built index that an
+    upsert bootstraps (gen 0, default layout, the caller's *id_col*) —
+    but only while neither a ``postings/`` nor a ``doclen/`` store
+    exists.  Stores without a sidecar are refused: an older index, a
+    lost sidecar, or a build that crashed before finishing
+    (:func:`build_inverted_index` writes the sidecar last).  Serving
+    them under a guessed layout would hash query terms mod the wrong
+    bucket count, and a guessed generation would disarm tombstones.
+    An UNPARSEABLE file is raised too, never defaulted: the atomic
+    write below makes corruption impossible from this code, and
+    silently resetting the generation to 0 would make every existing
+    tombstone a no-op and every new delete ineffective (rows at gen>0
+    would all pass the gen > upto_gen filter) — a data-integrity
+    failure worth stopping on, not guessing through."""
     import json
 
     from ..sources import fs
 
+    root = path.rstrip("/")
     try:
-        return json.loads(fs.read_bytes(f"{path.rstrip('/')}/{TEXT_META}"))
+        return json.loads(fs.read_bytes(f"{root}/{TEXT_META}"))
     except (FileNotFoundError, NotADirectoryError):
-        # The missing-file fallback serves two safe cases: bootstrap
-        # (no store yet) and a pre-sidecar legacy index (always built
-        # at the 64-bucket default).  Since r17 auto-sizes layouts,
-        # a LOST sidecar over a wider layout would silently hash
-        # query terms mod the wrong bucket count and serve incomplete
-        # results — so before defaulting, probe the postings dirs: a
-        # tb id >= the assumed count proves the layout is not the
-        # default, and failing loudly beats silently missing terms.
-        # (A wider layout whose dirs all happen to fall below the
-        # default can still slip through — best-effort guard, exact
-        # only via the sidecar itself.)  One probe and one listing,
-        # local or remote alike.
-        pdir = f"{path.rstrip('/')}/postings"
-        if fs.probe_dirs([pdir]):
-            tbs = [int(d.rsplit("=", 1)[1])
-                   for d in fs.list_child_dirs(pdir, "tb=")
-                   if d.rsplit("=", 1)[1].isdigit()]
-            if tbs and max(tbs) >= n_buckets:
-                raise ValueError(
-                    f"index at {path} has no meta sidecar but a "
-                    f"tb={max(tbs)} partition — the layout cannot be "
-                    f"the assumed {n_buckets}-bucket default (lost "
-                    f"{TEXT_META}?); restore the sidecar or rebuild")
-        return {"n_buckets": n_buckets, "gen": 0, "id_col": id_col}
+        if fs.probe_dirs([f"{root}/postings", f"{root}/doclen"]):
+            raise ValueError(
+                f"text index at {path} has stores but no {TEXT_META} "
+                "(an older index, or a build that did not finish); run "
+                "build_inverted_index on its corpus to rebuild it"
+            ) from None
+        return {"n_buckets": INDEX_BUCKETS, "gen": 0, "id_col": id_col}
     except ValueError as e:
         raise ValueError(
             f"corrupt text-index meta at {path}: {e}; refusing to "
@@ -249,18 +237,12 @@ def _doclen(spark, path: str) -> DataFrame:
 
 
 def _live(df: DataFrame, tomb, id_col: str) -> DataFrame:
-    """Filter *df* (carrying ``gen``) to rows alive under *tomb*.
-
-    A pre-generation-sidecar index (built before the LSM lifecycle
-    landed) has no ``gen`` column; its rows are all generation 0 —
-    exactly what a fresh build writes today — so default it rather
-    than let the first post-migration delete brick every subsequent
-    search with an unresolved-column AnalysisException."""
+    """Filter *df* (carrying ``gen``) to rows alive under *tomb*."""
     if tomb is None:
         return df
-    gen = F.col("gen") if "gen" in df.columns else F.lit(0).cast("long")
     return (df.join(F.broadcast(tomb), id_col, "left")
-            .filter(F.col("_upto").isNull() | (gen > F.col("_upto")))
+            .filter(F.col("_upto").isNull()
+                    | (F.col("gen") > F.col("_upto")))
             .drop("_upto"))
 
 
@@ -370,55 +352,6 @@ def _write_store(df: DataFrame, dest: str, part: str | None) -> None:
         df.write.mode("overwrite").parquet(dest)
 
 
-def _store_has_gen(spark, store: str) -> bool | None:
-    """Whether the store's parquet schema carries the ``gen`` column
-    (None = store absent or empty).  Local stores answer from the
-    schema the writer recorded in one data file's footer
-    (``sinks.recorded_schema``, a driver-side read) instead of a Spark
-    read whose partition DISCOVERY lists every bucket directory — this
-    check runs once per upsert batch, and on an auto-sized postings
-    layout (hundreds to thousands of ``tb=`` dirs) that listing alone
-    cost a cluster job per micro-batch (guide §5/§6; r18).  Parity:
-    Spark's own schema resolution reads the same footer key of one
-    data file when mergeSchema is off (the migration below stamps each
-    store whole, so files within a store never disagree on ``gen``).
-    Remote URIs, files without the recorded schema and absent stores
-    take the Spark read, which raises on an absent or empty store."""
-    schema = sinks.recorded_schema(store)
-    if schema is not None:
-        return "gen" in schema.names
-    try:
-        return "gen" in spark.read.parquet(store).columns
-    except AnalysisException:  # PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA
-        return None
-
-
-def _ensure_gen_layout(spark, path: str) -> None:
-    """One-time migration for a pre-generation-sidecar index: stamp
-    ``gen = 0`` onto any store still lacking the column, staged and
-    swapped whole.  Without this, an incremental append would mix
-    gen-carrying files into a gen-less directory and the un-merged
-    parquet schema read could silently drop (or null) the column the
-    tombstone filter keys on.  Cost when already migrated: one
-    driver-side footer read per store (:func:`_store_has_gen` — never
-    a per-batch Spark discovery of the whole postings layout)."""
-    for sub, part in (("doclen", None), ("postings", "tb")):
-        store = os.path.join(path, sub)
-        has = _store_has_gen(spark, store)
-        if has is None:
-            # never-built store: the append-mode writes below bootstrap
-            # it (and _read_text_meta already tolerates missing meta) —
-            # reading here would throw and narrow the upsert contract
-            continue
-        if has:
-            continue
-        cur = sinks.read_parquet(spark, store)
-        migrated = cur.withColumn("gen", F.lit(0).cast("long"))
-        sinks.stage_and_swap(
-            store, lambda tmp: _write_store(
-                migrated, tmp, part if part in cur.columns else None))
-
-
 def upsert_inverted_index(docs: DataFrame, path: str,
                           text_col: str = "text",
                           id_col: str | None = None,
@@ -453,7 +386,6 @@ def upsert_inverted_index(docs: DataFrame, path: str,
         raise ValueError(
             f"index at {path} is keyed by {meta['id_col']!r}; "
             f"got id_col={id_col!r}")
-    _ensure_gen_layout(spark, path)
     g_old, g_new = int(meta["gen"]), int(meta["gen"]) + 1
     meta["gen"] = g_new
     _write_text_meta(path, meta)
@@ -780,9 +712,7 @@ def inverted_index_stats(spark, path: str) -> DataFrame:
 
 
 def search_inverted_index(spark, path: str, terms: list[str],
-                          id_col: str = "doc_id", k1: float = K1,
-                          b: float = B,
-                          n_buckets: int = INDEX_BUCKETS,
+                          k1: float = K1, b: float = B,
                           where: str | None = None,
                           require_all: bool = False) -> DataFrame:
     """Serve BM25 from the PERSISTED index: prune postings to the query
@@ -812,7 +742,7 @@ def search_inverted_index(spark, path: str, terms: list[str],
     recounted over eligible docs only — bit-identical to serving an
     index built on the slice."""
     sinks.heal(path)
-    meta = _read_text_meta(path, id_col=id_col, n_buckets=n_buckets)
+    meta = _read_text_meta(path)
     id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])
     if not terms:
@@ -871,7 +801,6 @@ def search_inverted_index(spark, path: str, terms: list[str],
 def search_inverted_index_many(spark, path: str, queries: dict,
                                k: int = 20, k1: float = K1,
                                b: float = B,
-                               n_buckets: int = INDEX_BUCKETS,
                                where: str | None = None,
                                literal_max: int = 4,
                                with_rank: bool = False) -> DataFrame:
@@ -939,7 +868,7 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     from .dedup import _cc_free
 
     sinks.heal(path)
-    meta = _read_text_meta(path, n_buckets=n_buckets)
+    meta = _read_text_meta(path)
     id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])
     tomb = _tombstone_frame(spark, path, id_col)

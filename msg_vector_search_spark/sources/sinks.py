@@ -155,23 +155,30 @@ def _bucket_expr(key: str, meta: dict) -> Column:
     return bucket_of(key, meta["num_buckets"])
 
 
-def _read_layout(path: str) -> dict | None:
-    """The store's persisted layout metadata, or None for a store
-    written before layout metadata existed (or a plain flat parquet
-    dir).  Pre-range-layout metadata files ({"num_buckets": N}) read as
-    hash layouts — no migration needed."""
+def _read_layout(path: str) -> dict:
+    """The store's persisted layout metadata.  Every verb that maps keys
+    to buckets reads it here, so every such verb refuses a store whose
+    ``_layout.json`` is missing (a flat or older store), unparseable,
+    or without a ``layout`` kind (the older ``{"num_buckets": N}``
+    form): mapping keys under a guessed layout would scatter them and
+    break per-bucket last-wins.  :func:`rebucket_store` reads any such
+    store without its layout and rewrites it in the current one."""
     try:
         with open(os.path.join(path, LAYOUT_META)) as f:
             meta = json.load(f)
-        if not isinstance(meta, dict):
-            return None
-        if meta.get("layout") == "range":
+        if meta["layout"] == "range":
             return {"layout": "range",
                     "range_width": int(meta["range_width"])}
-        return {"layout": "hash", "num_buckets": int(meta["num_buckets"])}
+        if meta["layout"] == "hash":
+            return {"layout": "hash",
+                    "num_buckets": int(meta["num_buckets"])}
     except (FileNotFoundError, NotADirectoryError, KeyError,
             TypeError, ValueError):
-        return None
+        pass
+    raise ValueError(
+        f"no readable {LAYOUT_META} at {path}: not a store, or a store "
+        "in an older layout; run rebucket_store on it once to rewrite "
+        "it in the current layout")
 
 
 def _atomic_write_json(target: str, payload: dict) -> None:
@@ -215,11 +222,14 @@ def _dedup_last_wins_bucketed(df: DataFrame, key: str,
               .drop("_first_row", "_prev_key"))
 
 
-def _write_checked(deduped: DataFrame, staged: str, key: str) -> None:
-    """Stage a whole-store rewrite, then run the null-bucket guard
-    before anything is swapped."""
+def _write_checked(deduped: DataFrame, staged: str, key: str,
+                   meta: dict) -> None:
+    """Stage a whole-store rewrite, run the null-bucket guard, then
+    record the layout inside the stage — so the swap brings rows and
+    layout in together and no crash leaves a store without one."""
     deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staged)
     _check_no_null_bucket(staged, key)
+    _write_layout(staged, meta)
 
 
 def _check_no_null_bucket(staged: str, key: str) -> None:
@@ -529,46 +539,29 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
     caller-supplied *layout* / *num_buckets* / *range_width* only size
     a brand-new store.  (Mapping a later batch with a different
     function would scatter keys into different buckets and silently
-    break per-bucket last-wins.)  A bucketed store without metadata —
-    written before this guard — takes the one-time migration path
-    below, which re-maps everything and records the layout.
+    break per-bucket last-wins.)  An existing store without a readable
+    layout is refused before anything is written (:func:`_read_layout`
+    names :func:`rebucket_store`, which converts it).
     """
     # heal BEFORE the exists check (r14 review): a root stranded by a
-    # crashed migration/rebucket swap would read as absent, the
-    # first-write branch would replace the store with just this batch,
-    # and the '._old' holding every prior row would later be swept as
-    # a stale leftover — total data loss from one crash + upsert
+    # crashed rebucket swap would read as absent, the first-write
+    # branch would replace the store with just this batch, and the
+    # '._old' holding every prior row would later be swept as a stale
+    # leftover — total data loss from one crash + upsert
     heal(path)
-    exists = os.path.exists(path)
-    meta = _read_layout(path) if exists else None
     incoming = incoming.filter(F.col(key).isNotNull())
-    if meta is None:
-        fresh = _new_layout(incoming, key, layout, num_buckets,
-                            range_width)
-        inc = incoming.withColumn(BUCKET_COL, _bucket_expr(key, fresh))
-        # first write, or one-time migration of a legacy flat /
-        # metadata-less store
-        if exists:
-            current = read_parquet(spark, path)
-            if BUCKET_COL in current.columns:
-                current = current.drop(BUCKET_COL)
-            current = (current.filter(F.col(key).isNotNull())
-                       .withColumn(BUCKET_COL, _bucket_expr(key, fresh)))
-            merged = current.unionByName(inc, allowMissingColumns=True)
-        else:
-            merged = inc
-        n_new = None
-        if count_new:
-            inc_keys = inc.select(key).distinct()
-            if exists:
-                n_new = inc_keys.join(current.select(key), key,
-                                      "left_anti").count()
-            else:
-                n_new = inc_keys.count()
-        deduped = _dedup_last_wins_bucketed(merged, key, order_col)
-        stage_and_swap(path, lambda tmp: _write_checked(deduped, tmp, key))
-        _write_layout(path, fresh)
+    if not os.path.exists(path):
+        # first write: the layout is sized here and recorded in the
+        # stage, so it lands with the rows
+        meta = _new_layout(incoming, key, layout, num_buckets,
+                           range_width)
+        inc = incoming.withColumn(BUCKET_COL, _bucket_expr(key, meta))
+        n_new = inc.select(key).distinct().count() if count_new else None
+        deduped = _dedup_last_wins_bucketed(inc, key, order_col)
+        stage_and_swap(path,
+                       lambda tmp: _write_checked(deduped, tmp, key, meta))
         return n_new
+    meta = _read_layout(path)
 
     # incremental path: touch only the buckets the batch maps into.
     # The distinct() is driver-sized (bounded by batch key spread);
@@ -678,8 +671,6 @@ def delete_keys(spark: SparkSession, path: str, key: str,
     """
     heal(path)
     meta = _read_layout(path)
-    if meta is None:
-        raise ValueError(f"no layout metadata at {path}; not a store")
     keyed = (keys.select(key).filter(F.col(key).isNotNull()).distinct()
              .withColumn(BUCKET_COL, _bucket_expr(key, meta)))
     buckets = [r[0] for r in
@@ -819,8 +810,7 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
     import datetime as _dt
 
     heal(path)
-    if _read_layout(path) is None:
-        raise ValueError(f"no layout metadata at {path}; not a store")
+    _read_layout(path)  # refuses a path that is not a current store
 
     def _epoch_us(v) -> int | None:
         """Normalize a pyarrow footer stat / python datetime to epoch
@@ -933,7 +923,9 @@ def rebucket_store(spark: SparkSession, path: str,
                    range_width: int = DEFAULT_RANGE_WIDTH) -> dict:
     """Maintenance verb: rewrite a store under a new layout (more hash
     buckets after the store outgrew its first-write sizing, or a
-    hash -> range migration once keys are known arrival-ordered).
+    hash -> range migration once keys are known arrival-ordered).  It
+    reads the store without its layout, so it also converts a flat or
+    older store that the other verbs refuse.
 
     One full deduped rewrite — the amortized cost of growth, like a
     dynamic array's doubling copy: re-size when keys-per-bucket drifts
@@ -945,8 +937,8 @@ def rebucket_store(spark: SparkSession, path: str,
     staged = (current.filter(F.col(key).isNotNull())
               .withColumn(BUCKET_COL, _bucket_expr(key, meta)))
     deduped = _dedup_last_wins_bucketed(staged, key, order_col)
-    stage_and_swap(path, lambda tmp: _write_checked(deduped, tmp, key))
-    _write_layout(path, meta)
+    stage_and_swap(path,
+                   lambda tmp: _write_checked(deduped, tmp, key, meta))
     return meta
 
 
@@ -973,8 +965,8 @@ def compact_store(spark: SparkSession, path: str,
     "files_after": m}``.
     """
     heal(path)
-    if part_col == BUCKET_COL and _read_layout(path) is None:
-        raise ValueError(f"no layout metadata at {path}; not a store")
+    if part_col == BUCKET_COL:
+        _read_layout(path)  # refuses a path that is not a current store
 
     def _partfiles(d: str) -> list[str]:
         return [f for f in os.listdir(d)

@@ -12,6 +12,18 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def file_tree(path: str) -> dict:
+    """(relative path -> (size, mtime_ns)) of every file under *path*:
+    equal before and after a call means the call wrote nothing."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            out[os.path.relpath(p, path)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     from msg_vector_search_spark.session import get_spark

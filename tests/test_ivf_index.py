@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from msg_vector_search_spark.operators import ivf
 from msg_vector_search_spark.sources import readers, sinks
 
+from conftest import file_tree
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -1165,11 +1167,28 @@ def _two_store_copy(spark, path: str) -> None:
     rows.drop("codes").write.partitionBy("cell").parquet(vstore)
 
 
+def _meta_without_n_rows(spark, path: str) -> None:
+    """Rewrite a built index's meta without the ``n_rows`` growth
+    baseline, the form indexes had before the build recorded it."""
+    import json
+    import os
+
+    from msg_vector_search_spark.operators import ann_index
+
+    meta_path = os.path.join(path, ann_index.META_FILE)
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["n_rows"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+
 def test_two_store_index_refused_until_rebuilt(spark, tmp_path):
-    """An index in the older two-store layout is refused by every verb
-    with a message naming rebuild_index, before anything is written;
-    rebuild_index reads only its vectors and converts it to the one
-    store a fresh build writes."""
+    """An index in an older layout — the two-store layout, or a meta
+    without ``n_rows`` — is refused by every verb with a message
+    naming rebuild_index, before anything is written; rebuild_index
+    reads only its vectors and converts it to the one store and the
+    meta a fresh build writes."""
     import os
 
     from msg_vector_search_spark.operators import ann_index
@@ -1179,35 +1198,42 @@ def test_two_store_index_refused_until_rebuilt(spark, tmp_path):
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0)
           .select("embedding").head()[0]]
     fresh = str(tmp_path / "fresh")
-    old = str(tmp_path / "old")
-    for p in (fresh, old):
-        ann_index.build_index(spark, emb, p, nlist=4, m=8, ncodes=16)
-    _two_store_copy(spark, old)
-
-    victims = emb.filter(F.col("vec_id") < 3)
-    for verb in (
-            lambda: ann_index.search_index(spark, old, qv),
-            lambda: ann_index.search_index_many(spark, old, {1: qv}),
-            lambda: ann_index.upsert_index(spark, old, victims),
-            lambda: ann_index.delete_index_keys(
-                spark, old, victims.select("vec_id"), vectors=victims),
-            lambda: ann_index.delete_index_where(spark, old, "true"),
-            lambda: ann_index.index_maintenance_stats(spark, old)):
-        with pytest.raises(ValueError, match="rebuild_index"):
-            verb()
-    assert spark.read.parquet(os.path.join(old, "vectors")).count() == \
-        emb.count()
-
-    ann_index.rebuild_index(spark, old)
-    assert not os.path.exists(os.path.join(old, "codes"))
-    stored = spark.read.parquet(os.path.join(old, "vectors"))
+    ann_index.build_index(spark, emb, fresh, nlist=4, m=8, ncodes=16)
     want = spark.read.parquet(os.path.join(fresh, "vectors"))
-    assert stored.columns == want.columns
-    assert sorted(map(tuple, stored.select("vec_id", "cell", "codes")
-                      .collect())) == \
-        sorted(map(tuple, want.select("vec_id", "cell", "codes").collect()))
-    assert ann_index.search_index(spark, old, qv).collect() == \
-        ann_index.search_index(spark, fresh, qv).collect()
+    victims = emb.filter(F.col("vec_id") < 3)
+
+    for older in (_two_store_copy, _meta_without_n_rows):
+        old = str(tmp_path / older.__name__)
+        ann_index.build_index(spark, emb, old, nlist=4, m=8, ncodes=16)
+        older(spark, old)
+        before = file_tree(old)
+        for verb in (
+                lambda: ann_index.search_index(spark, old, qv),
+                lambda: ann_index.search_index_many(spark, old, {1: qv}),
+                lambda: ann_index.upsert_index(spark, old, victims),
+                lambda: ann_index.delete_index_keys(
+                    spark, old, victims.select("vec_id"),
+                    vectors=victims),
+                lambda: ann_index.delete_index_where(spark, old, "true"),
+                lambda: ann_index.index_maintenance_stats(spark, old),
+                lambda: ann_index.maintain_index(spark, old, force=True)):
+            with pytest.raises(ValueError, match="rebuild_index"):
+                verb()
+        assert file_tree(old) == before, older.__name__
+
+        ann_index.rebuild_index(spark, old)
+        assert not os.path.exists(os.path.join(old, "codes"))
+        assert ann_index.read_meta(old) == ann_index.read_meta(fresh)
+        stored = spark.read.parquet(os.path.join(old, "vectors"))
+        assert stored.columns == want.columns
+        assert sorted(map(tuple, stored.select("vec_id", "cell", "codes")
+                          .collect())) == \
+            sorted(map(tuple,
+                       want.select("vec_id", "cell", "codes").collect()))
+        assert ann_index.search_index(spark, old, qv).collect() == \
+            ann_index.search_index(spark, fresh, qv).collect()
+        assert ann_index.index_maintenance_stats(spark, old)["growth"] \
+            == 0.0
 
 
 def test_ann_write_path_job_counts(spark, tmp_path):

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from msg_vector_search_spark.operators import enrich
 from msg_vector_search_spark.sources import bucketed, readers, sinks
 
+from conftest import file_tree
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -242,17 +244,23 @@ def test_upsert_range_rejects_non_integer_keys(spark, tmp_path):
     assert not __import__("os").path.exists(store)
 
 
-def test_read_layout_tolerates_corrupt_metadata(spark, tmp_path):
-    """A corrupt _layout.json (array / scalar / non-numeric) must read
-    as None -> the migration path, never a crash."""
+def test_read_layout_refuses_corrupt_metadata(spark, tmp_path):
+    """A corrupt _layout.json (array / scalar / non-numeric / partial /
+    the older kind-less form) or a missing one is refused with the
+    ValueError that names rebucket_store, never a crash or a guess."""
     import os
     d = str(tmp_path / "corrupt")
     os.makedirs(d)
+    with pytest.raises(ValueError, match="rebucket_store"):
+        sinks._read_layout(d)
     for payload in ("[1,2,3]", "42", '"x"', '{"num_buckets": "abc"}',
-                    '{"layout": "range"}', "not json"):
+                    '{"num_buckets": 8}', '{"layout": "range"}',
+                    '{"layout": "hash", "num_buckets": "abc"}',
+                    '{"layout": "zorder"}', "not json"):
         with open(os.path.join(d, sinks.LAYOUT_META), "w") as f:
             f.write(payload)
-        assert sinks._read_layout(d) is None, payload
+        with pytest.raises(ValueError, match="rebucket_store"):
+            sinks._read_layout(d)
 
 
 def test_rebucket_store_grows_and_migrates_layout(spark, tmp_path):
@@ -285,23 +293,89 @@ def test_rebucket_store_grows_and_migrates_layout(spark, tmp_path):
         .filter(F.col("k") == "7").collect()[0]["v"] == "new"
 
 
-def test_upsert_migrates_legacy_flat_store(spark, tmp_path):
-    """A pre-bucketing flat store is migrated in one pass on the next
-    upsert, preserving last-writer-wins against the incoming batch."""
+def test_upsert_refuses_flat_store_until_rebucketed(spark, tmp_path):
+    """A flat store without _layout.json is refused by the upsert and
+    every other layout-reading verb, with nothing written;
+    rebucket_store converts it, and the upsert then lands with
+    last-writer-wins against the converted rows."""
+    import datetime as dt
+    import os
+
     from pyspark.sql import Row
 
     store = str(tmp_path / "legacy")
     spark.createDataFrame(
         [Row(k=i, v="old", ord=1) for i in range(20)]
     ).write.parquet(store)
+    before = file_tree(store)
     batch = spark.createDataFrame([Row(k=5, v="new", ord=2)])
-    sinks.upsert_parquet(spark, batch, store, key="k", order_col="ord",
-                         num_buckets=8)
+    for verb in (
+            lambda: sinks.upsert_parquet(spark, batch, store, key="k",
+                                         order_col="ord", num_buckets=8),
+            lambda: sinks.delete_keys(spark, store, "k",
+                                      batch.select("k")),
+            lambda: sinks.retention_sweep(spark, store,
+                                          dt.datetime(2024, 1, 1)),
+            lambda: sinks.compact_store(spark, store)):
+        with pytest.raises(ValueError, match="rebucket_store"):
+            verb()
+    assert file_tree(store) == before
+    assert not os.path.exists(store + sinks.REPLACE_STAGE)
+
+    meta = sinks.rebucket_store(spark, store, key="k", order_col="ord",
+                                num_buckets=8)
+    assert sinks._read_layout(store) == meta == {"layout": "hash",
+                                                 "num_buckets": 8}
+    sinks.upsert_parquet(spark, batch, store, key="k", order_col="ord")
     final = sinks.read_store(spark, store)
     assert final.count() == 20
     assert final.filter(F.col("k") == 5).collect()[0]["v"] == "new"
-    import os
-    assert any(d.startswith(sinks.BUCKET_COL + "=") for d in os.listdir(store))
+
+
+def test_layout_lands_with_the_whole_store_swap(
+        spark, tmp_path, monkeypatch):
+    """A crash right after the whole-store swap of a first write or of
+    rebucket_store leaves the new layout in place, because the layout
+    is written inside the stage: later verbs follow it instead of
+    refusing the store or re-laying it out under their own
+    arguments."""
+    from pyspark.sql import Row
+
+    real_swap = sinks._swap_dir
+
+    def crash_after_swap(src, dst):
+        real_swap(src, dst)
+        raise RuntimeError("simulated crash after swap")
+
+    rows = spark.createDataFrame(
+        [Row(k=i, v="old", ord=1) for i in range(30)])
+    first = str(tmp_path / "first")
+    monkeypatch.setattr(sinks, "_swap_dir", crash_after_swap)
+    with pytest.raises(RuntimeError, match="after swap"):
+        sinks.upsert_parquet(spark, rows, first, key="k", order_col="ord",
+                             num_buckets=4)
+    monkeypatch.undo()
+    assert sinks._read_layout(first) == {"layout": "hash",
+                                         "num_buckets": 4}
+    sinks.delete_keys(spark, first, "k", rows.filter("k < 10").select("k"))
+    assert sinks.read_store(spark, first).count() == 20
+
+    moved = str(tmp_path / "moved")
+    sinks.upsert_parquet(spark, rows, moved, key="k", order_col="ord")
+    monkeypatch.setattr(sinks, "_swap_dir", crash_after_swap)
+    with pytest.raises(RuntimeError, match="after swap"):
+        sinks.rebucket_store(spark, moved, key="k", order_col="ord",
+                             layout="range", range_width=10)
+    monkeypatch.undo()
+    ranged = {"layout": "range", "range_width": 10}
+    assert sinks._read_layout(moved) == ranged
+    sinks.upsert_parquet(spark, spark.createDataFrame(
+        [Row(k=3, v="new", ord=2)]), moved, key="k", order_col="ord")
+    assert sinks._read_layout(moved) == ranged
+    sinks.delete_keys(spark, moved, "k", rows.filter("k >= 20").select("k"))
+    final = sinks.read_store(spark, moved)
+    assert final.count() == 20
+    assert final.filter(F.col("k") == 3).collect()[0]["v"] == "new"
 
 
 def test_delete_keys_touches_only_mapped_partitions(spark, tmp_path):

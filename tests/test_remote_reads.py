@@ -168,22 +168,24 @@ def test_hybrid_serve_many_remote_matches_local(
 def test_lost_meta_sidecar_fails_loudly_on_wide_layout_remote(
         tmp_path, monkeypatch, spark):
     """The text index's lost-sidecar guard on both read branches: with
-    no meta sidecar, a ``tb=`` postings dir at or above the default
-    bucket count refuses to default the layout, a narrower one falls
-    back to the default, and an unparseable sidecar is reported as
-    corrupt — identically for a local path and a forced-remote one."""
+    no meta sidecar, a ``postings/`` or ``doclen/`` store is refused
+    whatever its bucket ids, neither store is the bootstrap default,
+    and an unparseable sidecar is reported as corrupt — identically
+    for a local path and a forced-remote one."""
     import os
 
     import pytest
 
-    def index(name: str, tb: int) -> str:
+    def index(name: str, sub: str) -> str:
         path = tmp_path / name
-        os.makedirs(path / "postings" / f"tb={tb}")
+        os.makedirs(path / sub)
         return str(path)
 
-    wide = index("wide", retrieval.INDEX_BUCKETS)
-    legacy = index("legacy", 3)
-    corrupt = index("corrupt", 3)
+    wide = index("wide", f"postings/tb={retrieval.INDEX_BUCKETS}")
+    legacy = index("legacy", "postings/tb=3")
+    doclen_only = index("doclen_only", "doclen")
+    fresh = str(tmp_path / "fresh")
+    corrupt = index("corrupt", "postings/tb=3")
     with open(os.path.join(corrupt, retrieval.TEXT_META), "w") as f:
         f.write("{not json")
 
@@ -195,9 +197,10 @@ def test_lost_meta_sidecar_fails_loudly_on_wide_layout_remote(
             return f"file:{p}" if remote else p
 
         assert fs.is_remote(at(wide)) == remote
-        with pytest.raises(ValueError, match="cannot be the assumed"):
-            retrieval._read_text_meta(at(wide))
-        assert retrieval._read_text_meta(at(legacy)) == {
+        for p in (wide, legacy, doclen_only):
+            with pytest.raises(ValueError, match="build_inverted_index"):
+                retrieval._read_text_meta(at(p))
+        assert retrieval._read_text_meta(at(fresh)) == {
             "n_buckets": retrieval.INDEX_BUCKETS, "gen": 0,
             "id_col": "doc_id"}
         with pytest.raises(ValueError, match="corrupt text-index meta"):

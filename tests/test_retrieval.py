@@ -13,6 +13,8 @@ from msg_vector_search_spark.operators import dedup as dedup_ops
 from msg_vector_search_spark.operators import ivf as ivf_ops
 from msg_vector_search_spark.operators import retrieval
 
+from conftest import file_tree
+
 
 # ---------------------------------------------------------------------------
 # BM25
@@ -406,14 +408,14 @@ def test_text_search_heals_stranded_swap(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r9/r10 lifecycle branches: gen-layout migration, never-built bootstrap,
+# r9/r10 lifecycle branches: older-layout refusal, never-built bootstrap,
 # tombstone-backlog auto-compaction
 # ---------------------------------------------------------------------------
 
 def _strip_gen(spark, path):
     """Rewrite a built index WITHOUT the gen column and meta sidecar —
     the on-disk shape of an index written before the LSM lifecycle
-    landed, the input _ensure_gen_layout exists to migrate."""
+    landed, which every verb but build_inverted_index refuses."""
     import os
     import shutil
 
@@ -433,62 +435,45 @@ def _strip_gen(spark, path):
         os.remove(meta)
 
 
-def test_genless_index_delete_then_upsert_migrates(spark, tmp_path):
-    """A pre-generation-sidecar index (no gen column, no meta) must
-    survive the full lifecycle: delete works immediately (rows default
-    to gen 0 in the query-time filter), and the first upsert stamps
-    gen=0 onto both stores via _ensure_gen_layout before appending its
-    gen=1 rows — afterwards serving equals a fresh build of the final
-    corpus."""
-    import os
-
-    # default bucket layout throughout: a pre-sidecar index carries
-    # no meta, so every verb falls back to the default layout — the
-    # documented tolerance contract of _read_text_meta
+def test_genless_index_refused_until_rebuilt(spark, tmp_path):
+    """A pre-generation-sidecar index (no gen column, no meta) is
+    refused by delete, upsert and serve with the ValueError naming
+    build_inverted_index, before anything is written; rebuilding it
+    from its corpus serves exactly like a fresh build."""
     rows = [(i, f"alpha beta doc{i}") for i in range(20)]
     full = _mini_corpus(spark, rows)
     path = str(tmp_path / "idx")
-    retrieval.build_inverted_index(full, path)
+    retrieval.build_inverted_index(full, path, n_buckets=8)
     _strip_gen(spark, path)
-    assert "gen" not in spark.read.parquet(
-        os.path.join(path, "doclen")).columns
+    before = file_tree(path)
 
-    # delete on the gen-less store: tombstone at gen 0 kills the
-    # defaulted-gen-0 rows — no AnalysisException, victims gone
-    retrieval.delete_inverted_docs(
-        full.filter(F.col("doc_id") % 4 == 0).select("doc_id"), path,
-        auto_compact_tombstones=None)
-    survivors = {i: t for i, t in rows if i % 4 != 0}
-    clean = str(tmp_path / "clean1")
-    retrieval.build_inverted_index(_mini_corpus(spark, survivors.items()),
-                                   clean)
-    assert _scores(retrieval.search_inverted_index(
-        spark, path, ["alpha"])) == _scores(
-        retrieval.search_inverted_index(spark, clean, ["alpha"]))
+    batch = _mini_corpus(spark, [(3, "gamma gamma"), (50, "alpha gamma")])
+    for verb in (
+            lambda: retrieval.delete_inverted_docs(
+                full.filter(F.col("doc_id") % 4 == 0).select("doc_id"),
+                path, auto_compact_tombstones=None),
+            lambda: retrieval.upsert_inverted_index(batch, path),
+            lambda: retrieval.search_inverted_index(spark, path, ["alpha"]),
+            lambda: retrieval.search_inverted_index_many(
+                spark, path, {0: ["alpha"]})):
+        with pytest.raises(ValueError, match="build_inverted_index"):
+            verb()
+    assert file_tree(path) == before
 
-    # first upsert migrates the layout (gen stamped on BOTH stores,
-    # never a mixed-schema read) then lands the batch at gen 1
-    batch = {3: "gamma gamma", 50: "alpha gamma"}
-    retrieval.upsert_inverted_index(_mini_corpus(spark, batch.items()),
-                                    path)
-    survivors.update(batch)
-    for sub in ("doclen", "postings"):
-        cols = spark.read.parquet(os.path.join(path, sub)).columns
-        assert "gen" in cols, f"{sub} not migrated"
-    clean2 = str(tmp_path / "clean2")
-    retrieval.build_inverted_index(_mini_corpus(spark, survivors.items()),
-                                   clean2)
-    for terms in (["alpha"], ["gamma"], ["beta", "gamma"]):
+    retrieval.build_inverted_index(full, path, n_buckets=8)
+    clean = str(tmp_path / "clean")
+    retrieval.build_inverted_index(full, clean, n_buckets=8)
+    for terms in (["alpha"], ["beta", "doc3"]):
         assert _scores(retrieval.search_inverted_index(
             spark, path, terms)) == _scores(
-            retrieval.search_inverted_index(spark, clean2, terms))
+            retrieval.search_inverted_index(spark, clean, terms))
 
 
 def test_upsert_bootstraps_never_built_store(spark, tmp_path):
     """upsert_inverted_index on a path with NO prior build must
-    bootstrap the store (the append-mode writes create it; the
-    missing-store guard keeps _ensure_gen_layout from throwing) and
-    serve the batch as if it had been built fresh."""
+    bootstrap the store (no sidecar and no stores is the bootstrap
+    case of _read_text_meta; the append-mode writes create the stores)
+    and serve the batch as if it had been built fresh."""
     path = str(tmp_path / "fresh")
     batch = [(1, "alpha beta"), (2, "alpha alpha gamma")]
     gen = retrieval.upsert_inverted_index(_mini_corpus(spark, batch), path)
@@ -596,12 +581,11 @@ def test_search_inverted_index_many_matches_per_query(spark, tmp_path):
     qsets = {"a": ["alpha", "beta"], "b": ["gamma"],
              "c": ["beta", "gamma"]}
     batched = retrieval.search_inverted_index_many(spark, path, qsets,
-                                                   k=10, n_buckets=8)
+                                                   k=10)
     got = [tuple(r) for r in batched.collect()]
     want = []
     for qid in sorted(qsets):
-        single = retrieval.search_inverted_index(spark, path, qsets[qid],
-                                                 n_buckets=8)
+        single = retrieval.search_inverted_index(spark, path, qsets[qid])
         ranked = (single
                   .select("doc_id", F.col("dl").cast("long").alias("dl"),
                           (F.round("bm25", 6) + F.lit(0.0)).alias("bm25"))
@@ -621,26 +605,24 @@ def test_batched_serves_handle_empty_and_no_match(spark, tmp_path):
     retrieval.build_inverted_index(
         _mini_corpus(spark, [(1, "alpha beta"), (2, "alpha")]), path,
         n_buckets=8)
-    empty = retrieval.search_inverted_index_many(spark, path, {},
-                                                 n_buckets=8)
+    empty = retrieval.search_inverted_index_many(spark, path, {})
     assert empty.count() == 0
     assert empty.columns == ["qid", "doc_id", "dl", "bm25"]
     # r15 review: the empty-dict frame's qid stays STRING (the prior
     # contract) so it unions cleanly with string-keyed batch results
     assert dict(empty.dtypes)["qid"] == "string"
     served = retrieval.search_inverted_index_many(
-        spark, path, {"hit": ["alpha"]}, n_buckets=8)
+        spark, path, {"hit": ["alpha"]})
     assert served.unionByName(empty).count() == served.count()
     for lm in (16, 0):   # literal strategy, then broadcast-data
         mixed = retrieval.search_inverted_index_many(
-            spark, path, {"hit": ["alpha"], "miss": ["zzz"]},
-            n_buckets=8, literal_max=lm)
+            spark, path, {"hit": ["alpha"], "miss": ["zzz"]}, literal_max=lm)
         rows = mixed.collect()
         assert {r["qid"] for r in rows} == {"hit"}, lm
         assert {r["doc_id"] for r in rows} == {1, 2}, lm
     # all-miss batch on the broadcast-data strategy: empty, no crash
     nohit = retrieval.search_inverted_index_many(
-        spark, path, {"a": ["zzz"], "b": ["yyy"]}, n_buckets=8,
+        spark, path, {"a": ["zzz"], "b": ["yyy"]},
         literal_max=0)
     assert nohit.count() == 0
 
@@ -805,19 +787,18 @@ def test_filtered_serving_equals_slice_built_index(spark, tmp_path):
                                    n_buckets=8)
     for terms in (["alpha"], ["alpha", "beta"]):
         assert _scores(retrieval.search_inverted_index(
-            spark, path, terms, n_buckets=8, where=pred)) == _scores(
-            retrieval.search_inverted_index(spark, slice_path, terms,
-                                            n_buckets=8))
+            spark, path, terms, where=pred)) == _scores(
+            retrieval.search_inverted_index(spark, slice_path, terms))
 
     # the batched serve applies the same slice gate
     qsets = {"a": ["alpha"], "b": ["beta", "alpha"]}
     batched = retrieval.search_inverted_index_many(
-        spark, path, qsets, k=10, n_buckets=8, where=pred)
+        spark, path, qsets, k=10, where=pred)
     got = [tuple(r) for r in batched.collect()]
     want = []
     for qid in sorted(qsets):
         ranked = (retrieval.search_inverted_index(
-            spark, slice_path, qsets[qid], n_buckets=8)
+            spark, slice_path, qsets[qid])
             .select("doc_id", F.col("dl").cast("long").alias("dl"),
                     (F.round("bm25", 6) + F.lit(0.0)).alias("bm25"))
             .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
@@ -837,9 +818,8 @@ def test_filtered_serving_equals_slice_built_index(spark, tmp_path):
     retrieval.build_inverted_index(final, clean2, n_buckets=8)
     for terms in (["alpha"], ["gamma"]):
         assert _scores(retrieval.search_inverted_index(
-            spark, path, terms, n_buckets=8, where=pred)) == _scores(
-            retrieval.search_inverted_index(spark, clean2, terms,
-                                            n_buckets=8))
+            spark, path, terms, where=pred)) == _scores(
+            retrieval.search_inverted_index(spark, clean2, terms))
 
 
 def test_filtered_hybrid_equals_forget_then_serve(spark, tmp_path):
@@ -923,10 +903,10 @@ def test_text_many_large_q_path_equals_literal(spark, tmp_path):
              "h": ["beta"]}
     for where in (None, "doc_id % 3 != 1"):
         lit = retrieval.search_inverted_index_many(
-            spark, path, qsets, k=10, n_buckets=8, where=where,
+            spark, path, qsets, k=10, where=where,
             literal_max=1000)
         jnd = retrieval.search_inverted_index_many(
-            spark, path, qsets, k=10, n_buckets=8, where=where,
+            spark, path, qsets, k=10, where=where,
             literal_max=0)
         assert [(f.name, f.dataType) for f in lit.schema.fields] == \
                [(f.name, f.dataType) for f in jnd.schema.fields]
@@ -936,7 +916,7 @@ def test_text_many_large_q_path_equals_literal(spark, tmp_path):
     # constant plan: the joined strategy unions nothing per query and
     # pre-limits the window map-side
     plan = retrieval.search_inverted_index_many(
-        spark, path, qsets, k=10, n_buckets=8, literal_max=0) \
+        spark, path, qsets, k=10, literal_max=0) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     assert "WindowGroupLimit" in plan
@@ -954,24 +934,23 @@ def test_empty_terms_serve_empty_not_crash(spark, tmp_path):
 
     path = str(tmp_path / "idx")
     retrieval.build_inverted_index(docs, path, n_buckets=8)
-    one = retrieval.search_inverted_index(spark, path, [], n_buckets=8)
+    one = retrieval.search_inverted_index(spark, path, [])
     assert one.columns == ["doc_id", "dl", "bm25"]
     assert one.count() == 0
 
     # literal strategy with a term-less query in the batch: the empty
     # query drops (matching the joined strategy), the real one serves
     mixed = retrieval.search_inverted_index_many(
-        spark, path, {"hit": ["alpha"], "void": []},
-        n_buckets=8, literal_max=16)
+        spark, path, {"hit": ["alpha"], "void": []}, literal_max=16)
     rows = mixed.collect()
     assert {r["qid"] for r in rows} == {"hit"}
     assert {r["doc_id"] for r in rows} == {1, 2}
 
     # empty-union early return mirrors the non-empty schema, rank incl.
     full = retrieval.search_inverted_index_many(
-        spark, path, {"hit": ["alpha"]}, n_buckets=8, with_rank=True)
+        spark, path, {"hit": ["alpha"]}, with_rank=True)
     void = retrieval.search_inverted_index_many(
-        spark, path, {"void": []}, n_buckets=8, with_rank=True)
+        spark, path, {"void": []}, with_rank=True)
     assert void.columns == full.columns
     assert void.count() == 0
 
@@ -1082,7 +1061,7 @@ def test_bm25_and_mode_scan_and_index_agree(spark, tmp_path):
     path = str(tmp_path / "andidx")
     retrieval.build_inverted_index(docs, path, n_buckets=8)
     idx = _scores(retrieval.search_inverted_index(
-        spark, path, terms, n_buckets=8, require_all=True))
+        spark, path, terms, require_all=True))
     assert idx == and_scores
     # zero-match conjunction: empty, not a crash
     none = retrieval.bm25_scores(docs, ["alpha", "delta"],
@@ -1255,11 +1234,11 @@ def test_build_auto_sizes_buckets_from_vocabulary(spark, tmp_path):
 
 
 def test_lost_meta_sidecar_fails_loudly_on_wide_layout(spark, tmp_path):
-    """r17 review: the missing-meta fallback (bootstrap / pre-sidecar
-    legacy, both 64-bucket by construction) must not silently serve an
-    AUTO-SIZED layout whose sidecar was lost — hashing terms mod the
-    wrong bucket count returns incomplete results with no error.  A
-    tb id >= the assumed default proves the layout is wider: raise."""
+    """r17 review: an index whose sidecar was lost must not be served
+    under a guessed layout — hashing terms mod the wrong bucket count
+    returns incomplete results with no error.  Stores without a
+    sidecar are refused, naming build_inverted_index, whether the
+    layout is auto-sized above the 64-bucket default or not."""
     import os
 
     import pytest as _pytest
@@ -1274,19 +1253,19 @@ def test_lost_meta_sidecar_fails_loudly_on_wide_layout(spark, tmp_path):
     path = str(tmp_path / "wide")
     retrieval.build_inverted_index(big, path)  # auto-sizes above 64
     os.remove(os.path.join(path, retrieval.TEXT_META))
-    with _pytest.raises(ValueError, match="cannot be the assumed"):
+    with _pytest.raises(ValueError, match="build_inverted_index"):
         retrieval.search_inverted_index(spark, path, ["tok0y7"])
 
-    # a legacy 64-bucket index with no sidecar still serves (every
-    # tb id < 64 is consistent with the default assumption)
+    # a 64-bucket index with no sidecar is refused too: its tb ids
+    # would fit the default, but the generation could not be trusted
     small = spark.createDataFrame(
         [(i, "alpha beta gamma") for i in range(10)],
         "doc_id long, text string")
     p64 = str(tmp_path / "legacy")
     retrieval.build_inverted_index(small, p64, n_buckets=64)
     os.remove(os.path.join(p64, retrieval.TEXT_META))
-    assert retrieval.search_inverted_index(
-        spark, p64, ["alpha"]).count() == 10
+    with _pytest.raises(ValueError, match="build_inverted_index"):
+        retrieval.search_inverted_index(spark, p64, ["alpha"])
 
 
 def test_many_serve_matches_singles_on_auto_sized_layout(spark,

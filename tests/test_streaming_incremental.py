@@ -429,45 +429,6 @@ def test_stream_index_upsert_maintenance_rebuilds_once(spark, tmp_path):
     assert 3 in {r["vec_id"] for r in served.collect()}
 
 
-def test_maintenance_stats_backfills_unknown_baseline(spark, tmp_path):
-    """ADVICE r12 + r13: an index whose meta predates n_rows must not
-    pin growth at 0.0 forever — the baseline backfills from the first
-    observation and flags baseline_unknown — but a plain stats READ
-    is an observer and must NOT mutate the store; only the write-path
-    opt-in (persist_backfill=True, what maintain_index passes)
-    persists the backfill, and it reports whether the persist stuck."""
-    import json
-    import os
-
-    from msg_vector_search_spark.operators import ann_index
-
-    emb = readers.read_table(spark, SF, "embeddings")
-    path = str(tmp_path / "index")
-    ann_index.build_index(spark, emb.filter(F.col("vec_id") < 400),
-                          path, nlist=8, m=8, ncodes=16)
-    meta_path = os.path.join(path, ann_index.META_FILE)
-    meta = json.load(open(meta_path))
-    del meta["n_rows"]                       # simulate a legacy store
-    json.dump(meta, open(meta_path, "w"))
-
-    # pure read: signals present, store untouched, no persist key
-    sig = ann_index.index_maintenance_stats(spark, path)
-    assert sig["baseline_unknown"] and sig["growth"] == 0.0
-    assert "backfill_persisted" not in sig
-    assert "n_rows" not in json.load(open(meta_path))
-
-    # write-path opt-in: persists and says so
-    sig = ann_index.index_maintenance_stats(spark, path,
-                                            persist_backfill=True)
-    assert sig["baseline_unknown"] and sig["backfill_persisted"] is True
-    assert json.load(open(meta_path))["n_rows"] == sig["total_rows"]
-
-    ann_index.upsert_index(spark, path,
-                           emb.filter(F.col("vec_id") >= 400))
-    sig2 = ann_index.index_maintenance_stats(spark, path)
-    assert not sig2["baseline_unknown"] and sig2["growth"] > 0.0
-
-
 def test_stateful_sessionize_late_events_across_batches(spark, tmp_path):
     """r14 review: late events spanning micro-batches.  Batch 1 opens
     a session (10:00-10:30).  Batch 2 delivers (a) an event >gap
