@@ -429,6 +429,45 @@ def test_stream_index_upsert_maintenance_rebuilds_once(spark, tmp_path):
     assert 3 in {r["vec_id"] for r in served.collect()}
 
 
+def test_maintenance_stats_backfills_unknown_baseline(spark, tmp_path):
+    """An index whose meta predates ``n_rows`` has no growth baseline.
+    The stats read no longer backfills one: it and maintain_index
+    refuse the index with a message naming rebuild_index, leaving the
+    meta as it was; rebuild_index records the baseline, after which
+    growth reads 0.0 and rises with an upsert."""
+    import json
+    import os
+
+    from msg_vector_search_spark.operators import ann_index
+
+    emb = readers.read_table(spark, SF, "embeddings")
+    path = str(tmp_path / "index")
+    ann_index.build_index(spark, emb.filter(F.col("vec_id") < 400),
+                          path, nlist=8, m=8, ncodes=16)
+    meta_path = os.path.join(path, ann_index.META_FILE)
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["n_rows"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+    for verb in (lambda: ann_index.index_maintenance_stats(spark, path),
+                 lambda: ann_index.maintain_index(spark, path, force=True)):
+        with pytest.raises(ValueError, match="rebuild_index"):
+            verb()
+    with open(meta_path) as f:
+        assert json.load(f) == meta
+
+    ann_index.rebuild_index(spark, path)
+    sig = ann_index.index_maintenance_stats(spark, path)
+    assert sig["growth"] == 0.0
+    assert ann_index.read_meta(path)["n_rows"] == sig["total_rows"]
+
+    ann_index.upsert_index(spark, path,
+                           emb.filter(F.col("vec_id") >= 400))
+    assert ann_index.index_maintenance_stats(spark, path)["growth"] > 0.0
+
+
 def test_stateful_sessionize_late_events_across_batches(spark, tmp_path):
     """r14 review: late events spanning micro-batches.  Batch 1 opens
     a session (10:00-10:30).  Batch 2 delivers (a) an event >gap
