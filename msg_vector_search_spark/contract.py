@@ -4468,10 +4468,11 @@ def hybrid_serve_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     two batched index serves: three (term-set, query-vector) pairs
     answered with ONE pruned postings read (search_inverted_index_many)
     and ONE pruned code + vector scan (search_index_many), each leg
-    ranked by a qid-partitioned window over its 50-row-per-query
-    output, fused by reciprocal-rank fusion over two (Q x 50)-row
-    frames, per-qid top-10.  Q hybrid queries cost two index reads
-    total; everything after the legs is bounded by Q x leg_k.  The
+    ranked by its own qid-partitioned top-50 window, both legs
+    collected (at most Q x 50 rows each) and fused by reciprocal-rank
+    fusion on the driver, per-qid top-10 — the row is a local
+    relation.  Q hybrid queries cost two index reads total and no
+    Spark work after the legs.  The
     oracle composes the proven per-leg constructions — scan-side BM25
     (the index-served path is bit-identical) and the shared-candidate
     seed-IVFPQ replay — and fuses them with the same 6dp-grid RRF."""
@@ -4504,9 +4505,10 @@ def hybrid_serve_many_large(spark: SparkSession,
     """Batched hybrid serving with BOTH legs on the LARGE-Q strategy
     (forced with literal_max=0): the keyword leg's term sets and the
     vector leg's ADC tables travel as broadcast DATA through
-    constant-size plans, ranks fuse exactly as the literal-strategy
-    row — fusion is strategy-agnostic because each leg's scores are
-    bit-identical either way (pinned per leg in tests/).  Six queries
+    constant-size plans, ranks fuse on the driver exactly as in the
+    literal-strategy row — fusion is strategy-agnostic because each
+    leg's scores are bit-identical either way (pinned per leg in
+    tests/).  Six queries
     so the driver value-verifies the strategy the serving tier
     actually uses at load (literal_max=4 default); the oracle is the
     same per-leg composition at Q=6."""

@@ -282,8 +282,9 @@ class Engine:
         embeds once driver-side for the ANN leg, tokenizes (or takes
         explicit *terms*) for the BM25 leg, both legs serve from their
         persisted indexes in one pass (``retrieval.hybrid_serve_many``
-        at Q=1 — two index reads, each leg k-bounded), and
-        reciprocal-rank fusion ranks the union.  Extension verb — the
+        at Q=1 — two index reads, each leg k-bounded and collected),
+        and reciprocal-rank fusion ranks the union on the driver
+        (16 Spark jobs per warm call at sf0.001).  Extension verb — the
         reference serves vectors only; a production retrieval tier
         almost always fuses keyword and vector legs.  Requires both
         index_dir and text_index_dir (built on demand from the store).
@@ -304,16 +305,12 @@ class Engine:
                  "qvec": embed.embed_query_vector(query)}},
             leg_k=max(limit, 50), k=limit,
             nprobe=self.nprobe, shortlist=self.shortlist)
-        # the fusion's output id column is always named doc_id
-        # (hybrid_serve_many aliases both legs' recorded id to it);
-        # surface it under the engine's key name
-        rows = [dict(r.asDict(), message_id=r["doc_id"])
-                for r in fused.collect()]
+        # the fusion's rows arrive ranked (rrf desc, id asc) under the
+        # id name doc_id; surface it under the engine's key name
+        results = [{"rank_kw": r["rank_kw"], "rank_vec": r["rank_vec"],
+                    "rrf": r["rrf"], "message_id": r["doc_id"]}
+                   for r in fused.collect()]
         ms = round((time.time() - t0) * 1000, 1)
-        results = [{k: v for k, v in d.items()
-                    if k not in ("qid", "doc_id")}
-                   for d in sorted(rows, key=lambda d: (-d["rrf"],
-                                                        d["message_id"]))]
         return {"status": "success", "results": results,
                 "metadata": {"total_results": len(results),
                              "query": query, "terms": terms,

@@ -200,19 +200,24 @@ def load_centroids(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_centroids_broadcastable(spark: SparkSession, path: str) -> DataFrame:
-    """The centroid sidecar as a DataFrame whose broadcast costs NO
-    scan job: driver-side pyarrow rows (nlist-bounded, the same bytes
-    :func:`load_centroid_rows` serves the probes) wrapped in a local
-    relation carrying the sidecar's exact Spark schema — broadcasting
-    a local relation is driver-side, so a maintenance batch no longer
-    pays a cluster job just to re-read KB-sized, driver-destined
-    metadata (guide §5; each streaming micro-batch paid one).  The
-    schema is the one :func:`load_centroids` reads with — recorded in
-    the sidecar's footer by its Spark writer, so typing the frame
-    costs no job — and column types, and therefore every downstream
-    expression, are identical to the plain read; parquet float32
-    values round-trip exactly through Python floats.  Remote URIs
-    keep the plain read."""
+    """The centroid sidecar as a DataFrame built from driver-side
+    pyarrow rows (nlist-bounded, the same bytes
+    :func:`load_centroid_rows` serves the probes) with the sidecar's
+    exact Spark schema — the one :func:`load_centroids` reads with,
+    recorded in the sidecar's footer by its Spark writer, so typing
+    the frame costs no job — and column types, and therefore every
+    downstream expression, are identical to the plain read; parquet
+    float32 values round-trip exactly through Python floats.  Remote
+    URIs keep the plain read.
+
+    The ``createDataFrame(list)`` frame is RDD-backed (``Scan
+    ExistingRDD``), not a local relation, and it saves no job over
+    :func:`load_centroids`.  Measured at sf0.001 (nlist 4, warm, by
+    ``numTotalJobs``): collecting either frame runs 1 job; a
+    broadcast join over either runs 2, one more than the same query
+    without the join; ``ivf.assign_cells`` over either runs 4.  A
+    frame built from a pyarrow Table is a ``LocalTableScan`` whose
+    collect runs 0 jobs, but its broadcast join still runs 2."""
     sub = _subdir(path, "centroids")
     if fs.is_remote(sub):
         return load_centroids(spark, path)

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -45,6 +46,7 @@ from ..sources import sinks
 
 K1 = 1.2
 B = 0.75
+_GRID6 = Decimal("0.000001")
 
 
 def _tf(tok_col, term: str):
@@ -810,10 +812,10 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     :func:`search_inverted_index` calls pay Q postings reads, Q doclen
     scans and Q scheduler round trips for work whose I/O is nearly
     shared.  Here the union of every query's terms prunes the postings
-    ONCE (tb partition filter + term filter, checkpointed at the
-    matching-postings working set), the doclen sidecar contributes one
-    corpus-stats row and one matching-docs dl join, and each query's
-    scoring is a pure expression subplan over those checkpoints —
+    ONCE (tb partition filter + term filter), the doclen sidecar
+    contributes one corpus-stats row and one matching-docs dl join,
+    and each query's scoring is a pure expression subplan over that
+    shared working set —
     built by the same ``_bm25_score_col`` tree as the single-query
     path, from the same integer inputs, so per-query scores are
     bit-identical to Q separate calls.
@@ -839,11 +841,17 @@ def search_inverted_index_many(spark, path: str, queries: dict,
       to per-UNION-term tf columns in a SINGLE aggregation
       (O(matching docs) rows — the index-serving working set), one
       doclen pass for corpus stats + the matching-docs dl join, then
-      each query is a PURE PROJECTION over that checkpoint.  Zero
+      each query is a PURE PROJECTION over that working set.  Zero
       per-query aggregations or joins, but the pivot width (union
       terms), the plan text (Q unioned projection subplans) and the
-      per-row work (every query's subplan scans every checkpointed
-      doc) all grow O(Q).
+      per-row work (every query's subplan scans every matching doc)
+      all grow O(Q).  At Q >= 2 the pivot and the stats row are
+      eagerly checkpointed so the Q subplans share them, and the
+      k x Q result is pinned before those checkpoints are released;
+      at Q = 1 there is nothing to share and the result is a lazy
+      plan (measured at sf0.001: 9 jobs collected, as many as
+      :func:`search_inverted_index` plus its ordered limit, against
+      14 with the checkpoints).
     - Q > literal_max: the term sets move from the PLAN into DATA —
       one broadcast (qid, term, qpos, df) frame replicates each
       pruned posting to exactly the queries containing its term
@@ -860,9 +868,9 @@ def search_inverted_index_many(spark, path: str, queries: dict,
 
     Both strategies end in the same qid-partitioned row_number window,
     which Spark plans as a WindowGroupLimit — partial mode keeps only
-    top-k per qid per map partition before the exchange.  Checkpoints
-    are released before returning; only the k x Q result rows stay
-    pinned."""
+    top-k per qid per map partition before the exchange.  The joined
+    strategy and a one-query batch return a live plan; a literal batch
+    of Q >= 2 returns its pinned k x Q rows."""
     from pyspark.sql import Window
 
     from .dedup import _cc_free
@@ -908,14 +916,12 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     ckpts: list = []
     if len(qitems) <= literal_max:
         # ONE aggregation pivots every union term's tf per matching
-        # doc; the dl join happens once; every query reads this
-        # checkpoint
+        # doc; the dl join happens once; every query reads this frame
         wtf_all = (postings.groupBy(id_col).agg(*[
             F.coalesce(F.sum(F.when(F.col("term") == t, F.col("tf"))),
                        F.lit(0)).alias(f"_utf_{i}")
             for i, t in enumerate(union_terms)])
-            .join(doclen.select(id_col, "dl"), id_col)
-            .localCheckpoint(eager=True))
+            .join(doclen.select(id_col, "dl"), id_col))
         # per-union-term df + corpus stats: ONE broadcastable row
         stats_all = (doclen.agg(
             F.count("*").alias("_n"),
@@ -923,9 +929,14 @@ def search_inverted_index_many(spark, path: str, queries: dict,
             .crossJoin(postings.agg(*[
                 F.coalesce(F.sum(F.when(F.col("term") == t, F.lit(1))),
                            F.lit(0)).cast("long").alias(f"_udf_{i}")
-                for i, t in enumerate(union_terms)]))
-            .localCheckpoint(eager=True))
-        ckpts = [wtf_all, stats_all]
+                for i, t in enumerate(union_terms)])))
+        if len(qitems) > 1:
+            # the checkpoints let the Q unioned subplans share one
+            # pivot and one stats row; a single query has nothing to
+            # share, and checkpointing it costs jobs (14 vs 9 collected)
+            wtf_all = wtf_all.localCheckpoint(eager=True)
+            stats_all = stats_all.localCheckpoint(eager=True)
+            ckpts = [wtf_all, stats_all]
 
         outs = []
         base = wtf_all.crossJoin(F.broadcast(stats_all))
@@ -1028,6 +1039,19 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     return result
 
 
+def _round6_half_up(x: float) -> float:
+    """Spark's ``F.round(x, 6) + 0.0`` on the driver: Spark rounds the
+    JVM's decimal rendering of the double HALF_UP (``BigDecimal``), not
+    the binary value, so an exact 7dp tie such as 1/128 = 0.0078125
+    goes up here as it does there (``round()`` would go to even, and
+    ``similarity._np_round6`` rounds the binary value).  Python's
+    shortest repr stands in for the JVM's ``Double.toString``; Java 17
+    does not always render the shortest repr, so the twin is pinned
+    against Spark over every RRF sum of two ranks in 1..200
+    (tests/test_retrieval.py)."""
+    return float(Decimal(repr(x)).quantize(_GRID6, ROUND_HALF_UP)) + 0.0
+
+
 def hybrid_serve_many(spark, text_path: str, ann_path: str,
                       queries: dict, leg_k: int = 50, k: int = 10,
                       k_rrf: int = 60, nprobe: int = 4,
@@ -1040,15 +1064,20 @@ def hybrid_serve_many(spark, text_path: str, ann_path: str,
     index.  The keyword leg is :func:`search_inverted_index_many`
     (one pruned postings read for all queries), the vector leg is
     ``ann_index.search_index_many`` (one pruned code scan + one
-    vector scan), each leg's per-query ranks come from a
-    qid-partitioned window over its k-bounded output, and
-    reciprocal-rank fusion joins two (Q x leg_k)-row frames — so Q
-    hybrid queries cost TWO index reads total, with every stage after
-    the legs bounded by Q x leg_k regardless of corpus size.
+    vector scan), and each leg's per-query rank is its own top-k
+    window's row_number.  Both legs are collected concurrently —
+    at most Q x leg_k rows each — and reciprocal-rank fusion runs on
+    the driver, so Q hybrid queries cost TWO index reads total and no
+    Spark work after the legs.
 
     *queries* maps an integer ``qid -> {"terms": [...], "qvec":
     [...]}``.  Returns ``(qid, doc_id, rank_kw, rank_vec, rrf)``,
-    top-*k* per query by (rrf desc, doc_id), rrf on the 6dp grid.
+    top-*k* per query by (rrf desc, doc_id), ordered by (qid, rrf
+    desc, doc_id): rrf = 1/(k_rrf + rank_kw) + 1/(k_rrf + rank_vec),
+    an absent leg adding 0.0, rounded as Spark's ``F.round(_, 6)``
+    rounds (:func:`_round6_half_up`).  The frame is a local relation
+    built from an Arrow table, so collecting it launches no job.  Both
+    indexes must record one id type.
 
     *where_text* / *where_ann* forward to each leg's slice gate
     (predicates over that index's recorded ``meta_cols``), making the
@@ -1059,49 +1088,58 @@ def hybrid_serve_many(spark, text_path: str, ann_path: str,
     per-query subplans vs the constant-plan broadcast-data path for
     large Q — see each leg's docstring); either strategy yields
     bit-identical leg scores, so fusion is strategy-agnostic."""
-    from pyspark.sql import Window
+    import pyarrow as pa
+    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                                   StructField, StructType)
 
     from . import ann_index
 
     kw_q = {qid: spec["terms"] for qid, spec in queries.items()}
     vec_q = {qid: spec["qvec"] for qid, spec in queries.items()}
-    # build the two legs CONCURRENTLY: each leg's construction runs
-    # eager driver-side steps (the text df-map collect + literal-path
-    # checkpoints; the ANN centroid collect) that would otherwise
-    # serialize — overlapping them trims the batch tail by about the
-    # smaller leg's build time (measured r12: ~1 s at Q=250, sf0.1)
-    kw, vec = run_concurrently(
-        lambda: search_inverted_index_many(
+
+    def collected(leg: DataFrame):
+        return leg.schema[1], leg.collect()
+
+    # the legs run CONCURRENTLY: each leg's build and collect overlap
+    # the other's (measured r12: ~1 s off the batch tail at Q=250,
+    # sf0.1, when only the builds overlapped)
+    (kw_id, kw_rows), (vec_id, vec_rows) = run_concurrently(
+        lambda: collected(search_inverted_index_many(
             spark, text_path, kw_q, k=leg_k, where=where_text,
-            literal_max=literal_max, with_rank=True),
-        lambda: ann_index.search_index_many(
+            literal_max=literal_max, with_rank=True)),
+        lambda: collected(ann_index.search_index_many(
             spark, ann_path, vec_q, k=leg_k, nprobe=nprobe,
             shortlist=shortlist, where=where_ann,
-            literal_max=literal_max, with_rank=True))
-    id_col = kw.columns[1]  # the index's id column (qid is first)
-    # each leg's rank is its OWN top-k window's row_number
-    # (with_rank) — same (score desc, id asc) order the re-rank
-    # windows here used to compute, so fusion is unchanged math with
-    # two fewer window exchanges
-    kw_rank = kw.select(F.col("qid").cast("long").alias("qid"),
-                        F.col(id_col).alias("_id"),
-                        F.col("rank").alias("rank_kw"))
-    vec_id_col = vec.columns[1]  # the ANN index's recorded id column
-    vec_rank = vec.select("qid", F.col(vec_id_col).alias("_id"),
-                          F.col("rank").alias("rank_vec"))
-    fused = kw_rank.join(vec_rank, ["qid", "_id"], "full_outer")
-    rrf = (F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_kw")),
-                      F.lit(0.0))
-           + F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_vec")),
-                        F.lit(0.0)))
-    w_out = Window.partitionBy("qid").orderBy(
-        F.col("rrf").desc(), F.col("_id").asc())
-    return (fused.withColumn("rrf", F.round(rrf, 6) + F.lit(0.0))
-            .withColumn("_rn", F.row_number().over(w_out))
-            .filter(F.col("_rn") <= k)
-            .select("qid", F.col("_id").alias("doc_id"),
-                    "rank_kw", "rank_vec", "rrf")
-            .orderBy("qid", F.col("rrf").desc(), F.col("doc_id").asc()))
+            literal_max=literal_max, with_rank=True)))
+    if kw_id.dataType != vec_id.dataType:
+        raise ValueError(
+            f"hybrid fusion needs one id type: the text index's "
+            f"{kw_id.name} is {kw_id.dataType.simpleString()}, the ANN "
+            f"index's {vec_id.name} is {vec_id.dataType.simpleString()}")
+    ranks: dict = {}   # (qid, id) -> [rank_kw, rank_vec]
+    for leg, rows, id_col in ((0, kw_rows, kw_id.name),
+                              (1, vec_rows, vec_id.name)):
+        for r in rows:
+            ranks.setdefault((int(r["qid"]), r[id_col]),
+                             [None, None])[leg] = r["rank"]
+    by_qid: dict = {}
+    for (qid, doc), (rk, rv) in ranks.items():
+        rrf = ((0.0 if rk is None else 1.0 / (k_rrf + rk))
+               + (0.0 if rv is None else 1.0 / (k_rrf + rv)))
+        by_qid.setdefault(qid, []).append(
+            (qid, doc, rk, rv, _round6_half_up(rrf)))
+    out = [row for qid in sorted(by_qid)
+           for row in sorted(by_qid[qid], key=lambda t: (-t[4], t[1]))[:k]]
+    schema = StructType([
+        StructField("qid", LongType()),
+        StructField("doc_id", kw_id.dataType),
+        StructField("rank_kw", IntegerType()),
+        StructField("rank_vec", IntegerType()),
+        StructField("rrf", DoubleType())])
+    cols = list(zip(*out)) or [()] * len(schema.fields)
+    return spark.createDataFrame(
+        pa.table({f.name: list(c) for f, c in zip(schema.fields, cols)}),
+        schema)
 
 
 def duck_bm25(terms: list[str], duck_tokens: str,

@@ -748,7 +748,7 @@ def test_warm_serve_job_counts(spark, tmp_path):
     assert warm_jobs(lambda: eng.search("k 43", limit=5,
                                         threshold=-1.0)) == 6
     assert warm_jobs(lambda: eng.search_text(["k", "43"], limit=5)) == 9
-    assert warm_jobs(lambda: eng.search_hybrid("k 43", limit=5)) == 23
+    assert warm_jobs(lambda: eng.search_hybrid("k 43", limit=5)) == 16
     assert warm_jobs(lambda: eng.search_many(
         {0: "k 43", 1: "k 87"}, limit=5, threshold=-1.0)) == 6
     # the pins count matching serves, not empty ones

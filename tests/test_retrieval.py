@@ -660,47 +660,79 @@ def test_hybrid_serve_many_batch_independence(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_hybrid_fusion_reuses_leg_ranks(spark, tmp_path):
-    """The r12 tail fix (VERDICT r11 item 4): RRF fusion consumes each
-    leg's OWN top-k window row_number (with_rank=True) instead of
-    re-windowing the k-bounded leg outputs.  Pins (a) the legs emit a
-    ``rank`` column equal to the (score desc, id asc) re-rank an
-    external window would compute, and (b) hybrid's plan spends
-    exactly ONE row_number beyond what the two legs already pay — the
-    fusion window over rrf — so fusion adds no per-leg exchanges."""
+def _hybrid_indexes(spark, tmp_path, id_type: str = "long"):
+    """A 40-doc text index and a 40-vector ANN index whose ids are cast
+    to *id_type*, plus two (terms, qvec) queries keyed 0 and 3."""
     from msg_vector_search_spark.operators import ann_index
 
     rows = [(i, ("alpha beta " if i % 2 else "gamma delta ") + f"doc{i}")
             for i in range(40)]
-    tpath = str(tmp_path / "text")
-    retrieval.build_inverted_index(_mini_corpus(spark, rows), tpath,
-                                   n_buckets=8)
+    tpath = str(tmp_path / f"text_{id_type}")
+    retrieval.build_inverted_index(
+        _mini_corpus(spark, rows)
+        .withColumn("doc_id", F.col("doc_id").cast(id_type)),
+        tpath, n_buckets=8)
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet").limit(40).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double"))
         .alias("embedding"))
-    apath = str(tmp_path / "ann")
-    ann_index.build_index(spark, emb, apath, nlist=4, m=8, ncodes=16)
+    apath = str(tmp_path / f"ann_{id_type}")
+    ann_index.build_index(
+        spark, emb.withColumn("vec_id", F.col("vec_id").cast(id_type)),
+        apath, nlist=4, m=8, ncodes=16)
     qv = {r["vec_id"]: [float(x) for x in r["embedding"]]
           for r in emb.filter(F.col("vec_id").isin([0, 3])).collect()}
     queries = {0: {"terms": ["alpha", "beta"], "qvec": qv[0]},
                3: {"terms": ["gamma"], "qvec": qv[3]}}
+    return tpath, apath, queries
+
+
+def _job_counter(spark):
+    """jobs(verb): the Spark jobs one WARM call of *verb* launches."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(verb) -> int:
+        verb()
+        before = sched.numTotalJobs()
+        verb()
+        return sched.numTotalJobs() - before
+
+    return jobs
+
+
+def test_hybrid_fusion_reuses_leg_ranks(spark, tmp_path):
+    """RRF fusion consumes each leg's OWN top-k window row_number
+    (with_rank=True) instead of re-windowing the k-bounded leg
+    outputs, and fuses on the driver.  Pins (a) the legs emit a
+    ``rank`` column equal to the (score desc, id asc) re-rank an
+    external window would compute, and (b) hybrid_serve_many launches
+    no job beyond its two leg collects, and its result is a local
+    relation whose collect launches none."""
+    from msg_vector_search_spark.operators import ann_index
+
+    tpath, apath, queries = _hybrid_indexes(spark, tmp_path)
     kw_q = {q: s["terms"] for q, s in queries.items()}
     vec_q = {q: s["qvec"] for q, s in queries.items()}
 
     # (a) each leg's with_rank column == an external re-rank window
-    kw = retrieval.search_inverted_index_many(
-        spark, tpath, kw_q, k=20, literal_max=0, with_rank=True)
+    def kw_leg():
+        return retrieval.search_inverted_index_many(
+            spark, tpath, kw_q, k=20, literal_max=0, with_rank=True)
+
+    def vec_leg():
+        return ann_index.search_index_many(
+            spark, apath, vec_q, k=20, nprobe=2, shortlist=20,
+            literal_max=0, with_rank=True)
+
+    kw = kw_leg()
     w_kw = Window.partitionBy("qid").orderBy(
         F.col("bm25").desc(), F.col("doc_id").asc())
     ext = {(r["qid"], r["doc_id"]): r["_r"] for r in
            kw.withColumn("_r", F.row_number().over(w_kw)).collect()}
     assert all(r["rank"] == ext[(r["qid"], r["doc_id"])]
                for r in kw.collect())
-    vec = ann_index.search_index_many(
-        spark, apath, vec_q, k=20, nprobe=2, shortlist=20,
-        literal_max=0, with_rank=True)
+    vec = vec_leg()
     w_v = Window.partitionBy("qid").orderBy(
         F.col("sim").desc(), F.col("vec_id").asc())
     extv = {(r["qid"], r["vec_id"]): r["_r"] for r in
@@ -708,16 +740,166 @@ def test_hybrid_fusion_reuses_leg_ranks(spark, tmp_path):
     assert all(r["rank"] == extv[(r["qid"], r["vec_id"])]
                for r in vec.collect())
 
-    # (b) hybrid pays exactly one Window operator more than the two
-    # legs already contain: the fusion window over rrf
-    def n_windows(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return plan.count("Window [")
+    # (b) the fusion itself costs no Spark job
+    jobs = _job_counter(spark)
 
-    hybrid = retrieval.hybrid_serve_many(
-        spark, tpath, apath, queries, leg_k=20, k=5,
-        nprobe=2, shortlist=20, literal_max=0)
-    assert n_windows(hybrid) == n_windows(kw) + n_windows(vec) + 1
+    def hybrid():
+        return retrieval.hybrid_serve_many(
+            spark, tpath, apath, queries, leg_k=20, k=5,
+            nprobe=2, shortlist=20, literal_max=0)
+
+    legs = jobs(lambda: (kw_leg().collect(), vec_leg().collect()))
+    assert legs > 0
+    assert jobs(lambda: hybrid().collect()) == legs
+    fused = hybrid()
+    assert "LocalTableScan" in \
+        fused._jdf.queryExecution().executedPlan().toString()
+    assert jobs(fused.collect) == 0
+
+
+def test_text_many_single_query_costs_single_serve_jobs(spark, tmp_path):
+    """A one-query batch has no subplans to share, so the literal
+    strategy takes no checkpoint: collecting it launches as many jobs
+    as search_inverted_index plus its ordered limit for the same
+    terms, on an index with a tombstone.  Matching terms only: a serve
+    whose terms have no postings can launch one AQE job more or less."""
+    rows = [(i, ("alpha beta " if i % 2 else "alpha gamma ") + f"doc{i}")
+            for i in range(30)]
+    path = str(tmp_path / "idx")
+    retrieval.build_inverted_index(_mini_corpus(spark, rows), path,
+                                   n_buckets=8)
+    retrieval.delete_inverted_docs(
+        _mini_corpus(spark, [(5, "x")]).select("doc_id"), path)
+    terms = ["alpha", "beta"]
+    jobs = _job_counter(spark)
+
+    def many():
+        return retrieval.search_inverted_index_many(
+            spark, path, {0: terms}, k=10).collect()
+
+    def single():
+        return (retrieval.search_inverted_index(spark, path, terms)
+                .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+                .limit(10).collect())
+
+    assert len(many()) == 10
+    assert jobs(many) == jobs(single)
+
+
+def _spark_rrf(kw, vec, k: int, k_rrf: int = 60):
+    """The fusion hybrid_serve_many ran in Spark before it fused on the
+    driver: a full-outer join of the two legs' ranks, rrf rounded by
+    F.round(_, 6) + 0.0, a per-qid top-k window and an orderBy."""
+    kw_rank = kw.select(F.col("qid").cast("long").alias("qid"),
+                        F.col(kw.columns[1]).alias("_id"),
+                        F.col("rank").alias("rank_kw"))
+    vec_rank = vec.select("qid", F.col(vec.columns[1]).alias("_id"),
+                          F.col("rank").alias("rank_vec"))
+    rrf = (F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_kw")),
+                      F.lit(0.0))
+           + F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_vec")),
+                        F.lit(0.0)))
+    w = Window.partitionBy("qid").orderBy(
+        F.col("rrf").desc(), F.col("_id").asc())
+    return (kw_rank.join(vec_rank, ["qid", "_id"], "full_outer")
+            .withColumn("rrf", F.round(rrf, 6) + F.lit(0.0))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+            .select("qid", F.col("_id").alias("doc_id"),
+                    "rank_kw", "rank_vec", "rrf")
+            .orderBy("qid", F.col("rrf").desc(), F.col("doc_id").asc()))
+
+
+def test_driver_rrf_round_matches_spark_round(spark):
+    """The driver fusion's rounding twin against Spark's
+    ``F.round(1/(60+a) + 1/(60+b), 6) + 0.0`` for every rank pair in
+    1..200, rank 0 standing for an absent leg, in ONE Spark job.
+    Spark rounds the JVM's Double.toString HALF_UP, and Java 17 does
+    not always render the shortest repr, so the twin is pinned over
+    the whole domain rather than assumed; the domain holds exact 7dp
+    ties (1/128 = 0.0078125), on which round()'s half-to-even
+    differs."""
+    n = 201
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def inv(c):
+        return F.coalesce(
+            F.lit(1.0) / (F.lit(60) + F.when(c > 0, c)), F.lit(0.0))
+
+    pairs = spark.range(n * n).select(
+        (F.col("id") / n).cast("int").alias("a"),
+        (F.col("id") % n).cast("int").alias("b"))
+    before = sched.numTotalJobs()
+    rows = pairs.select(
+        "a", "b",
+        (F.round(inv(F.col("a")) + inv(F.col("b")), 6) + F.lit(0.0))
+        .alias("rrf")).collect()
+    assert sched.numTotalJobs() - before == 1
+    assert len(rows) == n * n
+    half_even = 0
+    for r in rows:
+        a, b = r["a"], r["b"]
+        x = ((0.0 if a == 0 else 1.0 / (60 + a))
+             + (0.0 if b == 0 else 1.0 / (60 + b)))
+        assert retrieval._round6_half_up(x) == r["rrf"], (a, b)
+        half_even += round(x, 6) != r["rrf"]
+    assert half_even > 0
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_driver_rrf_fusion_matches_spark_fusion(spark, tmp_path, id_type):
+    """hybrid_serve_many's driver fusion returns the rows and schema
+    of the Spark fusion over the same two legs: docs served by one leg
+    only, rrf ties broken by doc_id, k larger than the fused set,
+    a term-less query and term-less or empty batches, with long and
+    string ids, and with Arrow switched off as in a session that only
+    tune_session set up."""
+    from msg_vector_search_spark.operators import ann_index
+
+    tpath, apath, queries = _hybrid_indexes(spark, tmp_path, id_type)
+    termless = {5: {"terms": [], "qvec": queries[0]["qvec"]}}
+
+    def check(qs, k):
+        got = retrieval.hybrid_serve_many(
+            spark, tpath, apath, qs, leg_k=20, k=k, nprobe=2,
+            shortlist=20)
+        kw = retrieval.search_inverted_index_many(
+            spark, tpath, {q: s["terms"] for q, s in qs.items()}, k=20,
+            with_rank=True)
+        vec = ann_index.search_index_many(
+            spark, apath, {q: s["qvec"] for q, s in qs.items()}, k=20,
+            nprobe=2, shortlist=20, with_rank=True)
+        want = _spark_rrf(kw, vec, k)
+        assert got.schema == want.schema
+        rows = got.collect()
+        assert rows == want.collect()
+        return rows
+
+    batch = {**queries, **termless}
+    rows = check(batch, 5)
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["qid"], []).append(r)
+    assert sorted(by_q) == [0, 3, 5]
+    assert all(r["rank_kw"] is None for r in by_q[5])
+    full = check(batch, 100)
+    assert any(r["rank_kw"] is None for r in full)
+    assert any(r["rank_vec"] is None for r in full)
+    assert any(None not in (r["rank_kw"], r["rank_vec"]) for r in full)
+    assert any(a["qid"] == b["qid"] and a["rrf"] == b["rrf"]
+               for a, b in zip(full, full[1:]))
+    assert all(len([r for r in full if r["qid"] == q]) < 100
+               for q in (0, 3, 5))
+    assert check(termless, 5)
+    assert check({}, 5) == []
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert check(batch, 5) == rows
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_text_upsert_rerun_recovers_half_appended_batch(spark, tmp_path):

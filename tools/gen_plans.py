@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -298,16 +299,21 @@ SHOW = [
      "size."),
     ("text_search_many",
      "Batched multi-query BM25: the union of all query terms prunes "
-     "the postings once (checkpointed working set), doclen yields one "
-     "stats row + one matching-docs join, each query's scoring is an "
-     "expression-only subplan over the shared checkpoints, and the "
-     "qid-partitioned window ranks a k-bounded union."),
+     "the postings once, doclen yields one stats row + one "
+     "matching-docs join, and with Q >= 2 queries both are "
+     "checkpointed so each query's scoring is an expression-only "
+     "subplan over the shared checkpoints; the qid-partitioned window "
+     "ranks a k-bounded union, pinned before the checkpoints are "
+     "released (a one-query batch takes no checkpoint and stays one "
+     "lazy plan)."),
     ("hybrid_serve_many",
      "Batched hybrid capstone: Q (terms, vector) pairs cost TWO index "
      "reads total — the batched BM25 serve and the batched IVFPQ "
-     "serve feed qid-partitioned rank windows over 50-row-per-query "
-     "leg outputs, and the RRF fusion join + per-qid top-10 run on "
-     "(Q x 50)-row frames regardless of corpus size."),
+     "serve each rank with their own qid-partitioned top-50 window, "
+     "both legs are collected concurrently (the collect stages, at "
+     "most Q x 50 rows each), and the RRF fusion + per-qid top-10 run "
+     "on the driver, so the final plan is a LocalTableScan of the "
+     "fused rows."),
     ("ann_ivfpq_filtered_materialized",
      "Metadata-filtered ANN serve: the where predicate PRE-filters the "
      "cell-pruned code scan (pushed into the explicit-dirs read), "
@@ -460,7 +466,18 @@ SHOW = [
 
 
 def simplify(plan: str, max_expr: int = 160) -> str:
-    """Truncate giant embedded literal arrays/lambdas for readability."""
+    """Truncate giant embedded literal arrays/lambdas for readability,
+    and write what changes between two runs of the same code in one
+    fixed form: temp-dir names become ``<tmpdir>``, and expression and
+    plan ids are renumbered by first appearance (concurrent legs draw
+    ids from one JVM counter in thread order)."""
+    plan = re.sub(re.escape(tempfile.gettempdir()) + r"/[\w-]+",
+                  "<tmpdir>", plan)
+    for pat in (r"#(\d+)", r"plan_id=(\d+)"):
+        ids: dict = {}
+        plan = re.sub(pat, lambda m: m.group(0).replace(
+            m.group(1), str(ids.setdefault(m.group(1), len(ids) + 1))),
+            plan)
     plan = re.sub(r"\[([-0-9.Ee,]{120,})\]", "[<literal vector>]", plan)
     out = []
     for line in plan.splitlines():
@@ -468,22 +485,28 @@ def simplify(plan: str, max_expr: int = 160) -> str:
     return "\n".join(out)
 
 
-class _CheckpointTracer:
+class _StageTracer:
     """VERDICT r13 item 3: a final plan that reads localCheckpoint
-    output pins as a bare ``Scan ExistingRDD`` — the whole claimed
-    pipeline hides behind the checkpoint.  While active, this wraps
-    ``DataFrame.localCheckpoint`` (TOOLING-ONLY monkeypatch — the
-    package's serving code is untouched) and records each frame's
-    executed plan at the moment it is checkpointed, so PLANS.md can
-    show every pre-checkpoint stage next to the final plan."""
+    output pins as a bare ``Scan ExistingRDD``, and one built from
+    collected rows as a ``LocalTableScan`` — the whole claimed
+    pipeline hides behind the checkpoint or the collect.  While
+    active, this wraps ``DataFrame.localCheckpoint`` and
+    ``DataFrame.collect`` (TOOLING-ONLY monkeypatch — the package's
+    serving code is untouched) and records each frame's executed plan
+    at the moment it is checkpointed or collected, so PLANS.md can
+    show every such stage next to the final plan.  Concurrent legs
+    record in thread order, so :meth:`stages` numbers the stages
+    sorted by label and simplified plan."""
+
+    METHODS = ("collect", "localCheckpoint")
 
     def __init__(self):
-        self.stages: list[tuple[str, str]] = []
-        self._real = None
+        self._calls: list[tuple[str, str]] = []
+        self._real: dict = {}
 
     def __enter__(self):
         # pyspark 4: pyspark.sql.DataFrame is the abstract base; the
-        # runtime class (which OVERRIDES localCheckpoint) is
+        # runtime class (which OVERRIDES both methods) is
         # sql.classic.dataframe.DataFrame — patch the concrete one
         try:
             from pyspark.sql.classic.dataframe import DataFrame
@@ -491,8 +514,13 @@ class _CheckpointTracer:
             from pyspark.sql import DataFrame
 
         self._cls = DataFrame
-        self._real = DataFrame.localCheckpoint
-        tracer = self
+        for name in self.METHODS:
+            self._real[name] = getattr(DataFrame, name)
+            setattr(DataFrame, name, self._traced(name, self._real[name]))
+        return self
+
+    def _traced(self, name, real):
+        calls = self._calls
 
         def traced(df, *args, **kwargs):
             # *args/**kwargs: forward the full signature (pyspark 4's
@@ -501,19 +529,21 @@ class _CheckpointTracer:
             try:
                 plan = df._jdf.queryExecution().executedPlan().toString()
                 cols = ", ".join(df.columns[:8])
-                tracer.stages.append(
-                    (f"stage {len(tracer.stages) + 1}: "
-                     f"localCheckpoint({cols})", plan))
+                calls.append((f"{name}({cols})", simplify(plan)))
             except Exception:
                 pass
-            return tracer._real(df, *args, **kwargs)
+            return real(df, *args, **kwargs)
 
-        DataFrame.localCheckpoint = traced
-        return self
+        return traced
 
     def __exit__(self, *exc):
-        self._cls.localCheckpoint = self._real
+        for name, real in self._real.items():
+            setattr(self._cls, name, real)
         return False
+
+    def stages(self) -> list[tuple[str, str]]:
+        return [(f"stage {i}: {label}", plan)
+                for i, (label, plan) in enumerate(sorted(self._calls), 1)]
 
 
 def main() -> None:
@@ -531,22 +561,26 @@ def main() -> None:
         f"Generated by `python tools/gen_plans.py` at {SF} "
         "(plan SHAPE is scale-invariant; only statistics change).",
         "",
-        "Checkpointed pipelines additionally pin each PRE-CHECKPOINT "
-        "stage plan (captured at the localCheckpoint call), so a final "
-        "plan reading `Scan ExistingRDD` never hides the pipeline.",
+        "Pipelines that checkpoint or collect on the way additionally "
+        "pin each such stage plan (captured at the localCheckpoint or "
+        "collect call, numbered in label order), so a final plan "
+        "reading `Scan ExistingRDD` or `LocalTableScan` never hides the "
+        "pipeline.  Temp dirs read `<tmpdir>`; expression and plan ids "
+        "are renumbered per plan.",
         "",
     ]
     for name, note in SHOW:
-        with _CheckpointTracer() as tr:
+        with _StageTracer() as tr:
             df = contract.REGISTRY[name](spark, SF)
             plan = df._jdf.queryExecution().executedPlan().toString()
+        stages = tr.stages()
         lines += [f"## `{name}`", "", note, ""]
-        for label, stage_plan in tr.stages:
+        for label, stage_plan in stages:
             lines += [f"### {name} — {label}", "", "```",
-                      simplify(stage_plan).rstrip(), "```", ""]
-        if tr.stages:
+                      stage_plan.rstrip(), "```", ""]
+        if stages:
             lines += [f"### {name} — final plan (over the "
-                      "checkpointed stages above)", ""]
+                      "stages above)", ""]
         lines += ["```", simplify(plan).rstrip(), "```", ""]
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
