@@ -46,7 +46,6 @@ from ..sources import sinks
 
 K1 = 1.2
 B = 0.75
-_GRID6 = Decimal("0.000001")
 
 
 def _tf(tok_col, term: str):
@@ -1049,7 +1048,8 @@ def _round6_half_up(x: float) -> float:
     does not always render the shortest repr, so the twin is pinned
     against Spark over every RRF sum of two ranks in 1..200
     (tests/test_retrieval.py)."""
-    return float(Decimal(repr(x)).quantize(_GRID6, ROUND_HALF_UP)) + 0.0
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"),
+                                           ROUND_HALF_UP)) + 0.0
 
 
 def hybrid_serve_many(spark, text_path: str, ann_path: str,
@@ -1136,10 +1136,9 @@ def hybrid_serve_many(spark, text_path: str, ann_path: str,
         StructField("rank_kw", IntegerType()),
         StructField("rank_vec", IntegerType()),
         StructField("rrf", DoubleType())])
-    cols = list(zip(*out)) or [()] * len(schema.fields)
     return spark.createDataFrame(
-        pa.table({f.name: list(c) for f, c in zip(schema.fields, cols)}),
-        schema)
+        pa.table({f.name: [row[i] for row in out]
+                  for i, f in enumerate(schema.fields)}), schema)
 
 
 def duck_bm25(terms: list[str], duck_tokens: str,
