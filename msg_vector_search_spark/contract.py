@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -107,6 +108,45 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 
 
 _DUCK_QVEC = "(SELECT embedding FROM embeddings WHERE vec_id = 0)"
+
+
+# Build-once fixture artifacts: the fixtures are immutable, so each
+# offline build (an index, a store) runs once per (sf_dir, kind) and
+# every later query serves from the persisted artifact — the "index
+# once, query many" economics the lifecycle exists for.  Keyed by
+# sf_dir so the driver's sf never collides with tests.  Rows that
+# mutate an artifact take their own _copy, so the build stays
+# immutable and the rows stay independent.
+_BUILT: dict[tuple, str] = {}
+
+
+def _built(key: tuple, build: Callable[[str], object],
+           leaf: str = "index") -> str:
+    """The cached artifact for *key*; on first use ``build(path)``
+    writes it to a *leaf* directory in a fresh temp dir."""
+    if key not in _BUILT:
+        path = os.path.join(tempfile.mkdtemp(prefix="built_"), leaf)
+        build(path)
+        _BUILT[key] = path
+    return _BUILT[key]
+
+
+def _copy(path: str) -> str:
+    """A writable copy of the artifact at *path*, under the same leaf
+    name."""
+    out = os.path.join(tempfile.mkdtemp(prefix="copy_"),
+                       os.path.basename(path))
+    shutil.copytree(path, out)
+    return out
+
+
+def _ann_built(spark: SparkSession, key: tuple,
+               vectors: Callable[[], DataFrame], **kw) -> str:
+    """The cached index (nlist 16, 8 x 16 codes unless *kw* says
+    otherwise) over the frame ``vectors()``."""
+    kw = {"nlist": 16, "m": 8, "ncodes": 16, **kw}
+    return _built(key, lambda path: ann_index.build_index(
+        spark, vectors(), path, **kw))
 
 
 # =========================================================================
@@ -343,7 +383,8 @@ def topk_by_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("knn_broadcast_join", oracle=f"""
+# top-5 cosine neighbours of each of the first 3 vectors
+_KNN_JOIN_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 3
 ), scored AS (
@@ -358,7 +399,10 @@ WITH q AS (
 )
 SELECT q_id, vec_id, sim, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= 5
-""")
+"""
+
+
+@register("knn_broadcast_join", oracle=_KNN_JOIN_ORACLE)
 def knn_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D6: query-set vs corpus broadcast nested-loop KNN (reference
     generalization of embeddings/processor.py:489-525)."""
@@ -369,23 +413,7 @@ def knn_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
-@register("knn_join_pandas", oracle="""
-WITH q AS (
-  SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 3
-), scored AS (
-  SELECT q.q_id, e.vec_id,
-         (round(""" + V.duck_cosine('e.embedding', 'q.qv') + """, 6) + 0)
-           AS sim
-  FROM embeddings e CROSS JOIN q
-), ranked AS (
-  SELECT q_id, vec_id, sim,
-         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)
-           AS rank
-  FROM scored
-)
-SELECT q_id, vec_id, sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-""")
+@register("knn_join_pandas", oracle=_KNN_JOIN_ORACLE)
 def knn_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same query-set KNN with per-partition GEMM and PARTIAL
     top-k: each corpus partition emits only its own top-k per query, so
@@ -499,6 +527,25 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table entries round to 9dp, ADC sums and re-rank cosines to 6dp, ties
 # to the lower id — the grid the Spark side rounds to.  Each function
 # returns CTE text (a segment may hold several CTEs); _with joins them.
+# The IVF-only rows (no PQ) name the assignment CTEs ``scored`` /
+# ``assigned`` (_ASSIGNED) and end in _probe_cells + _ivf_exact.
+#
+# The other shared oracle builders sit next to their first user, after
+# the dialect helpers they need: _minhash_bands / _MINHASH_CTE (shingle
+# -> MinHash -> LSH band chain), _CC_WALK / _CC_ORACLE (connected
+# components of the LSH pair graph), _scaled_corpus (the x1.25 near-dup
+# injection; Spark twin _with_scaled_dups), _SHIFTED_CORPUS /
+# _WINDOW_COUNTS (the one-token-shifted duplicates and their 16-token
+# window counts; Spark twin _with_shifted_dups), _budget_admit /
+# _MIX_BUDGETS_SQL (per-source token-budget admit), _greedy_packs
+# (greedy sequence packing), _TRUNCATED_MEDIA, _DUCK_GOPHER_STOPS,
+# _bm25_sql / _BM25_TOP20 (BM25 top-20; Spark twins _bm25_top20 /
+# _invidx_top20), and _kw_leg / _V_LEG / _rank / _rrf (RRF legs and
+# fusion; Spark twins _kw_rank / _vec_rank).  Rows that must agree
+# share one oracle constant
+# (_KNN_JOIN_ORACLE, _TUMBLING_ORACLE, _CC_ORACLE, _PCT_RANK_ORACLE,
+# _BM25_ORACLE, _BM25_AND_ORACLE, _BM25_SURV_ORACLE, _DRIFT_ORACLE, ...).
+# Fixture builds are cached by _built and copied by _copy.
 
 def _with(*ctes: str) -> str:
     """The WITH clause over *ctes*, in order."""
@@ -508,11 +555,13 @@ def _with(*ctes: str) -> str:
     return out
 
 
-def _seed_cent(src: str = "embeddings") -> str:
-    """``cent``: the first 16 vectors of *src* as centroids."""
+def _seed_cent(src: str = "embeddings",
+               pick: str = "ORDER BY vec_id LIMIT 16") -> str:
+    """``cent``: the vectors of *src* that *pick* selects (by default
+    the first 16) as centroids."""
     return f"""cent AS (
   SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM {src} ORDER BY vec_id LIMIT 16
+  FROM {src} {pick}
 )"""
 
 
@@ -530,20 +579,36 @@ def _qs(qids) -> str:
 )"""
 
 
-def _assign(src: str = "embeddings", carry=("embedding",)) -> str:
-    """``cscored``/``celled``: each row of *src* in its nearest cell by
-    cosine, with the *carry* columns."""
+def _assign(src: str = "embeddings", carry=("embedding",),
+            names=("cscored", "celled"), cells: int = 1) -> str:
+    """*names* (``cscored``/``celled``): each row of *src* in its
+    *cells* nearest cells by cosine, with the *carry* columns."""
+    scored, celled = names
     sel = "".join(f"e.{c}, " for c in carry)
     out = "".join(f"{c}, " for c in carry)
-    return f"""cscored AS (
+    keep = "rn = 1" if cells == 1 else f"rn <= {cells}"
+    return f"""{scored} AS (
   SELECT e.vec_id, {sel}c.centroid_id,
          (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
   FROM {src} e CROSS JOIN cent c
-), celled AS (
+), {celled} AS (
   SELECT vec_id, {out}centroid_id AS cell FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
                                  ORDER BY cdist DESC, centroid_id) AS rn
-    FROM cscored) WHERE rn = 1
+    FROM {scored}) WHERE {keep}
+)"""
+
+
+# the IVF-only rows' names for the same two CTEs
+_ASSIGNED = ("scored", "assigned")
+
+
+def _probe_cells(nprobe: int = 4) -> str:
+    """``probe``: the query's *nprobe* nearest cells."""
+    return f"""probe AS (
+  SELECT centroid_id AS cell
+  FROM cent, q
+  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT {nprobe}
 )"""
 
 
@@ -551,13 +616,22 @@ def _probe(nprobe: int = 4, where: str = "") -> str:
     """``probe``/``cand``: the query's *nprobe* nearest cells and their
     rows, pre-filtered by *where*."""
     gate = f" AND {where}" if where else ""
-    return f"""probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT {nprobe}
-), cand AS (
+    return _probe_cells(nprobe) + f""", cand AS (
   SELECT * FROM celled WHERE cell IN (SELECT cell FROM probe){gate}
 )"""
+
+
+def _ivf_exact(cols: str = "", where: str = "") -> str:
+    """The final select of the IVF-only rows: ``assigned`` rows in the
+    probed cells (and *where*), exact cosine to ``q``, top 10."""
+    gate = f" AND {where}" if where else ""
+    return f"""
+SELECT a.vec_id, {cols}a.cell,
+       (round({V.duck_cosine('a.embedding', 'qv')}, 6) + 0) AS sim
+FROM assigned a, q
+WHERE a.cell IN (SELECT cell FROM probe){gate}
+ORDER BY sim DESC, a.vec_id LIMIT 10
+"""
 
 
 def _probe_many(nprobe: int = 4, where: str = "") -> str:
@@ -1651,11 +1725,15 @@ def rolling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "rolling_sum", "rolling_avg")
 
 
-@register("tumbling_window_agg", oracle="""
+# hourly tumbling-window counts and sums per event type
+_TUMBLING_ORACLE = """
 SELECT date_trunc('hour', ts) AS window_start, event_type,
        count(*) AS n, (round(sum(value), 3) + 0) AS sum_value
 FROM events GROUP BY 1, 2
-""")
+"""
+
+
+@register("tumbling_window_agg", oracle=_TUMBLING_ORACLE)
 def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2.H/P5: event-time tumbling-window aggregation — the batch twin
     of streaming.stream.tumbling_event_counts."""
@@ -2815,6 +2893,10 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 
 _DUCK_TOKENS = ("string_split_regex(trim(lower(text)), '\\s+')")
+# how many of the Gopher required stop words ``toks`` holds
+_DUCK_GOPHER_STOPS = "(" + " + ".join(
+    f"CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END"
+    for w in analysis.GOPHER_REQUIRED_STOPWORDS) + ")"
 
 
 @register("dedup_exact", oracle=f"""
@@ -2995,19 +3077,8 @@ WITH fp AS (
         / CAST(len(string_split(text, chr(10))) AS DOUBLE) <= 0.3
     AND len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
         / CAST(greatest(len(toks), 1) AS DOUBLE) >= 0.8
-    AND (CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'be') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'to') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'of') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'and') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'that') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'have') THEN 1 ELSE 0 END
-       + CASE WHEN list_contains(toks, 'with') THEN 1 ELSE 0 END) >= 1
-), cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings WHERE vec_id % 10 <> 3
-  ORDER BY vec_id LIMIT 16
-), cscored AS (
+    AND {_DUCK_GOPHER_STOPS} >= 1
+), {_seed_cent("embeddings WHERE vec_id % 10 <> 3")}, cscored AS (
   SELECT e.vec_id, c.centroid_id,
          (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
   FROM embeddings e
@@ -3077,11 +3148,11 @@ def _duck_minhash(num_hashes: int) -> str:
     return "[" + ", ".join(parts) + "]"
 
 
-_MINHASH_CTE = f"""
-WITH toks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
-), sh AS (
-  SELECT doc_id, {_duck_shingles(3)} AS sh FROM toks
+def _minhash_bands(toks: str = "toks") -> str:
+    """``sh``/``hashed``/``sig``/``banded``: 3-word shingles of *toks*
+    (a relation of doc_id, toks), MinHash(8), 4 bands of 2 rows."""
+    return f"""sh AS (
+  SELECT doc_id, {_duck_shingles(3)} AS sh FROM {toks}
 ), hashed AS (
   SELECT doc_id,
          list_transform(sh, s -> {_DUCK_HASH48.format(x='s')}) AS hs
@@ -3099,6 +3170,11 @@ WITH toks AS (
          ]) AS band_hash
   FROM sig
 )"""
+
+
+_MINHASH_CTE = _with(f"""toks AS (
+  SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
+)""", _minhash_bands())
 
 _MINHASH_PAIRS_SQL = _MINHASH_CTE + """
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -3120,28 +3196,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        shingle_n=3, max_block=32)
 
 
-@register("dedup_lsh_star", oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
-), sh AS (
-  SELECT doc_id, {_duck_shingles(3)} AS sh FROM toks
-), hashed AS (
-  SELECT doc_id,
-         list_transform(sh, s -> {_DUCK_HASH48.format(x='s')}) AS hs
-  FROM sh
-), sig AS (
-  SELECT doc_id, {_duck_minhash(8)} AS sig FROM hashed
-), banded AS (
-  SELECT doc_id,
-         unnest(range(4)) AS band_idx,
-         unnest([
-           CAST(sig[1] AS VARCHAR) || '_' || CAST(sig[2] AS VARCHAR),
-           CAST(sig[3] AS VARCHAR) || '_' || CAST(sig[4] AS VARCHAR),
-           CAST(sig[5] AS VARCHAR) || '_' || CAST(sig[6] AS VARCHAR),
-           CAST(sig[7] AS VARCHAR) || '_' || CAST(sig[8] AS VARCHAR)
-         ]) AS band_hash
-  FROM sig
-), sized AS (
+@register("dedup_lsh_star", oracle=_MINHASH_CTE + """, sized AS (
   SELECT doc_id, band_idx, band_hash,
          count(*) OVER (PARTITION BY band_idx, band_hash) AS bsz,
          min(doc_id) OVER (PARTITION BY band_idx, band_hash) AS bmin
@@ -3247,14 +3302,31 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                                             shingle_n=3)
 
 
-@register("dedup_embedding_lsh", oracle=f"""
-WITH corpus AS (
-  SELECT vec_id, embedding FROM embeddings
+def _scaled_corpus(cols: str = "") -> str:
+    """``corpus``: the embeddings (with the *cols* columns) plus every
+    20th vector re-injected scaled x1.25 as vec_id + 1000000 — cosine
+    1.0 with its original, which near-dup detection must catch."""
+    return f"""corpus AS (
+  SELECT vec_id,{cols} embedding FROM embeddings
   UNION ALL
-  SELECT vec_id + 1000000 AS vec_id,
+  SELECT vec_id + 1000000 AS vec_id,{cols}
          list_transform(embedding, x -> CAST(x * 1.25 AS FLOAT)) AS embedding
   FROM embeddings WHERE vec_id % 20 = 0
-), planes AS (
+)"""
+
+
+def _with_scaled_dups(emb: DataFrame) -> DataFrame:
+    """The Spark twin of :func:`_scaled_corpus`."""
+    scaled = (emb.filter(F.col("vec_id") % 20 == 0)
+              .withColumn("vec_id", F.col("vec_id") + 1000000)
+              .withColumn("embedding", F.transform(
+                  "embedding",
+                  lambda x: (x * F.lit(1.25)).cast("float"))))
+    return emb.unionByName(scaled)
+
+
+@register("dedup_embedding_lsh", oracle=f"""
+WITH {_scaled_corpus()}, planes AS (
   SELECT embedding AS pv, row_number() OVER (ORDER BY vec_id) - 1 AS pidx
   FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 4)
 ), buckets AS (
@@ -3280,12 +3352,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips no dot-product sign, so LSH blocking provably cannot miss
     them."""
     emb = _t(spark, sf_dir, "embeddings")
-    scaled = (emb.filter(F.col("vec_id") % 20 == 0)
-              .withColumn("vec_id", F.col("vec_id") + 1000000)
-              .withColumn("embedding", F.transform(
-                  "embedding",
-                  lambda x: (x * F.lit(1.25)).cast("float"))))
-    corpus = emb.unionByName(scaled)
+    corpus = _with_scaled_dups(emb)
     planes = lsh_ops.seed_planes(emb, 4)
     assigned = lsh_ops.assign_buckets(corpus.select("vec_id", "embedding"),
                                       planes)
@@ -3422,13 +3489,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("dedup_embedding_cosine", oracle=f"""
-WITH corpus AS (
-  SELECT vec_id, label, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id, label,
-         list_transform(embedding, x -> CAST(x * 1.25 AS FLOAT)) AS embedding
-  FROM embeddings WHERE vec_id % 20 = 0
-)
+WITH {_scaled_corpus(" label,")}
 SELECT a.label AS block, a.vec_id AS id_a, b.vec_id AS id_b,
        (round({V.duck_cosine('a.embedding', 'b.embedding')}, 6) + 0) AS sim
 FROM corpus a JOIN corpus b ON a.label = b.label AND a.vec_id < b.vec_id
@@ -3439,12 +3500,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector is re-injected scaled x1.25 (cosine 1.0 with its original)
     and must be caught."""
     emb = _t(spark, sf_dir, "embeddings")
-    scaled = (emb.filter(F.col("vec_id") % 20 == 0)
-              .withColumn("vec_id", F.col("vec_id") + 1000000)
-              .withColumn("embedding", F.transform(
-                  "embedding",
-                  lambda x: (x * F.lit(1.25)).cast("float"))))
-    corpus = emb.unionByName(scaled)
+    corpus = _with_scaled_dups(emb)
     return dedup_ops.embedding_near_dup(corpus, threshold=0.99)
 
 
@@ -3520,14 +3576,7 @@ WITH t AS (
            AS n_ell,
          len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
            AS n_alpha,
-         (CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'be') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'to') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'of') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'and') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'that') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'have') THEN 1 ELSE 0 END
-        + CASE WHEN list_contains(toks, 'with') THEN 1 ELSE 0 END)
+         {_DUCK_GOPHER_STOPS}
            AS n_stop
   FROM t
 )
@@ -3816,31 +3865,9 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN scale path: IVF partition-pruned search (SURVEY 4 custom opportunity)
 # =========================================================================
 
-@register("ann_ivf_topk", oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM scored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 2
-)
-SELECT a.vec_id, a.cell,
-       (round({V.duck_cosine('a.embedding', 'qv')}, 6) + 0) AS sim
-FROM assigned a, q
-WHERE a.cell IN (SELECT cell FROM probe)
-ORDER BY sim DESC, a.vec_id LIMIT 10
-""")
+@register("ann_ivf_topk", oracle=_with(
+    _seed_cent(), _q(), _assign(names=_ASSIGNED), _probe_cells(2))
+    + _ivf_exact())
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN search: 16 deterministic centroids, probe top-2 cells,
     brute-force within — the partition-pruned scale path past the
@@ -3852,31 +3879,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                               k=10, nprobe=2)
 
 
-@register("ann_ivf_filtered", oracle=f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id, e.embedding, e.label, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, label, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM scored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-)
-SELECT a.vec_id, a.label, a.cell,
-       (round({V.duck_cosine('a.embedding', 'qv')}, 6) + 0) AS sim
-FROM assigned a, q
-WHERE a.cell IN (SELECT cell FROM probe) AND a.label % 2 = 0
-ORDER BY sim DESC, a.vec_id LIMIT 10
-""")
+@register("ann_ivf_filtered", oracle=_with(
+    _seed_cent(), _q(),
+    _assign(carry=("embedding", "label"), names=_ASSIGNED), _probe_cells())
+    + _ivf_exact("a.label, ", "a.label % 2 = 0"))
 def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN — the hybrid query every vector store serves
     (metadata predicate AND nearest-neighbor): the label filter
@@ -4050,25 +4056,12 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                k=10, nprobe=4, shortlist=50)
 
 
-# Materialized-index cache: the index-build job runs ONCE per
-# (fixture, artifact flavor) and every later query serves from the
-# persisted store — the "index once, query many" economics the
-# lifecycle exists for.  Keyed by sf_dir so the driver's sf never
-# collides with tests.
-_ANN_INDEX_CACHE: dict[tuple[str, object], str] = {}
-
-
 def _materialized_index(spark: SparkSession, sf_dir: str,
                         trained: bool = False) -> str:
-    key = (sf_dir, trained)
-    if key not in _ANN_INDEX_CACHE:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="annidx_"), "index")
-        ann_index.build_index(spark, _t(spark, sf_dir, "embeddings"),
-                              path, nlist=16, m=8, ncodes=16,
-                              trained=trained)
-        _ANN_INDEX_CACHE[key] = path
-    return _ANN_INDEX_CACHE[key]
+    """The cached full-corpus index (seed or trained artifacts)."""
+    return _ann_built(spark, (sf_dir, "ann", trained),
+                      lambda: _t(spark, sf_dir, "embeddings"),
+                      trained=trained)
 
 
 @register("ann_ivfpq_materialized", oracle=_IVFPQ_SEED_ORACLE)
@@ -4100,13 +4093,10 @@ def ann_ivfpq_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ_AUTOSIZED_ORACLE = _with("""nl AS (
   SELECT GREATEST(16, CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT)) AS nlist
   FROM embeddings
-), cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec FROM (
-    SELECT vec_id, embedding,
-           row_number() OVER (ORDER BY vec_id) AS rn
-    FROM embeddings)
-  WHERE rn <= (SELECT nlist FROM nl)
-)""", *_IVFPQ_SEED_CTES[1:], _short()) + _rerank()
+)""", _seed_cent("""(
+    SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) AS rn
+    FROM embeddings)""", "WHERE rn <= (SELECT nlist FROM nl)"),
+    *_IVFPQ_SEED_CTES[1:], _short()) + _rerank()
 
 
 @register("ann_ivfpq_autosized", oracle=_IVFPQ_AUTOSIZED_ORACLE)
@@ -4129,13 +4119,8 @@ def ann_ivfpq_autosized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "autosized")
-    if key not in _ANN_INDEX_CACHE:
-        path = os.path.join(tempfile.mkdtemp(prefix="annauto_"), "index")
-        ann_index.build_index(spark, emb, path, nlist=None, m=8,
-                              ncodes=16)
-        _ANN_INDEX_CACHE[key] = path
-    path = _ANN_INDEX_CACHE[key]
+    path = _ann_built(spark, (sf_dir, "autosized"), lambda: emb,
+                      nlist=None)
     meta = ann_index.read_meta(path)
     n = emb.count()
     assert meta["nlist"] == max(16, math.isqrt(int(n))), \
@@ -4280,21 +4265,13 @@ def ann_trained_store_exhaustive(spark: SparkSession,
             .select("vec_id", "sim"))
 
 
-_LABELED_INDEX_CACHE: dict[str, str] = {}
-
-
 def _labeled_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once cache for the metadata-carrying materialized index
+    """The cached metadata-carrying materialized index
     (meta_cols=("label",)): every stored row carries the label column,
     so a where-predicate at serve time is a PRE-filter on the code scan."""
-    if sf_dir not in _LABELED_INDEX_CACHE:
-        path = os.path.join(tempfile.mkdtemp(prefix="annidxlab_"),
-                            "index")
-        ann_index.build_index(spark, _t(spark, sf_dir, "embeddings"),
-                              path, nlist=16, m=8, ncodes=16,
-                              meta_cols=("label",))
-        _LABELED_INDEX_CACHE[sf_dir] = path
-    return _LABELED_INDEX_CACHE[sf_dir]
+    return _ann_built(spark, (sf_dir, "labeled"),
+                      lambda: _t(spark, sf_dir, "embeddings"),
+                      meta_cols=("label",))
 
 
 @register("ann_ivfpq_filtered_materialized", oracle=_with(
@@ -4394,6 +4371,16 @@ def search_index_many_large(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        literal_max=0)
 
 
+def _hybrid_queries(emb: DataFrame, terms: dict) -> dict:
+    """``qid -> {terms, qvec}`` for ``hybrid_serve_many``: each qid's
+    *terms* and the stored embedding of vec_id = qid."""
+    qids = sorted(terms)
+    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
+          for r in emb.filter(F.col("vec_id").isin(qids))
+          .select("vec_id", "embedding").collect()}
+    return {qid: {"terms": terms[qid], "qvec": qv[qid]} for qid in qids}
+
+
 _HYBRID_TERMS = {0: ["spark", "query", "dup"],
                  7: ["data", "join"],
                  13: ["the", "vector"]}
@@ -4476,13 +4463,8 @@ def hybrid_serve_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle composes the proven per-leg constructions — scan-side BM25
     (the index-served path is bit-identical) and the shared-candidate
     seed-IVFPQ replay — and fuses them with the same 6dp-grid RRF."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qids = sorted(_HYBRID_TERMS)
-    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-          for r in emb.filter(F.col("vec_id").isin(qids))
-          .select("vec_id", "embedding").collect()}
-    queries = {qid: {"terms": _HYBRID_TERMS[qid], "qvec": qv[qid]}
-               for qid in qids}
+    queries = _hybrid_queries(_t(spark, sf_dir, "embeddings"),
+                              _HYBRID_TERMS)
     tpath = _inverted_index(spark, sf_dir)
     apath = _materialized_index(spark, sf_dir, trained=False)
     return retrieval_ops.hybrid_serve_many(spark, tpath, apath, queries,
@@ -4512,13 +4494,8 @@ def hybrid_serve_many_large(spark: SparkSession,
     so the driver value-verifies the strategy the serving tier
     actually uses at load (literal_max=4 default); the oracle is the
     same per-leg composition at Q=6."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qids = sorted(_HYBRID_TERMS_LARGE)
-    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-          for r in emb.filter(F.col("vec_id").isin(qids))
-          .select("vec_id", "embedding").collect()}
-    queries = {qid: {"terms": _HYBRID_TERMS_LARGE[qid], "qvec": qv[qid]}
-               for qid in qids}
+    queries = _hybrid_queries(_t(spark, sf_dir, "embeddings"),
+                              _HYBRID_TERMS_LARGE)
     tpath = _inverted_index(spark, sf_dir)
     apath = _materialized_index(spark, sf_dir, trained=False)
     return retrieval_ops.hybrid_serve_many(spark, tpath, apath, queries,
@@ -4556,11 +4533,9 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies the immutable base artifact and folds the batch into the
     COPY — the upsert + post-upsert search are exercised fresh each
     run, the build is not re-paid."""
-    import shutil
-
     emb = _t(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % 10 == 3)
-    path = _upsert_base_copy(spark, sf_dir)
+    path = _copy(_upsert_base_path(spark, sf_dir))
     ann_index.upsert_index(spark, path, batch)
     qrow = emb.filter(F.col("vec_id") == 3).select("embedding").head()
     qv = [float(x) for x in qrow[0]]
@@ -4569,30 +4544,11 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _upsert_base_path(spark: SparkSession, sf_dir: str) -> str:
-    """The 90%-corpus base index (seed artifacts), built once per
-    fixture and cached — the offline build job.  Read-only; callers
-    that mutate take :func:`_upsert_base_copy`."""
-    key = (sf_dir, "upsert_base")
-    if key not in _ANN_INDEX_CACHE:
-        base_path = os.path.join(tempfile.mkdtemp(prefix="annups_"),
-                                 "index")
-        base = (_t(spark, sf_dir, "embeddings")
-                .filter(F.col("vec_id") % 10 != 3))
-        ann_index.build_index(spark, base, base_path,
-                              nlist=16, m=8, ncodes=16)
-        _ANN_INDEX_CACHE[key] = base_path
-    return _ANN_INDEX_CACHE[key]
-
-
-def _upsert_base_copy(spark: SparkSession, sf_dir: str) -> str:
-    """A writable copy of the cached base index; each caller mutates
-    its own copy, so the upsert rows stay independent."""
-    import shutil
-
-    base = _upsert_base_path(spark, sf_dir)
-    path = os.path.join(tempfile.mkdtemp(prefix="annups_"), "index")
-    shutil.copytree(base, path)
-    return path
+    """The cached 90%-corpus base index (seed artifacts) — the offline
+    build job.  Read-only; callers that mutate take a :func:`_copy`."""
+    return _ann_built(spark, (sf_dir, "upsert_base"),
+                      lambda: _t(spark, sf_dir, "embeddings")
+                      .filter(F.col("vec_id") % 10 != 3))
 
 
 @register("streaming_index_upsert", oracle=_INDEX_UPSERT_ORACLE)
@@ -4615,7 +4571,7 @@ def streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_incremental.py."""
     emb = _t(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % 10 == 3)
-    path = _upsert_base_copy(spark, sf_dir)
+    path = _copy(_upsert_base_path(spark, sf_dir))
 
     src = os.path.join(tempfile.mkdtemp(prefix="annstream_"), "incoming")
     batch.repartition(3).write.parquet(src)
@@ -4641,25 +4597,12 @@ def ann_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — drift is maintenance debt, never permanent error."""
     emb = _t(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % 10 == 3)
-    path = _upsert_base_copy(spark, sf_dir)
+    path = _copy(_upsert_base_path(spark, sf_dir))
     ann_index.upsert_index(spark, path, batch)
     ann_index.rebuild_index(spark, path)
     return ann_index.search_index(spark, path,
                                   _query_vec(spark, sf_dir),
                                   k=10, nprobe=4, shortlist=50)
-
-
-def _full_index_copy(spark: SparkSession, sf_dir: str) -> str:
-    """A writable copy of the cached FULL-corpus seed index (the
-    _materialized_index artifact); mutating rows (erase, changefeed
-    apply) each take their own copy so the cached build stays
-    immutable."""
-    import shutil
-
-    base = _materialized_index(spark, sf_dir, trained=False)
-    path = os.path.join(tempfile.mkdtemp(prefix="annerase_"), "index")
-    shutil.copytree(base, path)
-    return path
 
 
 # Erasure replay: the index was BUILT on the full corpus (so centroids
@@ -4691,7 +4634,7 @@ def ann_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifacts: erased rows must be unreachable, surviving rows must
     score exactly as before."""
     emb = _t(spark, sf_dir, "embeddings")
-    path = _full_index_copy(spark, sf_dir)
+    path = _copy(_materialized_index(spark, sf_dir))
     victims = emb.filter(F.col("vec_id") % 10 == 3).select("vec_id")
     qrow = emb.filter(F.col("vec_id") == 3).select("embedding").head()
     touched = ann_index.delete_index_keys(spark, path, victims)
@@ -4713,7 +4656,7 @@ def streaming_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces, so a deletion queue can be re-sharded and re-tried
     freely — the property that makes forget-on-stream deployable."""
     emb = _t(spark, sf_dir, "embeddings")
-    path = _full_index_copy(spark, sf_dir)
+    path = _copy(_materialized_index(spark, sf_dir))
     victims = emb.filter(F.col("vec_id") % 10 == 3).select("vec_id")
     qrow = emb.filter(F.col("vec_id") == 3).select("embedding").head()
 
@@ -4789,8 +4732,12 @@ def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _materialized_index(spark, sf_dir, trained=False))
 
 
-_RANGE_STORE_CACHE: dict[str, str] = {}
-_DAY_PARTITIONED_CACHE: dict[str, str] = {}
+def _day_events(spark: SparkSession, sf_dir: str) -> str:
+    """The cached copy of events written partitionBy(day)."""
+    return _built((sf_dir, "day_events"), lambda path: (
+        _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+        .repartition("day").write.partitionBy("day").parquet(path)),
+        leaf="events")
 
 
 @register("partitioned_time_scan", oracle="""
@@ -4811,14 +4758,7 @@ def partitioned_time_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the kept days; the oracle is the same query on the raw
     table, proving the partitioned rewrite is lossless.  Write once
     per fixture (cached), query many."""
-    if sf_dir not in _DAY_PARTITIONED_CACHE:
-        out = os.path.join(tempfile.mkdtemp(prefix="daypart_"), "events")
-        ev = _t(spark, sf_dir, "events")
-        (ev.withColumn("day", F.to_date("ts"))
-         .repartition("day")
-         .write.partitionBy("day").parquet(out))
-        _DAY_PARTITIONED_CACHE[sf_dir] = out
-    part = spark.read.parquet(_DAY_PARTITIONED_CACHE[sf_dir])
+    part = spark.read.parquet(_day_events(spark, sf_dir))
     lo, hi = "2024-01-10", "2024-01-13"
     return (part
             .filter((F.col("day") >= F.lit(lo).cast("date"))
@@ -4845,14 +4785,13 @@ def store_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark reads) silently rely on.  min/max per bucket double as
     the contiguity evidence behind the range layout's O(batch/width)
     touched-directory bound."""
-    if sf_dir not in _RANGE_STORE_CACHE:
-        store = os.path.join(tempfile.mkdtemp(prefix="rangestore_"),
-                             "store")
-        ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-        sinks.upsert_parquet(spark, ev, store, key="event_id",
-                             order_col="ts", layout="range")
-        _RANGE_STORE_CACHE[sf_dir] = store
-    raw = spark.read.parquet(_RANGE_STORE_CACHE[sf_dir])
+    store = _built((sf_dir, "range_store"), lambda path: (
+        sinks.upsert_parquet(
+            spark, _t(spark, sf_dir, "events")
+            .select("event_id", "user_id", "ts"),
+            path, key="event_id", order_col="ts", layout="range")),
+        leaf="store")
+    raw = spark.read.parquet(store)
     return (raw.groupBy(F.col(sinks.BUCKET_COL).alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.min("event_id").alias("min_key"),
@@ -4860,20 +4799,8 @@ def store_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("bucket"))
 
 
-_SIM_JOIN_IVF_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), scored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM scored) WHERE rn = 1
-), pairs AS (
+_SIM_JOIN_IVF_SQL = _with(_seed_cent(), _assign(names=_ASSIGNED)) + f""",
+pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cell,
          (round({V.duck_cosine('a.embedding', 'b.embedding')}, 6) + 0) AS sim
   FROM assigned a JOIN assigned b ON a.cell = b.cell
@@ -4905,20 +4832,9 @@ def sim_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         max_cell=512)
 
 
-_SIM_JOIN_IVF_P2_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), scored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM embeddings e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM scored) WHERE rn <= 2
-), pairs AS (
+_SIM_JOIN_IVF_P2_SQL = _with(
+    _seed_cent(), _assign(names=_ASSIGNED, cells=2)) + f""",
+pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          min(a.cell) AS cell,
          max((round({V.duck_cosine('a.embedding', 'b.embedding')}, 6) + 0))
@@ -4999,7 +4915,9 @@ def topk_quantized_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "sim"))
 
 
-@register("dedup_components", oracle=f"""
+# The MinHash+LSH pair graph (both directions) and its reachability
+# walk from every node: min(comp) per id is the connected component.
+_CC_WALK = f"""
 WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
@@ -5011,9 +4929,13 @@ walk(id, comp) AS (
   SELECT id, id FROM nodes
   UNION
   SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.id
-)
+)"""
+_CC_ORACLE = _CC_WALK + """
 SELECT id, min(comp) AS component FROM walk GROUP BY id
-""")
+"""
+
+
+@register("dedup_components", oracle=_CC_ORACLE)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash+LSH candidate-pair graph:
     the clustering stage that turns near-dup PAIRS into dedup DECISIONS
@@ -5029,19 +4951,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ops.connected_components_star(pairs)
 
 
-@register("dedup_keep_canonical", oracle=f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-walk(id, comp) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.id
-),
+@register("dedup_keep_canonical", oracle=_CC_WALK + """,
 cc AS (SELECT id, min(comp) AS component FROM walk GROUP BY id)
 SELECT d.doc_id, d.source
 FROM documents d
@@ -5108,7 +5018,10 @@ def dedup_repeated_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                                            max_occurrences=1)
 
 
-@register("dedup_unaligned_substring", oracle=f"""
+# ``corpus``/``toks``/``sized``: the documents plus every 10th one
+# re-injected SHIFTED BY ONE TOKEN (a unique 'zshiftN' prefix) as
+# doc_id + 1000000, tokenized
+_SHIFTED_CORPUS = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -5119,7 +5032,30 @@ WITH corpus AS (
   SELECT doc_id, {_DUCK_TOKENS} AS t FROM corpus
 ), sized AS (
   SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0
-), wins AS (
+)"""
+# ``wins``/``cnt``: every overlapping 16-token window hash of ``sized``
+# and its count over the corpus
+_WINDOW_COUNTS = _SHIFTED_CORPUS + """, wins AS (
+  SELECT doc_id,
+         unnest([(('0x' || substr(md5(
+                    array_to_string(t[p : p + 15], ' ')), 1, 12))::BIGINT)
+                 FOR p IN range(1, greatest(n - 15, 1) + 1)]) AS whash
+  FROM sized
+), cnt AS (SELECT whash, count(*) AS c FROM wins GROUP BY 1)"""
+
+
+def _with_shifted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark twin of :data:`_SHIFTED_CORPUS` (doc_id, text)."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    dups = (docs.filter(F.col("doc_id") % 10 == 0)
+            .select((F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+                    F.concat(F.lit("zshift"),
+                             F.col("doc_id").cast("string"), F.lit(" "),
+                             F.col("text")).alias("text")))
+    return docs.unionByName(dups)
+
+
+@register("dedup_unaligned_substring", oracle=_SHIFTED_CORPUS + """, wins AS (
   SELECT doc_id,
          unnest(range(1, greatest(n - 15, 1) + 1)) AS wpos,
          unnest([(('0x' || substr(md5(
@@ -5153,35 +5089,12 @@ def dedup_unaligned_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     token.  tests/test_dedup_units.py pins the gap this row closes
     (the shifted duplicate IS caught here, is NOT caught by the
     grid)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = (docs.filter(F.col("doc_id") % 10 == 0)
-            .select((F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-                    F.concat(F.lit("zshift"),
-                             F.col("doc_id").cast("string"), F.lit(" "),
-                             F.col("text")).alias("text")))
-    return dedup_ops.dedup_unaligned_substring(docs.unionByName(dups),
-                                               window_tokens=16,
-                                               max_occurrences=1)
+    return dedup_ops.dedup_unaligned_substring(
+        _with_shifted_dups(spark, sf_dir), window_tokens=16,
+        max_occurrences=1)
 
 
-@register("text_novelty_score", oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id,
-         'zshift' || CAST(doc_id AS VARCHAR) || ' ' || text AS text
-  FROM documents WHERE doc_id % 10 = 0
-), toks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS t FROM corpus
-), sized AS (
-  SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0
-), wins AS (
-  SELECT doc_id,
-         unnest([(('0x' || substr(md5(
-                    array_to_string(t[p : p + 15], ' ')), 1, 12))::BIGINT)
-                 FOR p IN range(1, greatest(n - 15, 1) + 1)]) AS whash
-  FROM sized
-), cnt AS (SELECT whash, count(*) AS c FROM wins GROUP BY 1)
+@register("text_novelty_score", oracle=_WINDOW_COUNTS + """
 SELECT w.doc_id, count(*) AS n_windows,
        CAST(sum(CASE WHEN cnt.c > 1 THEN 1 ELSE 0 END) AS BIGINT)
          AS dup_windows,
@@ -5198,34 +5111,11 @@ def text_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed).  Same one-token-shifted injections as the dedup row: the
     originals and copies read novelty ~0 (only the copies' one novel
     prefix window differs), untouched docs read 1.0."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = (docs.filter(F.col("doc_id") % 10 == 0)
-            .select((F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-                    F.concat(F.lit("zshift"),
-                             F.col("doc_id").cast("string"), F.lit(" "),
-                             F.col("text")).alias("text")))
-    return dedup_ops.substring_novelty(docs.unionByName(dups),
+    return dedup_ops.substring_novelty(_with_shifted_dups(spark, sf_dir),
                                        window_tokens=16)
 
 
-@register("curate_by_novelty", oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id,
-         'zshift' || CAST(doc_id AS VARCHAR) || ' ' || text AS text
-  FROM documents WHERE doc_id % 10 = 0
-), toks AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS t FROM corpus
-), sized AS (
-  SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0
-), wins AS (
-  SELECT doc_id,
-         unnest([(('0x' || substr(md5(
-                    array_to_string(t[p : p + 15], ' ')), 1, 12))::BIGINT)
-                 FOR p IN range(1, greatest(n - 15, 1) + 1)]) AS whash
-  FROM sized
-), cnt AS (SELECT whash, count(*) AS c FROM wins GROUP BY 1),
+@register("curate_by_novelty", oracle=_WINDOW_COUNTS + """,
 nov AS (
   SELECT w.doc_id,
          (round(1.0 - sum(CASE WHEN cnt.c > 1 THEN 1 ELSE 0 END)
@@ -5251,13 +5141,7 @@ def curate_by_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uniform hash key, one per-doc aggregate) plus ONE doc-keyed
     equi-join back to the corpus — nothing corpus-quadratic; the gate
     prunes before any downstream (training) stage sees the rows."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = (docs.filter(F.col("doc_id") % 10 == 0)
-            .select((F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-                    F.concat(F.lit("zshift"),
-                             F.col("doc_id").cast("string"), F.lit(" "),
-                             F.col("text")).alias("text")))
-    corpus = docs.unionByName(dups)
+    corpus = _with_shifted_dups(spark, sf_dir)
     nov = dedup_ops.substring_novelty(corpus, window_tokens=16)
     return (corpus.join(nov.filter(F.col("novelty") >= 0.5)
                         .select("doc_id", "novelty"), "doc_id")
@@ -5282,26 +5166,8 @@ WITH RECURSIVE kept AS (
              PARTITION BY md5(array_to_string({_DUCK_TOKENS}, ' '))
              ORDER BY doc_id) AS rn
     FROM kept) WHERE rn = 1
-), sh AS (
-  SELECT doc_id, {_duck_shingles(3)} AS sh
-  FROM (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM exact) t
-), hashed AS (
-  SELECT doc_id,
-         list_transform(sh, s -> {_DUCK_HASH48.format(x='s')}) AS hs
-  FROM sh
-), sig AS (
-  SELECT doc_id, {_duck_minhash(8)} AS sig FROM hashed
-), banded AS (
-  SELECT doc_id,
-         unnest(range(4)) AS band_idx,
-         unnest([
-           CAST(sig[1] AS VARCHAR) || '_' || CAST(sig[2] AS VARCHAR),
-           CAST(sig[3] AS VARCHAR) || '_' || CAST(sig[4] AS VARCHAR),
-           CAST(sig[5] AS VARCHAR) || '_' || CAST(sig[6] AS VARCHAR),
-           CAST(sig[7] AS VARCHAR) || '_' || CAST(sig[8] AS VARCHAR)
-         ]) AS band_hash
-  FROM sig
-), edges AS (
+), {_minhash_bands(f"(SELECT doc_id, {_DUCK_TOKENS} AS toks FROM exact) t")},
+edges AS (
   SELECT a.doc_id AS src, b.doc_id AS dst
   FROM banded a JOIN banded b
     ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
@@ -5539,25 +5405,43 @@ def dsir_hashed_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, F.col("source").isin("src1", "src3"))
 
 
-@register("streaming_budget_admit", oracle=f"""
-WITH b(source, budget) AS (VALUES ('src0', 500), ('src1', 120), ('src10', 500), ('src11', 500), ('src12', 500), ('src13', 500), ('src14', 500), ('src15', 500), ('src16', 500), ('src17', 500), ('src18', 500), ('src19', 500), ('src2', 500), ('src3', 80), ('src4', 500), ('src5', 500), ('src6', 500), ('src7', 500), ('src8', 500), ('src9', 500)),
-d AS (
+_MIX_BUDGETS = {f"src{i}": 500 for i in range(20)}
+_MIX_BUDGETS["src1"] = 120   # small budgets exercise the admit
+_MIX_BUDGETS["src3"] = 80    # boundary even at the sf0.001 fixture
+# ``b``: the budgets as a VALUES list
+_MIX_BUDGETS_SQL = "b(source, budget) AS (VALUES " + ", ".join(
+    f"('{s}', {n})" for s, n in sorted(_MIX_BUDGETS.items())) + ")"
+
+
+def _budget_admit(hashed: bool = True) -> str:
+    """``d``/``c`` and the final select: each source's documents, in
+    48-bit hash order (*hashed*) or doc_id order, admitted while the
+    source's running token sum fits its budget in ``b``."""
+    h = """,
+         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT)
+           AS h""" if hashed else ""
+    order = "h, doc_id" if hashed else "doc_id"
+    return f"""d AS (
   SELECT doc_id, source,
          CASE WHEN length(trim(text)) = 0 THEN 0
               ELSE len(string_split_regex(trim(text), '\\s+')) END
-           AS n_tokens
+           AS n_tokens{h}
   FROM documents
 ), c AS (
   SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
          CAST(sum(n_tokens) OVER (
-           PARTITION BY source ORDER BY doc_id
+           PARTITION BY source ORDER BY {order}
            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
   FROM d
 )
 SELECT c.doc_id, c.source, c.n_tokens, c.cum_tokens
 FROM c JOIN b USING (source)
 WHERE c.cum_tokens <= b.budget
-""")
+"""
+
+
+@register("streaming_budget_admit", oracle=_with(
+    _MIX_BUDGETS_SQL, _budget_admit(hashed=False)))
 def streaming_budget_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The token-budget gate as a STREAMING stateful operator
     (streaming.stateful_budget_admit): documents arrive, each source
@@ -5575,32 +5459,7 @@ def streaming_budget_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name=f"budget_admit_{abs(hash(sf_dir)) % 10**6}")
 
 
-_MIX_BUDGETS = {f"src{i}": 500 for i in range(20)}
-_MIX_BUDGETS["src1"] = 120   # small budgets exercise the admit
-_MIX_BUDGETS["src3"] = 80    # boundary even at the sf0.001 fixture
-
-
-@register("mix_token_budget", oracle=f"""
-WITH b(source, budget) AS (VALUES ('src0', 500), ('src1', 120), ('src10', 500), ('src11', 500), ('src12', 500), ('src13', 500), ('src14', 500), ('src15', 500), ('src16', 500), ('src17', 500), ('src18', 500), ('src19', 500), ('src2', 500), ('src3', 80), ('src4', 500), ('src5', 500), ('src6', 500), ('src7', 500), ('src8', 500), ('src9', 500)),
-d AS (
-  SELECT doc_id, source,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END
-           AS n_tokens,
-         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT)
-           AS h
-  FROM documents
-), c AS (
-  SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
-         CAST(sum(n_tokens) OVER (
-           PARTITION BY source ORDER BY h, doc_id
-           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-  FROM d
-)
-SELECT c.doc_id, c.source, c.n_tokens, c.cum_tokens
-FROM c JOIN b USING (source)
-WHERE c.cum_tokens <= b.budget
-""")
+@register("mix_token_budget", oracle=_with(_MIX_BUDGETS_SQL, _budget_admit()))
 def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data mixing to per-source token budgets (the curriculum /
     mixture-weights primitive): admit each source's documents in the
@@ -5619,30 +5478,11 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TEMP_MIX_DIR = _trained_dir("mix_temperature_budget")
 
 
-@register("mix_temperature_budget", oracle=f"""
-WITH b AS (
+@register("mix_temperature_budget", oracle=_with(f"""b AS (
   SELECT source, budget
   FROM read_parquet('{_TEMP_MIX_DIR}/budgets/*.parquet')
   WHERE {_fp_guard("mix_temperature_budget", "documents")}
-), d AS (
-  SELECT doc_id, source,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END
-           AS n_tokens,
-         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT)
-           AS h
-  FROM documents
-), c AS (
-  SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
-         CAST(sum(n_tokens) OVER (
-           PARTITION BY source ORDER BY h, doc_id
-           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-  FROM d
-)
-SELECT c.doc_id, c.source, c.n_tokens, c.cum_tokens
-FROM c JOIN b USING (source)
-WHERE c.cum_tokens <= b.budget
-""")
+)""", _budget_admit()))
 def mix_temperature_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-mixed sampling (the T5/multilingual data-mixing
     trick): per-source budgets PROPORTIONAL TO n_s^alpha with
@@ -5874,10 +5714,13 @@ def pack_sequences_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pack_input(spark, sf_dir), 512, "shard", "doc_id", "n_tok")
 
 
-@register("pack_fill_stats", oracle=f"""
-WITH RECURSIVE t AS (
+def _greedy_packs(src: str) -> str:
+    """``t``/``rec`` (recursive): the rows of *src* (shard, doc_id,
+    n_tok) packed greedily per shard in doc_id order — a doc that would
+    overflow a non-empty 512-token pack opens the next one."""
+    return f"""t AS (
   SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-  FROM ({_PACK_INPUT_SQL})
+  FROM {src}
 ), rec AS (
   SELECT shard, rn, doc_id, n_tok, n_tok AS run,
          CAST(0 AS BIGINT) AS pack_id
@@ -5889,7 +5732,11 @@ WITH RECURSIVE t AS (
          CASE WHEN rec.run + t.n_tok > 512 AND rec.run > 0
               THEN rec.pack_id + 1 ELSE rec.pack_id END
   FROM rec JOIN t ON t.shard = rec.shard AND t.rn = rec.rn + 1
-)
+)"""
+
+
+@register("pack_fill_stats", oracle=f"""
+WITH RECURSIVE {_greedy_packs(f"({_PACK_INPUT_SQL})")}
 SELECT shard, pack_id, CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(n_tok) AS BIGINT) AS pack_tokens
 FROM rec GROUP BY shard, pack_id
@@ -5920,21 +5767,7 @@ WITH RECURSIVE wts AS (
   FROM documents d JOIN wts w ON d.source = w.source
   WHERE {analysis.duck_token_hash("CAST(d.doc_id AS VARCHAR)")} % 1000000
         < CAST(floor(w.keep_frac * 1000000) AS BIGINT)
-), t AS (
-  SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-  FROM sampled
-), rec AS (
-  SELECT shard, rn, doc_id, n_tok, n_tok AS run,
-         CAST(0 AS BIGINT) AS pack_id
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.shard, t.rn, t.doc_id, t.n_tok,
-         CASE WHEN rec.run + t.n_tok > 512 AND rec.run > 0 THEN t.n_tok
-              ELSE rec.run + t.n_tok END,
-         CASE WHEN rec.run + t.n_tok > 512 AND rec.run > 0
-              THEN rec.pack_id + 1 ELSE rec.pack_id END
-  FROM rec JOIN t ON t.shard = rec.shard AND t.rn = rec.rn + 1
-)
+), {_greedy_packs("sampled")}
 SELECT doc_id, n_tok, shard, pack_id FROM rec
 """)
 def pipeline_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5967,21 +5800,7 @@ def pipeline_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("pack_sequences_greedy", oracle=f"""
-WITH RECURSIVE t AS (
-  SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-  FROM ({_PACK_INPUT_SQL})
-), rec AS (
-  SELECT shard, rn, doc_id, n_tok, n_tok AS run,
-         CAST(0 AS BIGINT) AS pack_id
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.shard, t.rn, t.doc_id, t.n_tok,
-         CASE WHEN rec.run + t.n_tok > 512 AND rec.run > 0 THEN t.n_tok
-              ELSE rec.run + t.n_tok END,
-         CASE WHEN rec.run + t.n_tok > 512 AND rec.run > 0
-              THEN rec.pack_id + 1 ELSE rec.pack_id END
-  FROM rec JOIN t ON t.shard = rec.shard AND t.rn = rec.rn + 1
-)
+WITH RECURSIVE {_greedy_packs(f"({_PACK_INPUT_SQL})")}
 SELECT doc_id, n_tok, shard, pack_id FROM rec
 """)
 def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6152,14 +5971,18 @@ def _media_with_truncated_dups(docs: DataFrame) -> DataFrame:
     return media.unionByName(dups)
 
 
-@register("multimodal_dedup_near", oracle=f"""
+# ``media``: the SQL twin of _media_with_truncated_dups, on text
+_TRUNCATED_MEDIA = """
 WITH media AS (
   SELECT doc_id AS media_id, text FROM documents
   UNION ALL
   SELECT doc_id + 500000 AS media_id,
          substring(text, 1, CAST(floor(length(text) * 0.8) AS INT)) AS text
   FROM documents WHERE doc_id % 9 = 0
-), wins AS (
+)"""
+
+
+@register("multimodal_dedup_near", oracle=_TRUNCATED_MEDIA + f""", wins AS (
   SELECT media_id, substring(text, CAST(i*4+1 AS INT), 8) AS win
   FROM media, LATERAL unnest(range((length(text) - 8) // 4 + 1)) t(i)
   WHERE length(text) >= 8
@@ -6211,14 +6034,7 @@ def multimodal_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 
-@register("multimodal_frame_dedup", oracle="""
-WITH media AS (
-  SELECT doc_id AS media_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 500000 AS media_id,
-         substring(text, 1, CAST(floor(length(text) * 0.8) AS INT)) AS text
-  FROM documents WHERE doc_id % 9 = 0
-), frames AS (
+@register("multimodal_frame_dedup", oracle=_TRUNCATED_MEDIA + """, frames AS (
   SELECT media_id,
          md5(substring(text, CAST(i*64+1 AS INT), 64)) AS fh
   FROM media, LATERAL unnest(
@@ -6932,7 +6748,8 @@ def spend_quartile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_custkey", "total", q.cast("long").alias("quartile")))
 
 
-@register("percent_rank_cume_dist", oracle=f"""
+# exact percent_rank / cume_dist over customer spend
+_PCT_RANK_ORACLE = f"""
 WITH spend AS ({_CUST_SPEND_SQL})
 SELECT o_custkey, total,
        (round(percent_rank() OVER (ORDER BY total, o_custkey), 6) + 0)
@@ -6940,7 +6757,10 @@ SELECT o_custkey, total,
        (round(cume_dist() OVER (ORDER BY total, o_custkey), 6) + 0)
          AS cume
 FROM spend
-""")
+"""
+
+
+@register("percent_rank_cume_dist", oracle=_PCT_RANK_ORACLE)
 def percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution ranks over customer spend (percent_rank /
     cume_dist) — unique (total, custkey) ordering makes both exact and
@@ -7000,15 +6820,7 @@ def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("second_price")))
 
 
-@register("percent_rank_scan", oracle=f"""
-WITH spend AS ({_CUST_SPEND_SQL})
-SELECT o_custkey, total,
-       (round(percent_rank() OVER (ORDER BY total, o_custkey), 6) + 0)
-         AS pct_rank,
-       (round(cume_dist() OVER (ORDER BY total, o_custkey), 6) + 0)
-         AS cume
-FROM spend
-""")
+@register("percent_rank_scan", oracle=_PCT_RANK_ORACLE)
 def percent_rank_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist WITHOUT the global window — the 100 TB
     twin of percent_rank_cume_dist (same oracle, same values), via
@@ -7297,11 +7109,7 @@ def rolling_1h_range_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_SEQ = itertools.count()
 
 
-@register("streaming_tumbling_availablenow", oracle="""
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n, (round(sum(value), 3) + 0) AS sum_value
-FROM events GROUP BY 1, 2
-""")
+@register("streaming_tumbling_availablenow", oracle=_TUMBLING_ORACLE)
 def streaming_tumbling_availablenow(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     """2.H H1/H2 live: event-time tumbling window with watermark, run
@@ -7493,13 +7301,112 @@ def streaming_retention_sweep(spark: SparkSession,
 # term ('dup' appears in ~5% of documents) so idf spreads the scores.
 _BM25_TERMS = ["spark", "query", "dup"]
 
-
-@register("text_bm25_topk", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)})
+_BM25_TOP20 = """
 SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
 FROM scored
 ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+"""
+
+
+def _bm25_sql(terms=_BM25_TERMS, tokens: str = _DUCK_TOKENS,
+              head: str = "", **kw) -> str:
+    """The BM25 top-20 oracle: ``scored`` (``duck_bm25`` of *terms*
+    with *kw*) after the *head* CTEs, then :data:`_BM25_TOP20`."""
+    return (f"\nWITH {head}scored AS "
+            f"({retrieval_ops.duck_bm25(terms, tokens, **kw)})"
+            + _BM25_TOP20)
+
+
+def _bm25_top20(scored: DataFrame) -> DataFrame:
+    """The Spark twin of :data:`_BM25_TOP20`."""
+    return (scored.select("doc_id",
+                          F.col("dl").cast("long").alias("dl"),
+                          rnd(F.col("bm25"), 6).alias("bm25"))
+            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+            .limit(20))
+
+
+def _invidx_top20(spark: SparkSession, path: str, terms=_BM25_TERMS,
+                  **kw) -> DataFrame:
+    """:func:`_bm25_top20` served from the inverted index at *path*."""
+    return _bm25_top20(retrieval_ops.search_inverted_index(
+        spark, path, terms, **kw))
+
+
+_BM25_ORACLE = _bm25_sql()
+_BM25_AND_ORACLE = _bm25_sql(require_all=True)
+# exact BM25 over the documents a 25% age cut leaves
+_BM25_SURV_ORACLE = _bm25_sql(head="""surv AS (
+  SELECT doc_id, text FROM documents
+  WHERE doc_id >= (SELECT count(*) // 4 FROM documents)
+), """, from_table="surv")
+
+
+# Reciprocal-rank fusion (k_rrf 60) of two top-50 legs, each ranked by
+# (s desc, doc_id): the BM25 leg ``kw_rank`` and a second leg.
+def _rank(name: str, top: str, col: str) -> str:
+    """*name*: the rows of *top* ranked 1.. by (s desc, doc_id) as
+    *col*."""
+    return f"""{name} AS (
+  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
+           AS {col}
+  FROM {top}
+)"""
+
+
+def _kw_leg(**kw) -> str:
+    """``kw_scored``/``kw_top``/``kw_rank``: the BM25 top-50 ranks of
+    :data:`_BM25_TERMS` (*kw* goes to ``duck_bm25``)."""
+    return f"""kw_scored AS ({retrieval_ops.duck_bm25(
+        _BM25_TERMS, _DUCK_TOKENS, **kw)}),
+kw_top AS (
+  SELECT doc_id, (round(bm25, 6) + 0) AS s FROM kw_scored
+  ORDER BY s DESC, doc_id LIMIT 50
+), """ + _rank("kw_rank", "kw_top", "rank_kw")
+
+
+# ``v_scored``/``v_top``/``v_rank``: brute-force cosine top-50 ranks
+_V_LEG = f"""v_scored AS (
+  SELECT e.vec_id AS doc_id,
+         (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS s
+  FROM embeddings e,
+       (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
+), v_top AS (
+  SELECT doc_id, s FROM v_scored ORDER BY s DESC, doc_id LIMIT 50
+), """ + _rank("v_rank", "v_top", "rank_vec")
+
+
+def _rrf(cols: str = " k.rank_kw, v.rank_vec,", limit: int = 10,
+         leg: str = "v_rank v", rank: str = "rank_vec") -> str:
+    """The fused top *limit* of ``kw_rank`` and *leg* (``relation
+    alias``, ranks in *rank*), with the *cols* rank columns."""
+    a = leg.split()[-1]
+    return f"""
+SELECT COALESCE(k.doc_id, {a}.doc_id) AS doc_id,{cols}
+       (round(COALESCE(1.0::DOUBLE / (60 + k.rank_kw), 0.0)
+            + COALESCE(1.0::DOUBLE / (60 + {a}.{rank}), 0.0), 6) + 0) AS rrf
+FROM kw_rank k FULL JOIN {leg} ON k.doc_id = {a}.doc_id
+ORDER BY rrf DESC, doc_id LIMIT {limit}
+"""
+
+
+def _kw_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark twin of :func:`_kw_leg`'s ``kw_rank``."""
+    docs = readers.widen(_t(spark, sf_dir, "documents"))
+    kw = (retrieval_ops.bm25_scores(docs, _BM25_TERMS)
+          .select("doc_id", rnd(F.col("bm25"), 6).alias("s")))
+    return retrieval_ops.bounded_rank(kw, "s", "doc_id", 50)
+
+
+def _vec_rank(emb: DataFrame, qv: list) -> DataFrame:
+    """The Spark twin of :data:`_V_LEG`'s ``v_rank``."""
+    vec = (sim_ops.similarity_to_query(emb, qv)
+           .select(F.col("vec_id").alias("doc_id"),
+                   rnd(F.col("sim"), 6).alias("s")))
+    return retrieval_ops.bounded_rank(vec, "s", "doc_id", 50)
+
+
+@register("text_bm25_topk", oracle=_BM25_ORACLE)
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-20 for a fixed 3-term keyword query — the lexical
     retrieval mode the reference lacks (its search is cosine-only,
@@ -7512,21 +7419,10 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, TakeOrderedAndProject for the top-k.  Nothing shuffles on a
     data-dependent key at any corpus size."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
-    scored = retrieval_ops.bm25_scores(docs, _BM25_TERMS)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _bm25_top20(retrieval_ops.bm25_scores(docs, _BM25_TERMS))
 
 
-@register("text_bm25_and_topk", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS,
-                                         require_all=True)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_bm25_and_topk", oracle=_BM25_AND_ORACLE)
 def text_bm25_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive (AND-mode) BM25 — the other standard keyword
     semantics next to text_bm25_topk's OR mode: only documents
@@ -7537,22 +7433,11 @@ def text_bm25_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter on the same pivoted tf columns — no extra pass, no
     shuffle."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
-    scored = retrieval_ops.bm25_scores(docs, _BM25_TERMS,
-                                       require_all=True)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _bm25_top20(retrieval_ops.bm25_scores(docs, _BM25_TERMS,
+                                                 require_all=True))
 
 
-@register("text_index_and_topk", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS,
-                                         require_all=True)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_index_and_topk", oracle=_BM25_AND_ORACLE)
 def text_index_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AND-mode BM25 served from the PERSISTED inverted index — the
     index path must reproduce the scan path's conjunction bit-for-bit
@@ -7562,13 +7447,7 @@ def text_index_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the admitted set shrinks to the rarest term's postings
     intersection without reading anything extra."""
     path = _inverted_index(spark, sf_dir)
-    scored = retrieval_ops.search_inverted_index(
-        spark, path, _BM25_TERMS, require_all=True)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _invidx_top20(spark, path, require_all=True)
 
 
 @register("rerank_cross_encoder", oracle=f"""
@@ -7607,33 +7486,7 @@ def rerank_cross_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, _BM25_TERMS, candidates=20, k=10)
 
 
-@register("hybrid_search_rrf", oracle=f"""
-WITH kw_scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)}),
-kw_top AS (
-  SELECT doc_id, (round(bm25, 6) + 0) AS s FROM kw_scored
-  ORDER BY s DESC, doc_id LIMIT 50
-), kw_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_kw
-  FROM kw_top
-), v_scored AS (
-  SELECT e.vec_id AS doc_id,
-         (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS s
-  FROM embeddings e,
-       (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
-), v_top AS (
-  SELECT doc_id, s FROM v_scored ORDER BY s DESC, doc_id LIMIT 50
-), v_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_vec
-  FROM v_top
-)
-SELECT COALESCE(k.doc_id, v.doc_id) AS doc_id, k.rank_kw, v.rank_vec,
-       (round(COALESCE(1.0::DOUBLE / (60 + k.rank_kw), 0.0)
-            + COALESCE(1.0::DOUBLE / (60 + v.rank_vec), 0.0), 6) + 0) AS rrf
-FROM kw_rank k FULL JOIN v_rank v ON k.doc_id = v.doc_id
-ORDER BY rrf DESC, doc_id LIMIT 10
-""")
+@register("hybrid_search_rrf", oracle=_with(_kw_leg(), _V_LEG) + _rrf())
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: BM25 keyword leg + cosine vector leg fused by
     reciprocal-rank fusion (Cormack et al., SIGIR 2009) — the retrieval
@@ -7646,15 +7499,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_window_guard.py carries this caller as a bounded exemption),
     and the fusion join runs over two 50-row frames regardless of
     corpus size."""
-    docs = readers.widen(_t(spark, sf_dir, "documents"))
-    kw = (retrieval_ops.bm25_scores(docs, _BM25_TERMS)
-          .select("doc_id", rnd(F.col("bm25"), 6).alias("s")))
-    kw_rank = retrieval_ops.bounded_rank(kw, "s", "doc_id", 50)
-    qv = _query_vec(spark, sf_dir)
-    vec = (sim_ops.similarity_to_query(_t(spark, sf_dir, "embeddings"), qv)
-           .select(F.col("vec_id").alias("doc_id"),
-                   rnd(F.col("sim"), 6).alias("s")))
-    vec_rank = retrieval_ops.bounded_rank(vec, "s", "doc_id", 50)
+    kw_rank = _kw_rank(spark, sf_dir)
+    vec_rank = _vec_rank(_t(spark, sf_dir, "embeddings"),
+                         _query_vec(spark, sf_dir))
     fused = retrieval_ops.rrf_fuse([kw_rank, vec_rank], topk=10)
     return fused.select("doc_id",
                         F.col("rank_0").alias("rank_kw"),
@@ -7663,26 +7510,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("dedup_semdedup", oracle=f"""
-WITH corpus AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id,
-         list_transform(embedding, x -> CAST(x * 1.25 AS FLOAT))
-           AS embedding
-  FROM embeddings WHERE vec_id % 20 = 0
-), cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM corpus ORDER BY vec_id LIMIT 16
-), scored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM corpus e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM scored) WHERE rn = 1
-), dropped AS (
+WITH {_scaled_corpus()}, {_seed_cent("corpus")},
+{_assign("corpus", names=_ASSIGNED)},
+dropped AS (
   SELECT DISTINCT b.vec_id
   FROM assigned a JOIN assigned b
     ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -7705,12 +7535,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses a cell boundary, so cost is sum of cell^2, bounded by
     nlist sizing — not corpus^2."""
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    scaled = (emb.filter(F.col("vec_id") % 20 == 0)
-              .withColumn("vec_id", F.col("vec_id") + 1000000)
-              .withColumn("embedding", F.transform(
-                  "embedding",
-                  lambda x: (x * F.lit(1.25)).cast("float"))))
-    corpus = emb.unionByName(scaled)
+    corpus = _with_scaled_dups(emb)
     cent = ivf_ops.seed_centroids(corpus, 16)
     return dedup_ops.semdedup(corpus, cent, threshold=0.99)
 
@@ -8112,35 +7937,13 @@ def incremental_quantile_sketch(spark: SparkSession,
             .orderBy("event_type"))
 
 
-@register("pipeline_retention_forget", oracle=f"""
-WITH n AS (SELECT count(*) AS n FROM embeddings),
+@register("pipeline_retention_forget", oracle=_with(
+    """n AS (SELECT count(*) AS n FROM embeddings),
 surv AS (
   SELECT vec_id, embedding FROM embeddings
   WHERE vec_id >= (SELECT n // 4 FROM n)
-), cent AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 16
-), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         (round({V.duck_cosine('e.embedding', 'c.cvec')}, 9) + 0) AS cdist
-  FROM surv e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist DESC, centroid_id) AS rn
-    FROM scored) WHERE rn = 1
-), probe AS (
-  SELECT centroid_id AS cell
-  FROM cent, q
-  ORDER BY {V.duck_cosine('cvec', 'qv')} DESC, centroid_id LIMIT 4
-)
-SELECT a.vec_id, a.cell,
-       (round({V.duck_cosine('a.embedding', 'qv')}, 6) + 0) AS sim
-FROM assigned a, q
-WHERE a.cell IN (SELECT cell FROM probe)
-ORDER BY sim DESC, a.vec_id LIMIT 10
-""")
+)""", _seed_cent(), _q(), _assign("surv", names=_ASSIGNED), _probe_cells())
+    + _ivf_exact())
 def pipeline_retention_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retention CAPSTONE: forget-by-age must reach the SERVING
     surface, not just the store.  Flow: (1) arrival-ordered store
@@ -8216,16 +8019,7 @@ def pipeline_retention_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                               _query_vec(spark, sf_dir), k=10, nprobe=4)
 
 
-@register("pipeline_retention_forget_text", oracle=f"""
-WITH surv AS (
-  SELECT doc_id, text FROM documents
-  WHERE doc_id >= (SELECT count(*) // 4 FROM documents)
-), scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS,
-                                       from_table="surv")})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("pipeline_retention_forget_text", oracle=_BM25_SURV_ORACLE)
 def pipeline_retention_forget_text(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """The TEXT twin of the retention capstone (VERDICT r15 item 1:
@@ -8280,25 +8074,10 @@ def pipeline_retention_forget_text(spark: SparkSession,
         lambda: retrieval_ops.delete_inverted_docs(victims, index),
         lambda: sinks.retention_sweep(spark, store, cutoff))
     assert len(info["dropped"]) >= 1, info  # the fast path engaged
-    scored = retrieval_ops.search_inverted_index(spark, index,
-                                                 _BM25_TERMS)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _invidx_top20(spark, index)
 
 
-@register("text_index_ttl_sweep", oracle=f"""
-WITH surv AS (
-  SELECT doc_id, text FROM documents
-  WHERE doc_id >= (SELECT count(*) // 4 FROM documents)
-), scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS,
-                                       from_table="surv")})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_index_ttl_sweep", oracle=_BM25_SURV_ORACLE)
 def text_index_ttl_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INDEX-SIDE forget-by-age for the text surface — no store scan
     anywhere: the index records the doc timestamp as a meta column at
@@ -8326,13 +8105,7 @@ def text_index_ttl_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     info = retrieval_ops.retention_sweep_inverted_index(
         spark, index, origin + dt.timedelta(minutes=n // 4))
     assert info["tombstoned"] > 0, info
-    scored = retrieval_ops.search_inverted_index(spark, index,
-                                                 _BM25_TERMS)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _invidx_top20(spark, index)
 
 
 _ANN_TTL_ORACLE = _with(
@@ -8432,12 +8205,7 @@ def pipeline_ttl_hybrid_serve(spark: SparkSession,
 
     run_concurrently(_text_leg, _ann_leg)
 
-    qids = sorted(_HYBRID_TERMS)
-    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-          for r in emb.filter(F.col("vec_id").isin(qids))
-          .select("vec_id", "embedding").collect()}
-    queries = {qid: {"terms": _HYBRID_TERMS[qid], "qvec": qv[qid]}
-               for qid in qids}
+    queries = _hybrid_queries(emb, _HYBRID_TERMS)
     return retrieval_ops.hybrid_serve_many(spark, tpath, apath, queries,
                                            leg_k=50, k=10, nprobe=4,
                                            shortlist=50)
@@ -8447,13 +8215,8 @@ _STOPWORD_TOKENS = ("string_split_regex(trim(lower(text || ' zstopz')), "
                     "'\\s+')")
 
 
-@register("text_index_stopword_prune", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(["spark", "dup"],
-                                         _STOPWORD_TOKENS)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_index_stopword_prune",
+          oracle=_bm25_sql(["spark", "dup"], _STOPWORD_TOKENS))
 def text_index_stopword_prune(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Stopword pruning as index maintenance: a token appended to
@@ -8479,13 +8242,7 @@ def text_index_stopword_prune(spark: SparkSession,
     info = retrieval_ops.prune_inverted_index_stopwords(spark, index,
                                                         max_df_ratio=0.9)
     assert info["pruned"] == ["zstopz"], info
-    scored = retrieval_ops.search_inverted_index(
-        spark, index, ["zstopz", "spark", "dup"])
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _invidx_top20(spark, index, ["zstopz", "spark", "dup"])
 
 
 _RECYCLE_CORPUS = ("(SELECT doc_id, text || ' zstopz' AS text "
@@ -8494,14 +8251,8 @@ _RECYCLE_CORPUS = ("(SELECT doc_id, text || ' zstopz' AS text "
                    "FROM documents WHERE doc_id % 50 = 0) corpus")
 
 
-@register("text_index_stopword_recycle", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(["spark", "dup", "qrecycle"],
-                                         _DUCK_TOKENS,
-                                         from_table=_RECYCLE_CORPUS)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_index_stopword_recycle", oracle=_bm25_sql(
+    ["spark", "dup", "qrecycle"], from_table=_RECYCLE_CORPUS))
 def text_index_stopword_recycle(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Maintenance-family INTERPLAY capstone (VERDICT r16 item 6):
@@ -8561,36 +8312,30 @@ def text_index_stopword_recycle(spark: SparkSession,
     second = retrieval_ops.prune_inverted_index_stopwords(
         spark, index, max_df_ratio=0.9)
     assert second["pruned"] == ["zstopz"], second  # qrecycle survives
-    scored = retrieval_ops.search_inverted_index(
-        spark, index, ["zstopz", "spark", "dup", "qrecycle"])
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _invidx_top20(spark, index,
+                         ["zstopz", "spark", "dup", "qrecycle"])
 
 
-_INVIDX_CACHE: dict[str, str] = {}
-
-
-def _inverted_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once cache for the persisted inverted index (the text twin
-    of _materialized_index): the fixture is immutable, so the offline
-    index build runs once per sf_dir and every query serves from it."""
-    if sf_dir not in _INVIDX_CACHE:
-        path = os.path.join(tempfile.mkdtemp(prefix="invidx_"), "index")
+def _inverted_index(spark: SparkSession, sf_dir: str,
+                    kind: str = "full") -> str:
+    """The cached persisted inverted index (the text twin of
+    _materialized_index) over the whole corpus (``full``), the 90%
+    base (``base90`` — the pre-crawl state the upsert rows fold the
+    held-out slice into), the doc_id%5<>0 old snapshot (``old5`` — the
+    pre-diff state the changefeed row applies a feed to), or the whole
+    corpus carrying ``source`` as a meta column (``src``)."""
+    def build(path: str) -> None:
         docs = readers.widen(_t(spark, sf_dir, "documents"))
-        retrieval_ops.build_inverted_index(docs, path)
-        _INVIDX_CACHE[sf_dir] = path
-    return _INVIDX_CACHE[sf_dir]
+        if kind == "base90":
+            docs = docs.filter(F.col("doc_id") % 10 != 3)
+        elif kind == "old5":
+            docs = docs.filter(F.col("doc_id") % 5 != 0)
+        retrieval_ops.build_inverted_index(
+            docs, path, meta_cols=("source",) if kind == "src" else ())
+    return _built((sf_dir, "text", kind), build)
 
 
-@register("text_inverted_index_topk", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_inverted_index_topk", oracle=_BM25_ORACLE)
 def text_inverted_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from the PERSISTED inverted index — the text-side
     materialized-index lifecycle, mirroring ann_ivfpq_materialized on
@@ -8602,12 +8347,7 @@ def text_inverted_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared code (retrieval._bm25_score_col), so the index must
     reproduce the scan bit-for-bit."""
     path = _inverted_index(spark, sf_dir)
-    scored = retrieval_ops.search_inverted_index(spark, path, _BM25_TERMS)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
+    return _invidx_top20(spark, path)
 
 
 _MANY_TERMSETS = {"q1": ["spark", "query", "dup"],
@@ -8676,47 +8416,7 @@ def text_search_many_large(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, _MANY_TERMSETS_LARGE, k=20, literal_max=0)
 
 
-def _invidx_copy(spark: SparkSession, sf_dir: str,
-                 base90: bool = False, old5: bool = False) -> str:
-    """A writable copy of a cached inverted-index build: the full
-    corpus (default), the 90% base (``base90`` — the pre-crawl state
-    the upsert row folds the held-out slice into), or the doc_id%5!=0
-    old snapshot (``old5`` — the pre-diff state the changefeed row
-    applies a feed to).  Builds are offline jobs, cached per fixture;
-    mutating rows each take a copy."""
-    import shutil
-
-    key = ((sf_dir, "base90") if base90
-           else (sf_dir, "old5") if old5 else sf_dir)
-    if key not in _INVIDX_CACHE:
-        path = os.path.join(tempfile.mkdtemp(prefix="invidx_"), "index")
-        docs = readers.widen(_t(spark, sf_dir, "documents"))
-        if base90:
-            docs = docs.filter(F.col("doc_id") % 10 != 3)
-        elif old5:
-            docs = docs.filter(F.col("doc_id") % 5 != 0)
-        retrieval_ops.build_inverted_index(docs, path)
-        _INVIDX_CACHE[key] = path
-    out = os.path.join(tempfile.mkdtemp(prefix="invidx_mut_"), "index")
-    shutil.copytree(_INVIDX_CACHE[key], out)
-    return out
-
-
-def _invidx_top20(spark: SparkSession, path: str) -> DataFrame:
-    scored = retrieval_ops.search_inverted_index(spark, path, _BM25_TERMS)
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
-
-
-@register("text_index_upsert", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("text_index_upsert", oracle=_BM25_ORACLE)
 def text_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of the persisted inverted index — the
     text twin of ann_index_upsert, closing the crawl loop's BM25 leg
@@ -8729,20 +8429,14 @@ def text_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim: build-then-upsert must equal the single-shot build
     bit-for-bit, integer inputs and all."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
-    path = _invidx_copy(spark, sf_dir, base90=True)
+    path = _copy(_inverted_index(spark, sf_dir, "base90"))
     retrieval_ops.upsert_inverted_index(
         docs.filter(F.col("doc_id") % 10 == 3), path)
     return _invidx_top20(spark, path)
 
 
-_TEXT_ERASE_ORACLE = f"""
-WITH scored AS ({retrieval_ops.duck_bm25(
-    _BM25_TERMS, _DUCK_TOKENS,
-    from_table="(SELECT * FROM documents WHERE doc_id % 10 <> 3)")})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-"""
+_TEXT_ERASE_ORACLE = _bm25_sql(
+    from_table="(SELECT * FROM documents WHERE doc_id % 10 <> 3)")
 
 
 @register("text_index_erase", oracle=_TEXT_ERASE_ORACLE)
@@ -8757,7 +8451,7 @@ def text_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics — a tombstone that hid rows but left them in the stats
     would shift every idf and fail the value check."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
-    path = _invidx_copy(spark, sf_dir)
+    path = _copy(_inverted_index(spark, sf_dir))
     retrieval_ops.delete_inverted_docs(
         docs.filter(F.col("doc_id") % 10 == 3).select("doc_id"), path)
     return _invidx_top20(spark, path)
@@ -8774,7 +8468,7 @@ def text_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     docs = readers.widen(_t(spark, sf_dir, "documents"))
-    path = _invidx_copy(spark, sf_dir)
+    path = _copy(_inverted_index(spark, sf_dir))
     retrieval_ops.delete_inverted_docs(
         docs.filter(F.col("doc_id") % 10 == 3).select("doc_id"), path)
     stats = retrieval_ops.compact_inverted_index(spark, path)
@@ -8787,15 +8481,9 @@ def text_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SRC_SLICE = "('src1', 'src3', 'src5', 'src7')"
 
 
-@register("text_index_filtered_search", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(
-    _BM25_TERMS, _DUCK_TOKENS,
+@register("text_index_filtered_search", oracle=_bm25_sql(
     from_table=f"(SELECT doc_id, text FROM documents "
-               f"WHERE source IN {_SRC_SLICE})")})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+               f"WHERE source IN {_SRC_SLICE})"))
 def text_index_filtered_search(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Filtered keyword serving from the persisted inverted index —
@@ -8806,29 +8494,8 @@ def text_index_filtered_search(spark: SparkSession,
     (N, Σdl, per-term df) is recounted over eligible docs only.  The
     oracle is the scan-side BM25 over the slice: filtered serving
     must be bit-identical to an index built on the slice alone."""
-    path = _src_inverted_index(spark, sf_dir)
-    scored = retrieval_ops.search_inverted_index(
-        spark, path, _BM25_TERMS,
-        where=f"source IN {_SRC_SLICE}")
-    return (scored.select("doc_id",
-                          F.col("dl").cast("long").alias("dl"),
-                          rnd(F.col("bm25"), 6).alias("bm25"))
-            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(20))
-
-
-def _src_inverted_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once cache for the metadata-carrying inverted index
-    (meta_cols=("source",))."""
-    key = (sf_dir, "src")
-    if key not in _INVIDX_CACHE:
-        path = os.path.join(tempfile.mkdtemp(prefix="invidxsrc_"),
-                            "index")
-        docs = readers.widen(_t(spark, sf_dir, "documents"))
-        retrieval_ops.build_inverted_index(docs, path,
-                                           meta_cols=("source",))
-        _INVIDX_CACHE[key] = path
-    return _INVIDX_CACHE[key]
+    path = _inverted_index(spark, sf_dir, "src")
+    return _invidx_top20(spark, path, where=f"source IN {_SRC_SLICE}")
 
 
 @register("text_filtered_many_large", oracle=_text_many_oracle(
@@ -8848,7 +8515,7 @@ def text_filtered_many_large(spark: SparkSession,
     the broadcast frame from the dimension-bounded collect — recounts
     over eligible docs only, so the oracle is simply the scan-side
     BM25 of the SLICED corpus stacked per query."""
-    path = _src_inverted_index(spark, sf_dir)
+    path = _inverted_index(spark, sf_dir, "src")
     return retrieval_ops.search_inverted_index_many(
         spark, path, _MANY_TERMSETS_LARGE, k=20, literal_max=0,
         where=f"source IN {_SRC_SLICE}")
@@ -8870,14 +8537,9 @@ def hybrid_filtered_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the document slice and the vector candidate set label-gated
     before encoding — filter-at-serve must equal slice semantics end
     to end."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qids = sorted(_HYBRID_TERMS)
-    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-          for r in emb.filter(F.col("vec_id").isin(qids))
-          .select("vec_id", "embedding").collect()}
-    queries = {qid: {"terms": _HYBRID_TERMS[qid], "qvec": qv[qid]}
-               for qid in qids}
-    tpath = _src_inverted_index(spark, sf_dir)
+    queries = _hybrid_queries(_t(spark, sf_dir, "embeddings"),
+                              _HYBRID_TERMS)
+    tpath = _inverted_index(spark, sf_dir, "src")
     apath = _labeled_index(spark, sf_dir)
     return retrieval_ops.hybrid_serve_many(
         spark, tpath, apath, queries, leg_k=50, k=10, nprobe=4,
@@ -8902,14 +8564,9 @@ def hybrid_filtered_many_large(spark: SparkSession,
     this cross-product under maintenance; this row gives the driver
     the static-corpus value check with the fully parameterized
     batched-hybrid oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qids = sorted(_HYBRID_TERMS_LARGE)
-    qv = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-          for r in emb.filter(F.col("vec_id").isin(qids))
-          .select("vec_id", "embedding").collect()}
-    queries = {qid: {"terms": _HYBRID_TERMS_LARGE[qid], "qvec": qv[qid]}
-               for qid in qids}
-    tpath = _src_inverted_index(spark, sf_dir)
+    queries = _hybrid_queries(_t(spark, sf_dir, "embeddings"),
+                              _HYBRID_TERMS_LARGE)
+    tpath = _inverted_index(spark, sf_dir, "src")
     apath = _labeled_index(spark, sf_dir)
     return retrieval_ops.hybrid_serve_many(
         spark, tpath, apath, queries, leg_k=50, k=10, nprobe=4,
@@ -8917,12 +8574,7 @@ def hybrid_filtered_many_large(spark: SparkSession,
         where_ann="label % 2 = 0", literal_max=0)
 
 
-@register("streaming_text_index_upsert", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+@register("streaming_text_index_upsert", oracle=_BM25_ORACLE)
 def streaming_text_index_upsert(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Streaming document ingestion into the persisted inverted index
@@ -8938,7 +8590,7 @@ def streaming_text_index_upsert(spark: SparkSession,
     continuous keyword ingest safe to retry and re-shard."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
     batch = docs.filter(F.col("doc_id") % 10 == 3).select("doc_id", "text")
-    path = _invidx_copy(spark, sf_dir, base90=True)
+    path = _copy(_inverted_index(spark, sf_dir, "base90"))
 
     src = os.path.join(tempfile.mkdtemp(prefix="txtstream_"), "incoming")
     batch.repartition(3).write.parquet(src)
@@ -8972,7 +8624,7 @@ def streaming_text_index_erase(spark: SparkSession,
     needs."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
     victims = docs.filter(F.col("doc_id") % 10 == 3).select("doc_id")
-    path = _invidx_copy(spark, sf_dir)
+    path = _copy(_inverted_index(spark, sf_dir))
 
     src = os.path.join(tempfile.mkdtemp(prefix="txterase_"), "victims")
     victims.repartition(3).write.parquet(src)
@@ -9015,22 +8667,16 @@ def text_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     live-side invariants and the backlog count against the raw
     corpus."""
     docs = readers.widen(_t(spark, sf_dir, "documents"))
-    path = _invidx_copy(spark, sf_dir)
+    path = _copy(_inverted_index(spark, sf_dir))
     retrieval_ops.delete_inverted_docs(
         docs.filter(F.col("doc_id") % 10 == 3).select("doc_id"), path)
     return retrieval_ops.inverted_index_stats(spark, path)
 
 
-@register("changefeed_apply_text_index", oracle=f"""
-WITH scored AS ({retrieval_ops.duck_bm25(
-    _BM25_TERMS, _DUCK_TOKENS,
+@register("changefeed_apply_text_index", oracle=_bm25_sql(
     from_table="(SELECT doc_id, CASE WHEN doc_id % 3 = 0 "
                "THEN text || ' spark query' ELSE text END AS text "
-               "FROM documents WHERE doc_id % 7 <> 0)")})
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, (round(bm25, 6) + 0) AS bm25
-FROM scored
-ORDER BY (round(bm25, 6) + 0) DESC, doc_id LIMIT 20
-""")
+               "FROM documents WHERE doc_id % 7 <> 0)"))
 def changefeed_apply_text_index(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Changefeed-driven TEXT-index maintenance — the wiring that ends
@@ -9066,7 +8712,7 @@ def changefeed_apply_text_index(spark: SparkSession,
                     .when(F.col("n_id").isNull(), F.lit("delete"))
                     .otherwise(F.lit("update")).alias("action"),
                     "old_text", "new_text"))
-    path = _invidx_copy(spark, sf_dir, old5=True)
+    path = _copy(_inverted_index(spark, sf_dir, "old5"))
     stats = retrieval_ops.apply_changefeed_text_index(spark, path, feed)
     assert stats["deleted"] and stats["upserted"]
     return _invidx_top20(spark, path)
@@ -9082,27 +8728,9 @@ def changefeed_apply_text_index(spark: SparkSession,
           + 0) AS s
   FROM cand c JOIN short sh ON sh.vec_id = c.vec_id
   ORDER BY s DESC, doc_id LIMIT 50
-), v_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_vec
-  FROM v_top
-), kw_scored AS ({retrieval_ops.duck_bm25(
-    _BM25_TERMS, _DUCK_TOKENS,
-    from_table="(SELECT * FROM documents WHERE doc_id % 10 <> 7)")}),
-kw_top AS (
-  SELECT doc_id, (round(bm25, 6) + 0) AS s FROM kw_scored
-  ORDER BY s DESC, doc_id LIMIT 50
-), kw_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_kw
-  FROM kw_top
-)""") + """
-SELECT COALESCE(k.doc_id, v.doc_id) AS doc_id, k.rank_kw, v.rank_vec,
-       (round(COALESCE(1.0::DOUBLE / (60 + k.rank_kw), 0.0)
-            + COALESCE(1.0::DOUBLE / (60 + v.rank_vec), 0.0), 6) + 0) AS rrf
-FROM kw_rank k FULL JOIN v_rank v ON k.doc_id = v.doc_id
-ORDER BY rrf DESC, doc_id LIMIT 10
-""")
+)""", _rank("v_rank", "v_top", "rank_vec"),
+    _kw_leg(from_table="(SELECT * FROM documents WHERE doc_id % 10 <> 7)"))
+    + _rrf())
 def pipeline_forget_and_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed index lifecycle a deployment actually runs —
     forget, admit, serve, in one flow: (1) the primary store erases a
@@ -9130,19 +8758,10 @@ def pipeline_forget_and_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source-of-truth store: base corpus (built once per fixture and
     # cached like the index builds — each invocation mutates a copy),
     # then the two verbs
-    import shutil as _shutil
-
-    cache_key = (sf_dir, "forget_store")
-    if cache_key not in _ANN_INDEX_CACHE:
-        base_store = os.path.join(tempfile.mkdtemp(prefix="forget_"),
-                                  "store")
-        sinks.upsert_parquet(spark,
-                             emb.filter(F.col("vec_id") % 10 != 3),
-                             base_store, key="vec_id",
-                             order_col="vec_id")
-        _ANN_INDEX_CACHE[cache_key] = base_store
-    store = os.path.join(tempfile.mkdtemp(prefix="forget_"), "store")
-    _shutil.copytree(_ANN_INDEX_CACHE[cache_key], store)
+    store = _copy(_built((sf_dir, "forget_store"), lambda path: (
+        sinks.upsert_parquet(spark, emb.filter(F.col("vec_id") % 10 != 3),
+                             path, key="vec_id", order_col="vec_id")),
+        leaf="store"))
     # the victims' current rows, read BEFORE the store erase — the
     # O(batch) cell-lookup input for the ANN-side erasure
     victim_rows = (sinks.read_store(spark, store)
@@ -9161,14 +8780,14 @@ def pipeline_forget_and_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                              key="vec_id", order_col="vec_id")
 
     def _ann_leg() -> str:
-        path = _upsert_base_copy(spark, sf_dir)
+        path = _copy(_upsert_base_path(spark, sf_dir))
         ann_index.delete_index_keys(spark, path, erase_ids,
                                     vectors=victim_rows)
         ann_index.upsert_index(spark, path, batch_emb)
         return path
 
     def _txt_leg() -> str:
-        path = _invidx_copy(spark, sf_dir, base90=True)
+        path = _copy(_inverted_index(spark, sf_dir, "base90"))
         retrieval_ops.delete_inverted_docs(
             docs.filter(F.col("doc_id") % 10 == 7).select("doc_id"),
             path)
@@ -9194,30 +8813,6 @@ def pipeline_forget_and_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("rank_0").alias("rank_kw"),
                         F.col("rank_1").alias("rank_vec"),
                         "rrf")
-
-
-def _cfeed_old_copy(spark: SparkSession, sf_dir: str) -> str:
-    """Writable copy of the index built on the changefeed row's OLD
-    snapshot (vec_id%5<>0, embeddings cast to double so the update
-    payloads union cleanly); cached like the other build jobs."""
-    import shutil
-
-    key = (sf_dir, "cfeed_old")
-    if key not in _ANN_INDEX_CACHE:
-        base_path = os.path.join(tempfile.mkdtemp(prefix="cfeed_"),
-                                 "index")
-        old = (_t(spark, sf_dir, "embeddings")
-               .filter(F.col("vec_id") % 5 != 0)
-               .select("vec_id",
-                       F.transform("embedding",
-                                   lambda x: x.cast("double"))
-                       .alias("embedding")))
-        ann_index.build_index(spark, old, base_path,
-                              nlist=16, m=8, ncodes=16)
-        _ANN_INDEX_CACHE[key] = base_path
-    path = os.path.join(tempfile.mkdtemp(prefix="cfeed_"), "index")
-    shutil.copytree(_ANN_INDEX_CACHE[key], path)
-    return path
 
 
 @register("changefeed_apply_index", oracle=_with(
@@ -9269,7 +8864,15 @@ def changefeed_apply_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .when(F.col("n_id").isNull(), F.lit("delete"))
                     .otherwise(F.lit("update")).alias("action"),
                     "old_embedding", "new_embedding"))
-    path = _cfeed_old_copy(spark, sf_dir)
+    # the index built on the OLD snapshot (vec_id%5<>0, embeddings
+    # cast to double so the update payloads union cleanly)
+    path = _copy(_ann_built(
+        spark, (sf_dir, "cfeed_old"),
+        lambda: _t(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % 5 != 0)
+        .select("vec_id", F.transform("embedding",
+                                      lambda x: x.cast("double"))
+                .alias("embedding"))))
     stats = ann_index.apply_changefeed_index(spark, path, feed)
     assert stats["erased_cells"] and stats["merged_cells"]
     return ann_index.search_index(spark, path,
@@ -9675,7 +9278,8 @@ def tokenizer_fertility_by_source(spark: SparkSession,
             .filter(F.col("n_words") > 0))
 
 
-@register("embedding_centroid_drift", oracle="""
+# per-label centroid drift from the 80% slice to the whole corpus
+_DRIFT_ORACLE = """
 WITH oldc AS (
   SELECT label, i AS pos, (round(avg(embedding[i]), 6) + 0) AS c_old
   FROM embeddings, unnest(generate_series(1, len(embedding))) AS t(i)
@@ -9697,7 +9301,10 @@ JOIN newc n ON n.label = o.label AND n.pos = o.pos
 JOIN no ON no.label = o.label
 JOIN nn ON nn.label = o.label
 GROUP BY o.label, no.n_old, nn.n_new
-""")
+"""
+
+
+@register("embedding_centroid_drift", oracle=_DRIFT_ORACLE)
 def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid L2 shift between the previous snapshot (every
     vec_id % 5 == 0 row absent — the last crawl's subset) and the
@@ -9709,29 +9316,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_ops.centroid_drift(old, emb)
 
 
-@register("streaming_centroid_drift", oracle="""
-WITH oldc AS (
-  SELECT label, i AS pos, (round(avg(embedding[i]), 6) + 0) AS c_old
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS t(i)
-  WHERE vec_id % 5 <> 0 GROUP BY label, i
-), newc AS (
-  SELECT label, i AS pos, (round(avg(embedding[i]), 6) + 0) AS c_new
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS t(i)
-  GROUP BY label, i
-), no AS (
-  SELECT label, count(*) AS n_old FROM embeddings
-  WHERE vec_id % 5 <> 0 GROUP BY label
-), nn AS (
-  SELECT label, count(*) AS n_new FROM embeddings GROUP BY label
-)
-SELECT o.label, no.n_old, nn.n_new,
-       (round(sqrt(sum(power(n.c_new - o.c_old, 2))), 6) + 0) AS drift
-FROM oldc o
-JOIN newc n ON n.label = o.label AND n.pos = o.pos
-JOIN no ON no.label = o.label
-JOIN nn ON nn.label = o.label
-GROUP BY o.label, no.n_old, nn.n_new
-""")
+@register("streaming_centroid_drift", oracle=_DRIFT_ORACLE)
 def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift monitor fed by LIVE ingest — embedding_centroid_drift
     with the current crawl arriving as a file stream: the vec_id%5==0
@@ -9767,19 +9352,7 @@ def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_ops.centroid_drift(old, spark.read.parquet(store))
 
 
-@register("dedup_cluster_histogram", oracle=f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-walk(id, comp) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.id
-),
+@register("dedup_cluster_histogram", oracle=_CC_WALK + """,
 comp AS (SELECT id, min(comp) AS component FROM walk GROUP BY id),
 full_docs AS (
   SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
@@ -9832,10 +9405,7 @@ def dpp_dim_filtered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mechanism every star-schema time filter rides in a warehouse.
     The oracle runs the same join on the raw table: the partitioned
     rewrite plus runtime pruning is lossless."""
-    if sf_dir not in _DAY_PARTITIONED_CACHE:
-        # partitioned_time_scan owns the cache; reuse its layout
-        REGISTRY["partitioned_time_scan"](spark, sf_dir).count()
-    part = spark.read.parquet(_DAY_PARTITIONED_CACHE[sf_dir])
+    part = spark.read.parquet(_day_events(spark, sf_dir))
     ev = _t(spark, sf_dir, "events")
     dim = (ev.select(F.to_date("ts").alias("day")).distinct()
            .filter((F.col("day") >= F.lit("2024-01-10").cast("date"))
@@ -9993,26 +9563,7 @@ def aqe_skew_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, j.schema)
 
 
-# session-lifetime cache of the "previous crawl" component store per
-# sf_dir (immutable fixture, read-only artifact)
-_CC_BASE_CACHE: dict[str, str] = {}
-
-
-@register("dedup_components_incremental", oracle=f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-walk(id, comp) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.id
-)
-SELECT id, min(comp) AS component FROM walk GROUP BY id
-""")
+@register("dedup_components_incremental", oracle=_CC_ORACLE)
 def dedup_components_incremental(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """Incremental dup-graph maintenance — the CC side of the
@@ -10035,15 +9586,12 @@ def dedup_components_incremental(spark: SparkSession,
     # the previous crawl's artifact: persisted once per session (the
     # fixture is immutable and the store is only ever read — the same
     # cached-base mechanic as _upsert_base_path), read back per run
-    if sf_dir not in _CC_BASE_CACHE:
-        store = os.path.join(tempfile.mkdtemp(prefix="ccstore_"), "comp")
-        old = docs.filter(F.col("doc_id") % 4 != 0)
-        dedup_ops.connected_components_star(
-            dedup_ops.dedup_minhash_lsh(old, num_hashes=8, bands=4,
-                                        shingle_n=3,
-                                        max_block=32)).write.parquet(store)
-        _CC_BASE_CACHE[sf_dir] = store
-    comp_old = spark.read.parquet(_CC_BASE_CACHE[sf_dir])
+    comp_old = spark.read.parquet(_built(
+        (sf_dir, "cc_base"), lambda path: dedup_ops.connected_components_star(
+            dedup_ops.dedup_minhash_lsh(
+                docs.filter(F.col("doc_id") % 4 != 0), num_hashes=8,
+                bands=4, shingle_n=3, max_block=32)).write.parquet(path),
+        leaf="comp"))
 
     # band the BATCH only; the full banded corpus stands in for the
     # persisted posting store a deployment maintains incrementally
@@ -10083,7 +9631,7 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot-upsert oracle computes: compaction moves bytes, never
     rows."""
     emb = _t(spark, sf_dir, "embeddings")
-    path = _upsert_base_copy(spark, sf_dir)
+    path = _copy(_upsert_base_path(spark, sf_dir))
     ann_index.upsert_index(spark, path,
                            emb.filter(F.col("vec_id") % 30 == 3))
     ann_index.upsert_index(spark, path,
@@ -10279,41 +9827,15 @@ def ann_mmr_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_ops.mmr_select(short, k=10, lam=0.7)
 
 
-_SERVE_CAPSTONE_ORACLE = (f"""
-WITH kw_scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)}),
-kw_top AS (
-  SELECT doc_id, (round(bm25, 6) + 0) AS s FROM kw_scored
-  ORDER BY s DESC, doc_id LIMIT 50
-), kw_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_kw
-  FROM kw_top
-), v_scored AS (
-  SELECT e.vec_id AS doc_id,
-         (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS s
-  FROM embeddings e,
-       (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
-), v_top AS (
-  SELECT doc_id, s FROM v_scored ORDER BY s DESC, doc_id LIMIT 50
-), v_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_vec
-  FROM v_top
-), fused AS (
-  SELECT COALESCE(k.doc_id, v.doc_id) AS doc_id,
-         (round(COALESCE(1.0::DOUBLE / (60 + k.rank_kw), 0.0)
-              + COALESCE(1.0::DOUBLE / (60 + v.rank_vec), 0.0), 6) + 0)
-           AS rrf
-  FROM kw_rank k FULL JOIN v_rank v ON k.doc_id = v.doc_id
-  ORDER BY rrf DESC, doc_id LIMIT 20
-), short AS MATERIALIZED (
+_SERVE_CAPSTONE_ORACLE = (_with(
+    _kw_leg(), _V_LEG, "fused AS (" + _rrf("", 20) + ")",
+    f"""short AS MATERIALIZED (
   SELECT e.vec_id, e.embedding,
          (round({V.duck_cosine('e.embedding', 'q.qv')}, 6) + 0) AS simq
   FROM embeddings e,
        (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
   WHERE e.vec_id IN (SELECT doc_id FROM fused)
-)"""
-    + _mmr_pair_cte() + _mmr_steps(8, 0.7))
+)""") + _mmr_pair_cte() + _mmr_steps(8, 0.7))
 
 
 @register("pipeline_serving_capstone", oracle=_SERVE_CAPSTONE_ORACLE)
@@ -10327,17 +9849,10 @@ def pipeline_serving_capstone(spark: SparkSession,
     candidate count.  Every stage value-checked end-to-end: the hybrid
     CTEs feed the spliced greedy-MMR CTEs in the oracle exactly as the
     Spark stages feed mmr_select."""
-    docs = readers.widen(_t(spark, sf_dir, "documents"))
-    kw = (retrieval_ops.bm25_scores(docs, _BM25_TERMS)
-          .select("doc_id", rnd(F.col("bm25"), 6).alias("s")))
-    kw_rank = retrieval_ops.bounded_rank(kw, "s", "doc_id", 50)
+    kw_rank = _kw_rank(spark, sf_dir)
     qv = _query_vec(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
-    vec = (sim_ops.similarity_to_query(emb, qv)
-           .select(F.col("vec_id").alias("doc_id"),
-                   rnd(F.col("sim"), 6).alias("s")))
-    vec_rank = retrieval_ops.bounded_rank(vec, "s", "doc_id", 50)
-    fused = retrieval_ops.rrf_fuse([kw_rank, vec_rank], topk=20)
+    fused = retrieval_ops.rrf_fuse([kw_rank, _vec_rank(emb, qv)], topk=20)
     cand = fused.select(F.col("doc_id").alias("vec_id"))
     short = (sim_ops.similarity_to_query(emb, qv, out_col="simq")
              .join(F.broadcast(cand), "vec_id")
@@ -10528,35 +10043,16 @@ def ann_signbit_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10, shortlist=64)
 
 
-@register("maxsim_hybrid_rrf", oracle=f"""
-WITH kw_scored AS ({retrieval_ops.duck_bm25(_BM25_TERMS, _DUCK_TOKENS)}),
-kw_top AS (
-  SELECT doc_id, (round(bm25, 6) + 0) AS s FROM kw_scored
-  ORDER BY s DESC, doc_id LIMIT 50
-), kw_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_kw
-  FROM kw_top
-), ms_scored AS (
+@register("maxsim_hybrid_rrf", oracle=_with(_kw_leg(), f"""ms_scored AS (
   SELECT e.vec_id AS doc_id,
          (round({_duck_maxsim_terms("q.qv")}, 6) + 0) AS s
   FROM embeddings e,
        (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
 ), ms_top AS (
   SELECT doc_id, s FROM ms_scored ORDER BY s DESC, doc_id LIMIT 50
-), ms_rank AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY s DESC, doc_id) AS INT)
-           AS rank_ms
-  FROM ms_top
-)
-SELECT COALESCE(k.doc_id, m.doc_id) AS doc_id,
-       k.rank_kw AS rank_0, m.rank_ms AS rank_1,
-       (round(COALESCE(1.0::DOUBLE / (60 + k.rank_kw), 0.0)
-            + COALESCE(1.0::DOUBLE / (60 + m.rank_ms), 0.0), 6) + 0)
-         AS rrf
-FROM kw_rank k FULL JOIN ms_rank m ON k.doc_id = m.doc_id
-ORDER BY rrf DESC, doc_id LIMIT 10
-""")
+)""", _rank("ms_rank", "ms_top", "rank_ms"))
+    + _rrf(" k.rank_kw AS rank_0, m.rank_ms AS rank_1,",
+           leg="ms_rank m", rank="rank_ms"))
 def maxsim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid keyword + LATE-INTERACTION retrieval: the BM25 leg and
     the MaxSim leg each produce a bounded top-50 rank frame (one
@@ -10565,10 +10061,7 @@ def maxsim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     alignment), fused by reciprocal rank.  Every stage after the two
     scans is bounded by the candidate count; the oracle replays both
     legs and the fusion arithmetic end-to-end."""
-    docs = readers.widen(_t(spark, sf_dir, "documents"))
-    kw = (retrieval_ops.bm25_scores(docs, _BM25_TERMS)
-          .select("doc_id", rnd(F.col("bm25"), 6).alias("s")))
-    kw_rank = retrieval_ops.bounded_rank(kw, "s", "doc_id", 50)
+    kw_rank = _kw_rank(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     qt = _maxsim_token_views(_query_vec(spark, sf_dir))
     ms = (sim_ops.maxsim_topk(emb, qt, k=50, doc_tokens=_MAXSIM_DT,

@@ -199,34 +199,6 @@ def load_centroids(spark: SparkSession, path: str) -> DataFrame:
     return sinks.read_parquet(spark, _subdir(path, "centroids"))
 
 
-def load_centroids_broadcastable(spark: SparkSession, path: str) -> DataFrame:
-    """The centroid sidecar as a DataFrame built from driver-side
-    pyarrow rows (nlist-bounded, the same bytes
-    :func:`load_centroid_rows` serves the probes) with the sidecar's
-    exact Spark schema — the one :func:`load_centroids` reads with,
-    recorded in the sidecar's footer by its Spark writer, so typing
-    the frame costs no job — and column types, and therefore every
-    downstream expression, are identical to the plain read; parquet
-    float32 values round-trip exactly through Python floats.  Remote
-    URIs keep the plain read.
-
-    The ``createDataFrame(list)`` frame is RDD-backed (``Scan
-    ExistingRDD``), not a local relation, and it saves no job over
-    :func:`load_centroids`.  Measured at sf0.001 (nlist 4, warm, by
-    ``numTotalJobs``): collecting either frame runs 1 job; a
-    broadcast join over either runs 2, one more than the same query
-    without the join; ``ivf.assign_cells`` over either runs 4.  A
-    frame built from a pyarrow Table is a ``LocalTableScan`` whose
-    collect runs 0 jobs, but its broadcast join still runs 2."""
-    sub = _subdir(path, "centroids")
-    if fs.is_remote(sub):
-        return load_centroids(spark, path)
-    rows = sinks.read_small_parquet_rows(spark, sub)
-    schema = load_centroids(spark, path).schema
-    return spark.createDataFrame(
-        [tuple(r[f.name] for f in schema.fields) for r in rows], schema)
-
-
 def load_centroid_rows(spark: SparkSession, path: str) -> list:
     """Driver-side rows of the nlist-bounded centroid sidecar (the
     probe input); see :func:`sinks.read_small_parquet_rows`."""
@@ -566,7 +538,7 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
         # the call still reported success
         present = (vectors.filter(F.col(vec_col).isNotNull())
                    .join(F.broadcast(keyed), id_col, "semi"))
-        cent = load_centroids_broadcastable(spark, path)
+        cent = load_centroids(spark, path)
         cells = ivf.assign_cells(present, cent, id_col=id_col,
                                  vec_col=vec_col).select("cell")
         missing = keyed.join(present.select(id_col), id_col, "left_anti")
@@ -777,7 +749,7 @@ def upsert_index(spark: SparkSession, path: str,
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     meta_cols = tuple(meta.get("meta_cols", ()))
-    cent = load_centroids_broadcastable(spark, path)
+    cent = load_centroids(spark, path)
     books = load_codebooks(spark, path)
     # stage the encoded batch once: the merge reads it twice (the
     # touched-cell collect and the write) and the moved-key guard a

@@ -93,8 +93,7 @@ def test_ann_cells_centroids_and_pyarrow_sidecar(spark, sf_dir, tmp_path):
     assert n == 0
 
     cent_dir = os.path.join(path, "centroids")
-    cent, n = _jobs(spark, lambda: ann_index.load_centroids_broadcastable(
-        spark, path))
+    cent, n = _jobs(spark, lambda: ann_index.load_centroids(spark, path))
     assert n == 0
     assert cent.schema == spark.read.parquet(cent_dir).schema
 

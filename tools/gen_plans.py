@@ -468,11 +468,14 @@ SHOW = [
 def simplify(plan: str, max_expr: int = 160) -> str:
     """Truncate giant embedded literal arrays/lambdas for readability,
     and write what changes between two runs of the same code in one
-    fixed form: temp-dir names become ``<tmpdir>``, and expression and
+    fixed form: temp-dir names become ``<tmpdir>``, a file location
+    Spark cut short after one becomes ``<tmpdir>...`` (where Spark
+    cuts depends on the temp-dir name's length), and expression and
     plan ids are renumbered by first appearance (concurrent legs draw
     ids from one JVM counter in thread order)."""
     plan = re.sub(re.escape(tempfile.gettempdir()) + r"/[\w-]+",
                   "<tmpdir>", plan)
+    plan = re.sub(r"<tmpdir>[^\s,\]]*\.\.\.", "<tmpdir>...", plan)
     for pat in (r"#(\d+)", r"plan_id=(\d+)"):
         ids: dict = {}
         plan = re.sub(pat, lambda m: m.group(0).replace(
