@@ -10128,7 +10128,9 @@ def _last_checked_rounds() -> dict:
                 and bool(row.get("hash_match"))
                 and row.get("err") is None)
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # the repo root holds the package, however deep this module sits
+    import msg_vector_search_spark as pkg
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
     last: dict[str, int] = {}
     for f in sorted(_glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         try:

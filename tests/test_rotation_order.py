@@ -58,7 +58,8 @@ def test_last_checked_counts_only_green_rows():
     # and the real cache agrees with CORRECTNESS_r13 (all green there)
     last = c._last_checked_rounds()
     import json, os
-    root = os.path.dirname(os.path.dirname(os.path.abspath(c.__file__)))
+    import msg_vector_search_spark as pkg
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
     r13 = json.load(open(os.path.join(root, "CORRECTNESS_r13.json")))
     for name, row in r13.items():
         if green(row):
