@@ -14,7 +14,11 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from msg_vector_search_spark import contract
+from msg_vector_search_spark.contract.ann import _TRAINED_LINK_GUARD
+from msg_vector_search_spark.contract.core import (
+    _WITNESS_KEY_SQL, _fp_guard, _publish_fingerprint, _publish_store_link,
+    _scale_witness, _trained_dir,
+)
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -30,8 +34,8 @@ def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 @pytest.mark.parametrize("table", ["embeddings", "documents", "events"])
 def test_fp_guard_matches_own_scale_and_trips_cross_scale(spark, table):
-    contract._publish_fingerprint(spark, SF_A, "guard_test", table)
-    guard = contract._fp_guard("guard_test", table)
+    _publish_fingerprint(spark, SF_A, "guard_test", table)
+    guard = _fp_guard("guard_test", table)
     con_a, con_b = _duck(SF_A), _duck(SF_B)
     assert con_a.sql(f"SELECT {guard}").fetchone()[0] is True
     assert con_b.sql(f"SELECT {guard}").fetchone()[0] is not True
@@ -41,8 +45,8 @@ def test_spark_witness_equals_duck_witness(spark):
     """The two engines compute the SAME checksum over the same table —
     the property the guard's equality rests on."""
     for table in ("embeddings", "documents", "events"):
-        w = contract._scale_witness(spark, SF_B, table)
-        key = contract._WITNESS_KEY_SQL[table]
+        w = _scale_witness(spark, SF_B, table)
+        key = _WITNESS_KEY_SQL[table]
         from msg_vector_search_spark.functions import analysis
         con = _duck(SF_B)
         d = con.sql(
@@ -64,7 +68,7 @@ def test_trained_link_guard_requires_matching_store(spark, tmp_path):
     from msg_vector_search_spark.operators import ann_index
     from msg_vector_search_spark.sources import readers
 
-    link = contract._trained_dir("trained_index")
+    link = _trained_dir("trained_index")
     try:
         prior = os.readlink(link)
     except OSError:
@@ -73,14 +77,14 @@ def test_trained_link_guard_requires_matching_store(spark, tmp_path):
     path = str(tmp_path / "index")
     ann_index.build_index(spark, emb, path, nlist=8, m=8, ncodes=16)
     try:
-        contract._publish_store_link("trained_index", path)
-        guard = contract._TRAINED_LINK_GUARD
+        _publish_store_link("trained_index", path)
+        guard = _TRAINED_LINK_GUARD
         con_a, con_b = _duck(SF_A), _duck(SF_B)
         assert con_a.sql(f"SELECT {guard}").fetchone()[0] is True
         assert con_b.sql(f"SELECT {guard}").fetchone()[0] is not True
     finally:
         if prior is not None:
-            contract._publish_store_link("trained_index", prior)
+            _publish_store_link("trained_index", prior)
         else:
             try:
                 os.remove(link)

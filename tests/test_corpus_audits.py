@@ -354,6 +354,7 @@ def test_mix_temperature_budget_derivation(spark):
     import math
 
     from msg_vector_search_spark import contract
+    from msg_vector_search_spark.contract.ann import _TEMP_MIX_DIR
     from msg_vector_search_spark.functions import analysis
 
     sf = "/root/testdata/sf0.001"
@@ -380,5 +381,5 @@ def test_mix_temperature_budget_derivation(spark):
         assert cum <= want[src], (src, cum, want[src])
     # the published artifact carries exactly the derived budgets
     pub = {r["source"]: r["budget"] for r in spark.read.parquet(
-        f"{contract._TEMP_MIX_DIR}/budgets").collect()}
+        f"{_TEMP_MIX_DIR}/budgets").collect()}
     assert pub == want
