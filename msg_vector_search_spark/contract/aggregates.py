@@ -1,3 +1,5 @@
+"""Aggregates (SURVEY 2.E)"""
+
 from __future__ import annotations
 
 import os
@@ -13,10 +15,6 @@ from .core import (
     _fp_guard, _publish_fingerprint, _t, _trained_dir, register, rnd,
 )
 
-
-# =========================================================================
-# Aggregates (SURVEY 2.E)
-# =========================================================================
 
 @register("agg_count_total", oracle="SELECT count(*) AS total_count FROM events")
 def agg_count_total(spark: SparkSession, sf_dir: str) -> DataFrame:

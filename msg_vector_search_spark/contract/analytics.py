@@ -1,3 +1,10 @@
+"""Analytics widening (round 4)
+
+Pivot, CUBE, histogram, SCD2 history, disjunctive-pushdown join,
+ntile/percent_rank/cume_dist, grouped moment statistics, bigram
+counts, time-RANGE rolling window.
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -6,12 +13,6 @@ from pyspark.sql import Window
 
 from .core import _t, register, rnd
 
-
-# =========================================================================
-# Analytics widening (round 4): pivot, CUBE, histogram, SCD2 history,
-# disjunctive-pushdown join, ntile/percent_rank/cume_dist, grouped
-# moment statistics, bigram counts, time-RANGE rolling window.
-# =========================================================================
 
 @register("pivot_event_type_daily", oracle="""
 SELECT date_trunc('day', ts) AS day,

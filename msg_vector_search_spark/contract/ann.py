@@ -1,3 +1,5 @@
+"""ANN scale path: IVF partition-pruned search (SURVEY 4 custom opportunity)"""
+
 from __future__ import annotations
 
 import os
@@ -35,10 +37,6 @@ from .dedup import (
 )
 from .text import _DUCK_PUNCT_RATIO, _DUCK_STOP_RATIO
 
-
-# =========================================================================
-# ANN scale path: IVF partition-pruned search (SURVEY 4 custom opportunity)
-# =========================================================================
 
 @register("ann_ivf_topk", oracle=_with(
     _seed_cent(), _q(), _assign(names=_ASSIGNED), _probe_cells(2))

@@ -1,3 +1,5 @@
+"""Corpus audits: cross-source overlap, snapshot drift, reservoirs, BPE"""
+
 from __future__ import annotations
 
 import os
@@ -30,10 +32,6 @@ from .ann import (
 )
 from .hybrid import _V_LEG, _kw_leg, _kw_rank, _rrf, _vec_rank
 
-
-# =========================================================================
-# Corpus audits: cross-source overlap, snapshot drift, reservoirs, BPE
-# =========================================================================
 
 @register("corpus_overlap_matrix", oracle=f"""
 WITH toks AS (

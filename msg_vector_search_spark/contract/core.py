@@ -1,3 +1,9 @@
+"""Registry core: ``register``, ``REGISTRY`` / ``ORACLES`` and the shared
+fixture helpers every section builds on (``rnd``, ``_t``, ``_built``,
+``_copy``, ...), plus the trained-artifact publication that the
+trained rows' oracles replay.
+"""
+
 from __future__ import annotations
 
 import os

@@ -1,3 +1,5 @@
+"""Training-data pipeline: dedup family (extension surface)"""
+
 from __future__ import annotations
 
 import os
@@ -16,10 +18,6 @@ from ..streaming import stream as streaming_ops
 from .core import _t, _upsert_base_path, register
 from .scans import _seed_cent, _with
 
-
-# =========================================================================
-# Training-data pipeline: dedup family (extension surface)
-# =========================================================================
 
 _DUCK_TOKENS = ("string_split_regex(trim(lower(text)), '\\s+')")
 # how many of the Gopher required stop words ``toks`` holds

@@ -1,3 +1,9 @@
+"""Embedding UDF (SURVEY 2.I I1/I2) and multimodal plumbing
+
+The model itself is not SQL-expressible, so these are rows-only checks
+except where the output is model-free (multimodal metadata).
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -13,12 +19,6 @@ from ..sources import readers
 from .core import _query_vec, _t, register, rnd
 from .dedup import _DUCK_TOKENS
 
-
-# =========================================================================
-# Embedding UDF (SURVEY 2.I I1/I2) and multimodal plumbing — the model
-# itself is not SQL-expressible, so these are rows-only checks except
-# where the output is model-free (multimodal metadata).
-# =========================================================================
 
 @register("udf_embed_batch")
 def udf_embed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,3 +1,5 @@
+"""Filters / predicates (SURVEY 2.B)"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -8,10 +10,6 @@ from ..operators import filters as filter_ops
 
 from .core import _t, register
 
-
-# =========================================================================
-# Filters / predicates (SURVEY 2.B)
-# =========================================================================
 
 @register("filter_since_ts", oracle="""
 SELECT event_id, ts, user_id FROM events

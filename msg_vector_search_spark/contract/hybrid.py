@@ -1,3 +1,9 @@
+"""Hybrid retrieval: BM25 keyword leg + reciprocal-rank fusion
+
+The keyword leg is fused with the vector leg (extension surface — the
+reference serves cosine only, src/core/search/engine.py:105-183).
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,12 +23,6 @@ from .dedup import _DUCK_TOKENS, _scaled_corpus, _with_scaled_dups
 from .text import _DUCK_STOP_RATIO
 from .streaming import _STREAM_SEQ
 
-
-# =========================================================================
-# Hybrid retrieval: BM25 keyword leg + reciprocal-rank fusion with the
-# vector leg (extension surface — the reference serves cosine only,
-# src/core/search/engine.py:105-183)
-# =========================================================================
 
 # Fixed keyword query for the lexical leg: two common terms + one rare
 # term ('dup' appears in ~5% of documents) so idf spreads the scores.

@@ -1,3 +1,16 @@
+"""Incremental aggregate maintenance: the "never rescan the corpus" path
+
+A 100 TB corpus's dashboard stats cannot be recomputed corpus-wide
+per batch.  The scale answer is MERGEABLE STATE: persist per-group
+partial aggregates (sufficient statistics / sketches), fold each
+arriving batch's partials in with an algebraic merge, and derive the
+published metrics from the merged state at read time.  Cost per
+refresh is O(batch + |state|), with |state| dimension-sized —
+independent of corpus size.  These rows prove merge(state(base),
+partials(batch)) == agg(corpus) exactly, which is the invariant that
+makes the maintenance loop safe to run forever.
+"""
+
 from __future__ import annotations
 
 import os
@@ -33,20 +46,6 @@ from .hybrid import (
     _kw_leg, _rank, _rrf,
 )
 
-
-# =========================================================================
-# Incremental aggregate maintenance (the "never rescan the corpus"
-# stats path)
-# =========================================================================
-# A 100 TB corpus's dashboard stats cannot be recomputed corpus-wide
-# per batch.  The scale answer is MERGEABLE STATE: persist per-group
-# partial aggregates (sufficient statistics / sketches), fold each
-# arriving batch's partials in with an algebraic merge, and derive the
-# published metrics from the merged state at read time.  Cost per
-# refresh is O(batch + |state|), with |state| dimension-sized —
-# independent of corpus size.  These rows prove merge(state(base),
-# partials(batch)) == agg(corpus) exactly, which is the invariant that
-# makes the maintenance loop safe to run forever.
 
 @register("incremental_agg_merge", oracle="""
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,

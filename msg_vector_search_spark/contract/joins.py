@@ -1,3 +1,5 @@
+"""Joins / lookups (SURVEY 2.D)"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -10,10 +12,6 @@ from ..operators import filters as filter_ops
 
 from .core import _t, register
 
-
-# =========================================================================
-# Joins / lookups (SURVEY 2.D)
-# =========================================================================
 
 @register("join_user_dim", oracle="""
 SELECT o.o_orderkey, o.o_custkey,

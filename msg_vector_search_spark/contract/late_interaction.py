@@ -1,3 +1,11 @@
+"""Multi-vector late interaction (ColBERT MaxSim) — VERDICT r12 item 5
+
+Fixture layout: each stored 64-dim embedding read as 8 contiguous
+8-dim token vectors (the multi-vector store shape); a query uses its
+first 4 token views, so query and doc token counts differ as they do
+in real late-interaction serving.
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -13,13 +21,6 @@ from .hybrid import _kw_leg, _kw_rank, _rank, _rrf
 from .audits import _mmr_oracle
 
 
-# =========================================================================
-# Multi-vector late interaction (ColBERT MaxSim) — VERDICT r12 item 5
-# =========================================================================
-# Fixture layout: each stored 64-dim embedding read as 8 contiguous
-# 8-dim token vectors (the multi-vector store shape); a query uses its
-# first 4 token views, so query and doc token counts differ as they do
-# in real late-interaction serving.
 _MAXSIM_QT, _MAXSIM_DT, _MAXSIM_DIM = 4, 8, 8
 
 

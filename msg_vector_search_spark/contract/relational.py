@@ -1,3 +1,8 @@
+"""Relational surface Spark gives for free (SURVEY 2.D note, 7 P5)
+
+Set ops, outer joins, multi-key groupBy, broadcast-join top-k.
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -7,11 +12,6 @@ from ..operators import dims as dims_ops
 
 from .core import _t, register, rnd
 
-
-# =========================================================================
-# Relational surface Spark gives for free (SURVEY 2.D note, 7 P5):
-# set ops, outer joins, multi-key groupBy, broadcast-join top-k
-# =========================================================================
 
 @register("set_ops_nations", oracle="""
 SELECT 'union' AS op, n FROM (

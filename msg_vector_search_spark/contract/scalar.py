@@ -1,3 +1,5 @@
+"""Scalar text / json / time functions (SURVEY 2.C)"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -8,10 +10,6 @@ from ..functions import textops
 from .core import _t, register
 from .filters import _DUCK_DIRTY
 
-
-# =========================================================================
-# Scalar text / json / time functions (SURVEY 2.C)
-# =========================================================================
 
 @register("json_extract_text", oracle="""
 WITH c AS (

@@ -1,3 +1,9 @@
+"""Scans / sinks / state (SURVEY 2.A)
+
+Also home of the IVF x PQ oracle builder: the DuckDB CTE segments
+every ANN oracle replays.
+"""
+
 from __future__ import annotations
 
 import os
@@ -17,10 +23,6 @@ from .core import (
     _query_vec, _t, _trained_dir, register, rnd,
 )
 
-
-# =========================================================================
-# Scans / sinks / state (SURVEY 2.A)
-# =========================================================================
 
 @register("scan_messages", oracle="""
 SELECT doc_id, text, lang, source, n_chars FROM documents

@@ -1,3 +1,5 @@
+"""Similarity family (SURVEY 2.C C10/C8, 2.B B7, 2.D D6, 2.F F1)"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -9,10 +11,6 @@ from ..operators import similarity as sim_ops
 
 from .core import _query_vec, _t, register, rnd
 
-
-# =========================================================================
-# Similarity family (SURVEY 2.C C10/C8, 2.B B7, 2.D D6, 2.F F1)
-# =========================================================================
 
 @register("cosine_similarity", oracle=f"""
 SELECT e.vec_id,

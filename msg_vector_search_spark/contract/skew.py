@@ -1,14 +1,11 @@
+"""Skew & scale patterns: the explicit two-phase / salted forms"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core import _t, register
-
-
-# =========================================================================
-# Skew & scale patterns: the explicit two-phase / salted forms
-# =========================================================================
 
 
 @register("distinct_users_twophase", oracle="""

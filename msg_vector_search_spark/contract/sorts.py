@@ -1,3 +1,5 @@
+"""Sorts / limits / top-k (SURVEY 2.F) and windows (2.G)"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -9,10 +11,6 @@ from ..operators import topk as topk_ops
 
 from .core import _t, register, rnd
 
-
-# =========================================================================
-# Sorts / limits / top-k (SURVEY 2.F) and windows (2.G)
-# =========================================================================
 
 @register("sort_ts_pagination", oracle="""
 SELECT event_id, ts, CAST(rn AS INT) AS rn FROM (

@@ -1,3 +1,12 @@
+"""Structured Streaming surface (SURVEY 2.H)
+
+The streaming twins run for real (readStream -> Trigger.AvailableNow
+-> memory/foreachBatch sink) and their materialized results are
+oracle-checked against the same batch SQL the batch twins use.  Each
+run gets a fresh memory table name so repeated driver invocations in
+one session don't collide.
+"""
+
 from __future__ import annotations
 
 import itertools
@@ -13,15 +22,6 @@ from ..streaming import stream as streaming_ops
 from .core import register, rnd
 from .sorts import _TUMBLING_ORACLE
 
-
-# =========================================================================
-# Structured Streaming surface (SURVEY 2.H) — the streaming twins run
-# for real (readStream -> Trigger.AvailableNow -> memory/foreachBatch
-# sink) and their materialized results are oracle-checked against the
-# same batch SQL the batch twins use.  Each run gets a fresh memory
-# table name so repeated driver invocations in one session don't
-# collide.
-# =========================================================================
 
 _STREAM_SEQ = itertools.count()
 

@@ -1,3 +1,8 @@
+"""Text analysis family (training-data-pipeline extension surface)
+
+Language id, quality scoring, token counting, fingerprinting.
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -8,11 +13,6 @@ from ..functions import analysis
 from .core import _t, register, rnd
 from .dedup import _DUCK_GOPHER_STOPS, _DUCK_TOKENS
 
-
-# =========================================================================
-# Text analysis family (training-data-pipeline extension surface):
-# language id, quality scoring, token counting, fingerprinting
-# =========================================================================
 
 _DUCK_STOP = ", ".join(f"'{w}'" for w in analysis.EN_STOPWORDS)
 _DUCK_STOP_RATIO = (

@@ -1,3 +1,8 @@
+"""Time-series / relational operators beyond the reference
+
+Brief-named custom ops: as-of join, range join, rollup.
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -7,11 +12,6 @@ from ..operators import asof as asof_ops
 
 from .core import _t, register, rnd
 
-
-# =========================================================================
-# Time-series / relational operators beyond the reference (brief-named
-# custom ops: as-of join, range join, rollup)
-# =========================================================================
 
 @register("asof_join_events", oracle="""
 WITH clicks AS (

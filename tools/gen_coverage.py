@@ -12,172 +12,6 @@ sys.path.insert(0, REPO)
 
 from msg_vector_search_spark import contract  # noqa: E402
 
-SECTIONS = [
-    ("Scans / sources / sinks (SURVEY 2.A)", [
-        "scan_messages", "scan_latest_file", "sink_upsert_embeddings",
-        "sink_delete_keys", "sink_retention_sweep", "watermark_read"]),
-    ("Filters / predicates (2.B)", [
-        "filter_since_ts", "filter_like_json_probe", "filter_in_list",
-        "filter_not_null_distinct", "filter_nonempty_text",
-        "filter_dynamic_conj", "filter_sim_threshold"]),
-    ("Scalar functions (2.C)", [
-        "json_extract_text", "clean_text", "fmt_human_time",
-        "conv_type_from_sid", "truncate_ellipsis", "regex_name_from_email",
-        "is_file_name", "round_sim", "cosine_similarity", "derived_pct",
-        "group_name_probe"]),
-    ("Joins / lookups (2.D)", [
-        "join_user_dim", "join_conv_name", "context_prev_next",
-        "anti_join_unnamed", "semi_join_deep_search", "knn_broadcast_join",
-        "dedup_last_wins", "set_ops_nations", "join_outer_totals",
-        "udtf_explode_users", "asof_join_events",
-        "range_join_ship_window"]),
-    ("Aggregations (2.E)", [
-        "agg_count_total", "agg_count_embedded", "agg_min_max_ts",
-        "agg_count_distinct_users", "agg_new_msg_gap", "agg_group_first",
-        "agg_running_max_watermark", "approx_distinct_users",
-        "group_agg_events", "tpch_q1_pricing_summary", "tpch_top_customers",
-        "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-        "tpch_q14_promo_revenue", "tpch_q18_large_orders",
-        "tpch_q21_waiting_suppliers", "tpch_q22_dormant_accounts",
-        "tpch_q16_supplier_part_counts", "tpch_q2_min_cost_supplier",
-        "tpch_q4_order_priority", "tpch_q15_top_supplier",
-        "tpch_q17_small_quantity_revenue",
-        "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-        "tpch_q8_market_share", "tpch_q9_product_profit",
-        "tpch_q10_returned_items", "tpch_q11_important_stock",
-        "tpch_q12_shipping_priority_class",
-        "tpch_q13_customer_distribution", "tpch_q20_part_promotion",
-        "first_order_per_customer", "event_value_percentiles"]),
-    ("Skew & scale patterns / physical layout", [
-        "distinct_users_twophase", "join_salted_skew",
-        "zorder_clustered_scan", "bucketed_colocated_join",
-        "store_bucket_stats", "skew_report_events",
-        "integrity_orphans", "partitioned_time_scan",
-        "dpp_dim_filtered_scan"]),
-    ("Sorts / limits / top-k (2.F)", [
-        "topk_by_similarity", "sort_ts_pagination", "keyset_pagination",
-        "kth_ts_offset", "ts_quantile_cut",
-        "neighbor_limit1", "limit_candidates", "topk_per_group",
-        "search_topk_enriched"]),
-    ("Windows / sessions / streaming twins (2.G/2.H)", [
-        "rolling_window_agg", "tumbling_window_agg", "sessionize",
-        "rollup_order_status", "rollup_two_level_time",
-        "rolling_1h_range_agg", "scd2_customer_status",
-        "ntile_customer_quartiles", "percent_rank_cume_dist",
-        "spend_quartile_scan", "percent_rank_scan",
-        "window_rank_family"]),
-    ("Structured Streaming live (2.H)", [
-        "streaming_tumbling_availablenow", "streaming_sliding_window",
-        "streaming_append_finalized", "streaming_sessionize_stateful",
-        "streaming_dedup_within_watermark", "streaming_upsert_store",
-        "streaming_retention_sweep",
-        "streaming_index_upsert", "streaming_enrich_dim",
-        "streaming_interval_join"]),
-    ("Analytics widening (round 4)", [
-        "pivot_event_type_daily", "cube_order_priority",
-        "event_value_histogram", "tpch_q19_disjunctive",
-        "corr_stats_events", "text_bigram_top20",
-        "funnel_signup_click_purchase", "cohort_weekly_retention",
-        "topk_with_ties", "unpivot_daily_counts",
-        "user_event_type_sets"]),
-    ("Embedding UDF surface (2.I)", [
-        "udf_embed_batch", "udf_embed_query"]),
-    ("Training-data pipeline: dedup", [
-        "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-        "dedup_simhash_hamming", "dedup_ngram_jaccard",
-        "dedup_edit_distance",
-        "dedup_lsh_star", "dedup_minhash_estimate",
-        "dedup_embedding_cosine", "dedup_embedding_lsh",
-        "dedup_repeated_chunks", "dedup_components",
-        "dedup_keep_canonical", "pipeline_clean_corpus",
-        "dedup_cluster_histogram",
-        "dedup_incremental_new_docs", "streaming_incremental_dedup",
-        "dedup_components_incremental",
-        "pipeline_crawl_admit_index", "dedup_semdedup"]),
-    ("Training-data pipeline: similarity / ANN", [
-        "ann_ivf_topk", "ann_ivf_filtered", "ann_lsh_topk",
-        "ann_pq_topk", "ann_pq_rerank",
-        "ann_pq_rerank_trained", "ann_ivfpq_topk", "ann_ivfpq_trained",
-        "ann_ivfpq_materialized", "ann_ivfpq_materialized_trained",
-        "ann_index_upsert", "streaming_index_upsert", "ann_index_rebuild",
-        "ann_index_stats", "ann_recall_audit",
-        "sim_join_ivf",
-        "sim_join_ivf_pandas", "sim_join_ivf_p2", "knn_join_pandas",
-        "topk_quantized_int8", "topk_prenormalized",
-        "group_centroids_pandas", "ann_truncated_rerank",
-        "text_bm25_topk", "text_bm25_and_topk", "text_index_and_topk",
-        "hybrid_search_rrf",
-        "rerank_cross_encoder"]),
-    ("Training-data pipeline: text analysis", [
-        "text_lang_id", "text_quality_score", "text_token_counts",
-        "text_fingerprint", "text_repetition", "text_chunking",
-        "train_test_split", "stratified_sample", "text_pii_scrub",
-        "decontaminate_ngram", "shard_assignment",
-        "text_tfidf_topterms", "text_unigram_logprob",
-        "text_gopher_rules", "quality_classifier_score",
-        "corpus_report", "vocab_coverage",
-        "doc_length_histogram",
-        "corpus_weighted_sample", "zscore_by_group"]),
-    ("Training-data pipeline: multimodal", [
-        "multimodal_features", "multimodal_resize",
-        "multimodal_frame_sample", "multimodal_dedup_bytes",
-        "multimodal_dedup_near", "multimodal_frame_dedup"]),
-    ("Training-data pipeline: sequence packing", [
-        "pack_sequences_budget", "pack_sequences_greedy",
-        "pack_fill_stats", "pipeline_training_batches"]),
-    ("Corpus audits & serving diversification (round 6)", [
-        "corpus_overlap_matrix", "sample_fixed_k_per_group",
-        "grouping_sets_report", "bpe_pair_frequencies",
-        "embedding_centroid_drift", "topk_mmr_diverse",
-        "ann_mmr_materialized", "pipeline_serving_capstone"]),
-    ("Incremental state & materialized serving (round 6)", [
-        "incremental_agg_merge", "incremental_distinct_sketch",
-        "store_changefeed", "text_inverted_index_topk",
-        "ann_index_compact"]),
-    ("Mergeable-sketch dashboard family + retention lifecycle "
-     "(round 15)", [
-        "incremental_topk_sketch", "theta_sketch_setops",
-        "incremental_quantile_sketch", "pipeline_retention_forget",
-        "pipeline_retention_forget_text", "text_index_ttl_sweep",
-        "ann_index_ttl_erase", "pipeline_ttl_hybrid_serve"]),
-    ("Index lifecycle closure: erasure, text maintenance, changefeed "
-     "wiring (round 7)", [
-        "ann_index_erase", "streaming_index_erase", "text_index_upsert",
-        "text_index_erase", "text_index_compact", "text_index_stats",
-        "text_index_stopword_prune", "text_index_stopword_recycle",
-        "pipeline_forget_and_serve", "changefeed_apply_index",
-        "bloom_filter_join_agg", "aqe_skew_join_agg",
-        "streaming_centroid_drift", "bpe_merge_rounds"]),
-    ("Batched serving, filtered serving, tokenizer closure (round 10)", [
-        "search_index_many", "text_search_many", "hybrid_serve_many",
-        "hybrid_filtered_serve",
-        "ann_ivfpq_filtered_materialized", "text_index_filtered_search",
-        "changefeed_apply_text_index", "streaming_text_index_upsert",
-        "streaming_text_index_erase", "bpe_encode_corpus",
-        "pipeline_tokenize_and_pack"]),
-    ("Data selection, mixing, and corruption transforms (rounds 11-13)", [
-        "dsir_hashed_bigram", "dsir_importance_sample",
-        "mix_token_budget", "mix_temperature_budget",
-        "streaming_budget_admit", "span_corruption"]),
-    ("Large-Q batched serving + tokenizer/LM audits (rounds 12-13)", [
-        "search_index_many_large", "text_search_many_large",
-        "text_filtered_many_large", "hybrid_serve_many_large",
-        "hybrid_filtered_many_large", "tokenizer_fertility_by_source",
-        "text_bigram_perplexity"]),
-    ("Trained-artifact rows with publish-and-replay oracles (rounds"
-     " 12-13)", [
-        "ann_index_stats_trained", "ann_recall_audit_trained",
-        "ann_trained_store_exhaustive"]),
-    ("Late interaction, feedback, binary-sketch ANN (round 13)", [
-        "maxsim_topk", "maxsim_serve_many", "maxsim_join_pandas",
-        "maxsim_hybrid_rrf", "search_rocchio_feedback",
-        "ann_signbit_rerank"]),
-    ("Sub-document/containment dedup + novelty gating (rounds 13-14)", [
-        "dedup_containment", "dedup_unaligned_substring",
-        "text_novelty_score", "curate_by_novelty"]),
-]
-
-
 # Hazard pairs (r14 judge item 4): parity-form specs that deliberately
 # plan a single-partition window, each paired with its 100 TB scan twin.
 # The note rides the generated row so the hazard form can't be mistaken
@@ -211,37 +45,32 @@ HAZARD_PAIRS = {
 }
 
 
-def main() -> None:
+def render() -> str:
+    """COVERAGE.md's text: one section per ``contract`` module, titled
+    by the first line of its docstring, rows in registry order."""
     lines = [
         "# COVERAGE — contract queries x implementation x check strength",
         "",
-        "Generated by `python tools/gen_coverage.py` from the live registry.",
+        "Generated by `python tools/gen_coverage.py` from the live registry,",
+        "one section per `msg_vector_search_spark/contract/` module.",
         "Check strength: **oracle** = DuckDB value-hash comparison at sf0.01;",
         "**rows** = row-count/schema only (model output, not SQL-expressible).",
         "",
     ]
-    listed = set()
-    for title, keys in SECTIONS:
+    sections: dict[str, list[str]] = {}
+    for k, fn in contract.REGISTRY.items():
+        sections.setdefault(fn.__module__, []).append(k)
+    for mod, keys in sections.items():
+        title = sys.modules[mod].__doc__.strip().splitlines()[0]
         lines += [f"## {title}", "",
                   "| query key | check | implementation |", "|---|---|---|"]
         for k in keys:
-            listed.add(k)
-            fn = contract.REGISTRY.get(k)
-            if fn is None:
-                lines.append(f"| `{k}` | MISSING | — |")
-                continue
             check = "oracle" if k in contract.ORACLES else "rows"
-            doc = next(iter((fn.__doc__ or "").strip().splitlines()),
-                       "(no docstring)")
+            doc = next(iter((contract.REGISTRY[k].__doc__ or "")
+                            .strip().splitlines()), "(no docstring)")
             if k in HAZARD_PAIRS:
                 doc = f"{HAZARD_PAIRS[k]}. {doc}"
             lines.append(f"| `{k}` | {check} | {doc} |")
-        lines.append("")
-    extra = sorted(set(contract.REGISTRY) - listed)
-    if extra:
-        lines += ["## Unsectioned", ""]
-        for k in extra:
-            lines.append(f"- `{k}`")
         lines.append("")
     lines += [
         "Beyond the registry, tested but non-queryable surfaces:",
@@ -263,11 +92,13 @@ def main() -> None:
         "- Freshness gate H3 trigger policy (`tests/test_freshness_gate.py`).",
         "",
     ]
-    out = os.path.join(REPO, "COVERAGE.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines))
-    n = len(contract.REGISTRY)
-    print(f"wrote COVERAGE.md: {n} queries, "
+    return "\n".join(lines)
+
+
+def main() -> None:
+    with open(os.path.join(REPO, "COVERAGE.md"), "w") as f:
+        f.write(render())
+    print(f"wrote COVERAGE.md: {len(contract.REGISTRY)} queries, "
           f"{len(contract.ORACLES)} oracle-checked")
 
 
