@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from .core import ORACLES, REGISTRY
+from .core import ORACLES, REGISTRY  # noqa: F401  (re-exported)
 # importing each section registers its rows, in this order
 from . import (  # noqa: F401
     similarity, scans, filters, scalar, joins, aggregates, sorts, relational,

@@ -827,19 +827,11 @@ def streaming_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(tempfile.mkdtemp(prefix="erasestream_"), "keys")
     victims.repartition(3).write.parquet(src)
-    stream = (spark.readStream.schema(victims.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-
-    def forget(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
-        ann_index.delete_index_keys(bdf.sparkSession, path, bdf)
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_erasestream_")
-    streaming_ops._drive(
-        stream.writeStream.foreachBatch(forget)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt).start())
+    streaming_ops.foreach_file_batch(
+        spark, src, victims.schema,
+        lambda bdf, _: ann_index.delete_index_keys(bdf.sparkSession,
+                                                   path, bdf),
+        "erasestream")
     return ann_index.search_index(spark, path,
                                   [float(x) for x in qrow[0]],
                                   k=10, nprobe=4, shortlist=50)

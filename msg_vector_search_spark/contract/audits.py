@@ -433,19 +433,9 @@ def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "incoming")
     old.write.parquet(store)
     batch.repartition(3).write.parquet(src)
-    stream = (spark.readStream.schema(batch.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-
-    def fold(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
-        bdf.write.mode("append").parquet(store)
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_drift_")
-    streaming_ops._drive(
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt).start())
+    streaming_ops.foreach_file_batch(
+        spark, src, batch.schema,
+        lambda bdf, _: bdf.write.mode("append").parquet(store), "drift")
     return corpus_ops.centroid_drift(old, spark.read.parquet(store))
 
 

@@ -147,12 +147,7 @@ def streaming_incremental_dedup(spark: SparkSession,
         os.rename(os.path.join(part_dir, part), dst)
         os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))
 
-    stream = (spark.readStream.schema(odd.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
         store = sess.read.parquet(fp_store)
         fresh = (batch_df.groupBy("fp")
@@ -164,11 +159,8 @@ def streaming_incremental_dedup(spark: SparkSession,
         fresh.write.mode("append").parquet(admitted_store)
         fresh.select("fp").write.mode("append").parquet(fp_store)
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_streamdedup_")
-    streaming_ops._drive(
-        stream.writeStream.foreachBatch(admit)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt).start())
+    streaming_ops.foreach_file_batch(spark, src, odd.schema, admit,
+                                     "streamdedup")
     return spark.read.parquet(admitted_store) \
         .select("doc_id", "fp", "batch")
 

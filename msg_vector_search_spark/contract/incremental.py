@@ -954,19 +954,10 @@ def streaming_text_index_upsert(spark: SparkSession,
 
     src = os.path.join(tempfile.mkdtemp(prefix="txtstream_"), "incoming")
     batch.repartition(3).write.parquet(src)
-    stream = (spark.readStream.schema(batch.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-
-    def fold(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
-        retrieval_ops.upsert_inverted_index(bdf, path)
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_txtstream_")
-    streaming_ops._drive(
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt).start())
+    streaming_ops.foreach_file_batch(
+        spark, src, batch.schema,
+        lambda bdf, _: retrieval_ops.upsert_inverted_index(bdf, path),
+        "txtstream")
     return _invidx_top20(spark, path)
 
 
@@ -988,19 +979,10 @@ def streaming_text_index_erase(spark: SparkSession,
 
     src = os.path.join(tempfile.mkdtemp(prefix="txterase_"), "victims")
     victims.repartition(3).write.parquet(src)
-    stream = (spark.readStream.schema(victims.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-
-    def forget(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
-        retrieval_ops.delete_inverted_docs(bdf, path)
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_txterase_")
-    streaming_ops._drive(
-        stream.writeStream.foreachBatch(forget)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt).start())
+    streaming_ops.foreach_file_batch(
+        spark, src, victims.schema,
+        lambda bdf, _: retrieval_ops.delete_inverted_docs(bdf, path),
+        "txterase")
     return _invidx_top20(spark, path)
 
 
