@@ -25,6 +25,8 @@ as declarative DataFrame/SQL operators designed for 100 TB scale:
   plumbing.
 
 Layout (SURVEY.md section 7):
+    contract/         the query registry: every operator with its DuckDB
+                      oracle, one module per row section over core.py
     session.py        SparkSession builder tuned for the fixture scales
     schemas.py        explicit StructTypes for every fixture table
     sources/          readers, snapshot/latest-file discovery, watermark

@@ -128,7 +128,7 @@ def perceptual_simhash(media: DataFrame, bits: int = 32,
 
     Integer-exact by construction (md5 prefix + integer votes), so a
     DuckDB oracle reproduces it bit-for-bit on text-byte payloads —
-    contract.py multimodal_dedup_near value-checks the whole near-dup
+    contract/embedding.py multimodal_dedup_near value-checks the near-dup
     pipeline end to end.  Scale: narrow map riding the scan (no
     shuffle); downstream pairing is hamming-blocked
     (dedup.hamming_pairs), never all-pairs."""

@@ -30,7 +30,7 @@ query are (nprobe/nlist) x (1/64) of the corpus for the code scan plus
 commits ONE cell store.
 
 Incremental maintenance (:func:`upsert_index`) is the ANN side of the
-recurring-crawl story (contract.py dedup_incremental_new_docs): a new
+recurring-crawl story (contract/dedup.py dedup_incremental_new_docs): a new
 batch is assigned against the PERSISTED centroids (broadcast,
 O(batch)), encoded with the PERSISTED codebooks, and merged into only
 the cell partitions it maps to — last-writer-wins per vec_id, cost

@@ -3,9 +3,9 @@
 ``tests/oracle_fingerprints.json`` lists each ``REGISTRY`` name in
 registry order with the sha256 of its oracle after whitespace
 normalization (``" ".join(sql.split())``), or ``null`` for a rows-only
-row.  A refactor of ``contract.py`` that folds oracle SQL into shared
-builders must leave this file unchanged; a change meant to alter an
-oracle regenerates it with
+row.  A refactor of the ``contract`` package (folding oracle SQL into
+shared builders, moving rows between its modules) must leave this
+file unchanged; a change meant to alter an oracle regenerates it with
 
     python tests/test_oracle_fingerprints.py --write
 
