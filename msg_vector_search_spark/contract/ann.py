@@ -27,7 +27,7 @@ from .core import (
     _publish_fingerprint, _publish_frame, _publish_store_link, _query_vec, _t,
     _trained_dir, _upsert_base_path, register, rnd,
 )
-from .scans import (
+from .ivfpq_oracle import (
     _ASSIGNED, _IVFPQ_SEED_CTES, _TRAINED_JS, _adc, _adc_many, _assign,
     _encode, _ivf_exact, _probe, _probe_cells, _probe_many, _q, _qs, _rerank,
     _seed_cent, _seed_codebooks, _short, _with,

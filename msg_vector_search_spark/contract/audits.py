@@ -24,7 +24,7 @@ from .core import (
     _built, _copy, _publish_store_link, _query_vec, _t, _upsert_base_path,
     register, rnd,
 )
-from .scans import _IVFPQ_SEED_CTES, _with
+from .ivfpq_oracle import _IVFPQ_SEED_CTES, _with
 from .dedup import _DUCK_HASH48, _DUCK_TOKENS, _duck_shingles
 from .ann import (
     _CC_ORACLE, _CC_WALK, _INDEX_UPSERT_ORACLE, _TRAINED_STORE_SERVE,

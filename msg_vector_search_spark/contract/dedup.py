@@ -16,7 +16,7 @@ from ..operators import lsh as lsh_ops
 from ..streaming import stream as streaming_ops
 
 from .core import _t, _upsert_base_path, register
-from .scans import _seed_cent, _with
+from .ivfpq_oracle import _seed_cent, _with
 
 
 _DUCK_TOKENS = ("string_split_regex(trim(lower(text)), '\\s+')")

@@ -18,7 +18,7 @@ from ..sources import readers
 from ..streaming import stream as streaming_ops
 
 from .core import _inverted_index, _query_vec, _t, register, rnd
-from .scans import _ASSIGNED, _assign, _seed_cent, _with
+from .ivfpq_oracle import _ASSIGNED, _assign, _seed_cent, _with
 from .dedup import _DUCK_TOKENS, _scaled_corpus, _with_scaled_dups
 from .text import _DUCK_STOP_RATIO
 from .streaming import _STREAM_SEQ

@@ -32,7 +32,7 @@ from .core import (
     _ann_built, _built, _copy, _inverted_index, _query_vec, _t,
     _upsert_base_path, register, rnd,
 )
-from .scans import (
+from .ivfpq_oracle import (
     _ASSIGNED, _adc, _assign, _encode, _ivf_exact, _probe, _probe_cells, _q,
     _rerank, _seed_cent, _seed_codebooks, _short, _with,
 )

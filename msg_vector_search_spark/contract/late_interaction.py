@@ -16,7 +16,7 @@ from ..operators import retrieval as retrieval_ops
 from ..operators import similarity as sim_ops
 
 from .core import _query_vec, _t, register
-from .scans import _with
+from .ivfpq_oracle import _with
 from .hybrid import _kw_leg, _kw_rank, _rank, _rrf
 from .audits import _mmr_oracle
 
