@@ -284,7 +284,7 @@ class Engine:
         persisted indexes in one pass (``retrieval.hybrid_serve_many``
         at Q=1 — two index reads, each leg k-bounded and collected),
         and reciprocal-rank fusion ranks the union on the driver
-        (16 Spark jobs per warm call at sf0.001).  Extension verb — the
+        (11 Spark jobs per warm call at sf0.001).  Extension verb — the
         reference serves vectors only; a production retrieval tier
         almost always fuses keyword and vector legs.  Requires both
         index_dir and text_index_dir (built on demand from the store).
@@ -425,6 +425,13 @@ class Engine:
         gate may run an inline update first, then cosine top-k with
         optional pushed-down predicates, returned in the reference's
         envelope.
+
+        With an index, the search is served top-k first
+        (:meth:`_indexed_envelopes`): the single-query index serve
+        collects the top ids, then one keyed read fetches their payload
+        from the store buckets they map to — 3 Spark jobs per warm
+        call at sf0.001, and payload bytes that do not grow with the
+        store.  Without one, it is one brute-force scan of the store.
 
         The gap is passed LAZILY: the gate's cooldown pre-check runs
         first and the watermark-pruned count only executes when it
@@ -567,42 +574,58 @@ class Engine:
                            threshold: float,
                            conversation_type: str | None,
                            session_id: str | None) -> dict:
-        """Serve int-keyed query strings from the persisted IVFPQ
-        index: ONE batched index serve (search_index_many — the
-        optional filters PRE-filter the pruned code and vector scans
-        via the recorded meta_cols, so statistics and shortlists are
-        drawn from the slice, never post-filtered), threshold on the
-        6dp grid exactly as the brute path (top-k first), then one
-        broadcast id join back to the store for the payload columns
-        and ONE collect for all Q envelopes."""
-        from pyspark.sql import functions as SF  # noqa: N812
+        """Serve int-keyed query strings from the persisted IVFPQ index
+        in two phases, top-k first (the reference enriches after its
+        top-k with k lookups by key, SURVEY §3.1 step 6):
 
+        1. ONE index serve (``search_index_many``; one query takes its
+           single-query route) collects the <= Q x limit
+           ``(qid, message_id, sim)`` rows.  The optional filters
+           PRE-filter the pruned index scans via the recorded
+           meta_cols, so statistics and shortlists are drawn from the
+           slice, never post-filtered.
+        2. ONE keyed read of the store (``sinks.read_keys``) collects
+           the payload of those ids only, from the buckets they map
+           to — O(Q x limit) rows whatever the store's size.
+
+        The threshold (on the 6dp grid, after top-k, as the brute path
+        applies it) and ``similarity_score`` (Spark's HALF_UP
+        ``round(sim, 3) + 0.0``, :func:`retrieval.round_half_up`) run
+        on the driver.  Each result dict carries ``message_id``, the
+        store's other columns, ``sim`` and ``similarity_score``, in
+        that order."""
         from . import embed
-        from .operators import ann_index
+        from .operators import ann_index, retrieval
 
         if not queries:
             return {}
         t0 = time.time()
         qvecs = {i: embed.embed_query_vector(q)
                  for i, q in queries.items()}
-        top = (ann_index.search_index_many(
-            self.spark, self.index_dir, qvecs, k=limit,
-            nprobe=self.nprobe, shortlist=self.shortlist,
-            where=self._index_where(conversation_type, session_id))
-            .filter(SF.col("sim") >= threshold))
-        payload = (self._store()
-                   .join(SF.broadcast(top.select("qid", "message_id",
-                                                 "sim")),
-                         "message_id")
-                   .withColumn("similarity_score",
-                               (SF.round(SF.col("sim"), 3)
-                                + SF.lit(0.0))))
-        collected = payload.collect()
+        top = [(r["qid"], r["message_id"], r["sim"])
+               for r in ann_index.search_index_many(
+                   self.spark, self.index_dir, qvecs, k=limit,
+                   nprobe=self.nprobe, shortlist=self.shortlist,
+                   where=self._index_where(conversation_type, session_id))
+               .collect()
+               if r["sim"] >= threshold]
+        payload = {}
+        if top:
+            for r in sinks.read_keys(self.spark, self._store_path(),
+                                     "message_id",
+                                     [mid for _, mid, _ in top]).collect():
+                d = r.asDict(recursive=True)
+                # message_id leads each result dict (the envelope's key
+                # order), then the store's other columns
+                payload[d["message_id"]] = {"message_id": d["message_id"],
+                                            **d}
         ms = round((time.time() - t0) * 1000, 1)
         by_q: dict[int, list] = {i: [] for i in queries}
-        for r in collected:
-            d = r.asDict(recursive=True)
-            by_q[d.pop("qid")].append(d)
+        for qid, mid, sim in top:
+            if mid in payload:
+                by_q[qid].append({
+                    **payload[mid], "sim": sim,
+                    "similarity_score": retrieval.round_half_up(sim, 3)})
         out = {}
         for i, q in queries.items():
             rows = sorted(by_q[i],

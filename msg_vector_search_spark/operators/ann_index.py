@@ -306,14 +306,20 @@ def search_index_many(spark: SparkSession, path: str,
     :func:`search_index` calls with the same parameters.
 
     *queries* maps ``qid -> qvec``.  Returns ``(qid, vec_id, cell,
-    sim)``, top-*k* per query by (sim desc, id).  Measured
+    sim)``, the top-*k* rows per query by (sim desc, id), in NO
+    promised order: every caller collects the k-bounded rows and sorts
+    them on the driver, so a final global sort would only add a
+    sampling job and a sort job.  Measured
     (tools/scaling_check.py --batch, sf0.1 local[32], 600k vectors,
     r12 — post driver-side probe): Q x single calls take
     5.6/9.3/46/85 s at Q=5/10/50/100; the literal strategy
     4.3/2.6/7.3/16 s; the joined strategy 2.8/2.2/2.1/2.6 s, still
     2.6/2.7 s at Q=250/500 — ~FLAT in Q (32x over singles at Q=100),
-    which is why it is the default above literal_max=4.  Route single
-    queries through :func:`search_index`.
+    which is why it is the default above literal_max=4.  One query
+    (Q=1) serves through :func:`search_index`, tagged with its qid:
+    the same rows, in fewer jobs than the batched plan; its
+    ``with_rank`` rank is a window over that ordered ``limit(k)`` (the
+    :func:`retrieval.bounded_rank` shape).
 
     Plan shape at 100 TB: one probe job (Q x nlist rows, driver-
     bounded), two pruned scans of the cell store — the codes pass and
@@ -348,11 +354,21 @@ def search_index_many(spark: SparkSession, path: str,
       tools/scaling_check.py --batch (see README bench notes)."""
     from pyspark.sql import Window
 
+    qitems = sorted(queries.items())
+    if len(qitems) == 1:
+        [(qid, qv)] = qitems
+        top = search_index(spark, path, qv, k=k, nprobe=nprobe,
+                           shortlist=shortlist, where=where)
+        id_col = top.columns[0]
+        extra = ((F.row_number().over(Window.orderBy(
+            F.col("sim").desc(), F.col(id_col).asc()))
+            .cast("int").alias("rank"),) if with_rank else ())
+        return top.select(F.lit(int(qid)).cast("long").alias("qid"),
+                          id_col, "cell", "sim", *extra)
     _heal_index(path)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     books = load_codebooks(spark, path)
-    qitems = sorted(queries.items())
     if not qitems:
         # mirror the non-empty path's contract exactly (r14 review):
         # the id column keeps the STORE's type, and with_rank carries
@@ -450,8 +466,7 @@ def search_index_many(spark: SparkSession, path: str,
             .filter(F.col("_rn") <= k)
             .select("qid", id_col,
                     F.col("cell").cast("long").alias("cell"), "sim",
-                    *extra)
-            .orderBy("qid", F.col("sim").desc(), F.col(id_col).asc()))
+                    *extra))
 
 
 def _upsert_cells(spark: SparkSession, batch: DataFrame, store: str,

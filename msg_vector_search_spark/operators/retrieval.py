@@ -1038,17 +1038,18 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     return result
 
 
-def _round6_half_up(x: float) -> float:
-    """Spark's ``F.round(x, 6) + 0.0`` on the driver: Spark rounds the
-    JVM's decimal rendering of the double HALF_UP (``BigDecimal``), not
-    the binary value, so an exact 7dp tie such as 1/128 = 0.0078125
-    goes up here as it does there (``round()`` would go to even, and
-    ``similarity._np_round6`` rounds the binary value).  Python's
-    shortest repr stands in for the JVM's ``Double.toString``; Java 17
-    does not always render the shortest repr, so the twin is pinned
-    against Spark over every RRF sum of two ranks in 1..200
-    (tests/test_retrieval.py)."""
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"),
+def round_half_up(x: float, digits: int) -> float:
+    """Spark's ``F.round(x, digits) + 0.0`` on the driver: Spark rounds
+    the JVM's decimal rendering of the double HALF_UP (``BigDecimal``),
+    not the binary value, so an exact tie such as 1/128 = 0.0078125 at
+    6 digits goes up here as it does there (``round()`` would go to
+    even, and ``similarity._np_round6`` rounds the binary value).
+    Python's shortest repr stands in for the JVM's ``Double.toString``;
+    Java 17 does not always render the shortest repr, so the twin is
+    pinned against Spark at 6 digits over every RRF sum of two ranks in
+    1..200 (tests/test_retrieval.py) and at 3 digits over the ties and
+    a sample of the 6dp sim grid (tests/test_hashing.py)."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits),
                                            ROUND_HALF_UP)) + 0.0
 
 
@@ -1075,7 +1076,7 @@ def hybrid_serve_many(spark, text_path: str, ann_path: str,
     top-*k* per query by (rrf desc, doc_id), ordered by (qid, rrf
     desc, doc_id): rrf = 1/(k_rrf + rank_kw) + 1/(k_rrf + rank_vec),
     an absent leg adding 0.0, rounded as Spark's ``F.round(_, 6)``
-    rounds (:func:`_round6_half_up`).  The frame is a local relation
+    rounds (:func:`round_half_up`).  The frame is a local relation
     built from an Arrow table, so collecting it launches no job.  Both
     indexes must record one id type.
 
@@ -1127,7 +1128,7 @@ def hybrid_serve_many(spark, text_path: str, ann_path: str,
         rrf = ((0.0 if rk is None else 1.0 / (k_rrf + rk))
                + (0.0 if rv is None else 1.0 / (k_rrf + rv)))
         by_qid.setdefault(qid, []).append(
-            (qid, doc, rk, rv, _round6_half_up(rrf)))
+            (qid, doc, rk, rv, round_half_up(rrf, 6)))
     out = [row for qid in sorted(by_qid)
            for row in sorted(by_qid[qid], key=lambda t: (-t[4], t[1]))[:k]]
     schema = StructType([

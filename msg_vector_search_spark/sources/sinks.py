@@ -89,7 +89,9 @@ transaction log plays the manifest's role.
 from __future__ import annotations
 
 import json
+import math
 import os
+import re
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -153,6 +155,37 @@ def _bucket_expr(key: str, meta: dict) -> Column:
     if meta["layout"] == "range":
         return range_bucket_of(key, meta["range_width"])
     return bucket_of(key, meta["num_buckets"])
+
+
+#: What Spark's string -> long cast accepts once it has trimmed
+#: :data:`_CAST_TRIM` (ASCII whitespace and control bytes) off both ends.
+_LONG_TEXT = re.compile(r"[+-]?[0-9]+")
+_CAST_TRIM = "".join(map(chr, range(33))) + "\x7f"
+
+
+def bucket_of_key(value, meta: dict) -> int | None:
+    """:func:`_bucket_expr` on the driver, for one key value (a str or
+    an int): ``floor(long(key) / range_width)`` under the range layout,
+    ``pmod(xxhash64(string(key)), num_buckets)`` under the hash
+    layout.  A key the range layout's cast rejects maps to None, as
+    Spark's ``try_cast`` maps it to NULL; no stored key has one.
+    Parity with the Catalyst expression is pinned in
+    tests/test_hashing.py."""
+    from ..functions.hashing import xxhash64_str
+
+    if isinstance(value, bool) or not isinstance(value, (str, int)):
+        raise TypeError(f"no driver bucket twin for key {value!r}")
+    if meta["layout"] == "hash":
+        return xxhash64_str(str(value)) % meta["num_buckets"]
+    if isinstance(value, str):
+        text = value.strip(_CAST_TRIM)
+        if not _LONG_TEXT.fullmatch(text):
+            return None
+        value = int(text)
+    if not -(1 << 63) <= value < (1 << 63):
+        return None
+    # Spark divides as doubles before the floor
+    return math.floor(float(value) / meta["range_width"])
 
 
 def _read_layout(path: str) -> dict:
@@ -726,6 +759,25 @@ def _read_buckets(spark: SparkSession, path: str, buckets: list,
     # store has no partition dirs at all: read the root (cheap by
     # construction — there is nothing to list)
     return read_parquet(spark, path).filter(F.lit(False))
+
+
+def read_keys(spark: SparkSession, path: str, key: str,
+              keys) -> DataFrame:
+    """The rows of the store at *path* whose *key* is one of *keys*,
+    without the bucket column — a lookup by key, where
+    :func:`read_store` is a scan.  The keys map to buckets on the
+    driver (:func:`bucket_of_key`, under the store's recorded layout),
+    only those bucket directories are listed and read
+    (:func:`_read_buckets`), and the keys reach the Parquet scan as a
+    pushed ``isin`` filter.  Bytes read are O(touched buckets), however
+    large the store is.  Heals first, as :func:`read_store` does."""
+    heal(path)
+    meta = _read_layout(path)
+    keys = list(dict.fromkeys(keys))
+    buckets = {bucket_of_key(k, meta) for k in keys}
+    buckets.discard(None)
+    return (_read_buckets(spark, path, sorted(buckets))
+            .filter(F.col(key).isin(keys)).drop(BUCKET_COL))
 
 
 def erase_partitions(spark: SparkSession, path: str, key: str,

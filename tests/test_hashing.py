@@ -8,6 +8,11 @@ wrong postings directories, so the parity test is deliberately broad:
 every fixture-vocabulary shape, randomized lengths across the XXH64
 block boundaries (0..100 bytes spans the <4, <8, <32 and stripe
 paths), and multi-byte scripts.
+
+The store's key -> bucket twin (``sinks.bucket_of_key``, the keyed
+payload read of an indexed search) and the HALF_UP rounding twin
+(``retrieval.round_half_up``, the search envelope's
+``similarity_score``) are pinned here the same way.
 """
 
 from __future__ import annotations
@@ -18,6 +23,8 @@ from pyspark.sql import functions as F
 
 from msg_vector_search_spark.functions.hashing import (term_bucket,
                                                        xxhash64_str)
+from msg_vector_search_spark.operators import retrieval
+from msg_vector_search_spark.sources import sinks
 
 CORPUS = (
     ["", "a", "ab", "abc", "spark", "query", "dup", "the", "vector",
@@ -48,3 +55,73 @@ def test_term_bucket_matches_catalyst_pmod(spark):
             for i, s in enumerate(CORPUS)]).collect()[0])
         want = [int(v) for v in row]
         assert got == want
+
+
+def _one_job(spark, df):
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    rows = df.collect()
+    assert sched.numTotalJobs() - before == 1
+    return rows
+
+
+def test_bucket_of_key_matches_bucket_expr(spark):
+    """``sinks.bucket_of_key`` against ``sinks._bucket_expr`` in ONE
+    Spark job, over string and long keys: range ids on both sides of
+    every bucket edge (negative ones too), the forms Spark's cast
+    trims or accepts (" 12", "+64", "007") or rejects ("1.5", words —
+    a None bucket), and hash buckets over the same ids plus CORPUS.
+    2.5 s on 4 cores (it reads no fixture, so it costs the same at
+    sf0.001)."""
+    rnd = random.Random(7)
+    ids = [b * w + d for w in (1, 64, 4096) for b in range(-2, 6)
+           for d in (-1, 0, 1)]
+    # (a bucket id is an int: Spark refuses a wider one at write time)
+    ids += [rnd.randrange(1 << 31) for _ in range(64)]
+    keys = ([str(i) for i in ids]
+            + [" 12", "12 ", "\t64\n", "+64", "-0", "007", "1.5", "1e3",
+               "", "9223372036854775808"] + CORPUS)
+    metas = ([{"layout": "range", "range_width": w} for w in (1, 64, 4096)]
+             + [{"layout": "hash", "num_buckets": n} for n in (64, 97, 8192)])
+
+    def as_long(k):
+        try:
+            n = int(k)
+        except ValueError:
+            return None
+        return n if -(1 << 63) <= n < (1 << 63) else None
+
+    df = spark.createDataFrame([(k, as_long(k)) for k in keys],
+                               "k string, n long")
+    rows = _one_job(spark, df.select("k", "n", *[
+        sinks._bucket_expr(c, m).alias(f"{c}{i}")
+        for i, m in enumerate(metas) for c in ("k", "n")]))
+    assert len(rows) == len(keys)
+    for r in rows:
+        for i, m in enumerate(metas):
+            assert sinks.bucket_of_key(r["k"], m) == r[f"k{i}"], (r["k"], m)
+            if r["n"] is not None:
+                assert sinks.bucket_of_key(r["n"], m) == r[f"n{i}"], \
+                    (r["n"], m)
+    assert any(r["k0"] is None for r in rows)
+
+
+def test_round_half_up_matches_spark_round3(spark):
+    """``retrieval.round_half_up(x, 3)`` against Spark's
+    ``F.round(x, 3) + 0.0`` in ONE Spark job, over every 4th-decimal
+    tie of the 6dp sim grid in [-1, 1] (x.xxx5, where round()'s
+    half-to-even differs) and 2,000 random points of that grid.
+    0.8 s on 4 cores (it reads no fixture, so it costs the same at
+    sf0.001)."""
+    rnd = random.Random(3)
+    xs = [(2 * j + 1) / 2000 for j in range(-1000, 1000)]
+    xs += [float(f"{rnd.uniform(-1, 1):.6f}") for _ in range(2000)]
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    rows = _one_job(spark, df.select(
+        "x", (F.round("x", 3) + F.lit(0.0)).alias("r")))
+    assert len(rows) == len(xs)
+    half_even = 0
+    for r in rows:
+        assert retrieval.round_half_up(r["x"], 3) == r["r"], r["x"]
+        half_even += round(r["x"], 3) != r["r"]
+    assert half_even > 0

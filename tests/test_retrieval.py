@@ -841,7 +841,7 @@ def test_driver_rrf_round_matches_spark_round(spark):
         a, b = r["a"], r["b"]
         x = ((0.0 if a == 0 else 1.0 / (60 + a))
              + (0.0 if b == 0 else 1.0 / (60 + b)))
-        assert retrieval._round6_half_up(x) == r["rrf"], (a, b)
+        assert retrieval.round_half_up(x, 6) == r["rrf"], (a, b)
         half_even += round(x, 6) != r["rrf"]
     assert half_even > 0
 

@@ -1002,6 +1002,115 @@ def batch_main() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def engine_serve_main() -> None:
+    """python tools/scaling_check.py --engineserve [mult ...] — warm
+    indexed ``Engine.search`` as the store grows: the sf0.01 events
+    replicated 1x/4x/16x (replica i's event_ids offset by i x 10,000,
+    so ids stay arrival-ordered and the range-layout store grows new
+    buckets; ts shifted by i x 31 days), ingested into a fresh store,
+    indexed (default nlist 16, nprobe 8), then 5 timed warm
+    ``search(limit=5)`` calls.  Reports the median wall ms, Spark jobs
+    per call, and the payload read: the store files listed by the
+    search's reads of the store (``read_store`` or ``_read_buckets``
+    on the store path) and their bytes.  The claim: payload files and
+    bytes per search stay flat as the store grows, because the served
+    ids are fetched by key from their buckets.  The last line is the
+    curve as one JSON object."""
+    import json
+    import statistics
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    from msg_vector_search_spark.engine import Engine
+    from msg_vector_search_spark.session import get_spark
+    from msg_vector_search_spark.sources import sinks
+
+    mults = [int(a) for a in sys.argv[1:] if a.isdigit()] or [1, 4, 16]
+    spark = get_spark("engine_serve_scaling")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    events = papq.read_table(os.path.join(os.path.dirname(BASE), "sf0.01",
+                                          "events.parquet"))
+    read_store, read_buckets = sinks.read_store, sinks._read_buckets
+    frames: list = []
+    store = {"path": None}  # the store whose reads are recorded
+
+    def spy_store(spark_, path):
+        df = read_store(spark_, path)
+        if path == store["path"]:
+            frames.append(df)
+        return df
+
+    def spy_buckets(spark_, path, buckets, part_col=sinks.BUCKET_COL):
+        df = read_buckets(spark_, path, buckets, part_col=part_col)
+        if path == store["path"]:
+            frames.append(df)
+        return df
+
+    sinks.read_store, sinks._read_buckets = spy_store, spy_buckets
+    curve = []
+    print(f"{'xN':>4} {'rows':>7} {'buckets':>7} {'ingest_s':>8} "
+          f"{'search_ms':>9} {'jobs':>4} {'files':>5} {'bytes':>9}")
+    try:
+        for m in mults:
+            d = tempfile.mkdtemp(prefix=f"engine_serve_{m}x_")
+            try:
+                reps = [events.set_column(
+                    0, "event_id", pc.add(events["event_id"], i * 10_000))
+                    .set_column(1, "ts", pc.add(events["ts"], pa.scalar(
+                        i * 31 * 86_400_000_000, pa.duration("us"))))
+                    for i in range(m)]
+                papq.write_table(pa.concat_tables(reps),
+                                 os.path.join(d, "events.parquet"))
+                eng = Engine(spark, d, os.path.join(d, "store"),
+                             update_threshold=10 ** 9, clock=lambda: 0.0,
+                             index_dir=os.path.join(d, "ann"))
+                t0 = time.perf_counter()
+                eng.update_embeddings(max_messages=None)
+                assert eng.ensure_index()
+                t_ingest = time.perf_counter() - t0
+                store["path"] = eng._store_path()
+                n_buckets = sum(e.startswith(sinks.BUCKET_COL + "=")
+                                for e in os.listdir(store["path"]))
+                eng.search("test message 7", limit=5, threshold=-1.0)
+                walls, jobs, files = [], [], []
+                for rep in range(5):
+                    frames.clear()
+                    before = sched.numTotalJobs()
+                    t0 = time.perf_counter()
+                    env = eng.search(f"test message {rep}", limit=5,
+                                     threshold=-1.0)
+                    walls.append((time.perf_counter() - t0) * 1000)
+                    jobs.append(sched.numTotalJobs() - before)
+                    assert len(env["results"]) == 5
+                    files.append({f for df in frames
+                                  for f in df.inputFiles()})
+                n_bytes = [sum(os.path.getsize(f.removeprefix("file:"))
+                               for f in fs) for fs in files]
+                row = {"mult": m, "rows": events.num_rows * m,
+                       "store_buckets": n_buckets,
+                       "ingest_s": round(t_ingest, 1),
+                       "search_ms_median": round(
+                           statistics.median(walls), 1),
+                       "search_jobs": statistics.median(jobs),
+                       "payload_files_median": statistics.median(
+                           len(fs) for fs in files),
+                       "payload_bytes_median": statistics.median(n_bytes)}
+                curve.append(row)
+                print(f"{m:>4} {row['rows']:>7} {n_buckets:>7} "
+                      f"{t_ingest:>8.1f} {row['search_ms_median']:>9.1f} "
+                      f"{row['search_jobs']:>4} "
+                      f"{row['payload_files_median']:>5} "
+                      f"{row['payload_bytes_median']:>9}")
+            finally:
+                shutil.rmtree(d, ignore_errors=True)
+    finally:
+        sinks.read_store, sinks._read_buckets = read_store, read_buckets
+    print(json.dumps({"cores": spark.sparkContext.defaultParallelism,
+                      "curve": curve}))
+
+
 def bucketwidth_main() -> None:
     """python tools/scaling_check.py --bucketwidth [vocab ...] — the
     r17 auto-sizing question isolated: how many postings rows does a
@@ -1078,6 +1187,8 @@ if __name__ == "__main__":
         servelist_main()
     elif "--bucketwidth" in sys.argv:
         bucketwidth_main()
+    elif "--engineserve" in sys.argv:
+        engine_serve_main()
     elif "--tpch" in sys.argv:
         tpch_main()
     elif "--retrieval" in sys.argv:
